@@ -71,7 +71,8 @@ def worker(cpus: int, n_docs: int, probe: str, cap: int) -> None:
         t[name] = round(time.perf_counter() - t0, 2)
         return r
 
-    # mirror dedup_representatives' production path (dedup_phase_diag.py)
+    # mirror dedup_representatives' production path (the exact pass, then
+    # the capped band join; phase table in BENCH/BASELINE.md round 5)
     keyed = docs.select(
         F.col("doc_id").alias("id"),
         F.md5(F.encode(F.col("text"), "UTF-8")).alias("h"),

@@ -322,8 +322,8 @@ def classifier_score(
     input doc appears in the output (NULL text is one '' gram, so the
     gram table covers all ids).
 
-    ``method`` picks the physical shape (measured, BENCH/clf_score_ab.py
-    at 100k docs local[8], min-of-3: pandas 3.04 s vs relational-decimal
+    ``method`` picks the physical shape (measured, BENCH/BASELINE.md round
+    7, at 100k docs local[8], min-of-3: pandas 3.04 s vs relational-decimal
     6.23 s — 2.05x, and the pandas path crosses ZERO shuffles):
 
     * ``"relational"`` (default) — explode -> broadcast weight join ->

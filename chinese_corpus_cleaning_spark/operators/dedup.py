@@ -39,8 +39,9 @@ from ..config import DedupConfig
 # minhash_similarity_pairs): each signature row is ~num_hashes * 8 B, so
 # 64 MB admits ~65k rows at the production 128-hash config — far below the
 # guide's few-hundred-MB broadcast comfort zone, and corpus-scale signature
-# tables blow the bound and take the shuffled joins as before. Module-level
-# so the A/B bench (BENCH/estjac_bcast_ab.py) can toggle it.
+# tables blow the bound and take the shuffled joins as before. The round-8
+# A/B (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept it for the
+# plan shape.
 _SIG_BCAST_BUDGET_BYTES = 64 << 20
 
 # ---------------------------------------------------------------- exact dedup
@@ -183,7 +184,7 @@ def lsh_candidate_pairs(
     candidate pairs, and the ground-truth near-dup family pairs detected
     are IDENTICAL to the exact form's at both scales (the residual doc gap
     is confined to giant-clique members that est-match no hub). Relative
-    history (BENCH/band_geometry_ab.py + BASELINE.md round-5 notes): at
+    history (BENCH/BASELINE.md round-5 lever sweep): at
     100k docs cap 64 finds 22,445 (4-hub) / 22,394 (1-hub) / 22,357 (skip)
     of cap-256's 22,700 duplicates with ~4.5x fewer candidates; at 1.6M
     docs 4-hub recovers 66% of the 1-hub cap's -7.4% recall gap. The
@@ -386,7 +387,7 @@ def minhash_similarity_pairs(
     # comparison; the AND short-circuits, so the full 128-slot zip_with
     # runs only on prefix survivors. Output set provably unchanged.
     # The interpreted-lambda form is KEPT on measurement (CLAUDE.md doctrine:
-    # measure, don't guess): BENCH/estjac_udf_bench.py — relational min
+    # measure, don't guess; BENCH/BASELINE.md round 5) — relational min
     # 11.5 s vs Arrow+numpy pandas UDF 15.1 s at 400k docs / 5.25M
     # candidates @ local[8], identical output. The prefix prune
     # short-circuits most candidates JVM-side; the UDF must pay Arrow
@@ -765,28 +766,16 @@ def simhash_udf():
     """PRODUCTION SimHash UDF: numpy-vectorized batch kernel
     (functions/hashing.simhash60_batch — transposed unpackbits/prefix-sum
     pipeline per Arrow batch, unique-token md5 cache). Chosen by measurement
-    over the per-doc Python loop (BENCH/simhash_udf_bench.py, interleaved
-    min-of-runs at 200k docs @ local[8]): 1.21x on the replicated word-salad
-    documents shape, 1.21-1.86x on the generated CC-style corpus, never
-    slower across runs/shapes; value-identical (differential-tested)."""
+    over the per-doc Python loop (round 5, interleaved min-of-runs at 200k
+    docs @ local[8]): 1.21x on the replicated word-salad documents shape,
+    1.21-1.86x on the generated CC-style corpus, never slower across
+    runs/shapes; value-identical (differential-tested)."""
 
     from ..functions.hashing import simhash60_batch
 
     @F.pandas_udf(LongType())
     def sh(texts: pd.Series) -> pd.Series:
         return pd.Series(simhash60_batch(texts.tolist()), index=texts.index)
-
-    return sh
-
-
-def simhash_udf_loop():
-    """The pre-round-5 per-doc loop form, kept as the A/B baseline for
-    BENCH/simhash_udf_bench.py."""
-    from ..functions.hashing import simhash60
-
-    @F.pandas_udf(LongType())
-    def sh(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: simhash60((t or "").split(" ")))
 
     return sh
 

@@ -1,11 +1,9 @@
-"""Event-stream analytics over the events table: sessionization, tumbling
-windows, per-user top-k, JSON property extraction.
+"""Event-stream analytics over the events table: gap-based sessionization.
 
 The reference has no event data (SURVEY.md §2.12 — no windows/sessions), but
-a crawl-pipeline engine needs these shapes for its operational telemetry
-(page-fetch events, per-host rate windows, lineage heartbeats). All native
-DataFrame ops — window functions, date_trunc buckets, get_json_object — with
-exact DuckDB oracle twins.
+a crawl-pipeline engine needs this shape for its operational telemetry
+(page-fetch events, lineage heartbeats). Native window functions only, with
+an exact DuckDB oracle twin.
 """
 
 from __future__ import annotations
@@ -29,8 +27,8 @@ def sessionize(events: DataFrame) -> DataFrame:
     # interval arithmetic: timezone-free (works for TIMESTAMP_NTZ), exact,
     # and identical in the DuckDB oracle. NOTE: the fixture parquet stores
     # naive micros that Spark reads as TIMESTAMP_LTZ, so session rendering
-    # (and date_trunc bucketing downstream) matches DuckDB's naive values
-    # only under spark.sql.session.timeZone=UTC — pinned in every
+    # matches DuckDB's naive values only under
+    # spark.sql.session.timeZone=UTC — pinned in every
     # repo-controlled session builder (conftest/bench/scale_worker/api);
     # a non-UTC driver session shifts hours vs the oracle (review finding)
     prev = F.lag("ts").over(w)
@@ -51,67 +49,4 @@ def sessionize(events: DataFrame) -> DataFrame:
             F.sum("value").alias("total_value"),
         )
         .withColumnRenamed("session_seq", "session_id")
-    )
-
-
-def hourly_rollup(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour windows per event_type: (hour, event_type, n, total).
-    date_trunc keeps the bucket expression portable to the DuckDB oracle."""
-    return (
-        events.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-    )
-
-
-def topk_users_by_value(events: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k users per event_type by summed value: (event_type, user_id,
-    total_value, rank). rank is row_number over the TOTAL order
-    (total_value desc, user_id asc) — the id tie-break makes it
-    deterministic; a variant without the tie-break would need
-    dense_rank to avoid nondeterministic truncation of value ties."""
-    per_user = events.groupBy("event_type", "user_id").agg(
-        F.sum("value").alias("total_value")
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("total_value").desc(), F.col("user_id").asc()
-    )
-    return (
-        per_user.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def json_props(events: DataFrame) -> DataFrame:
-    """Extract the props JSON field k as an int column (native JSON path)."""
-    return events.select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("prop_k"),
-    )
-
-
-def salted_user_totals(events: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Two-phase salted aggregation (the skew pattern of SURVEY.md §4 item 2,
-    applied to aggregation): phase 1 aggregates on (user_id, salt) so one hot
-    user's rows spread over ``salt_buckets`` reducers; phase 2 merges the
-    partials per user. Result is identical to a direct groupBy(user_id) —
-    which is exactly what the DuckDB oracle computes — but no single reducer
-    ever sees all rows of a hot key.
-
-    (For plain sum/count Spark's own partial aggregation already does this;
-    the explicit salt matters for high-cardinality aggregates like
-    collect_set/percentile where map-side partials don't collapse skew.)"""
-    salted = events.withColumn(
-        "salt", F.pmod(F.xxhash64("event_id"), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy("user_id", "salt").agg(
-        F.sum("value").alias("pv"), F.count(F.lit(1)).alias("pc")
-    )
-    return partial.groupBy("user_id").agg(
-        F.sum("pv").alias("total_value"), F.sum("pc").alias("n_events")
     )

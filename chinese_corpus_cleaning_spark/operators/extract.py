@@ -17,10 +17,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.cleaning import (
-    clean_text,
-    clean_text_whitelist,
     extract_html_text,
-    remove_long_repeated_substrings,
     remove_long_repeated_substrings_ex,
 )
 from ..functions import langid as _langid
@@ -32,80 +29,6 @@ from ..functions import langid as _langid
 # syntax is valid in Java regex AND RE2.
 CTRL_CLASS_PORTABLE = "[\\x{00}-\\x{08}\\x{0b}\\x{0c}\\x{0e}-\\x{1f}\\x{7f}]"
 CJK_CLASS_PORTABLE = "[\\x{4e00}-\\x{9fff}]"
-
-
-LANG_SCHEMA = StructType(
-    [
-        StructField("lang_pred", StringType()),
-        StructField("lang_conf", DoubleType()),
-        StructField("is_zh", BooleanType()),
-    ]
-)
-
-
-@F.pandas_udf(StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    """html binary/string -> cleaned text (tool.py:38-63 semantics)."""
-    return html.map(extract_html_text)
-
-
-@F.pandas_udf(StringType())
-def clean_ws(texts: pd.Series) -> pd.Series:
-    """whitespace/control cleanup (tool.py:8-14)."""
-    return texts.map(lambda t: None if t is None else clean_text(t))
-
-
-@F.pandas_udf(StringType())
-def clean_whitelist(texts: pd.Series) -> pd.Series:
-    """charset-whitelist cleanup (clear_redundancy.py:15-51)."""
-    return texts.map(lambda t: None if t is None else clean_text_whitelist(t))
-
-
-REPEATS_SCHEMA = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("fell_back", BooleanType()),
-    ]
-)
-
-
-@F.pandas_udf(REPEATS_SCHEMA)
-def remove_repeats_ex(texts: pd.Series) -> pd.DataFrame:
-    """suffix-automaton long-repeat removal (clear_redundancy.py:104-170).
-    O(n) states per doc; confined to the extraction stage like the reference
-    (convert_warc_to_htmls.py:42-45). ``fell_back`` is True iff the doc blew
-    the exact automaton's work budget and took the approximate chunk-dedup
-    path — the byte-identical-to-reference guarantee holds only when False,
-    so a 100 TB run can quantify (and audit) the approximate-path rate."""
-    rows = [
-        {"text": None, "fell_back": False}
-        if t is None
-        else dict(zip(("text", "fell_back"), remove_long_repeated_substrings_ex(t)))
-        for t in texts
-    ]
-    return pd.DataFrame(rows, columns=["text", "fell_back"])
-
-
-@F.pandas_udf(StringType())
-def remove_repeats(texts: pd.Series) -> pd.Series:
-    """Text-only form of remove_repeats_ex for callers that don't need the
-    fallback flag."""
-    return texts.map(
-        lambda t: None if t is None else remove_long_repeated_substrings(t)
-    )
-
-
-@F.pandas_udf(LANG_SCHEMA)
-def lang_id(texts: pd.Series) -> pd.DataFrame:
-    """Deterministic language ID behind the fastText-shaped gate
-    (tool.py:16-35; sandbox fallback classifier, functions/langid.py)."""
-    rows = [
-        {"lang_pred": "", "lang_conf": 0.0, "is_zh": False}
-        if t is None
-        else dict(zip(("lang_pred", "lang_conf", "is_zh"), _langid.identify(t)))
-        for t in texts
-    ]
-    return pd.DataFrame(rows, columns=["lang_pred", "lang_conf", "is_zh"])
 
 
 def is_zh_relational(
@@ -214,13 +137,16 @@ EXTRACT_FULL_SCHEMA = StructType(
 @F.pandas_udf(EXTRACT_FULL_SCHEMA)
 def extract_full(html: pd.Series) -> pd.DataFrame:
     """Fused extraction kernel: html -> (text, fell_back, lang columns) in
-    ONE JVM<->Python Arrow round trip. Composes exactly the three stage
-    functions the separate UDFs run (extract_html_text ->
-    remove_long_repeated_substrings_ex -> langid.identify, with the same
-    NULL conventions), so values are identical — but the document crosses
-    the Python boundary once instead of twice (guide §4.1: each chained
-    pandas UDF is its own ArrowEvalPython round trip; the intermediate
-    extracted_text no longer travels JVM->Python a second time)."""
+    ONE JVM<->Python Arrow round trip. Composes the three stage functions
+    (extract_html_text -> remove_long_repeated_substrings_ex ->
+    langid.identify; NULL html -> NULL text, NULL text -> ('', 0.0, False))
+    so the document crosses the Python boundary once instead of twice
+    (guide §4.1: each chained pandas UDF is its own ArrowEvalPython round
+    trip; the intermediate extracted_text never travels JVM->Python a
+    second time). ``fell_back`` is True iff the doc blew the exact
+    suffix-automaton's work budget (clear_redundancy.py:104-170) and took
+    the approximate chunk-dedup path — the byte-identical-to-reference
+    guarantee holds only when False."""
     rows = []
     for h in html:
         t = extract_html_text(h)
@@ -255,8 +181,8 @@ def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
 
     Round 8: the three per-doc Python stages run as ONE fused pandas UDF
     (``extract_full``) — one ArrowEvalPython node instead of two chained
-    ones, halving the Python boundary crossings; the standalone UDFs above
-    remain for callers that need a single stage."""
+    ones, halving the Python boundary crossings (pinned by
+    tests/test_plan_quality.py)."""
     # temp struct columns use collision-proof names: withColumn silently
     # REPLACES an existing column, so a plain "r"/"l" would destroy user data
     # ... and the EXPANDED output names must not collide either:

@@ -4,19 +4,13 @@ Training (SURVEY.md §2.7 A2): explode (context, word) n-grams relationally ->
 groupBy(context, word).count() — Spark's partial+final hash aggregation does
 the heavy lifting; the model table is tiny relative to the corpus.
 
-Scoring, two interchangeable paths:
-  * relational: explode the document's n-grams, broadcast-join the counts
-    table, Lidstone-smooth, agg log2 probs per doc — fully oracle-checkable
-    and shuffle-light (model side broadcast).
-  * broadcast-UDF (scale fast path): ship {(context,word)->cnt, context->tot,
-    |V|} via broadcast and score inside one pandas UDF pass (no join at all).
+Scoring (relational): explode the document's n-grams, broadcast-join the
+counts table, Lidstone-smooth, agg log2 probs per doc — fully
+oracle-checkable and shuffle-light (model side broadcast). It reproduces the
+arithmetic of the reference's recovered NgramModel (SURVEY.md §2.9):
+P = (c+α)/(C+α|V|), ppl = 2^(−mean log2 P), log floor −100.
 
-Both reproduce the arithmetic of the reference's recovered NgramModel
-(SURVEY.md §2.9): P = (c+α)/(C+α|V|), ppl = 2^(−mean log2 P), log floor −100.
-
-Tokenization: BOTH paths are whitespace-delimited (the relational path
-splits natively, the UDF path splits with ``t.split(' ')`` so its lookups
-hit the same keys the relational trainer wrote). For raw Chinese text,
+Tokenization is whitespace-delimited (split natively). For raw Chinese text,
 pre-tokenize with functions/ngram_lm.tokenize (jieba when available,
 CJK-per-char fallback) and space-join BEFORE training/scoring — the CLI
 'train' path (api.train_models) does exactly this; feeding unsegmented
@@ -26,12 +20,10 @@ at the smoothing floor.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
-from ..functions.ngram_lm import BOS, EOS, LOG_FLOOR, NgramModel, perplexity_score
+from ..functions.ngram_lm import BOS, EOS, LOG_FLOOR
 
 _SEP = "\x1f"  # context-token joiner inside the flat model table
 
@@ -172,76 +164,6 @@ def perplexity_relational(
     )
 
 
-def train_broadcast_model(
-    spark, docs: DataFrame, n: int = 3, alpha: float = 0.1, text_col: str = "text"
-):
-    """Distributed training -> compact driver model -> broadcast handle for
-    the UDF fast path. The collected model is the aggregated counts table
-    (small: unique n-grams), NOT the corpus.
-
-    Collection rides Arrow both ways (``toPandas`` columnar collect, dicts
-    built from the columnar arrays) — the same shape that cut the dedup
-    driver-CC collect 5.7x (operators/dedup._cc_driver); Row-object
-    ``collect()`` deserializes one Python object per cell and is the known
-    driver-side scaling cap (CLAUDE.md)."""
-    pdf = ngram_counts(docs, n, text_col).toPandas()
-    v = int(vocab_size(docs, text_col).toPandas()["v"].iloc[0])
-    # flat "context\x1fword" string keys: one dict probe per n-gram when
-    # scoring (vs tuple construction + tuple hash), and pandas .map-able
-    keys = (pdf["context"] + _SEP + pdf["word"]).to_list()
-    pair_counts = dict(zip(keys, pdf["cnt"].to_list()))
-    ctx_tot = pdf.groupby("context", sort=False)["cnt"].sum().to_dict()
-    return spark.sparkContext.broadcast(
-        {"n": n, "alpha": alpha, "v": v, "pairs": pair_counts, "ctx": ctx_tot}
-    )
-
-
-def perplexity_udf(model_bc):
-    """Zero-join broadcast scorer: the model rides a SparkContext broadcast,
-    so the corpus side never shuffles at all. Whitespace tokens to match the
-    relational trainer. Semantics identical to the relational scorer:
-    P=(c+α)/(C+α|V|), log2 floor only when P underflows to 0,
-    ppl=2^(−mean log2 P), empty-token docs -> +inf, null text -> null
-    (parity-tested in tests/test_perplexity_scale.py).
-
-    Implementation note (measured, BENCH/ppl_udf_bench.py): a fully
-    numpy-vectorized variant (flat key lists -> two Series.map(dict) passes
-    -> np.log2 + add.reduceat) was benchmarked at 0.5-0.9x of this plain
-    per-doc loop on 20k-200k docs — key construction and tokenization
-    dominate, and the vector form just adds three corpus-sized intermediate
-    materializations. The loop stays. The flat "ctx\\x1fword" string keys
-    (vs tuples) and the Arrow-collected model ARE measured wins and are
-    kept. The RELATIONAL scorer (perplexity_relational, broadcast hint) is
-    the production 100 TB path; this UDF is the no-shuffle alternative for
-    models too irregular to join."""
-    import math
-
-    @F.pandas_udf(DoubleType())
-    def ppl(texts: pd.Series) -> pd.Series:
-        m = model_bc.value
-        n, alpha, v = m["n"], m["alpha"], m["v"]
-        pairs, ctx_tot = m["pairs"], m["ctx"]
-        av = alpha * v
-
-        def one(t):
-            if t is None:
-                return None
-            toks = [BOS] * (n - 1) + t.split(" ") + [EOS]
-            total, cnt = 0.0, 0
-            for i in range(n - 1, len(toks)):
-                ctx = _SEP.join(toks[i - (n - 1) : i])
-                num = pairs.get(ctx + _SEP + toks[i], 0) + alpha
-                den = ctx_tot.get(ctx, 0) + av
-                p = num / den if den > 0 else 0.0
-                total += math.log2(p) if p > 0 else LOG_FLOOR
-                cnt += 1
-            return 2.0 ** (-total / cnt) if cnt else float("inf")
-
-        return texts.map(one)
-
-    return ppl
-
-
 def ppl_buckets(
     docs: DataFrame,
     model: DataFrame | None = None,
@@ -343,30 +265,3 @@ def ppl_score_col(ppl_col: str, threshold: float = 500.0, max_ppl: float = 10000
             )
         )
     )
-
-
-def score_with_python_model(texts: list[str], n: int = 3) -> list[float]:
-    """Test helper: the pure-Python twin of the relational scorer (whitespace
-    tokens) for golden comparisons."""
-    m = NgramModel(n=n)
-    # emulate whitespace tokenization regardless of jieba availability
-    for t in texts:
-        toks = t.split(" ")
-        m.vocab.update(toks)
-        from ..functions.ngram_lm import ngrams
-
-        for ctx, w in ngrams(toks, n):
-            m.counts.setdefault(ctx, __import__("collections").Counter())[w] += 1
-    out = []
-    import math
-
-    for t in texts:
-        from ..functions.ngram_lm import ngrams
-
-        grams = ngrams(t.split(" "), n)
-        tot = 0.0
-        for ctx, w in grams:
-            p = m.prob(ctx, w)
-            tot += math.log2(p) if p > 0 else LOG_FLOOR
-        out.append(2.0 ** (-tot / len(grams)) if grams else float("inf"))
-    return out

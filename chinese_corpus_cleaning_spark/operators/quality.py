@@ -201,22 +201,6 @@ def scrub_udf(trie_broadcast):
     return scrub
 
 
-def detect_udf(trie_broadcast):
-    """Standalone detect operator (sensitive_filter.py:106-134):
-    text -> array of matched keywords (with duplicates, in scan order)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def detect(texts: pd.Series) -> pd.Series:
-        trie = _resolve(trie_broadcast.value)
-        return texts.map(
-            lambda t: None
-            if t is None
-            else [w for _, w in dfa_scan_positions(t, trie)[1]]
-        )
-
-    return detect
-
-
 def with_pii(df: DataFrame, text_col: str = "scrubbed_text") -> DataFrame:
     """Append PII-masking columns (pii_text, pii_reasons, n_phone, n_email, n_ip,
     n_id_number, n_url) computed over ``text_col`` — the north-star

@@ -378,12 +378,10 @@ def assign_cells(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_vec: bool = False,
 ) -> DataFrame:
     """Nearest-centroid assignment by squared L2 (argmin, centroid-id
     tie-break) against a broadcast ``(cid, c)`` centroid table. Returns
-    (id_col, cell), plus the input vector as ``__vec`` when ``keep_vec``
-    (so iterative callers avoid a join back onto the vector table).
+    (id_col, cell).
 
     The argmin is ``min(struct(d2, cid))`` — a HASH AGGREGATE with map-side
     partials, not a row_number window: the window form sorts the full
@@ -418,16 +416,11 @@ def assign_cells(
         .crossJoin(F.broadcast(centroids))
         .withColumn("d2", F.expr(dist))
     )
-    aggs = [F.min(F.struct(F.col("d2"), F.col("cid"))).alias("__am")]
-    cols = [F.col(id_col), F.col("__am.cid").alias("cell")]
-    if keep_vec:
-        # the vector is constant within an id group (it came from the left
-        # side of the centroid cross join), so first() is deterministic —
-        # carrying it through the aggregate saves the join back onto the
-        # vector table that kmeans_fit's per-iteration loop used to pay
-        aggs.append(F.first("v").alias("__vec"))
-        cols.append(F.col("__vec"))
-    return pairs.groupBy(id_col).agg(*aggs).select(*cols)
+    return (
+        pairs.groupBy(id_col)
+        .agg(F.min(F.struct(F.col("d2"), F.col("cid"))).alias("__am"))
+        .select(F.col(id_col), F.col("__am.cid").alias("cell"))
+    )
 
 
 def ivf_assign(
@@ -495,9 +488,11 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     exactly the operator's stated determinism contract, and byte-for-byte
     the reference the differential test compares against.
 
-    Returns None when the collected vectors are irregular (NULL or ragged
-    rows) — those carry engine-specific NULL semantics the distributed
-    expressions define, so the caller falls through to the Spark path."""
+    Returns None when the collected vectors are irregular (NULL, ragged or
+    NaN-bearing rows) — those carry engine-specific NULL/NaN semantics the
+    distributed expressions define (Spark orders NaN above every double in
+    the argmin struct; numpy's argmin stops at the first NaN), so the
+    caller falls through to the Spark path."""
     import numpy as np
 
     pdf = src.toPandas()
@@ -511,6 +506,8 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     pdf = pdf.sort_values("__kid", kind="mergesort").reset_index(drop=True)
     ids = pdf["__kid"].tolist()
     vecs = np.array(pdf["__v"].tolist(), dtype=np.float64)
+    if np.isnan(vecs).any():
+        return None
     cids = ids[: int(k)]
     cents = vecs[: int(k)].copy()
     for _ in range(max(0, int(iters))):
@@ -602,7 +599,7 @@ def kmeans_fit(
     for _ in range(max(0, int(iters))):
         cdf = spark.createDataFrame(cents, cent_schema)
         # NOTE (round 8, measured): carrying the vector through the argmin
-        # aggregate (assign_cells keep_vec=True) was tried and REJECTED —
+        # aggregate (a first(v) buffer) was tried and REJECTED —
         # an array-typed aggregation buffer drops the argmin out of the
         # fast hash aggregate, and the interleaved A/B read 7.5 s vs 4.1 s
         # for this join-back shape (BENCH note in OPTIMIZATION_r08.md).

@@ -715,7 +715,7 @@ def remove_boilerplate(
     and broadcast as a Python frozenset; removal is ONE Arrow-batched pandas
     UDF with an O(1) hash probe per line. Costs a driver collect + an Arrow
     round-trip of the text column — measured A/B at 200k docs/5M lines
-    (BENCH/boilerplate_probe_ab.py, outputs asserted identical per cell):
+    (BENCH/BASELINE.md round 6, outputs asserted identical per cell):
     never slower (1.07x at |set|=16) and unboundedly faster as the set
     grows (8.5x at 1,024; 92x at 16,384), because the lambda scan below is
     O(|set|) PER LINE.

@@ -339,31 +339,6 @@ def q_binary_meta(spark, sf_dir):
     )
 
 
-def q_orders_rollup(spark, sf_dir):
-    """Relational breadth check: broadcast-dim join chain + hash agg over the
-    TPC-H-ish tables (the engine's A1-style metrics shape at warehouse scale)."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    joined = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-    )
-    return (
-        joined.groupBy(F.col("r_name").alias("region_name"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            # exact decimal accumulation -> deterministic across engines,
-            # then a single double conversion
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
-
-
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rule_length_check": q_rule_length,
     "rule_avg_line_length": q_rule_avg_line_length,
@@ -388,7 +363,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_lsh_buckets": q_ann_buckets,
     "quality_stats_rollup": q_quality_rollup,
     "binary_meta": q_binary_meta,
-    "orders_rollup": q_orders_rollup,
 }
 
 
@@ -407,29 +381,6 @@ def q_events_sessionize(spark, sf_dir):
         "session_start",
         "session_end",
         F.round("total_value", 6).alias("total_value"),
-    )
-
-
-def q_events_hourly(spark, sf_dir):
-    h = _events.hourly_rollup(load(spark, sf_dir, "events"))
-    return h.select(
-        "hour", "event_type", F.col("n_events").cast("bigint"),
-        F.round("total_value", 6).alias("total_value"),
-    )
-
-
-def q_events_topk_users(spark, sf_dir):
-    t = _events.topk_users_by_value(load(spark, sf_dir, "events"), k=10)
-    return t.select(
-        "event_type", F.col("user_id").cast("bigint"),
-        F.round("total_value", 6).alias("total_value"),
-        F.col("rank").cast("bigint"),
-    )
-
-
-def q_events_json_props(spark, sf_dir):
-    return _events.json_props(load(spark, sf_dir, "events")).select(
-        F.col("event_id").cast("bigint"), F.col("prop_k").cast("bigint")
     )
 
 
@@ -498,9 +449,6 @@ def q_quality_keep_full(spark, sf_dir):
 QUERIES.update(
     {
         "events_sessionize": q_events_sessionize,
-        "events_hourly": q_events_hourly,
-        "events_topk_users": q_events_topk_users,
-        "events_json_props": q_events_json_props,
         "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
         "embedding_cluster_score": q_embedding_cluster_score,
         "quality_keep_full": q_quality_keep_full,
@@ -537,18 +485,6 @@ def q_ann_topk(spark, sf_dir):
 
 
 QUERIES["ann_topk_lsh"] = q_ann_topk
-
-
-def q_events_salted_totals(spark, sf_dir):
-    t = _events.salted_user_totals(load(spark, sf_dir, "events"))
-    return t.select(
-        F.col("user_id").cast("bigint"),
-        F.round("total_value", 5).alias("total_value"),
-        F.col("n_events").cast("bigint"),
-    )
-
-
-QUERIES["events_salted_totals"] = q_events_salted_totals
 
 
 def q_lineitem_pricing_summary(spark, sf_dir):
@@ -805,53 +741,6 @@ def q_segment_sample(spark, sf_dir):
 QUERIES["segment_sample"] = q_segment_sample
 
 
-def q_part_supplier_revenue(spark, sf_dir):
-    """TPC-H Q9-shaped profit rollup: lineitem joins a FILTERED part side
-    (p_size <= 20 — pushdown asserted by plan tests on the same pattern) and
-    supplier -> nation broadcast dims; grouped decimal aggregation. Exercises
-    the two previously-unused tables (part, supplier)."""
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").where(F.col("p_size") <= 20)
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    d = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    one = F.lit(1).cast("decimal(18,2)")
-    return (
-        li.join(p, li["l_partkey"] == p["p_partkey"])
-        .join(s, li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"), "p_brand")
-        .agg(
-            F.sum(d * (one - disc)).cast("double").alias("revenue"),
-            F.count(F.lit(1)).cast("bigint").alias("n_lineitems"),
-        )
-    )
-
-
-def q_top_orders_by_revenue(spark, sf_dir):
-    """TPC-H Q3-shaped top-k: per-order revenue (decimal accumulation), top
-    20 overall with deterministic orderkey tie-break. orderBy+limit compiles
-    to TakeOrderedAndProject — no global single-partition sort."""
-    li = load(spark, sf_dir, "lineitem")
-    d = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    one = F.lit(1).cast("decimal(18,2)")
-    rev = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(d * (one - disc)).alias("rev_dec"))
-        .select(
-            F.col("l_orderkey").cast("bigint").alias("orderkey"),
-            F.col("rev_dec").cast("double").alias("revenue"),
-        )
-    )
-    return rev.orderBy(F.col("revenue").desc(), F.col("orderkey").asc()).limit(20)
-
-
-QUERIES["part_supplier_revenue"] = q_part_supplier_revenue
-QUERIES["top_orders_by_revenue"] = q_top_orders_by_revenue
-
-
 def q_dedup_representatives(spark, sf_dir):
     """END-TO-END near-dup stage in the gate: exact dedup + banded-LSH
     candidate pairs + similarity filter + connected components +
@@ -933,34 +822,7 @@ def q_host_rollup(spark, sf_dir):
     )
 
 
-def q_events_running_total(spark, sf_dir):
-    """Window-frame coverage: per-user running value total ordered by
-    (ts, event_id) — deterministic left-assoc accumulation on both engines."""
-    from pyspark.sql.window import Window
-
-    e = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return e.select(
-        F.col("event_id").cast("bigint"),
-        F.col("user_id").cast("bigint"),
-        F.round(F.sum("value").over(w), 6).alias("running_value"),
-        F.row_number()
-        .over(
-            Window.partitionBy("user_id").orderBy(
-                F.col("ts").asc(), F.col("event_id").asc()
-            )
-        )
-        .cast("bigint")
-        .alias("event_seq"),
-    )
-
-
 QUERIES["host_rollup"] = q_host_rollup
-QUERIES["events_running_total"] = q_events_running_total
 
 
 def q_embedding_quantize(spark, sf_dir):
@@ -2148,30 +2010,13 @@ QUERIES["decontaminate_remove"] = q_decontaminate_remove
 #                             consumes the trained counts via its scorer)
 #   dedup_tokens           -> dedup_lines (same first-occurrence J4 kernel)
 #   segment_sample         -> ppl_preprocess (same P7 sampling kernel)
-#   top_orders_by_revenue  -> part_supplier_revenue + lineitem_pricing_summary
-#                             (relational-breadth shapes)
 # round-5 demotions (admitting repetition_signals, url_dedup, and the three
 # round-5 operators into the window):
 #   doc_length_histogram   -> quality_stats_rollup (length-shape diagnostics
 #                             subsumed by its grouped char stats)
-#   events_running_total   -> events_sessionize (same window-over-user
-#                             partition/order mechanics)
-#   events_hourly          -> events_salted_totals + events_sessionize (plain
-#                             hash agg on a derived time key; the salted query
-#                             exercises the same two-phase agg on a harder
-#                             key distribution)
-#   events_topk_users      -> vocab_topk (identical rank-over-hash-agg top-k
-#                             shape; events family keeps sessionize /
-#                             json_props / salted_totals driver rows)
 #   embedding_near_dup_pairs -> embedding_cluster_score (duplicate_ratio
 #                             consumes the same exact-cosine pair kernel and
 #                             reports dup_ratio per vector)
-# round-5 late demotion (admitting cross_doc_span_dup into the window):
-#   orders_rollup          -> lineitem_pricing_summary + part_supplier_revenue
-#                             (the relational family keeps its two richer
-#                             TPC-H shapes: Q1 agg battery and the 3-way
-#                             join+rollup; orders_rollup is a plain
-#                             groupBy(status).agg subset of both)
 # round-5 late demotion (admitting stratified_sample into the window):
 #   dedup_exact            -> dedup_representatives (the md5-keyed exact
 #                             pass is its FIRST PHASE — exact-duplicate
@@ -2277,15 +2122,6 @@ QUERIES["decontaminate_remove"] = q_decontaminate_remove
 #                             percentiles are taken over); the R-7
 #                             interpolation twin stays verified in the
 #                             local replica
-# round-7 late demotion (admitting domain_quality into the window):
-#   events_salted_totals   -> crawl_frontier_dedup (the identical
-#                             content-salted (key, salt) partial + merge
-#                             two-phase rollup kernel — the same shape the
-#                             host_rollup demotion already leaned on; the
-#                             frontier query runs it behind URL canon +
-#                             dedup, the events family keeps sessionize +
-#                             json_props driver rows); per-user totals
-#                             stay verified in the local replica
 # round-7 late demotion (admitting bpe_pair_counts into the window):
 #   langid_stopwords       -> extract_is_zh gates the production language
 #                             decision (the reference's is_zh gate, J1/P5
@@ -2306,14 +2142,6 @@ QUERIES["decontaminate_remove"] = q_decontaminate_remove
 #                             cluster-score case-expr composed into the
 #                             production composite; per-row banded scores
 #                             stay verified in the local replica
-# round-7 late demotion (admitting paragraph_dedup into the window):
-#   events_json_props      -> the events relational-breadth family keeps
-#                             sessionize (the stateful window kernel) in
-#                             the window; json_props is a stateless
-#                             per-row get_json_object scalar mapping
-#                             (§2.10 scalar-function breadth, no join/agg/
-#                             window of its own) whose per-row extracted
-#                             values stay verified in the local replica
 # round-7 late demotion (admitting decontaminate_remove into the window):
 #   decontaminate_overlap  -> decontaminate_remove's first phase IS the
 #                             detect kernel (same md5-h60 token-8-gram
@@ -2348,26 +2176,12 @@ QUERIES["decontaminate_remove"] = q_decontaminate_remove
 #                             plane arithmetic over hashed-gram vectors);
 #                             per-row RP-LSH neighbors stay verified in
 #                             the local replica
-# round-7 late demotion (admitting semdedup into the window):
-#   part_supplier_revenue  -> the second of two TPC-H relational-breadth
-#                             demos in the window; its kernels each stay
-#                             gated elsewhere: scan+filter+hash-agg via
-#                             lineitem_pricing_summary (same decimal
-#                             sum-of-products pricing arithmetic, same
-#                             table), multi-table equi-join + agg via
-#                             ivf_topk / crawl_frontier_dedup /
-#                             incremental_dedup (the corpus joins the
-#                             engine is actually for); per-row revenue
-#                             values stay verified in the local replica
 _GATE_TAIL = [
     "decontaminate_overlap",
     "repetition_signals",
     "ann_topk_lsh",
     "langid_stopwords",
     "embedding_cluster_score",
-    "events_json_props",
-    "part_supplier_revenue",
-    "events_salted_totals",
     "vocab_topk",
     "quality_percentiles",
     "curation_total",
@@ -2381,7 +2195,6 @@ _GATE_TAIL = [
     "binary_meta",
     "host_rollup",
     "dedup_exact",
-    "orders_rollup",
     "quality_keep",
     "ngram_jaccard_pairs",
     "minhash_signatures",
@@ -2392,11 +2205,7 @@ _GATE_TAIL = [
     "ngram_lm_train",
     "dedup_tokens",
     "segment_sample",
-    "top_orders_by_revenue",
     "doc_length_histogram",
-    "events_running_total",
-    "events_hourly",
-    "events_topk_users",
     "embedding_near_dup_pairs",
 ]
 assert set(_GATE_TAIL) <= set(QUERIES)

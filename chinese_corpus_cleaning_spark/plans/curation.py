@@ -204,12 +204,13 @@ def curation_run(
         )
 
     # ---- stage 1: quality + DFA scrub + PII mask (one Arrow pass + native
-    # projections, map-side; with_quality preserves passthrough columns)
-    stage1_cols = (
-        [id_col, url_col, text_col] if domain_screen else [id_col, text_col]
-    )
+    # projections, map-side; with_quality preserves passthrough columns).
+    # The url rides along only for stage 1.5, and only when it is not
+    # already the id (a url-keyed corpus would otherwise project it twice
+    # and lose its id to stage 1.5's drop).
+    url_extra = [url_col] if domain_screen and url_col != id_col else []
     scored = with_quality(
-        work.select(*stage1_cols, *strata),
+        work.select(id_col, *url_extra, text_col, *strata),
         trie_broadcast,
         cfg,
         text_col=text_col,
@@ -235,7 +236,7 @@ def curation_run(
                 max_bad_pct=domain_max_bad_pct,
             )
             .where(~F.col("domain_flagged"))
-            .drop("host", "domain_n", "domain_bad", "domain_flagged", url_col),
+            .drop("host", "domain_n", "domain_bad", "domain_flagged", *url_extra),
             ren,
         ).observe(obs["domain_kept"], F.count(F.lit(1)).alias("n"))
 

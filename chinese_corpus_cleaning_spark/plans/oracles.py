@@ -547,19 +547,9 @@ from documents group by lang, source"""
 select doc_id, strlen(text)::bigint as n_bytes, md5(text) as content_md5
 from documents"""
 
-    o["orders_rollup"] = """
-select r_name as region_name, count(*)::bigint as n_orders,
-  (sum(o_totalprice::decimal(18, 2)))::double as total_price
-from orders
-join customer on o_custkey = c_custkey
-join nation on c_nationkey = n_nationkey
-join region on n_regionkey = r_regionkey
-group by r_name"""
-
     o.update(build_extra())
     o.update(build_more())
     o.update(build_ann())
-    o.update(build_salted())
     o.update(build_tpch())
     o.update(build_ivf())
     o.update(build_ac())
@@ -986,15 +976,6 @@ select host, count(*)::bigint as n_docs, sum(n_chars)::bigint as total_chars,
   round(sum(n_chars)::double / count(*), 9) as avg_chars
 from h group by host"""
 
-    o["events_running_total"] = """
-select event_id::bigint as event_id, user_id::bigint as user_id,
-  round(sum(value) over (partition by user_id order by ts asc, event_id asc
-                         rows between unbounded preceding and current row), 6)
-    as running_value,
-  (row_number() over (partition by user_id order by ts asc, event_id asc))::bigint
-    as event_seq
-from events"""
-
     thr = _SMALL_MINHASH.similarity_threshold
     o["ngram_jaccard_candidates"] = f"""
 with sh as ({_SHINGLES5}),
@@ -1115,28 +1096,6 @@ select user_id::bigint as user_id, session_id::bigint as session_id,
   count(*)::bigint as n_events, min(ts) as session_start,
   max(ts) as session_end, round(sum(value), 6) as total_value
 from s group by user_id, session_id"""
-
-    o["events_hourly"] = """
-select date_trunc('hour', ts) as hour, event_type,
-  count(*)::bigint as n_events, round(sum(value), 6) as total_value
-from events group by 1, 2"""
-
-    o["events_topk_users"] = """
-with per_user as (
-  select event_type, user_id, sum(value) as total_value
-  from events group by 1, 2),
-r as (
-  select *, row_number() over (partition by event_type
-            order by total_value desc, user_id asc) as rank
-  from per_user)
-select event_type, user_id::bigint as user_id,
-  round(total_value, 6) as total_value, rank::bigint as rank
-from r where rank <= 10"""
-
-    o["events_json_props"] = """
-select event_id::bigint as event_id,
-  json_extract_string(props, '$.k')::bigint as prop_k
-from events"""
 
     _vn = """
 v as (select vec_id, list_transform(embedding, x -> x::double) as e from embeddings),
@@ -1374,36 +1333,8 @@ from r where rank <= 3"""
     return {"ann_topk_lsh": sql.strip()}
 
 
-def build_salted() -> dict[str, str]:
-    # the salted two-phase aggregation must equal the direct aggregation
-    return {
-        "events_salted_totals": """
-select user_id::bigint as user_id, round(sum(value), 5) as total_value,
-       count(*)::bigint as n_events
-from events group by user_id""".strip()
-    }
-
-
 def build_tpch() -> dict[str, str]:
     return {
-        "part_supplier_revenue": """
-select n_name as nation, p_brand,
-  (sum(l_extendedprice::decimal(18,2)
-       * (1::decimal(18,2) - l_discount::decimal(18,2))))::double as revenue,
-  count(*)::bigint as n_lineitems
-from lineitem
-join part on l_partkey = p_partkey and p_size <= 20
-join supplier on l_suppkey = s_suppkey
-join nation on s_nationkey = n_nationkey
-group by n_name, p_brand""".strip(),
-        "top_orders_by_revenue": """
-with rev as (
-  select l_orderkey::bigint as orderkey,
-    (sum(l_extendedprice::decimal(18,2)
-         * (1::decimal(18,2) - l_discount::decimal(18,2))))::double as revenue
-  from lineitem group by l_orderkey)
-select orderkey, revenue from rev
-order by revenue desc, orderkey asc limit 20""".strip(),
         "lineitem_pricing_summary": """
 select l_returnflag, l_linestatus,
   (sum(l_quantity::decimal(18,2)))::double as sum_qty,

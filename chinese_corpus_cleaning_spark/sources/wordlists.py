@@ -50,10 +50,6 @@ def full_trie() -> dict:
     return build_trie(load_words(ALL_SENSITIVE_WORDS))
 
 
-def small_trie() -> dict:
-    return build_trie(SMALL_LEXICON)
-
-
 class TrieBox:
     """Broadcast container that ships the *word list* and builds the trie
     lazily, once per executor python process.

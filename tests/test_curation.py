@@ -218,11 +218,7 @@ def test_v2_c4_folds_line_counts(spark):
         assert "页脚行" not in r["clean_text"]
 
 
-def test_domain_screen_composes(spark, corpus):
-    """Opt-in stage 1.5: a host whose quality-fail fraction exceeds the
-    bar loses ALL its docs — including the individually-passing one —
-    while hosts below the bar keep theirs; the junk docs on the clean
-    host still fall to the per-doc keep filter."""
+def _check_domain_screen(spark, corpus, id_col):
     # farm.example.cn carries both spam docs (40, 41 — keep=false) plus
     # ONE good doc (25): 2/3 bad > 50 % -> whole host dropped. Everything
     # else, including the empty-text error doc 42, sits on the clean host.
@@ -241,6 +237,7 @@ def test_domain_screen_composes(spark, corpus):
         bc,
         strata=("source",),
         k_per_stratum=30,
+        id_col=id_col,
         domain_screen=True,
         domain_min_docs=3,
         domain_max_bad_pct=50,
@@ -253,9 +250,26 @@ def test_domain_screen_composes(spark, corpus):
     # are already gone with their host
     assert obs["kept"].get["n"] == 33
     assert obs["unique"].get["n"] == 29  # 3 near-dups + 1 exact dup out
-    ids = {r["doc_id"] for r in rows}
+    # url ids end in the doc_id; every duplicate's url sorts after its
+    # original's, so the same representatives survive either way
+    ids = {int(str(r[id_col]).rsplit("/", 1)[-1]) for r in rows}
     assert 25 not in ids
     assert ids == set(range(30)) - {25}
+
+
+def test_domain_screen_composes(spark, corpus):
+    """Opt-in stage 1.5: a host whose quality-fail fraction exceeds the
+    bar loses ALL its docs — including the individually-passing one —
+    while hosts below the bar keep theirs; the junk docs on the clean
+    host still fall to the per-doc keep filter."""
+    _check_domain_screen(spark, corpus, "doc_id")
+
+
+def test_domain_screen_composes_url_keyed(spark, corpus):
+    """The same screen over a corpus keyed by its url (id_col == url_col):
+    the url column is then both the id and the host source, and must
+    survive stage 1.5."""
+    _check_domain_screen(spark, corpus, "url")
 
 
 def test_no_text_column_keys_a_shuffle(spark, corpus):

@@ -73,35 +73,6 @@ def test_shuffle_join_scoring_matches_broadcast(spark, docs):
         assert shuffled[k] == pytest.approx(v, rel=1e-9), k
 
 
-def test_broadcast_udf_matches_relational(spark, docs):
-    """The zero-join broadcast-UDF fast path (numpy-batched) must reproduce
-    the relational scorer, including null text and degenerate docs."""
-    model_bc = perplexity.train_broadcast_model(spark, docs, n=3)
-    probe = docs.unionByName(
-        spark.createDataFrame(
-            [("nulldoc", None), ("emptydoc", ""), ("onetok", "xyzzy")],
-            ["doc_id", "text"],
-        )
-    )
-    model = perplexity.ngram_counts(docs, n=3)
-    rel = {
-        r["doc_id"]: r["ppl"]
-        for r in perplexity.perplexity_relational(
-            probe.where(F.col("text").isNotNull()), model, n=3,
-            v=model_bc.value["v"],
-        ).collect()
-    }
-    udf = perplexity.perplexity_udf(model_bc)
-    got = {
-        r["doc_id"]: r["ppl"]
-        for r in probe.select("doc_id", udf(F.col("text")).alias("ppl")).collect()
-    }
-    assert got["nulldoc"] is None
-    for k, v in rel.items():
-        assert got[k] == pytest.approx(v, rel=1e-9), k
-    model_bc.unpersist()
-
-
 def test_ppl_buckets_ccnet_tertiles(spark, docs):
     """CCNet head/middle/tail partitioning: cutoffs must equal a pure-pandas
     recomputation of the integer-exact histogram rule, labels must be the

@@ -147,6 +147,40 @@ def test_quality_pipeline_single_arrow_eval(spark):
     assert n_arrow == 1, plan
 
 
+def test_extraction_single_arrow_eval(spark):
+    """with_extraction runs its three per-doc Python stages (HTML extract,
+    repeat removal, language ID) as ONE fused pandas UDF: exactly one
+    ArrowEvalPython node, not one per stage."""
+    import re
+
+    from chinese_corpus_cleaning_spark.operators.extract import with_extraction
+
+    docs = spark.createDataFrame(
+        [(1, "<html><body><p>天地玄黄宇宙洪荒</p></body></html>")],
+        "doc_id long, html string",
+    )
+    plan = _explained(with_extraction(docs))
+    n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
+    assert n_arrow == 1, plan
+
+
+def test_assign_cells_has_no_window(spark):
+    """The nearest-centroid argmin is a min(struct(d2, cid)) aggregate with
+    map-side partials, never a row_number Window sort over the n*k pair
+    stream."""
+    from chinese_corpus_cleaning_spark.operators.similarity import (
+        assign_cells,
+        seed_centroids,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    plan = _explained(assign_cells(vecs, seed_centroids(vecs, 4)))
+    assert "Window" not in plan, plan
+
+
 def test_stratified_sample_two_bounded_exchanges(spark):
     """The salted two-phase sample must cost exactly two hash exchanges —
     (stratum, salt) for the bounded local top-k, then (stratum) over at

@@ -209,3 +209,22 @@ def test_kmeans_fit_string_ids(spark):
     # the trained table drives assign_cells/semdedup end-to-end
     out = semdedup(vecs, tau=0.99, centroids=cents)
     assert out.count() == 24
+
+
+def test_kmeans_arms_agree_on_nan_input(spark):
+    """Both arms of kmeans_fit's size cutover must give the same cells on
+    a NaN coordinate: numpy's argmin stops at the first NaN distance while
+    Spark orders NaN above every double, so NaN input takes the
+    distributed arm."""
+    from chinese_corpus_cleaning_spark.operators.similarity import assign_cells
+
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)]
+    rows[0] = (0, [float("nan"), 0.0, 0.0, 0.0])
+    vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+    def cells(driver_threshold):
+        cents = kmeans_fit(vecs, k=3, iters=3, driver_threshold=driver_threshold)
+        return {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
+
+    assert cells(100_000) == cells(0)
