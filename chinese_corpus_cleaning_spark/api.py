@@ -42,6 +42,13 @@ from .functions.feature import evaluate_features
 from .functions.textstats import check_reasons, evaluate_rules
 from .sources.wordlists import ALL_SENSITIVE_WORDS, load_words
 
+
+def _write_json(path: str, obj: dict) -> None:
+    # indent=2 like every results JSON the reference writes
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(obj, f, ensure_ascii=False, indent=2)
+
+
 GENERAL_DEFAULTS = {
     "enable_rule_filter": True,
     "enable_feature_words": True,
@@ -267,16 +274,10 @@ class TextQualityFilter:
                     # reference parity (main.py:114-133): per-doc errors are
                     # low-quality in the stats, not "error"
                     stats["low_quality"] += 1
-                    with open(
+                    _write_json(
                         os.path.join(results_dir, f"{name}.json"),
-                        "w",
-                        encoding="utf-8",
-                    ) as f:
-                        # indent=2 like every other results JSON (the
-                        # reference indents ALL result files; review finding)
-                        json.dump(
-                            {"error": r["error"]}, f, ensure_ascii=False, indent=2
-                        )
+                        {"error": r["error"]},
+                    )
                     continue
                 if r["keep"]:
                     stats["high_quality"] += 1
@@ -284,25 +285,20 @@ class TextQualityFilter:
                         f.write(r["text"])
                 else:
                     stats["low_quality"] += 1
-                with open(
-                    os.path.join(results_dir, f"{name}.json"), "w", encoding="utf-8"
-                ) as f:
-                    json.dump(
-                        {
-                            "quality_score": r["quality_score"],
-                            "is_high_quality": bool(r["keep"]),
-                            # only ENABLED components appear, like the
-                            # reference's component_scores dict
-                            "component_scores": {
-                                k: r[k]
-                                for k in ("rule_score", "feature_score")
-                                if r[k] is not None
-                            },
+                _write_json(
+                    os.path.join(results_dir, f"{name}.json"),
+                    {
+                        "quality_score": r["quality_score"],
+                        "is_high_quality": bool(r["keep"]),
+                        # only ENABLED components appear, like the
+                        # reference's component_scores dict
+                        "component_scores": {
+                            k: r[k]
+                            for k in ("rule_score", "feature_score")
+                            if r[k] is not None
                         },
-                        f,
-                        ensure_ascii=False,
-                        indent=2,
-                    )
+                    },
+                )
             # files Spark's wholetext reader drops (0-byte) behave like the
             # reference's empty-text path: error swallowed -> low_quality,
             # and a per-file error results JSON is still written (the
@@ -327,20 +323,18 @@ class TextQualityFilter:
                 else:
                     stats["error"] += 1
                     err_label = "unreadable_input"
-                with open(
-                    os.path.join(results_dir, f"{name}.json"), "w", encoding="utf-8"
-                ) as f:
-                    json.dump(
-                        {"error": err_label}, f, ensure_ascii=False, indent=2
-                    )
-        with open(os.path.join(output_dir, "stats.json"), "w", encoding="utf-8") as f:
-            json.dump(stats, f, ensure_ascii=False, indent=2)
+                _write_json(
+                    os.path.join(results_dir, f"{name}.json"), {"error": err_label}
+                )
+        _write_json(os.path.join(output_dir, "stats.json"), stats)
         return stats
 
     def batch_filter_sensitive(
         self, input_dir: str, output_dir: str | None = None, file_pattern: str = "*.txt"
     ) -> dict:
-        """main.py:363-415's contract, Spark-distributed scrub."""
+        """main.py:363-415's contract, Spark-distributed scrub. A non-empty
+        input missing from the Spark result counts in ``stats["error"]`` and
+        leaves ``errors/<name>.json`` = ``{"error": "unreadable_input"}``."""
         from .operators.quality import scrub_udf
         from .sources.wordlists import broadcast_trie
 
@@ -384,12 +378,17 @@ class TextQualityFilter:
                     f.write("")
                 stats["processed"] += 1
             else:
+                # batch_process's error JSON, in a subdirectory: every
+                # scrubbed output is a file directly in output_dir
                 stats["error"] += 1
+                errors_dir = os.path.join(output_dir, "errors")
+                os.makedirs(errors_dir, exist_ok=True)
+                _write_json(
+                    os.path.join(errors_dir, f"{name}.json"),
+                    {"error": "unreadable_input"},
+                )
         # the reference ALWAYS writes filter_stats.json (main.py:410-413)
-        with open(
-            os.path.join(output_dir, "filter_stats.json"), "w", encoding="utf-8"
-        ) as f:
-            json.dump(stats, f, ensure_ascii=False, indent=2)
+        _write_json(os.path.join(output_dir, "filter_stats.json"), stats)
         return stats
 
 

@@ -182,34 +182,30 @@ def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
     Round 8: the three per-doc Python stages run as ONE fused pandas UDF
     (``extract_full``) — one ArrowEvalPython node instead of two chained
     ones, halving the Python boundary crossings (pinned by
-    tests/test_plan_quality.py)."""
-    # temp struct columns use collision-proof names: withColumn silently
-    # REPLACES an existing column, so a plain "r"/"l" would destroy user data
-    # ... and the EXPANDED output names must not collide either:
-    # select('*', struct.*) DUPLICATES same-named input columns (ambiguous
-    # references downstream, review finding) — raise instead. The guard
-    # covers EVERY emitted column, including the withColumn-assigned
-    # extracted_text / repeat_removal_fell_back (ADVICE r7: withColumn
-    # silently replaces same-named input columns too).
-    out_names = {
+    tests/test_plan_quality.py).
+
+    The struct is emitted through ``inline(array(extract_full(html)))``,
+    a Generate, not as a projected struct column. A filter on its output
+    (``.where("is_zh")``) cannot move below a Generate, so one evaluation
+    serves the filter and the kept columns; from a projection Catalyst
+    pushed it down as a second ``extract_full(html).is_zh`` node over the
+    same html. Filters on pass-through columns (``url``) still reach the
+    scan. The price: the UDF runs even when none of its columns is kept."""
+    # select('*', ...) DUPLICATES same-named input columns (ambiguous
+    # references downstream, review finding) — raise instead; the guard
+    # covers EVERY emitted column (ADVICE r7).
+    out_names = (
+        "extracted_text",
+        "repeat_removal_fell_back",
         "lang_pred",
         "lang_conf",
         "is_zh",
-        "extracted_text",
-        "repeat_removal_fell_back",
-    } & set(df.columns)
-    if out_names:
+    )
+    clash = set(out_names) & set(df.columns)
+    if clash:
         raise ValueError(
             f"with_extraction: input columns collide with the operator's "
-            f"output names {sorted(out_names)} — rename or drop them first"
+            f"output names {sorted(clash)} — rename or drop them first"
         )
-    ecol = "__extract_struct"
-    return (
-        df.withColumn(ecol, extract_full(F.col(html_col)))
-        .withColumn("extracted_text", F.col(f"{ecol}.text"))
-        .withColumn("repeat_removal_fell_back", F.col(f"{ecol}.fell_back"))
-        .withColumn("lang_pred", F.col(f"{ecol}.lang_pred"))
-        .withColumn("lang_conf", F.col(f"{ecol}.lang_conf"))
-        .withColumn("is_zh", F.col(f"{ecol}.is_zh"))
-        .drop(ecol)
-    )
+    extracted = F.inline(F.array(extract_full(F.col(html_col))))
+    return df.select("*", extracted.alias(*out_names))

@@ -23,12 +23,59 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _shuffles(plan) -> list[tuple[str, int]]:
+    """(origin, partition count) of each shuffle exchange that can shape
+    ``plan``'s output partitioning; a broadcast side never does."""
+    name = plan.getClass().getSimpleName()
+    if name == "BroadcastExchangeExec":
+        return []
+    found = []
+    if name == "ShuffleExchangeExec":
+        n = plan.outputPartitioning().numPartitions()
+        found.append((plan.shuffleOrigin().toString(), n))
+    children = plan.children().iterator()
+    while children.hasNext():
+        found += _shuffles(children.next())
+    return found
+
+
+def num_partitions(df: DataFrame) -> int:
+    """``df.rdd.getNumPartitions()``, read off the physical plan whenever
+    the plan fixes the count, so that no Spark job runs.
+
+    Under AQE a frame above an Exchange plans as an AdaptiveSparkPlan, and
+    its ``rdd`` runs every shuffle map stage below it: asking an
+    ``xxhash64(url)``-repartitioned ingest frame for its count re-ran the
+    whole HTML extraction and its shuffle write as a job of its own. The
+    planned count is final when every shuffle is a ``repartition(n, ...)``
+    (origin REPARTITION_BY_NUM: AQE never coalesces or splits one) and the
+    output count is one of theirs. Any other shuffle (a join or ``groupBy``
+    exchange, ``repartition(col)``) may be coalesced at run time, so those
+    plans take the ``rdd`` probe, as do plans with no shuffle (a scan's
+    split count, for which nothing runs)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the initial plan: nothing has run yet
+        n = plan.outputPartitioning().numPartitions()
+        shuffles = _shuffles(plan)
+        origins = {origin for origin, _ in shuffles}
+        if origins == {"REPARTITION_BY_NUM"} and n in {k for _, k in shuffles}:
+            return n
+    return df.rdd.getNumPartitions()
+
+
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff it has fewer
-    partitions (batch plans only — streaming plans pass through)."""
+    partitions (batch plans only — streaming plans pass through).
+
+    It runs while an operator BUILDS its plan, so its probe
+    (``num_partitions``, plan-only where the plan fixes the count) must
+    never execute that plan: a probe that ran the shuffle stages below
+    made building ``pipeline.quality_filter_plan`` a Spark job of its own,
+    which the real write then repeated."""
     if df.isStreaming:
         return df
     want = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < want:
+    if num_partitions(df) < want:
         return df.repartition(want)
     return df

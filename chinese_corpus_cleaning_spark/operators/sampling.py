@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.spam import PY_WS_CLASS
 from .dedup import _h60_sql
+from .partitioning import num_partitions
 
 __all__ = [
     "stratified_sample",
@@ -231,7 +232,7 @@ def pack_sequences(
     if budget < 1:
         raise ValueError("budget must be >= 1")
     if n_buckets is None:
-        target = max(64, docs.rdd.getNumPartitions())
+        target = max(64, num_partitions(docs))
         n_buckets = 1 << (target - 1).bit_length()
     if n_buckets < 1 or n_buckets & (n_buckets - 1):
         raise ValueError("n_buckets must be a power of 2")

@@ -521,8 +521,6 @@ select vec_id::bigint as vec_id, neighbor_id::bigint as neighbor_id,
 from r where rank <= 5"""
 
     # ann buckets: identical ±1 hyperplane sign chains, DuckDB dialect
-    from ..operators.similarity import hyperplane_sign_expr
-
     def duck_sign(plane: int, dim: int = 64) -> str:
         signs = [1 if h60(f"{plane}|{d}") & 1 else -1 for d in range(dim)]
         terms = " + ".join(

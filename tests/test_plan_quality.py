@@ -150,7 +150,9 @@ def test_quality_pipeline_single_arrow_eval(spark):
 def test_extraction_single_arrow_eval(spark):
     """with_extraction runs its three per-doc Python stages (HTML extract,
     repeat removal, language ID) as ONE fused pandas UDF: exactly one
-    ArrowEvalPython node, not one per stage."""
+    ArrowEvalPython node, not one per stage. That holds under the is_zh
+    filter ingest applies, too: a filter pushed below the projection as
+    extract_full(html).is_zh would add a second node over the same html."""
     import re
 
     from chinese_corpus_cleaning_spark.operators.extract import with_extraction
@@ -159,9 +161,57 @@ def test_extraction_single_arrow_eval(spark):
         [(1, "<html><body><p>天地玄黄宇宙洪荒</p></body></html>")],
         "doc_id long, html string",
     )
-    plan = _explained(with_extraction(docs))
-    n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
-    assert n_arrow == 1, plan
+    extracted = with_extraction(docs)
+    kept = extracted.where("is_zh").select("doc_id", "extracted_text")
+    for df in (extracted, kept):
+        plan = _explained(df)
+        n_arrow = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
+        assert n_arrow == 1, plan
+
+
+def test_plan_construction_runs_no_job(spark, tmp_path):
+    """Building the labels plan over a repartition(n, xxhash64(url)) frame
+    runs no Spark job: the parallelism guard in with_quality reads the
+    partition count off the plan instead of running the shuffle stage
+    below it. Its decisions are those of df.rdd.getNumPartitions()."""
+    from chinese_corpus_cleaning_spark.functions.dfa import build_trie
+    from chinese_corpus_cleaning_spark.operators.partitioning import (
+        ensure_min_parallelism,
+    )
+    from chinese_corpus_cleaning_spark.plans.pipeline import quality_filter_plan
+    from chinese_corpus_cleaning_spark.sources import gen
+    from chinese_corpus_cleaning_spark.sources.wordlists import SMALL_LEXICON
+
+    sc = spark.sparkContext
+    assert sc.defaultParallelism == 4
+    docs = gen.docs_df(spark, 200, partitions=4).select("url", "text")
+    docs.coalesce(1).write.parquet(str(tmp_path / "one"))
+    docs.write.parquet(str(tmp_path / "four"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    four = spark.read.parquet(str(tmp_path / "four"))
+    bc = sc.broadcast(build_trie(SMALL_LEXICON))
+
+    group = "test_plan_construction_runs_no_job"
+    sc.setJobGroup(group, "build the labels plan")
+    try:
+        quality_filter_plan(four, bc, partitions=4)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+    rep4 = four.repartition(4, "url")
+    grouped = four.groupBy("url").count()  # AQE coalesces it to 1 partition
+    stream = spark.readStream.schema(four.schema).parquet(str(tmp_path / "four"))
+    table = [  # (frame, passes through unchanged)
+        ("single-file scan", one, False),
+        ("multi-file scan", four, True),
+        ("repartition(4, col)", rep4, True),
+        ("AQE-coalesced groupBy", grouped, False),
+        ("streaming", stream, True),
+    ]
+    got = {k: ensure_min_parallelism(df) is df for k, df, _ in table}
+    assert got == {k: want for k, _, want in table}
 
 
 def test_assign_cells_has_no_window(spark):
