@@ -114,66 +114,5 @@ def simhash60(tokens: list[str]) -> int:
     return out
 
 
-def simhash60_batch(
-    texts: list[str | None], chunk_tokens: int = 262_144
-) -> "object":
-    """Vectorized simhash60 over a whole Arrow batch: identical values to
-    ``simhash60((t or '').split(' '))`` per text (differential-tested).
-
-    Layout matters more than flops here: the bit matrix is built TRANSPOSED
-    (64, n_tokens) via np.unpackbits on the little-endian byte view, so the
-    per-bit prefix sum (np.cumsum axis=1) and the segment-end gather both
-    run along the contiguous axis — the naive (n_tokens, 64) orientation
-    pays a cache miss per element in reduceat/cumsum (measured 10-20x
-    slower). Per-doc ones-counts come from prefix-sum differences at
-    segment ends; sign(2*ones - n) packs back to 60 bits. Token md5s stay a
-    Python loop (hashlib has no batch API) but are cached per UNIQUE token
-    within each chunk — Zipf makes that a large cut on real text. Memory is
-    bounded PER CHUNK, not per Arrow batch: token counts come from a
-    ``count(' ')`` scan (exactly ``len(split(' '))`` since the separator is
-    explicit), token lists materialize only transiently inside the chunk's
-    comprehension, and the md5 cache resets per chunk (<= ``chunk_tokens``
-    live entries) — so a large maxRecordsPerBatch cannot inflate the
-    worker's footprint beyond one chunk. Chunked at ``chunk_tokens`` so the
-    int32 prefix matrix stays ~64 MB. Returns an int64 ndarray (1.21-1.86x
-    the per-doc ``simhash60`` loop, value-identical; see
-    operators/dedup.simhash_udf)."""
-    import numpy as np
-
-    cache: dict[str, int] = {}
-    counts = np.fromiter(
-        ((t or "").count(" ") + 1 for t in texts), dtype=np.int64, count=len(texts)
-    )
-    out = np.empty(len(texts), dtype=np.int64)
-    bitpos = np.arange(64, dtype=np.uint64)
-    i = 0
-    while i < len(texts):
-        j, budget = i, 0
-        while j < len(texts) and (budget == 0 or budget + counts[j] <= chunk_tokens):
-            budget += counts[j]
-            j += 1
-        cache.clear()
-        flat = [
-            cache.setdefault(tok, h60(tok))
-            for t in texts[i:j]
-            for tok in (t or "").split(" ")
-        ]
-        # '<u8' forces little-endian bytes so bit positions are host-order
-        # independent (a bare .view(np.uint8) would flip them on big-endian)
-        hs = np.array(flat, dtype="<u8")
-        b_t8 = np.ascontiguousarray(hs.view(np.uint8).reshape(-1, 8).T)
-        bits = np.unpackbits(b_t8, axis=0, bitorder="little")  # (64, n_tok)
-        c = np.cumsum(bits, axis=1, dtype=np.int32)
-        ends = np.cumsum(counts[i:j]) - 1
-        ones = c[:, ends].astype(np.int64)
-        ones[:, 1:] -= c[:, ends[:-1]]
-        sums = 2 * ones - counts[None, i:j]
-        out[i:j] = (
-            ((sums.T > 0).astype(np.uint64) << bitpos).sum(axis=1).astype(np.int64)
-        )
-        i = j
-    return out
-
-
 def hamming60(a: int, b: int) -> int:
     return bin(a ^ b).count("1")

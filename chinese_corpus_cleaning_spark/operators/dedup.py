@@ -7,8 +7,9 @@ near-dup detection (/root/reference/text_quality_filter/utils/clustering.py:
 O(n^2), driver-bound) as the hash-join pipeline mandated by BASELINE.json's
 north_rule: shingle -> MinHash signature -> banded LSH keys -> equi-join on
 band key (shuffle hash join, AQE-skew-splittable) -> similarity filter ->
-connected components (iterative small-star/large-star joins) -> representative
-election (min url/id per component).
+connected components (driver union-find, or min-label propagation with
+pointer jumping at scale) -> representative election (min url/id per
+component).
 
 All hashes bottom out in the md5-based ``h60`` (functions/hashing.py) so the
 DuckDB oracle can verify signatures, band keys, candidate pairs and SimHash
@@ -21,9 +22,14 @@ Scale notes (10^12 docs):
     pages from one host) are exactly the skew the north_rule calls out —
     handled by (a) AQE skew-join splitting and (b) an optional salting
     pre-pass exposed as ``salt_hot_keys``.
-  * Connected components uses alternating small-star/large-star joins with
+  * Connected components above the driver cutover runs min-label
+    propagation plus pointer jumping as DataFrame joins, with a
     per-iteration localCheckpoint to truncate lineage; converges in
-    O(log n) iterations.
+    O(log diameter) iterations.
+  * Every size-adaptive arm (signature broadcast, candidate-id prune,
+    increment broadcast, CC driver/distributed) is picked from a count
+    observed on a checkpoint the operator takes anyway
+    (partitioning.checkpoint_observed) — never from a caller option.
 """
 
 from __future__ import annotations
@@ -31,18 +37,48 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import StringType
 
 from ..config import DedupConfig
+from .partitioning import checkpoint_observed
 
-# Broadcast budget for the est-Jaccard signature re-attach (see
-# minhash_similarity_pairs): each signature row is ~num_hashes * 8 B, so
-# 64 MB admits ~65k rows at the production 128-hash config — far below the
-# guide's few-hundred-MB broadcast comfort zone, and corpus-scale signature
-# tables blow the bound and take the shuffled joins as before. The round-8
-# A/B (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept it for the
+# Broadcast budget for a signature table (the est-Jaccard re-attach in
+# minhash_similarity_pairs, the increment side of dedup_incremental_pairs):
+# a row is num_hashes * 8 B plus its id, so 64 MB admits ~65k long-id rows
+# at the production 128-hash config — far below the guide's
+# few-hundred-MB broadcast comfort zone, and corpus-scale signature tables
+# blow the bound and take the shuffled joins. The round-8 A/B
+# (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept it for the
 # plan shape.
 _SIG_BCAST_BUDGET_BYTES = 64 << 20
+
+
+def _checkpoint_signatures(
+    sig_stage: DataFrame, id_col: str, cfg: DedupConfig, name: str
+) -> tuple[DataFrame, int, float]:
+    """Eager checkpoint of a signature frame (several branches scan it);
+    returns ``(signed, n_rows, row_bytes)``. A row is ``8 * num_hashes``
+    bytes plus its id: a string id's mean width comes from an
+    ``octet_length`` sum observed on the same job (URL ids can outweigh a
+    small signature several times over), any other id's from its type."""
+    string_id = isinstance(sig_stage.schema[id_col].dataType, StringType)
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if string_id:
+        metrics.append(F.sum(F.octet_length(id_col)).alias("id_bytes"))
+    signed, observed = checkpoint_observed(sig_stage, name, *metrics)
+    n = observed["n"]
+    if string_id:
+        id_width = (observed["id_bytes"] or 0) / n if n else 0
+    else:
+        id_width = sig_stage._jdf.schema().apply(id_col).dataType().defaultSize()
+    return signed, n, 8 * cfg.num_hashes + id_width
+
+
+def _sig_fits_broadcast(n_rows: int, row_bytes: float) -> bool:
+    """Whether a non-empty ``n_rows``-row signature table fits the
+    broadcast budget."""
+    return 0 < n_rows and n_rows * row_bytes <= _SIG_BCAST_BUDGET_BYTES
+
 
 # ---------------------------------------------------------------- exact dedup
 
@@ -289,94 +325,62 @@ def minhash_similarity_pairs(
     instead of re-running the shingle+perm-min signature stage, the
     dominant map-side cost at corpus scale (review finding: fold's
     internal pass used to re-sign every remaining doc)."""
-    # eager localCheckpoint: three downstream branches scan the signatures;
-    # without materialization the first job recomputes the signature stage
-    # once per branch. localCheckpoint (not cache+count) because it (a) costs
-    # ONE job instead of two, (b) truncates lineage, and (c) doesn't pin
-    # executor storage across repeated invocations in a long-lived driver
-    # (blocks are freed when the DataFrame is GC'd, no unpersist bookkeeping).
-    from pyspark.sql import Observation
-
-    obs_sig = Observation("minhash_n_sigs")
+    # three downstream branches scan the signatures; without the checkpoint
+    # the first job recomputes the signature stage once per branch
     sig_stage = (
         precomputed.join(docs.select(id_col), id_col, "left_semi")
         if precomputed is not None
         else with_minhash(docs, cfg, id_col, text_col)
     )
-    signed = (
-        sig_stage.observe(obs_sig, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    signed, n_sigs, row_bytes = _checkpoint_signatures(
+        sig_stage, id_col, cfg, "minhash_n_sigs"
     )
-    n_sigs = obs_sig.get["n"]
-    bcast_budget_rows = _SIG_BCAST_BUDGET_BYTES // (8 * cfg.num_hashes)
     pairs = lsh_candidate_pairs(signed, id_col, max_band_bucket)
-    if 0 < n_sigs <= bcast_budget_rows:
-        # SMALL-SIGNATURE fast path (size-adaptive join strategy, guide
-        # §3.1, decided from the free observe() count): the whole signature
-        # table fits the broadcast budget (~num_hashes * 8 B per row, 64 MB
-        # bound), so both re-attach joins become map-side hash probes and
-        # the candidate-id prune below is moot. With exactly one consumer
-        # chain left, the pair table needs NO checkpoint of its own — the
-        # est output (threshold survivors, orders of magnitude smaller than
-        # the candidate set) is checkpointed instead, so multi-consumer
-        # callers (dbscan's three scans) never re-run the LSH machinery and
-        # the stage costs one job fewer than the round-7 shape.
-        sig_a = F.broadcast(
-            signed.select(
-                F.col(id_col).alias("id_a"), F.col("minhash").alias("minhash_a")
-            )
-        )
-        sig_b = F.broadcast(
-            signed.select(
-                F.col(id_col).alias("id_b"), F.col("minhash").alias("minhash_b")
-            )
-        )
-        cond, est_col = _est_jaccard_exprs(cfg)
-        est = (
-            pairs.join(sig_a, "id_a")
-            .join(sig_b, "id_b")
-            .where(cond)
-            .withColumn("est_jaccard", est_col)
-            .select("id_a", "id_b", "est_jaccard")
-        )
-        return est.localCheckpoint(eager=True) if materialize else est
-    # CORPUS-SCALE path: materialize the candidate pairs once (the
-    # est_jaccard join consumes them, and their id set may prune the
-    # signature re-attach below).
-    obs_pairs = Observation("lsh_n_pairs")
-    pairs = (
-        pairs.observe(obs_pairs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    # ADAPTIVE signature-re-attach prune (same runtime-statistics doctrine as
-    # the connected_components cutover): the two joins below shuffle the
-    # 128-slot signature table (~1 KB/doc), measured as the dominant cost of
-    # the stage (DEDUP_BREAKDOWN.md). When few ids appear in candidate pairs
-    # (the web-scale case: post-exact-dedup, capped buckets), a semi-join
-    # against the candidate-id set prunes most of that shuffle; when most
-    # ids are candidates (high-collision corpora), the prune is pure
-    # overhead — one extra full shuffle — so it is skipped. The decision is
-    # FREE: both row counts ride the two checkpoint jobs as observe()
-    # metrics, and distinct candidate ids <= 2 * n_pairs bounds coverage
-    # from above (a conservative sufficient condition — prune only when
-    # certainly sparse).
-    n_pairs = obs_pairs.get["n"]
+    # SMALL-SIGNATURE fast path (size-adaptive join strategy, guide §3.1,
+    # decided from the free observed count): the whole signature table fits
+    # the broadcast budget, so both re-attach joins become map-side hash
+    # probes and the candidate-id prune below is moot. With exactly one
+    # consumer chain left, the pair table needs NO checkpoint of its own —
+    # the est output (threshold survivors, orders of magnitude smaller than
+    # the candidate set) is checkpointed instead, so multi-consumer callers
+    # (dbscan's three scans) never re-run the LSH machinery and the stage
+    # costs one job fewer than the round-7 shape.
+    fast = broadcast = _sig_fits_broadcast(n_sigs, row_bytes)
     sig_src = signed
-    sig_rows = n_sigs
-    if n_sigs > 0 and 2 * n_pairs < 0.5 * n_sigs:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        sig_src = signed.join(cand_ids, id_col, "leftsemi")
-        sig_rows = min(n_sigs, 2 * n_pairs)
+    if not fast:
+        # CORPUS-SCALE path: materialize the candidate pairs once (the
+        # est_jaccard join consumes them, and their id set may prune the
+        # signature re-attach below).
+        pairs, observed = checkpoint_observed(pairs, "lsh_n_pairs")
+        n_pairs = observed["n"]
+        # ADAPTIVE signature-re-attach prune (same runtime-statistics
+        # doctrine as the connected_components cutover): the two joins below
+        # shuffle the 128-slot signature table (~1 KB/doc), measured as the
+        # dominant cost of the stage (DEDUP_BREAKDOWN.md). When few ids
+        # appear in candidate pairs (the web-scale case: post-exact-dedup,
+        # capped buckets), a semi-join against the candidate-id set prunes
+        # most of that shuffle; when most ids are candidates (high-collision
+        # corpora), the prune is pure overhead — one extra full shuffle — so
+        # it is skipped. The decision is FREE: both row counts ride the two
+        # checkpoint jobs, and distinct candidate ids <= 2 * n_pairs bounds
+        # coverage from above (a conservative sufficient condition — prune
+        # only when certainly sparse).
+        sig_rows = n_sigs
+        if n_sigs > 0 and 2 * n_pairs < 0.5 * n_sigs:
+            cand_ids = (
+                pairs.select(F.col("id_a").alias(id_col))
+                .union(pairs.select(F.col("id_b").alias(id_col)))
+                .distinct()
+            )
+            sig_src = signed.join(cand_ids, id_col, "leftsemi")
+            sig_rows = min(n_sigs, 2 * n_pairs)
+        # The post-prune table can still fit the broadcast budget in sparse
+        # corpora (sig_rows <= 2 * n_pairs) — broadcast it then;
+        # corpus-scale tables blow the bound and keep the shuffled joins.
+        broadcast = _sig_fits_broadcast(sig_rows, row_bytes)
     sig_a = sig_src.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("minhash_a"))
     sig_b = sig_src.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("minhash_b"))
-    # The post-prune table can still fit the broadcast budget in sparse
-    # corpora (sig_rows <= 2 * n_pairs) — broadcast it then; corpus-scale
-    # tables blow the bound and keep the shuffled joins exactly as before.
-    if 0 < sig_rows <= bcast_budget_rows:
+    if broadcast:
         sig_a = F.broadcast(sig_a)
         sig_b = F.broadcast(sig_b)
     # EXACT prefix prune: a pair needs >= k_min of num_hashes agreeing slots
@@ -401,7 +405,7 @@ def minhash_similarity_pairs(
         .withColumn("est_jaccard", est_col)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return est
+    return est.localCheckpoint(eager=True) if fast and materialize else est
 
 
 def _est_jaccard_exprs(cfg: DedupConfig):
@@ -440,13 +444,24 @@ def _est_jaccard_exprs(cfg: DedupConfig):
 # --------------------------------------------------- incremental (batch) dedup
 
 
-def _incremental_pairs_from_signed(
-    signed_new: DataFrame,
-    corpus_index: DataFrame,
+def _sign_and_probe(
+    new_docs: DataFrame,
+    corpus_index: DataFrame | None,
     cfg: DedupConfig,
     id_col: str,
-    broadcast_new: bool,
-) -> DataFrame:
+    text_col: str,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Sign ``new_docs`` once (eager checkpoint, size observed on the same
+    job) and, given an index, probe it (join shape: see
+    dedup_incremental_pairs). Returns ``(signed_new, pairs)``; ``pairs`` is
+    None without an index."""
+    signed_new, n_new, row_bytes = _checkpoint_signatures(
+        with_minhash(new_docs, cfg, id_col, text_col), id_col, cfg,
+        "minhash_n_new",
+    )
+    if corpus_index is None:
+        return signed_new, None
+    broadcast_new = _sig_fits_broadcast(n_new, row_bytes)
     new_bands = signed_new.select(
         F.col(id_col).alias("new_id"), F.explode("band_keys").alias("band_key")
     )
@@ -474,7 +489,7 @@ def _incremental_pairs_from_signed(
     if broadcast_new:
         new_sigs = F.broadcast(new_sigs)
     cond, est_col = _est_jaccard_exprs(cfg)
-    return (
+    return signed_new, (
         cand.join(corpus_sigs, "corpus_id")
         .join(new_sigs, "new_id")
         .where(cond)
@@ -489,7 +504,6 @@ def dedup_incremental_pairs(
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between a NEW batch and an EXISTING corpus signature
     index — the shape a continuously-crawled 100 TB corpus actually runs:
@@ -497,14 +511,14 @@ def dedup_incremental_pairs(
     (id, minhash, band_keys)) and each increment is deduped against it
     without re-hashing or re-shuffling the corpus.
 
-    ``broadcast_new=True`` (default, for increments that fit the broadcast
-    threshold): the new batch's exploded (new_id, band_key) rows and its
-    signatures are broadcast, so the ONLY work on the corpus side is a
-    map-side hash probe of the band-key stream plus a semi-join-pruned
-    signature fetch for the rare candidate ids — the corpus index crosses
-    zero shuffles. With ``False`` the band probe is a plain equi-join on
-    band_key (for increments too large to broadcast); Catalyst/AQE pick the
-    strategy. Symmetric agreement estimate: fraction of agreeing minhash
+    An increment whose signature table fits the signature broadcast budget
+    (its row count and id bytes ride the increment's own checkpoint job)
+    has its exploded (new_id, band_key) rows and its signatures broadcast,
+    so the ONLY work on the corpus side is a map-side hash probe of the
+    band-key stream plus a semi-join-pruned signature fetch for the rare
+    candidate ids — the corpus index crosses zero shuffles. A larger
+    increment probes with a plain equi-join on band_key; Catalyst/AQE pick
+    the strategy. Symmetric agreement estimate: fraction of agreeing minhash
     slots (same estimator, same exact prefix prune as
     minhash_similarity_pairs; reference clustering semantics
     text_quality_filter/clustering.py:25-27 re-expressed for MinHash-LSH).
@@ -517,12 +531,7 @@ def dedup_incremental_pairs(
     provably equal to minhash_similarity_pairs over the concatenated corpus
     restricted to cross-partition uncapped-LSH pairs
     (tests/test_dedup_spark.py pins the equality)."""
-    signed_new = with_minhash(new_docs, cfg, id_col, text_col).localCheckpoint(
-        eager=True
-    )
-    return _incremental_pairs_from_signed(
-        signed_new, corpus_index, cfg, id_col, broadcast_new
-    )
+    return _sign_and_probe(new_docs, corpus_index, cfg, id_col, text_col)[1]
 
 
 def dedup_incremental(
@@ -531,7 +540,6 @@ def dedup_incremental(
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Per-new-doc labels against the corpus index (see
     dedup_incremental_pairs for the join shape): (id, is_duplicate, dup_of,
@@ -539,11 +547,8 @@ def dedup_incremental(
     corpus id (deterministic representative, same min-id election as
     dedup_representatives) and non-matching docs carry
     (false, NULL, 0, NULL)."""
-    signed_new = with_minhash(new_docs, cfg, id_col, text_col).localCheckpoint(
-        eager=True
-    )
-    pairs = _incremental_pairs_from_signed(
-        signed_new, corpus_index, cfg, id_col, broadcast_new
+    signed_new, pairs = _sign_and_probe(
+        new_docs, corpus_index, cfg, id_col, text_col
     )
     agg = pairs.groupBy("new_id").agg(
         F.min("corpus_id").alias("dup_of"),
@@ -566,7 +571,6 @@ def fold_into_index(
     cfg: DedupConfig = DedupConfig(),
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_new: bool = True,
     max_band_bucket: int | None = 64,
 ) -> tuple[DataFrame, DataFrame]:
     """ONE full operational step of a continuously-crawled corpus — the
@@ -607,14 +611,11 @@ def fold_into_index(
     incremental probe is uncapped; pass None for the provable form).
     tests/test_dedup_spark.py pins the equality on the generator corpus.
     """
-    signed_new = with_minhash(new_docs, cfg, id_col, text_col).localCheckpoint(
-        eager=True
+    signed_new, pairs = _sign_and_probe(
+        new_docs, corpus_index, cfg, id_col, text_col
     )
     ids = signed_new.select(F.col(id_col).alias("id"))
-    if corpus_index is not None:
-        pairs = _incremental_pairs_from_signed(
-            signed_new, corpus_index, cfg, id_col, broadcast_new
-        )
+    if pairs is not None:
         corpus_dup = pairs.groupBy("new_id").agg(
             F.min("corpus_id").alias("dup_of")
         )
@@ -734,9 +735,8 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     """60-bit SimHash over whitespace tokens, fully relational (no UDF):
     explode tokens -> h60 -> explode 60 bit positions -> sign-sum -> pack.
 
-    At scale the bit-explode multiplies rows x60; for the production path use
-    the pandas-UDF variant (simhash_udf) — this relational form is the
-    oracle-checkable specification of the same value."""
+    At scale the bit-explode multiplies rows x60; the DuckDB oracle
+    (catalog query ``simhash``) checks the values."""
     tokens = docs.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
@@ -760,24 +760,6 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         .groupBy("id")
         .agg(F.sum("bitval").alias("simhash"))
     )
-
-
-def simhash_udf():
-    """PRODUCTION SimHash UDF: numpy-vectorized batch kernel
-    (functions/hashing.simhash60_batch — transposed unpackbits/prefix-sum
-    pipeline per Arrow batch, unique-token md5 cache). Chosen by measurement
-    over the per-doc Python loop (round 5, interleaved min-of-runs at 200k
-    docs @ local[8]): 1.21x on the replicated word-salad documents shape,
-    1.21-1.86x on the generated CC-style corpus, never slower across
-    runs/shapes; value-identical (differential-tested)."""
-
-    from ..functions.hashing import simhash60_batch
-
-    @F.pandas_udf(LongType())
-    def sh(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash60_batch(texts.tolist()), index=texts.index)
-
-    return sh
 
 
 def ngram_jaccard_on_candidates(
@@ -911,18 +893,11 @@ def connected_components(
     driver."""
     # materialize once: the threshold count and the chosen strategy both scan
     # the edge list; without this the upstream pair pipeline runs twice.
-    # localCheckpoint (not cache) — lineage truncated, storage auto-freed.
-    # The strategy-cutover count rides the checkpoint job as an observe()
-    # metric (the repo's zero-extra-jobs doctrine; round 8 — the previous
-    # limit(threshold+1).count() was one more full job per CC invocation).
-    from pyspark.sql import Observation
-
-    obs = Observation("cc_n_edges")
-    edges = (
-        edges.observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    if obs.get["n"] <= driver_threshold:
+    # The cutover count rides the checkpoint job (the repo's zero-extra-jobs
+    # doctrine; round 8 — the previous limit(threshold+1).count() was one
+    # more full job per CC invocation).
+    edges, observed = checkpoint_observed(edges, "cc_n_edges")
+    if observed["n"] <= driver_threshold:
         return _cc_driver(edges)
     return _cc_distributed(edges, max_iter)
 
@@ -986,8 +961,6 @@ def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         .union(edges.select(F.col("id_b").alias("id"), F.col("id_a").alias("nbr")))
         .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
     labels = sym.groupBy("id").agg(
         F.least(F.min("nbr"), F.col("id")).alias("comp")
     )
@@ -1014,20 +987,19 @@ def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
             "prev_comp",
             F.least(F.col("comp"), F.coalesce("parent_comp", "comp")).alias("comp"),
         )
-        # convergence check piggybacks on the checkpoint job via observe():
-        # zero extra Spark jobs per iteration (the old per-iteration
-        # join+limit+count added a full job each loop)
-        obs = Observation(f"cc_iter_{i}")
-        observed = step2.observe(
-            obs,
+        # convergence check piggybacks on the checkpoint job: zero extra
+        # Spark jobs per iteration (the old per-iteration join+limit+count
+        # added a full job each loop)
+        labels, observed = checkpoint_observed(
+            step2,
+            f"cc_iter_{i}",
             F.sum((F.col("comp") != F.col("prev_comp")).cast("long")).alias(
                 "n_changed"
             ),
         )
-        labels = observed.select("id", "comp").localCheckpoint(eager=True)
-        if obs.get["n_changed"] == 0:
+        if observed["n_changed"] == 0:
             break
-    return labels
+    return labels.select("id", "comp")
 
 
 def dedup_edges(

@@ -16,11 +16,17 @@ introduced where it would matter. Round-robin is not a hashpartitioning on
 any column — the repo's text-shuffle audits (no text-KEYED exchange) are
 untouched — and Spark's sort-before-repartition keeps the row-to-partition
 assignment deterministic under task retry (SPARK-23207).
+
+The module also owns every size-adaptive decision an operator takes from
+an observed count (``checkpoint_observed``): the operator materializes a
+frame it reuses anyway, reads the count off that same job, and picks its
+physical arm from it. No caller-set option chooses a join strategy.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def _shuffles(plan) -> list[tuple[str, int]]:
@@ -79,3 +85,24 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     if num_partitions(df) < want:
         return df.repartition(want)
     return df
+
+
+def checkpoint_observed(
+    df: DataFrame, name: str, *metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` with ``metrics`` (default: the
+    row count as ``n``) observed on that same job; returns ``(frame,
+    values)``.
+
+    This is how a size-adaptive operator learns its input size at zero
+    extra Spark jobs: the checkpoint is needed anyway (the frame has
+    several consumers, or an iterative loop would otherwise re-execute
+    its lineage), and the aggregates ride it. localCheckpoint rather than
+    cache+count: one job instead of two, lineage truncated, and blocks
+    freed with the frame instead of pinned across calls. ``name`` labels
+    the observation; it must be unique within the plan of ``df``."""
+    obs = Observation(name)
+    frame = df.observe(
+        obs, *(metrics or (F.count(F.lit(1)).alias("n"),))
+    ).localCheckpoint(eager=True)
+    return frame, obs.get

@@ -78,10 +78,9 @@ def ngram_counts(
     counts themselves are exact). This is the scale lever for 10^12-doc
     corpora: the raw trigram table of a web crawl is dominated by singletons
     (typically >70%); min_count=2 shrinks the model several-fold so it stays
-    broadcastable far longer, and beyond that the scorer switches to the
-    shuffle join (perplexity_relational(broadcast_model=False)). Downstream
-    smoothing treats pruned pairs as unseen — the standard count-cutoff LM
-    approximation."""
+    broadcastable (perplexity_relational always broadcasts it) far longer.
+    Downstream smoothing treats pruned pairs as unseen — the standard
+    count-cutoff LM approximation."""
     from .partitioning import ensure_min_parallelism
 
     counts = (
@@ -111,24 +110,19 @@ def perplexity_relational(
     id_col: str = "doc_id",
     text_col: str = "text",
     v: int | None = None,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(doc_id, ppl): explode doc n-grams, join model counts, smooth,
     aggregate. ``v`` = vocab size; when None it stays IN the plan as a
     broadcast one-row cross join (no driver round trip — the whole scorer
     remains a single lazy composable plan).
 
-    ``broadcast_model``: True hints broadcast joins (the model fits executor
-    memory — the common case, map-side and shuffle-free on the corpus side).
-    False leaves the join strategy to Catalyst with no hint — for models too
-    big to broadcast (10^12-doc corpora even after min_count pruning) this
-    becomes a shuffle hash/sort-merge join on (context, word); the corpus
-    side shuffles once on the n-gram key. Cutover doctrine mirrors
-    connected_components': pick the physical strategy by data size."""
-    ctx_tot = model.groupBy("context").agg(F.sum("cnt").alias("ctx_cnt"))
-    if broadcast_model:
-        model = F.broadcast(model)
-        ctx_tot = F.broadcast(ctx_tot)
+    The model joins are hinted broadcast: the model must fit executor
+    memory (``ngram_counts(min_count=...)`` prunes it to fit), and the
+    corpus side then stays map-side and shuffle-free."""
+    ctx_tot = F.broadcast(
+        model.groupBy("context").agg(F.sum("cnt").alias("ctx_cnt"))
+    )
+    model = F.broadcast(model)
     from .partitioning import ensure_min_parallelism
 
     grams = (
@@ -172,7 +166,6 @@ def ppl_buckets(
     group_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """CCNet-style head/middle/tail corpus partitioning by per-language LM
     perplexity tertiles (Wenzek et al. 2020: score each document with an
@@ -191,11 +184,10 @@ def ppl_buckets(
     histogram-bin cutoffs.
 
     Scale shape (100 TB): the corpus-sized stages are the ppl scorer
-    (perplexity_relational — broadcast-model map-side join, or shuffle join
-    when the model outgrows broadcast), one slim (id, group) join to attach
-    the group key, and one hash aggregation to the (group, rounded-ppl)
-    histogram — map-side partials bound its shuffle by the number of
-    distinct bins, not docs. The cumulative window runs over the histogram
+    (perplexity_relational — broadcast-model map-side join), one slim
+    (id, group) join to attach the group key, and one hash aggregation to
+    the (group, rounded-ppl) histogram — map-side partials bound its
+    shuffle by the number of distinct bins, not docs. The cumulative window runs over the histogram
     only (|groups| x |bins| rows), and the three-row-per-group cutoff table
     broadcasts back. Nothing sorts or windows over per-document data.
     The scored table feeds BOTH the histogram branch and the labeled
@@ -215,8 +207,7 @@ def ppl_buckets(
     if model is None:
         model = ngram_counts(docs, n, text_col)
     scored = perplexity_relational(
-        docs, model, n=n, alpha=alpha, id_col=id_col, text_col=text_col,
-        broadcast_model=broadcast_model,
+        docs, model, n=n, alpha=alpha, id_col=id_col, text_col=text_col
     ).withColumn("ppl", F.round("ppl", 2))
     scored = scored.join(docs.select(id_col, group_col), id_col)
     scored = scored.localCheckpoint(eager=True)

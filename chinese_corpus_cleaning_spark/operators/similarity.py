@@ -560,19 +560,15 @@ def kmeans_fit(
     combine); the k*dim means come to the driver (tiny) and go back out as
     the next broadcast literal. Nothing vector-sized ever keys a shuffle.
     """
-    from pyspark.sql import Observation
-
-    from .partitioning import ensure_min_parallelism
+    from .partitioning import checkpoint_observed, ensure_min_parallelism
 
     vectors = ensure_min_parallelism(vectors)
-    obs = Observation("kmeans_n")
-    src = (
+    src, observed = checkpoint_observed(
         vectors.select(
             F.col(id_col).alias("__kid"),
             F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("__v"),
-        )
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ),
+        "kmeans_n",
     )
     # cid inherits the INPUT id type (review finding: forcing int()/bigint
     # crashed string-keyed corpora, which every sibling operator accepts)
@@ -588,7 +584,7 @@ def kmeans_fit(
     # rows x 64 dims the collect is ~50 MB — comfortably inside the driver
     # budget (_cc_driver's 2M-edge doctrine); larger inputs take the
     # distributed loop below, unchanged.
-    if obs.get["n"] <= driver_threshold:
+    if observed["n"] <= driver_threshold:
         out = _kmeans_driver(spark, src, k, iters, cent_schema)
         if out is not None:
             return out

@@ -960,7 +960,6 @@ def url_blocklist_filter(
     blocklist,
     url_col: str = "url",
     id_col: str = "doc_id",
-    broadcast_list: bool = True,
 ) -> DataFrame:
     """UT1-style domain blocklist filter — the first screening stage of
     RefinedWeb/FineWeb-class webtext pipelines (the UT1 "adult" category
@@ -974,10 +973,7 @@ def url_blocklist_filter(
     (id, suffix) rows — bounded by the label count (~4-6 per host), never
     by text — then inner-joined against the broadcast blocklist and
     reduced to min(matched domain) per doc (deterministic when several
-    levels match); the flag left-joins back on the id. With
-    ``broadcast_list=False`` the join strategy is left to Catalyst for
-    blocklists beyond broadcast budget — the suffix table shuffles on the
-    domain key, still without any text column.
+    levels match); the flag left-joins back on the id.
 
     ``blocklist``: a one-column DataFrame (``domain``) or a Python
     iterable of domain strings. Entries are normalized to match the host
@@ -1008,8 +1004,7 @@ def url_blocklist_filter(
                 F.lower(F.trim(F.col("domain"))), r"\.+$", ""
             ).alias("domain")
         ).distinct()
-    if broadcast_list:
-        bl = F.broadcast(bl)
+    bl = F.broadcast(bl)
     hosted = docs.withColumn(
         "host",
         F.regexp_replace(
@@ -1124,7 +1119,6 @@ def domain_quality_filter(
     id_col: str = "doc_id",
     min_docs: int = 5,
     max_bad_pct: int = 50,
-    broadcast_flags: bool = True,
 ) -> DataFrame:
     """Domain-level quality filtering: drop WHOLE hosts whose documents are
     predominantly low-quality, instead of (only) judging docs one by one.
@@ -1147,9 +1141,7 @@ def domain_quality_filter(
     Scale shape: one slim (host, is_bad) pre-aggregated shuffle builds the
     per-host counts (map-side partials; text never moves); only the
     FLAGGED hosts — content farms, a small set by construction — join
-    back, broadcast by default, so the document side crosses zero
-    shuffles. Set ``broadcast_flags=False`` if a pathological corpus flags
-    millions of hosts and Catalyst should pick the strategy. Host
+    back, broadcast, so the document side crosses zero shuffles. Host
     normalization matches url_blocklist_filter: lowercased portless
     ``try_parse_url`` HOST (malformed URLs -> NULL host, never a job
     failure) with trailing FQDN dots stripped. NULL hosts are never
@@ -1185,10 +1177,8 @@ def domain_quality_filter(
         )
         .withColumnRenamed("host", "__fhost")
     )
-    if broadcast_flags:
-        flagged = F.broadcast(flagged)
     return (
-        hosted.join(flagged, F.col("host") == F.col("__fhost"), "left")
+        hosted.join(F.broadcast(flagged), F.col("host") == F.col("__fhost"), "left")
         .drop("__fhost")
         .withColumn("domain_flagged", F.col("domain_n").isNotNull())
     )
@@ -1200,7 +1190,6 @@ def paragraph_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_chars: int = 1,
-    broadcast_drops: bool | None = None,
 ) -> DataFrame:
     """Corpus-wide exact paragraph deduplication: every paragraph that
     appears more than once in the corpus keeps only its FIRST occurrence
@@ -1226,10 +1215,10 @@ def paragraph_dedup(
         over the hash would instead sort the entire hot key in one task);
       * drops join back on hash (AQE skew-splittable), collapse to one
         (id, drop-index-list) row per affected doc, and rejoin the doc
-        table on id — broadcast when ``broadcast_drops`` (right when few
-        docs carry corpus-duplicated paragraphs), plain equi-join under
-        AQE when None (the safe default at 100 TB, where boilerplate
-        touches most docs);
+        table on id — a plain equi-join whose strategy AQE picks from the
+        drop table's real size (a broadcast when few docs carry
+        corpus-duplicated paragraphs; a shuffle at 100 TB, where
+        boilerplate touches most docs);
       * the rebuild is map-side: split the original text again and drop
         the flagged indices with a native filter lambda.
 
@@ -1276,8 +1265,6 @@ def paragraph_dedup(
         .groupBy(F.col("__id").alias(id_col))
         .agg(F.sort_array(F.collect_list("__idx")).alias("__drop"))
     )
-    if broadcast_drops:
-        drops = F.broadcast(drops)
     kept = F.filter(
         arr,
         lambda p, i: F.col("__drop").isNull()

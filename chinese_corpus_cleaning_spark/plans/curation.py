@@ -99,7 +99,6 @@ def curation_run(
     domain_max_bad_pct: int = 50,
     para_dedup: bool = False,
     para_min_chars: int = 1,
-    para_broadcast_drops: bool | None = None,
     normalize: bool = False,
 ) -> tuple[DataFrame, dict[str, Observation]]:
     """Returns (curated, observations). ``curated`` has columns
@@ -127,7 +126,7 @@ def curation_run(
       shuffle); pages failing C4's page flags (poison markers /
       too-few-kept-lines) are dropped, and removed lines fold into
       ``n_lines_removed``.
-    * ``para_dedup`` (+ ``para_min_chars`` / ``para_broadcast_drops``) —
+    * ``para_dedup`` (+ ``para_min_chars``) —
       stage 3.25, corpus-wide exact paragraph dedup on the cleaned text
       (operators/textanalysis.paragraph_dedup): the long tail of
       exactly-repeated paragraphs below the boilerplate frequency bar
@@ -283,19 +282,17 @@ def curation_run(
     # (stage 3) killed the >= min_doc_frac fragments; this stage kills the
     # LONG TAIL of exactly-repeated paragraphs below that bar, keeping each
     # one's h60-first occurrence. The dedup decision moves slim hash rows
-    # only; the drop-list join back onto the docs is AQE's choice by
-    # default (para_broadcast_drops=None) — when it broadcasts, text stays
-    # map-side and the audited text-shuffle bound is unchanged at 2; when
-    # the affected-doc set is too large to broadcast the join adds text
-    # shuffle #3 (the plan test asserts <= 3 with this stage on). Dropped
-    # paragraphs fold into n_lines_removed.
+    # only; the drop-list join back onto the docs is AQE's choice — when it
+    # broadcasts, text stays map-side and the audited text-shuffle bound is
+    # unchanged at 2; when the affected-doc set is too large to broadcast
+    # the join adds text shuffle #3 (the plan test asserts <= 3 with this
+    # stage on). Dropped paragraphs fold into n_lines_removed.
     if para_dedup:
         pdd = paragraph_dedup(
             cleaned,
             id_col=id_col,
             text_col="clean_text",
             min_chars=para_min_chars,
-            broadcast_drops=para_broadcast_drops,
         )
         cleaned = pdd.select(
             F.col(id_col),

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from chinese_corpus_cleaning_spark.config import DedupConfig
 from chinese_corpus_cleaning_spark.operators import dedup
 from chinese_corpus_cleaning_spark.sources import gen
 
@@ -282,8 +283,9 @@ def test_oversized_bucket_degrades_to_star_not_skip(spark):
 def test_incremental_equals_full_cross_split(spark):
     """dedup_incremental_pairs(new, index) must equal the uncapped full-run
     pairs restricted to cross-split (corpus x new) pairs — same candidates
-    (shared band key), same est-Jaccard, for BOTH broadcast_new settings;
-    the labels form must agree with the pair set."""
+    (shared band key), same est-Jaccard, whether the increment's size
+    picks the broadcast probe (the derived arm) or a zero budget forces the
+    shuffled one; the labels form must agree with the pair set."""
     from chinese_corpus_cleaning_spark.config import DedupConfig
 
     cfg = DedupConfig(
@@ -305,15 +307,15 @@ def test_incremental_equals_full_cross_split(spark):
         expected.add((nid, cid, round(r["est_jaccard"], 9)))
     assert expected  # near-dup families span consecutive ids by construction
 
-    for bcast in (True, False):
-        inc = dedup.dedup_incremental_pairs(
-            new, index, cfg, broadcast_new=bcast
-        )
-        got = {
-            (r["new_id"], r["corpus_id"], round(r["est_jaccard"], 9))
-            for r in inc.collect()
-        }
-        assert got == expected, f"broadcast_new={bcast}"
+    for budget in (dedup._SIG_BCAST_BUDGET_BYTES, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
+            inc = dedup.dedup_incremental_pairs(new, index, cfg)
+            got = {
+                (r["new_id"], r["corpus_id"], round(r["est_jaccard"], 9))
+                for r in inc.collect()
+            }
+        assert got == expected, f"budget={budget}"
 
     labels = {
         r["id"]: r
@@ -335,6 +337,124 @@ def test_incremental_equals_full_cross_split(spark):
         else:
             assert not r["is_duplicate"]
             assert r["dup_of"] is None and r["n_corpus_matches"] == 0
+
+
+_SMALL_CFG = DedupConfig(
+    similarity_threshold=0.5, shingle_size=5, num_hashes=16, num_bands=4
+)
+
+
+def _cjk_text(rnd, n):
+    return "".join(chr(0x4E00 + rnd.randrange(2000)) for _ in range(n))
+
+
+def _family_docs(spark, n=60, id_type="long", id_prefix=""):
+    """``n`` one-character edits of one 200-char text: every pair is a
+    candidate, so 2 * n_pairs >= 0.5 * n_sigs (no candidate-id prune)."""
+    import random
+
+    base = _cjk_text(random.Random(5), 200)
+    rows = [
+        (f"{id_prefix}{i}" if id_type == "string" else i,
+         base[:i] + "x" + base[i + 1:])
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+def _sparse_docs(spark):
+    """300 unrelated texts plus 8 near-copies of the first 8: few candidate
+    pairs, so 2 * n_pairs < 0.5 * n_sigs (the candidate-id prune runs)."""
+    import random
+
+    rnd = random.Random(7)
+    texts = [_cjk_text(rnd, 120) for _ in range(300)]
+    texts += [t[:60] + "x" + t[61:] for t in texts[:8]]
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+
+
+@pytest.mark.parametrize("fixture,pruned", [("family", False), ("sparse", True)])
+def test_similarity_pairs_same_on_every_arm(spark, fixture, pruned):
+    """minhash_similarity_pairs gives the same (id_a, id_b, est_jaccard)
+    set on each arm its observed sizes can pick: the broadcast fast path
+    (huge budget), the fully shuffled path (zero budget) and, on the sparse
+    input, the pruned signature table broadcast (a budget one row short of
+    the whole table) — on one input each side of the candidate-id prune's
+    cutover."""
+    cfg = _SMALL_CFG
+    df = (_family_docs if fixture == "family" else _sparse_docs)(spark)
+    df = df.localCheckpoint(eager=True)
+    n_sigs = df.count()
+    n_pairs = dedup.lsh_candidate_pairs(dedup.with_minhash(df, cfg)).count()
+    assert (2 * n_pairs < 0.5 * n_sigs) == pruned, (n_pairs, n_sigs)
+    row_bytes = 8 * cfg.num_hashes + 8  # long ids
+    results = {}
+    for budget in (1 << 40, row_bytes * (n_sigs - 1), 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
+            results[budget] = {
+                (r["id_a"], r["id_b"], r["est_jaccard"])
+                for r in dedup.minhash_similarity_pairs(df, cfg).collect()
+            }
+    fast, *others = results.values()
+    assert fast
+    assert all(o == fast for o in others)
+
+
+def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
+    """Under a budget twice the bare signature bytes (8 B per hash slot),
+    bigint ids keep the signature broadcast, while ~400-byte string ids
+    must turn it off: that table's real bytes are ~2x the budget. A
+    row-only estimate broadcasts both."""
+    import contextlib
+    import io
+
+    cfg = _SMALL_CFG
+    n = 60
+    monkeypatch.setattr(
+        dedup, "_SIG_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
+    )
+
+    def broadcasts(df):
+        est = dedup.minhash_similarity_pairs(df, cfg, materialize=False)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            est.explain("formatted")
+        return "BroadcastHashJoin" in buf.getvalue()
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert broadcasts(_family_docs(spark, n))
+        assert not broadcasts(
+            _family_docs(spark, n, "string", "https://example.com/" + "p" * 380)
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_dedup_representatives_job_count(spark):
+    """Guard on Spark jobs per dedup call: every size decision rides a
+    checkpoint job the operator needs anyway (checkpoint_observed), so a
+    300-doc call plus one count runs 15 jobs; one more means a decision
+    grew a Spark job of its own."""
+    sc = spark.sparkContext
+    df = (
+        gen.docs_df(spark, 300, partitions=4)
+        .select(F.col("url").alias("doc_id"), "text")
+        .localCheckpoint(eager=True)
+    )
+    group = "test_dedup_representatives_job_count"
+    sc.setJobGroup(group, "dedup_representatives")
+    try:
+        n_dup = dedup.dedup_representatives(df).where("is_duplicate").count()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n_dup == 30
+    assert len(jobs) == 15, sorted(jobs)
 
 
 def test_fold_into_index_sequential_equals_concatenated(spark):

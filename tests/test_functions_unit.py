@@ -83,21 +83,6 @@ def test_simhash_close_for_similar_token_sets():
     assert hashing.hamming60(h1, h2) < hashing.hamming60(h1, h3)
 
 
-def test_simhash_batch_matches_loop():
-    """The production numpy-batch kernel is value-identical to the per-doc
-    loop, including None/empty texts and chunk boundaries."""
-    import random
-
-    rnd = random.Random(11)
-    texts = ["", None, "a", "a b c"] + [
-        " ".join(f"w{rnd.randint(0, 99)}" for _ in range(rnd.randint(1, 300)))
-        for _ in range(200)
-    ]
-    got = list(hashing.simhash60_batch(texts, chunk_tokens=1000))
-    want = [hashing.simhash60((t or "").split(" ")) for t in texts]
-    assert got == want
-
-
 def test_ngram_model_arithmetic():
     m = NgramModel(n=2, alpha=0.1).train(["a b a b", "a b"])
     # vocab {a:3, b:3}, |V|=2

@@ -83,20 +83,24 @@ def test_exactly_one_copy_of_each_duplicated_paragraph_survives(docs):
     assert "\n" in d3["text"]
 
 
-def test_partitioning_and_broadcast_invariant(docs):
-    base = {
-        (r["doc_id"], r["text"], r["n_dropped"])
-        for r in paragraph_dedup(docs).collect()
-    }
-    repart = {
-        (r["doc_id"], r["text"], r["n_dropped"])
-        for r in paragraph_dedup(docs.repartition(7)).collect()
-    }
-    bcast = {
-        (r["doc_id"], r["text"], r["n_dropped"])
-        for r in paragraph_dedup(docs, broadcast_drops=True).collect()
-    }
-    assert base == repart == bcast
+def test_partitioning_and_broadcast_invariant(spark, docs):
+    """Same output under repartitioning, and whether AQE broadcasts the
+    drop table or shuffles it (broadcast joins disabled)."""
+    def rows(df):
+        return {
+            (r["doc_id"], r["text"], r["n_dropped"])
+            for r in paragraph_dedup(df).collect()
+        }
+
+    base = rows(docs)
+    repart = rows(docs.repartition(7))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        shuffled = rows(docs)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert base == repart == shuffled
 
 
 def test_no_duplicates_is_identity(spark):

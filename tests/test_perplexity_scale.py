@@ -1,10 +1,7 @@
 """Scale-hardening tests for the n-gram LM: min_count pruning and the
-non-broadcast (shuffle-join) scoring path for models too big to broadcast."""
+CCNet perplexity buckets."""
 
 from __future__ import annotations
-
-import contextlib
-import io
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,44 +30,6 @@ def test_min_count_pruning_drops_singletons(docs):
         full.alias("f"), ["context", "word"]
     ).where(F.col("p.cnt") != F.col("f.cnt"))
     assert joined.count() == 0
-
-
-def test_shuffle_join_scoring_matches_broadcast(spark, docs):
-    """With autoBroadcastJoinThreshold=-1 and broadcast_model=False the
-    scorer must produce identical perplexities through a shuffle join —
-    the cutover path for models that exceed executor memory."""
-    model = perplexity.ngram_counts(docs, n=3)
-    bcast = {
-        r["doc_id"]: r["ppl"]
-        for r in perplexity.perplexity_relational(docs, model, n=3).collect()
-    }
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled_df = perplexity.perplexity_relational(
-            docs, model, n=3, broadcast_model=False
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            shuffled_df.explain("formatted")
-        plan = buf.getvalue()
-        # the model joins must NOT be broadcast in this mode (the one-row
-        # vocab-size cross join is the only broadcast allowed)
-        model_joins = [
-            ln
-            for ln in plan.splitlines()
-            if "BroadcastHashJoin" in ln and "context" in ln
-        ]
-        assert not model_joins, plan
-        shuffled = {r["doc_id"]: r["ppl"] for r in shuffled_df.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # the per-doc avg(log2p) accumulates in partition order, which differs
-    # between the two physical strategies — equal up to float summation
-    # reordering, not bit-equal
-    assert shuffled.keys() == bcast.keys()
-    for k, v in bcast.items():
-        assert shuffled[k] == pytest.approx(v, rel=1e-9), k
 
 
 def test_ppl_buckets_ccnet_tertiles(spark, docs):

@@ -253,8 +253,8 @@ def test_stratified_sample_two_bounded_exchanges(spark):
 
 
 def test_incremental_dedup_broadcasts_new_side(spark):
-    """With broadcast_new=True (the small-increment production default) both
-    joins against the corpus index must be broadcast joins probing the NEW
+    """A small increment (its signatures fit the broadcast budget) must
+    make both joins against the corpus index broadcast joins probing the NEW
     side — the corpus's exploded band keys and signatures must appear under
     zero shuffle Exchanges anywhere in the plan (the increment is what
     moves, never the corpus)."""
@@ -270,7 +270,7 @@ def test_incremental_dedup_broadcasts_new_side(spark):
     )
     index = dedup.with_minhash(df.where("doc_id % 2 = 0"), cfg)
     pairs = dedup.dedup_incremental_pairs(
-        df.where("doc_id % 2 = 1"), index, cfg, broadcast_new=True
+        df.where("doc_id % 2 = 1"), index, cfg
     )
     plan = _explained(pairs)
     assert "BroadcastHashJoin" in plan, plan
