@@ -16,8 +16,8 @@ DuckDB oracle can verify signatures, band keys, candidate pairs and SimHash
 values exactly.
 
 Scale notes (10^12 docs):
-  * Signature computation is map-side only and fully native (one md5 per
-    distinct shingle + integer affine permutations in whole-stage codegen).
+  * Signature computation is map-side only: one md5 per distinct shingle
+    + the integer affine permutations in an Arrow-batched numpy UDF.
   * The LSH self-join shuffles on band_key; hot keys (boilerplate-identical
     pages from one host) are exactly the skew the north_rule calls out —
     handled by (a) AQE skew-join splitting and (b) an optional salting
@@ -26,10 +26,10 @@ Scale notes (10^12 docs):
     propagation plus pointer jumping as DataFrame joins, with a
     per-iteration localCheckpoint to truncate lineage; converges in
     O(log diameter) iterations.
-  * Every size-adaptive arm (signature broadcast, candidate-id prune,
-    increment broadcast, CC driver/distributed) is picked from a count
-    observed on a checkpoint the operator takes anyway
-    (partitioning.checkpoint_observed) — never from a caller option.
+  * Every size-adaptive arm (signature / increment / CC-table broadcast,
+    one-partition LSH chain, candidate-id prune, CC driver/distributed) is
+    picked from a size the operator observed anyway — never from a caller
+    option.
 """
 
 from __future__ import annotations
@@ -40,17 +40,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ..config import DedupConfig
-from .partitioning import checkpoint_observed
+from .partitioning import checkpoint_observed, num_partitions
 
-# Broadcast budget for a signature table (the est-Jaccard re-attach in
-# minhash_similarity_pairs, the increment side of dedup_incremental_pairs):
-# a row is num_hashes * 8 B plus its id, so 64 MB admits ~65k long-id rows
-# at the production 128-hash config — far below the guide's
-# few-hundred-MB broadcast comfort zone, and corpus-scale signature tables
-# blow the bound and take the shuffled joins. The round-8 A/B
-# (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept it for the
-# plan shape.
-_SIG_BCAST_BUDGET_BYTES = 64 << 20
+# Broadcast budget in real bytes for a signature table (a row is
+# num_hashes * 8 B plus its id: ~65k long-id rows at 128 hashes) and for
+# the driver-CC (id, comp) table (its Arrow bytes) — far below the guide's
+# few-hundred-MB comfort zone; corpus-scale tables take the shuffled joins.
+# The round-8 A/B (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept
+# it for the plan shape.
+_BCAST_BUDGET_BYTES = 64 << 20
+_N_HUBS = 4  # hubs per oversized LSH bucket (lsh_candidate_pairs)
 
 
 def _checkpoint_signatures(
@@ -74,10 +73,9 @@ def _checkpoint_signatures(
     return signed, n, 8 * cfg.num_hashes + id_width
 
 
-def _sig_fits_broadcast(n_rows: int, row_bytes: float) -> bool:
-    """Whether a non-empty ``n_rows``-row signature table fits the
-    broadcast budget."""
-    return 0 < n_rows and n_rows * row_bytes <= _SIG_BCAST_BUDGET_BYTES
+def _fits_broadcast(nbytes: float) -> bool:
+    """Whether a non-empty table of ``nbytes`` fits the broadcast budget."""
+    return 0 < nbytes <= _BCAST_BUDGET_BYTES
 
 
 # ---------------------------------------------------------------- exact dedup
@@ -127,8 +125,9 @@ def with_minhash(
     watermark).
 
     Hybrid plan chosen by measurement (2000-doc corpus, local[8]):
-      * shingle extraction + one md5 per distinct shingle: native exprs
-        (whole-stage codegen) — 600k md5s are cheap JVM-side;
+      * shingle extraction + one md5 per distinct shingle: native exprs in
+        INTERPRETED ``transform`` lambdas (not codegen'd), still cheap
+        JVM-side (169k shingles hashed in ~0.7 s in one warm task, 4 vCPU);
       * the num_hashes affine permutations + min fold: Arrow-batched numpy
         matrix op ((A*h + B) % P).min(axis=1) — 0.5s, vs 14s for the
         equivalent higher-order-function expression (Spark lambdas are
@@ -185,12 +184,20 @@ def with_minhash(
     )
 
 
+def _band_self_join(rows: DataFrame) -> DataFrame:
+    """(id_a < id_b) pairs of (id, band_key) rows sharing a band key."""
+    return (
+        rows.alias("l")
+        .join(rows.alias("r"), on="band_key")
+        .where(F.col("l.id") < F.col("r.id"))
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+    )
+
+
 def lsh_candidate_pairs(
     signed: DataFrame,
     id_col: str = "doc_id",
     max_band_bucket: int | None = None,
-    n_hubs: int = 4,
-    oversize_probe: str = "broadcast",
 ) -> DataFrame:
     """Banded LSH: explode band keys, self-join on key, dedupe pairs.
 
@@ -210,8 +217,8 @@ def lsh_candidate_pairs(
     member, m-1 pairs instead of m^2/2 — so a giant near-dup clique stays
     one connected component through the est-Jaccard filter at linear cost
     (members not est-similar to the hub specifically can still lose edges —
-    the residual approximation; ``n_hubs`` hash-class hubs give each member
-    that many est-match chances, no per-bucket sort so skew-safe).
+    the residual approximation; ``_N_HUBS`` hash-class hubs give each
+    member that many est-match chances, no per-bucket sort so skew-safe).
 
     ABSOLUTE recall vs the exact uncapped form (BENCH/dedup_recall_abs.py,
     BASELINE.md round-6 notes, production 128/16/0.85 config): the capped
@@ -232,51 +239,25 @@ def lsh_candidate_pairs(
     exploded = signed.select(
         F.col(id_col).alias("id"), F.explode("band_keys").alias("band_key")
     )
+    pairs = _band_self_join(exploded)
     if max_band_bucket is None:
-        left = exploded.alias("l")
-        right = exploded.alias("r")
-        return (
-            left.join(right, on="band_key")
-            .where(F.col("l.id") < F.col("r.id"))
-            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-            .distinct()
-        )
+        return pairs.distinct()
     # The oversized-bucket probe only needs to learn WHICH keys exceed the
     # cap — and those are rare by construction (hard ceiling
     # n_rows/cap keys, typically a handful of boilerplate cliques after the
-    # exact pass). Production shape ('broadcast'): aggregate sizes, keep
-    # only the > cap keys, BROADCAST them, and split the exploded table
-    # with map-side anti/semi joins — the full exploded table is never
-    # sort-merge-joined against the size table. The round-5 shape
-    # ('annotate') joined sizes back onto ALL exploded rows to carry _bsz;
-    # AQE reused the exchange but the join itself (sort + merge of every
-    # exploded row) was the worst-scaling phase at 1.6M docs (eff ~0.41,
-    # BENCH round-5 notes). A/B at 1.6M @local[2]/[8]:
-    # BENCH/band_join_ab.py, results in BENCH/BASELINE.md round-6 notes;
-    # candidate/duplicate sets are bit-identical across both shapes.
+    # exact pass): aggregate sizes, keep only the > cap keys, BROADCAST
+    # them, and split the exploded table with map-side anti/semi joins —
+    # the full exploded table is never sort-merge-joined against the size
+    # table. (The round-5 shape joined sizes back onto ALL exploded rows;
+    # that join was the worst-scaling phase at 1.6M docs, eff ~0.41 —
+    # BENCH/BASELINE.md round-6 notes, BENCH/band_join_ab_runs.jsonl;
+    # candidate/duplicate sets are bit-identical across both shapes.)
     sizes = exploded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bsz"))
-    if oversize_probe == "broadcast":
-        big_keys = F.broadcast(
-            sizes.where(F.col("_bsz") > max_band_bucket).select("band_key")
-        )
-        small = exploded.join(big_keys, "band_key", "left_anti")
-        big_rows = exploded.join(big_keys, "band_key", "left_semi")
-    elif oversize_probe == "annotate":
-        annotated = exploded.join(sizes, "band_key")
-        small = annotated.where(F.col("_bsz") <= max_band_bucket).select(
-            "band_key", "id"
-        )
-        big_rows = annotated.where(F.col("_bsz") > max_band_bucket).select(
-            "band_key", "id"
-        )
-    else:
-        raise ValueError(f"unknown oversize_probe {oversize_probe!r}")
-    pairs = (
-        small.alias("l")
-        .join(small.alias("r"), on="band_key")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+    big_keys = F.broadcast(
+        sizes.where(F.col("_bsz") > max_band_bucket).select("band_key")
     )
+    pairs = _band_self_join(exploded.join(big_keys, "band_key", "left_anti"))
+    big_rows = exploded.join(big_keys, "band_key", "left_semi")
     # K-hub star: K deterministic hubs per oversized bucket (min id within
     # each of K content-hash classes — no per-bucket sort, so a million-row
     # boilerplate bucket never pins one reducer), every member joined to all
@@ -285,7 +266,7 @@ def lsh_candidate_pairs(
     # single-hub cap's recall loss (BENCH/BASELINE.md round-5 notes).
     hubs = (
         big_rows.groupBy(
-            "band_key", F.pmod(F.xxhash64("id"), F.lit(n_hubs)).alias("_c")
+            "band_key", F.pmod(F.xxhash64("id"), F.lit(_N_HUBS)).alias("_c")
         )
         .agg(F.min("id").alias("_hub"))
         .select("band_key", "_hub")
@@ -335,7 +316,6 @@ def minhash_similarity_pairs(
     signed, n_sigs, row_bytes = _checkpoint_signatures(
         sig_stage, id_col, cfg, "minhash_n_sigs"
     )
-    pairs = lsh_candidate_pairs(signed, id_col, max_band_bucket)
     # SMALL-SIGNATURE fast path (size-adaptive join strategy, guide §3.1,
     # decided from the free observed count): the whole signature table fits
     # the broadcast budget, so both re-attach joins become map-side hash
@@ -345,7 +325,14 @@ def minhash_similarity_pairs(
     # the candidate set) is checkpointed instead, so multi-consumer callers
     # (dbscan's three scans) never re-run the LSH machinery and the stage
     # costs one job fewer than the round-7 shape.
-    fast = broadcast = _sig_fits_broadcast(n_sigs, row_bytes)
+    fast = broadcast = _fits_broadcast(n_sigs * row_bytes)
+    # ONE-PARTITION chain: over a small checkpoint already at one partition
+    # (AQE coalesced the distinct-text aggregate), coalesce(1) moves no data
+    # but lets the planner drop the hash exchanges, each one a job, of the
+    # candidate chain (3221 pairs: 8 -> 4 jobs; a join's go only while the
+    # plan's size estimate is under spark.sql.maxSinglePartitionBytes).
+    lsh_src = signed.coalesce(1) if fast and num_partitions(signed) == 1 else signed
+    pairs = lsh_candidate_pairs(lsh_src, id_col, max_band_bucket)
     sig_src = signed
     if not fast:
         # CORPUS-SCALE path: materialize the candidate pairs once (the
@@ -377,7 +364,7 @@ def minhash_similarity_pairs(
         # The post-prune table can still fit the broadcast budget in sparse
         # corpora (sig_rows <= 2 * n_pairs) — broadcast it then;
         # corpus-scale tables blow the bound and keep the shuffled joins.
-        broadcast = _sig_fits_broadcast(sig_rows, row_bytes)
+        broadcast = _fits_broadcast(sig_rows * row_bytes)
     sig_a = sig_src.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("minhash_a"))
     sig_b = sig_src.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("minhash_b"))
     if broadcast:
@@ -461,7 +448,7 @@ def _sign_and_probe(
     )
     if corpus_index is None:
         return signed_new, None
-    broadcast_new = _sig_fits_broadcast(n_new, row_bytes)
+    broadcast_new = _fits_broadcast(n_new * row_bytes)
     new_bands = signed_new.select(
         F.col(id_col).alias("new_id"), F.explode("band_keys").alias("band_key")
     )
@@ -903,29 +890,33 @@ def connected_components(
 
 
 def _cc_driver(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find (path compression + union by min id).
+    """Driver-side union-find (path compression + union by min id) over
+    factorized int codes with min-ID-rank roots.
 
-    Arrow both ways: row-collect() plus row-by-row createDataFrame measured
-    40 s + 17 s of pure driver serial at 1.77M edges (the whole phase is
-    serial — identical at every parallelism level, so it is exactly what
-    caps N->4N scaling). toPandas()/createDataFrame(pandas) ride Arrow's
-    columnar channel, and the union-find runs over factorized int codes with
-    min-ID-rank roots instead of a Python dict over raw ids."""
+    Arrow both ways, whatever the session conf says: ``toArrow()`` in,
+    ``createDataFrame(pa.Table)`` out (``toPandas()`` pickles rows while
+    ``spark.sql.execution.arrow.pyspark.enabled`` is off, its default; the
+    whole call 3.7-5.3 -> 2.7-2.8 s at 200k edges). The table is hinted
+    broadcast when its Arrow bytes fit the budget, so the caller's
+    ``docs ⋈ comp`` join never shuffles; unhinted, the Arrow-built
+    LocalRelation broadcasts only under autoBroadcastJoinThreshold."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     spark = edges.sparkSession
     schema_type = edges.schema["id_a"].dataType.simpleString()
-    pdf = edges.select("id_a", "id_b").toPandas()
-    if pdf.empty:
+    out_schema = f"id {schema_type}, comp {schema_type}"
+    tbl = edges.select("id_a", "id_b").toArrow()
+    if tbl.num_rows == 0:
         # derive the id type from the edges schema here too: a hardcoded
         # 'long' would type-mismatch downstream joins for string doc ids
-        return spark.createDataFrame([], f"id {schema_type}, comp {schema_type}")
+        return spark.createDataFrame([], out_schema)
     codes, uniques = pd.factorize(
-        pd.concat([pdf["id_a"], pdf["id_b"]], ignore_index=True), sort=False
+        np.concatenate([tbl["id_a"].to_numpy(), tbl["id_b"].to_numpy()]),
+        sort=False,
     )
     uniq = np.asarray(uniques)
-    n_edges = len(pdf)
+    n_edges = tbl.num_rows
     a, b = codes[:n_edges], codes[n_edges:]
     # rank = position in sorted id order; union-by-min-rank keeps the
     # smallest id of every merged set as its root, so the final label is
@@ -948,8 +939,9 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
             else:
                 parent[ra] = rb
     roots = np.array([find(i) for i in range(len(uniq))], dtype=np.int64)
-    out = pd.DataFrame({"id": uniq, "comp": uniq[roots]})
-    return spark.createDataFrame(out, f"id {schema_type}, comp {schema_type}")
+    out = pa.table({"id": uniq, "comp": uniq[roots]})
+    comp = spark.createDataFrame(out, out_schema)
+    return F.broadcast(comp) if _fits_broadcast(out.nbytes) else comp
 
 
 def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -1079,7 +1071,8 @@ def dedup_representatives(
     raw text: at corpus scale the group + join-back would otherwise shuffle
     every multi-KB document body twice as a key. Here only (id, digest)
     pairs cross those shuffles; the text column crosses exactly ONE shuffle
-    (the semi-join fetching each representative's text for MinHash).
+    (the digest ``groupBy``, which carries each group's text as an
+    aggregated value to MinHash — see dedup_edges).
 
     Tradeoff (deliberate): digest keying makes the "exact" pass exact only
     up to md5 collisions — two distinct texts colliding on the 128-bit

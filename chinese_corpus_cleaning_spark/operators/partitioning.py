@@ -17,6 +17,11 @@ any column — the repo's text-shuffle audits (no text-KEYED exchange) are
 untouched — and Spark's sort-before-repartition keeps the row-to-partition
 assignment deterministic under task retry (SPARK-23207).
 
+The guard is for CPU-bound per-row work. A latency-bound exchange chain
+over kilobytes takes the opposite rule: dedup plans its candidate chain
+over ``coalesce(1)`` when the signatures are already one partition, so
+no exchange (each one a Spark job) is inserted.
+
 The module also owns every size-adaptive decision an operator takes from
 an observed count (``checkpoint_observed``): the operator materializes a
 frame it reuses anyway, reads the count off that same job, and picks its

@@ -492,20 +492,23 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     NaN-bearing rows) — those carry engine-specific NULL/NaN semantics the
     distributed expressions define (Spark orders NaN above every double in
     the argmin struct; numpy's argmin stops at the first NaN), so the
-    caller falls through to the Spark path."""
+    caller falls through to the Spark path. Arrow both ways, as in
+    dedup._cc_driver."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    pdf = src.toPandas()
-    if len(pdf) == 0:
+    tbl = src.toArrow()
+    if tbl.num_rows == 0:
         return spark.createDataFrame([], cent_schema)
-    vec_list = pdf["__v"].tolist()
-    if any(v is None for v in vec_list) or len(
-        {len(v) for v in vec_list}
-    ) != 1:
+    lens = pc.list_value_length(tbl["__v"])
+    if tbl["__v"].null_count or len(pc.unique(lens)) != 1:
         return None
-    pdf = pdf.sort_values("__kid", kind="mergesort").reset_index(drop=True)
-    ids = pdf["__kid"].tolist()
-    vecs = np.array(pdf["__v"].tolist(), dtype=np.float64)
+    tbl = tbl.sort_by("__kid")
+    ids = tbl["__kid"].to_pylist()
+    # a NULL element inside a vector flattens to NaN: same fall-through
+    vecs = pc.list_flatten(tbl["__v"]).to_numpy()
+    vecs = vecs.reshape(tbl.num_rows, lens[0].as_py())
     if np.isnan(vecs).any():
         return None
     cids = ids[: int(k)]
@@ -527,11 +530,7 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
             if m.any():
                 cents[j] = vecs[m].mean(axis=0)
     return spark.createDataFrame(
-        [
-            (cid, [float(x) for x in cents[i]])
-            for i, cid in enumerate(cids)
-        ],
-        cent_schema,
+        pa.table({"cid": cids, "c": list(cents)}), cent_schema
     )
 
 

@@ -3,11 +3,15 @@ detected via MinHash-LSH + connected components, representatives elected."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 import pytest
 from pyspark.sql import functions as F
 
 from chinese_corpus_cleaning_spark.config import DedupConfig
 from chinese_corpus_cleaning_spark.operators import dedup
+from chinese_corpus_cleaning_spark.operators.partitioning import num_partitions
 from chinese_corpus_cleaning_spark.sources import gen
 
 
@@ -307,9 +311,9 @@ def test_incremental_equals_full_cross_split(spark):
         expected.add((nid, cid, round(r["est_jaccard"], 9)))
     assert expected  # near-dup families span consecutive ids by construction
 
-    for budget in (dedup._SIG_BCAST_BUDGET_BYTES, 0):
+    for budget in (dedup._BCAST_BUDGET_BYTES, 0):
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
+            mp.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
             inc = dedup.dedup_incremental_pairs(new, index, cfg)
             got = {
                 (r["new_id"], r["corpus_id"], round(r["est_jaccard"], 9))
@@ -375,32 +379,50 @@ def _sparse_docs(spark):
     )
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 @pytest.mark.parametrize("fixture,pruned", [("family", False), ("sparse", True)])
-def test_similarity_pairs_same_on_every_arm(spark, fixture, pruned):
+def test_similarity_pairs_same_on_every_arm(spark, tmp_path, fixture, pruned):
     """minhash_similarity_pairs gives the same (id_a, id_b, est_jaccard)
     set on each arm its observed sizes can pick: the broadcast fast path
     (huge budget), the fully shuffled path (zero budget) and, on the sparse
     input, the pruned signature table broadcast (a budget one row short of
     the whole table) — on one input each side of the candidate-id prune's
-    cutover."""
+    cutover. Each arm runs on a signature checkpoint of one partition (a
+    one-file parquet scan: the fast path then plans its candidate chain
+    single-partition, without exchanges) and of four, uncapped and with a
+    bucket cap small enough to take the star path."""
     cfg = _SMALL_CFG
-    df = (_family_docs if fixture == "family" else _sparse_docs)(spark)
-    df = df.localCheckpoint(eager=True)
-    n_sigs = df.count()
-    n_pairs = dedup.lsh_candidate_pairs(dedup.with_minhash(df, cfg)).count()
+    path = str(tmp_path / "docs")
+    docs = (_family_docs if fixture == "family" else _sparse_docs)(spark)
+    docs.coalesce(1).write.parquet(path)
+    inputs = {1: spark.read.parquet(path)}
+    inputs[4] = inputs[1].repartition(4).localCheckpoint(eager=True)
+    n_sigs = inputs[1].count()
+    n_pairs = dedup.lsh_candidate_pairs(dedup.with_minhash(inputs[1], cfg)).count()
     assert (2 * n_pairs < 0.5 * n_sigs) == pruned, (n_pairs, n_sigs)
     row_bytes = 8 * cfg.num_hashes + 8  # long ids
-    results = {}
-    for budget in (1 << 40, row_bytes * (n_sigs - 1), 0):
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
-            results[budget] = {
-                (r["id_a"], r["id_b"], r["est_jaccard"])
-                for r in dedup.minhash_similarity_pairs(df, cfg).collect()
-            }
-    fast, *others = results.values()
-    assert fast
-    assert all(o == fast for o in others)
+    for cap in (None, 8):
+        results = {}
+        for parts, df in inputs.items():
+            assert num_partitions(df) == parts
+            for budget in (1 << 40, row_bytes * (n_sigs - 1), 0):
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
+                    results[parts, budget] = {
+                        (r["id_a"], r["id_b"], r["est_jaccard"])
+                        for r in dedup.minhash_similarity_pairs(
+                            df, cfg, max_band_bucket=cap
+                        ).collect()
+                    }
+        fast, *others = results.values()
+        assert fast
+        assert all(o == fast for o in others), cap
 
 
 def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
@@ -408,21 +430,15 @@ def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
     bigint ids keep the signature broadcast, while ~400-byte string ids
     must turn it off: that table's real bytes are ~2x the budget. A
     row-only estimate broadcasts both."""
-    import contextlib
-    import io
-
     cfg = _SMALL_CFG
     n = 60
     monkeypatch.setattr(
-        dedup, "_SIG_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
+        dedup, "_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
     )
 
     def broadcasts(df):
         est = dedup.minhash_similarity_pairs(df, cfg, materialize=False)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            est.explain("formatted")
-        return "BroadcastHashJoin" in buf.getvalue()
+        return "BroadcastHashJoin" in _plan(est)
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -435,10 +451,38 @@ def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_driver_cc_table_broadcast_within_budget(spark, monkeypatch):
+    """The driver-CC (id, comp) table is hinted broadcast when its Arrow
+    bytes fit the budget, so dedup_representatives' final docs ⋈ comp
+    join plans as a broadcast hash join; one byte over the budget it keeps
+    the shuffled join. Auto-broadcast is off, so that only the hint can
+    broadcast the table. Same components either way."""
+    n = 20
+    df = _family_docs(spark, n).localCheckpoint(eager=True)
+    table_bytes = n * 16  # every id is in the edge list: two bigint columns
+    plans, results = {}, {}
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for budget in (table_bytes, table_bytes - 1):
+            monkeypatch.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
+            reps = dedup.dedup_representatives(df, _SMALL_CFG)
+            plans[budget] = _plan(reps)
+            results[budget] = sorted(reps.collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert {r["component"] for r in results[table_bytes]} == {0}
+    assert results[table_bytes] == results[table_bytes - 1]
+    assert "BroadcastHashJoin LeftOuter BuildRight" in plans[table_bytes]
+    assert "SortMergeJoin LeftOuter" not in plans[table_bytes]
+    assert "SortMergeJoin LeftOuter" in plans[table_bytes - 1]
+    assert "BroadcastHashJoin" not in plans[table_bytes - 1]
+
+
 def test_dedup_representatives_job_count(spark):
     """Guard on Spark jobs per dedup call: every size decision rides a
     checkpoint job the operator needs anyway (checkpoint_observed), so a
-    300-doc call plus one count runs 15 jobs; one more means a decision
+    300-doc call plus one count runs 11 jobs; one more means a decision
     grew a Spark job of its own."""
     sc = spark.sparkContext
     df = (
@@ -454,7 +498,7 @@ def test_dedup_representatives_job_count(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert n_dup == 30
-    assert len(jobs) == 15, sorted(jobs)
+    assert len(jobs) == 11, sorted(jobs)
 
 
 def test_fold_into_index_sequential_equals_concatenated(spark):

@@ -100,6 +100,36 @@ def test_dedup_representatives_plan_is_cartesian_free(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_one_partition_pair_chain_has_no_hash_exchange(spark, tmp_path):
+    """A small signature table checkpointed at one partition (a one-file
+    parquet scan: its plan carries a size estimate) takes
+    minhash_similarity_pairs' fast arm with the candidate chain declared
+    single-partition, so the executed plan — band-size aggregate,
+    self-join, hub aggregate, pair distinct, broadcast re-attach — holds
+    no hash Exchange (each one costs a Spark job)."""
+    import random
+
+    from chinese_corpus_cleaning_spark.config import DedupConfig
+    from chinese_corpus_cleaning_spark.operators import dedup
+
+    cfg = DedupConfig(
+        similarity_threshold=0.5, shingle_size=5, num_hashes=16, num_bands=4
+    )
+    rnd = random.Random(5)
+    base = "".join(chr(0x4E00 + rnd.randrange(2000)) for _ in range(200))
+    rows = [(i, base[:i] + "x" + base[i + 1:]) for i in range(60)]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    # cap 8 < 60 family members: the oversized buckets take the hub path
+    est = dedup.minhash_similarity_pairs(
+        spark.read.parquet(path), cfg, max_band_bucket=8, materialize=False
+    )
+    assert est.collect()
+    plan = _explained(est)
+    assert "isFinalPlan=true" in plan, plan
+    assert "hashpartitioning" not in plan, plan
+
+
 def test_dedup_edges_never_shuffle_on_text(spark):
     """The exact-dup pre-pass must key its group + join-back on the md5
     digest: no Exchange may hash-partition on the raw text column (at corpus
