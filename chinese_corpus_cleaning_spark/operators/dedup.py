@@ -26,8 +26,8 @@ Scale notes (10^12 docs):
     propagation plus pointer jumping as DataFrame joins, with a
     per-iteration localCheckpoint to truncate lineage; converges in
     O(log diameter) iterations.
-  * Every size-adaptive arm (signature / increment / CC-table broadcast,
-    one-partition LSH chain, candidate-id prune, CC driver/distributed) is
+  * Every size-adaptive arm (signature / increment broadcast, one-partition
+    LSH chain, candidate-id prune, CC driver/distributed) is
     picked from a size the operator observed anyway — never from a caller
     option.
 """
@@ -42,13 +42,15 @@ from pyspark.sql.types import StringType
 from ..config import DedupConfig
 from .partitioning import checkpoint_observed, num_partitions
 
-# Broadcast budget in real bytes for a signature table (a row is
-# num_hashes * 8 B plus its id: ~65k long-id rows at 128 hashes) and for
-# the driver-CC (id, comp) table (its Arrow bytes) — far below the guide's
-# few-hundred-MB comfort zone; corpus-scale tables take the shuffled joins.
-# The round-8 A/B (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept
-# it for the plan shape.
-_BCAST_BUDGET_BYTES = 64 << 20
+# Broadcast budget for a signature table (the est-Jaccard re-attach in
+# minhash_similarity_pairs, the increment side of dedup_incremental_pairs):
+# a row is num_hashes * 8 B plus its id, so 64 MB admits ~65k long-id rows
+# at the production 128-hash config — far below the guide's
+# few-hundred-MB broadcast comfort zone, and corpus-scale signature tables
+# blow the bound and take the shuffled joins. The round-8 A/B
+# (OPTIMIZATION_r08.md: 9.29 vs 10.61 s, then a wash) kept it for the
+# plan shape.
+_SIG_BCAST_BUDGET_BYTES = 64 << 20
 _N_HUBS = 4  # hubs per oversized LSH bucket (lsh_candidate_pairs)
 
 
@@ -73,9 +75,10 @@ def _checkpoint_signatures(
     return signed, n, 8 * cfg.num_hashes + id_width
 
 
-def _fits_broadcast(nbytes: float) -> bool:
-    """Whether a non-empty table of ``nbytes`` fits the broadcast budget."""
-    return 0 < nbytes <= _BCAST_BUDGET_BYTES
+def _sig_fits_broadcast(n_rows: int, row_bytes: float) -> bool:
+    """Whether a non-empty ``n_rows``-row signature table fits the
+    broadcast budget."""
+    return 0 < n_rows and n_rows * row_bytes <= _SIG_BCAST_BUDGET_BYTES
 
 
 # ---------------------------------------------------------------- exact dedup
@@ -325,7 +328,7 @@ def minhash_similarity_pairs(
     # the candidate set) is checkpointed instead, so multi-consumer callers
     # (dbscan's three scans) never re-run the LSH machinery and the stage
     # costs one job fewer than the round-7 shape.
-    fast = broadcast = _fits_broadcast(n_sigs * row_bytes)
+    fast = broadcast = _sig_fits_broadcast(n_sigs, row_bytes)
     # ONE-PARTITION chain: over a small checkpoint already at one partition
     # (AQE coalesced the distinct-text aggregate), coalesce(1) moves no data
     # but lets the planner drop the hash exchanges, each one a job, of the
@@ -364,7 +367,7 @@ def minhash_similarity_pairs(
         # The post-prune table can still fit the broadcast budget in sparse
         # corpora (sig_rows <= 2 * n_pairs) — broadcast it then;
         # corpus-scale tables blow the bound and keep the shuffled joins.
-        broadcast = _fits_broadcast(sig_rows * row_bytes)
+        broadcast = _sig_fits_broadcast(sig_rows, row_bytes)
     sig_a = sig_src.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("minhash_a"))
     sig_b = sig_src.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("minhash_b"))
     if broadcast:
@@ -448,7 +451,7 @@ def _sign_and_probe(
     )
     if corpus_index is None:
         return signed_new, None
-    broadcast_new = _fits_broadcast(n_new * row_bytes)
+    broadcast_new = _sig_fits_broadcast(n_new, row_bytes)
     new_bands = signed_new.select(
         F.col(id_col).alias("new_id"), F.explode("band_keys").alias("band_key")
     )
@@ -896,10 +899,10 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
     Arrow both ways, whatever the session conf says: ``toArrow()`` in,
     ``createDataFrame(pa.Table)`` out (``toPandas()`` pickles rows while
     ``spark.sql.execution.arrow.pyspark.enabled`` is off, its default; the
-    whole call 3.7-5.3 -> 2.7-2.8 s at 200k edges). The table is hinted
-    broadcast when its Arrow bytes fit the budget, so the caller's
-    ``docs ⋈ comp`` join never shuffles; unhinted, the Arrow-built
-    LocalRelation broadcasts only under autoBroadcastJoinThreshold."""
+    whole call 3.7-5.3 -> 2.4-2.8 s at 200k edges). The Arrow-built table
+    is a LocalRelation with exact statistics, so the planner broadcasts it
+    into the caller's ``docs ⋈ comp`` join under
+    autoBroadcastJoinThreshold; above that the join shuffles."""
     import numpy as np
     import pyarrow as pa
 
@@ -940,8 +943,7 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
                 parent[ra] = rb
     roots = np.array([find(i) for i in range(len(uniq))], dtype=np.int64)
     out = pa.table({"id": uniq, "comp": uniq[roots]})
-    comp = spark.createDataFrame(out, out_schema)
-    return F.broadcast(comp) if _fits_broadcast(out.nbytes) else comp
+    return spark.createDataFrame(out, out_schema)
 
 
 def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:

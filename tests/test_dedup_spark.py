@@ -311,9 +311,9 @@ def test_incremental_equals_full_cross_split(spark):
         expected.add((nid, cid, round(r["est_jaccard"], 9)))
     assert expected  # near-dup families span consecutive ids by construction
 
-    for budget in (dedup._BCAST_BUDGET_BYTES, 0):
+    for budget in (dedup._SIG_BCAST_BUDGET_BYTES, 0):
         with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
+            mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
             inc = dedup.dedup_incremental_pairs(new, index, cfg)
             got = {
                 (r["new_id"], r["corpus_id"], round(r["est_jaccard"], 9))
@@ -413,7 +413,7 @@ def test_similarity_pairs_same_on_every_arm(spark, tmp_path, fixture, pruned):
             assert num_partitions(df) == parts
             for budget in (1 << 40, row_bytes * (n_sigs - 1), 0):
                 with pytest.MonkeyPatch.context() as mp:
-                    mp.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
+                    mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
                     results[parts, budget] = {
                         (r["id_a"], r["id_b"], r["est_jaccard"])
                         for r in dedup.minhash_similarity_pairs(
@@ -433,7 +433,7 @@ def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
     cfg = _SMALL_CFG
     n = 60
     monkeypatch.setattr(
-        dedup, "_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
+        dedup, "_SIG_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
     )
 
     def broadcasts(df):
@@ -449,34 +449,6 @@ def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_driver_cc_table_broadcast_within_budget(spark, monkeypatch):
-    """The driver-CC (id, comp) table is hinted broadcast when its Arrow
-    bytes fit the budget, so dedup_representatives' final docs ⋈ comp
-    join plans as a broadcast hash join; one byte over the budget it keeps
-    the shuffled join. Auto-broadcast is off, so that only the hint can
-    broadcast the table. Same components either way."""
-    n = 20
-    df = _family_docs(spark, n).localCheckpoint(eager=True)
-    table_bytes = n * 16  # every id is in the edge list: two bigint columns
-    plans, results = {}, {}
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for budget in (table_bytes, table_bytes - 1):
-            monkeypatch.setattr(dedup, "_BCAST_BUDGET_BYTES", budget)
-            reps = dedup.dedup_representatives(df, _SMALL_CFG)
-            plans[budget] = _plan(reps)
-            results[budget] = sorted(reps.collect())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert {r["component"] for r in results[table_bytes]} == {0}
-    assert results[table_bytes] == results[table_bytes - 1]
-    assert "BroadcastHashJoin LeftOuter BuildRight" in plans[table_bytes]
-    assert "SortMergeJoin LeftOuter" not in plans[table_bytes]
-    assert "SortMergeJoin LeftOuter" in plans[table_bytes - 1]
-    assert "BroadcastHashJoin" not in plans[table_bytes - 1]
 
 
 def test_dedup_representatives_job_count(spark):
