@@ -53,6 +53,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -182,7 +183,7 @@ class LogRegModel:
     def to_df(self, spark) -> DataFrame:
         nz = np.flatnonzero(self.weights)
         return spark.createDataFrame(
-            pd.DataFrame(
+            pa.table(
                 {
                     "bucket": nz.astype("int32"),
                     "w": self.weights[nz].astype("float64"),
@@ -249,9 +250,7 @@ def train_logreg(
     for _ in range(iters):
         nz = np.flatnonzero(w)
         wdf = spark.createDataFrame(
-            pd.DataFrame(
-                {"bucket": nz.astype("int32"), "w": w[nz]}
-            ),
+            pa.table({"bucket": nz.astype("int32"), "w": w[nz]}),
             schema="bucket int, w double",
         )
         margins = (
@@ -262,7 +261,7 @@ def train_logreg(
                     "m"
                 )
             )
-            .toPandas()
+            .toArrow()
         )
         m = margins["m"].to_numpy() + bias
         yv = margins["y"].to_numpy()
@@ -277,13 +276,13 @@ def train_logreg(
         )
         err = p - yv
         edf = spark.createDataFrame(
-            pd.DataFrame({"id": margins["id"], "e": err}),
+            pa.table({"id": margins["id"], "e": err}),
         )
         grad = (
             xy.join(F.broadcast(edf), "id")
             .groupBy("bucket")
             .agg(F.sum(F.col("e") * F.col("x")).alias("g"))
-            .toPandas()
+            .toArrow()
         )
         g = np.zeros(n_buckets, dtype="float64")
         g[grad["bucket"].to_numpy()] = grad["g"].to_numpy()
@@ -431,10 +430,10 @@ def _classifier_score_mapside(
     from ..functions.hashing import h60
 
     spark = docs.sparkSession
-    wp = weights.select("bucket", "w").toPandas()
+    wp = weights.select("bucket", "w").toArrow()
     w_np = np.zeros(n_buckets, dtype="float64")
-    w_np[wp["bucket"].to_numpy(dtype="int64")] = wp["w"].to_numpy(
-        dtype="float64"
+    w_np[wp["bucket"].to_numpy().astype("int64")] = wp["w"].to_numpy().astype(
+        "float64"
     )
     w_bc = spark.sparkContext.broadcast(w_np)
     bias_f = float(bias)

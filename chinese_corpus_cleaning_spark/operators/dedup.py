@@ -52,6 +52,13 @@ from .partitioning import checkpoint_observed, num_partitions
 # plan shape.
 _SIG_BCAST_BUDGET_BYTES = 64 << 20
 _N_HUBS = 4  # hubs per oversized LSH bucket (lsh_candidate_pairs)
+# connected_components cutover: the edges collect as two Arrow id columns
+# (16 B per long-id edge) and the union-find keeps a few int64 arrays per
+# node, so 2M edges stay far inside the default 4 GB driver. Raise it only
+# with a bigger driver. Larger graphs take the distributed loop, capped at
+# _CC_MAX_ITER min-label / pointer-jump rounds.
+_CC_DRIVER_MAX_EDGES = 2_000_000
+_CC_MAX_ITER = 20
 
 
 def _checkpoint_signatures(
@@ -701,7 +708,6 @@ def ngram_jaccard_pairs(
     (id_a, id_b, jaccard). For bounded fan-out at scale, run on LSH
     candidates; this exact form is the oracle-checkable baseline."""
     sh = shingle_explode(docs, k, id_col, text_col)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         sh.alias("a")
         .join(sh.alias("b"), "shingle")
@@ -709,6 +715,15 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
+    return _jaccard_filter(inter, sh, threshold)
+
+
+def _jaccard_filter(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) from the pair intersections ``inter`` (id_a,
+    id_b, n_inter) and the (id, shingle) rows ``sh`` they came from:
+    |A|, |B| are per-doc shingle counts, jaccard = |A∩B| / |A∪B|, kept at
+    or above ``threshold``."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     return (
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "n_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "n_b"), "id_b")
@@ -779,7 +794,6 @@ def ngram_jaccard_on_candidates(
         .distinct()
     )
     sh = sh.join(ids, "id", "leftsemi")
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
         sh.alias("a")
         .join(cand, F.col("a.id") == F.col("id_a"))
@@ -790,21 +804,7 @@ def ngram_jaccard_on_candidates(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "n_a"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "n_b"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_filter(inter, sh, threshold)
 
 
 def simhash_near_dup_pairs(
@@ -862,34 +862,27 @@ def simhash_near_dup_pairs(
 # -------------------------------------------------- connected components (CC)
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, driver_threshold: int = 2_000_000
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components over an undirected edge list (id_a, id_b) ->
     (id, component) with component = min id reachable.
 
     Size-adaptive physical strategy (AQE philosophy — pick the plan by
-    runtime statistics): below ``driver_threshold`` edges the graph is
-    union-found on the driver in one pass (a 300k-edge graph costs ~1s there
-    vs ~2 minutes of per-iteration job latency in the distributed loop);
-    above it, iterative min-label propagation with pointer jumping as
-    DataFrame joins, localCheckpointed per iteration to truncate lineage
-    (SURVEY.md §4 item 4), converging in O(log diameter).
-
-    Threshold sizing: a collected edge Row is two 8-byte ids plus ~150 B of
-    Row/object overhead in the Python driver, so 2M edges is ~330 MB of
-    driver heap — comfortably inside the default 4 GB driver with headroom
-    for the union-find dict (~60 B/entry). Raise it only with a bigger
-    driver."""
+    runtime statistics): at or below ``_CC_DRIVER_MAX_EDGES`` edges the
+    graph is union-found on the driver in one pass (a 300k-edge graph
+    costs ~1s there vs ~2 minutes of per-iteration job latency in the
+    distributed loop); above it, iterative min-label propagation with
+    pointer jumping as DataFrame joins, localCheckpointed per iteration to
+    truncate lineage (SURVEY.md §4 item 4), converging in O(log diameter)
+    within ``_CC_MAX_ITER`` iterations."""
     # materialize once: the threshold count and the chosen strategy both scan
     # the edge list; without this the upstream pair pipeline runs twice.
     # The cutover count rides the checkpoint job (the repo's zero-extra-jobs
     # doctrine; round 8 — the previous limit(threshold+1).count() was one
     # more full job per CC invocation).
     edges, observed = checkpoint_observed(edges, "cc_n_edges")
-    if observed["n"] <= driver_threshold:
+    if observed["n"] <= _CC_DRIVER_MAX_EDGES:
         return _cc_driver(edges)
-    return _cc_distributed(edges, max_iter)
+    return _cc_distributed(edges)
 
 
 def _cc_driver(edges: DataFrame) -> DataFrame:
@@ -946,7 +939,7 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, out_schema)
 
 
-def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+def _cc_distributed(edges: DataFrame) -> DataFrame:
     # symmetric neighbor list — materialized once: every iteration scans it
     # twice, and without this the FULL upstream plan (LSH signature pipeline)
     # would re-execute per iteration (measured 625s -> ~20s at 20k docs)
@@ -958,7 +951,7 @@ def _cc_distributed(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     labels = sym.groupBy("id").agg(
         F.least(F.min("nbr"), F.col("id")).alias("comp")
     )
-    for i in range(max_iter):
+    for i in range(_CC_MAX_ITER):
         prev = labels.select("id", F.col("comp").alias("prev_comp"))
         # (1) propagate each node's label to neighbors; take the min seen
         prop = (

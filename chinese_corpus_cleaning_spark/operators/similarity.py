@@ -2,25 +2,36 @@
 
 The reference's embedding path (/root/reference/embed.py:23-45 CLS vectors,
 utils/embed.py:58-82 full similarity matrix) is driver-bound O(n^2) numpy.
-Re-expressed for Spark:
+Re-expressed for Spark as relational pair operators over ONE kernel:
 
-  * ``cosine_topk``: brute-force exact top-k — a self-join with the small
-    side broadcast; the dot product stays JVM-side via zip_with/aggregate
-    (whole-stage codegen, no Python). The scale baseline: with a broadcast
-    probe set this is a map-side O(n·|probe|) scan, shuffle-free.
-  * ``rp_lsh_buckets``: random-hyperplane LSH — deterministic ±1 hyperplanes
-    derived from the md5-based h60 (oracle-verifiable), giving an
-    equi-joinable ``bucket`` key; ANN = top-k within bucket only. The scale
-    path: candidate generation becomes a hash join on bucket, shrinking the
-    pair space by ~2^n_planes.
+  * ``_cos_pairs``: (qid, nid, cos) over two normed (id, vec, _norm)
+    frames — an equi-join on a bucket/cell key, or a cross join without
+    one, a pair predicate (``qid != nid``, ``qid < nid`` or
+    ``nid < qid``), and the cosine as the one JVM-side ``_dot`` fold
+    (unrolled to whole-stage codegen for 64-dim vectors, no Python) over
+    the product of the NULL-for-zero norms. ``_topk`` is the one
+    row_number ranker over (cos desc, nid asc).
+  * Exact, cross-joined: ``cosine_topk`` (top-k; a probe set is
+    broadcast, making it a map-side O(n·|probe|) scan),
+    ``embedding_near_dup_pairs`` (pairs at or above a threshold) and
+    ``duplicate_ratio`` (per-vector max cosine) — the oracle-checkable
+    specs.
+  * Bucketed, the scale paths: guard parallelism, assign cells, checkpoint
+    the norm frame once, then the kernel as a within-cell self-join —
+    ``ann_topk_lsh`` and ``duplicate_ratio_ann`` on ``rp_lsh_buckets``
+    (deterministic ±1 hyperplanes from the md5-based h60, shrinking the
+    pair space ~2^n_planes), ``ivf_topk`` on nearest-centroid cells, and
+    ``semdedup`` on seeded or ``kmeans_fit`` cells.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.hashing import h60
+from .partitioning import checkpoint_observed, ensure_min_parallelism
 
 
 # Every embedding fixture/gate in this engine is 64-dimensional; the unrolled
@@ -80,33 +91,79 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def _bucketed_norm_frame(
-    vectors: DataFrame,
-    buckets: DataFrame,
-    key: str,
+def _cos_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    pred: str,
     id_col: str,
     vec_col: str,
+    key: str | None = None,
 ) -> DataFrame:
-    """Slim (id, key, vec, _norm) frame for a within-bucket self-join,
-    localCheckpointed ONCE: both sides of the self-join read this frame,
-    and without the checkpoint each side re-executes the full
-    bucket-expression + interpreted higher-order norm lineage — doubling
-    the corpus scan cost per call (dedup.py multi-branch doctrine;
-    review finding). eager=False: materializes at first action, like the
-    other lazy checkpoints in this repo.
+    """The one embedding pair kernel: (qid, nid, cos) over two normed
+    (id, vec, _norm[, key]) frames, ``a`` giving qid and ``b`` nid, kept
+    where the SQL predicate ``pred`` over qid/nid holds (``qid != nid``,
+    ``qid < nid`` or ``nid < qid``). Equi-joins on ``key`` (LSH bucket,
+    IVF cell) when given, cross-joins otherwise. ``cos`` is the one
+    :func:`_dot` fold over the product of the two NULL-for-zero norms, so
+    a zero vector gives a NULL cosine instead of an ANSI abort."""
+    keys = [key] if key else []
+    left = a.select(
+        F.col(id_col).alias("qid"), *keys,
+        F.col(vec_col).alias("_va"), F.col("_norm").alias("_na"),
+    )
+    right = b.select(
+        F.col(id_col).alias("nid"), *keys,
+        F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb"),
+    )
+    joined = left.join(right, key) if key else left.crossJoin(right)
+    return joined.where(pred).select(
+        "qid",
+        "nid",
+        (F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb"))).alias("cos"),
+    )
 
-    The vector side goes through the parallelism-recovery guard first
-    (operators/partitioning.py): both the bucket expressions and the
-    within-bucket cosine scans downstream inherit this frame's partition
-    count, and a one-row-group embedding file would otherwise run them
-    all on one core."""
-    from .partitioning import ensure_min_parallelism
 
-    vectors = ensure_min_parallelism(vectors)
-    return (
-        with_norm(vectors.join(buckets, id_col), vec_col)
+def _bucket_pairs(
+    vectors: DataFrame,
+    cells: DataFrame,
+    key: str,
+    pred: str,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The bucketed operators' shared tail: ``vectors`` (already through
+    the parallelism guard, so the cell expressions and the within-cell
+    scans inherit its partition count) joined to its ``cells`` (id, key),
+    then the kernel as a within-cell self-join. Returns (norm frame,
+    pairs).
+
+    The slim (id, key, vec, _norm) norm frame is localCheckpointed ONCE:
+    both sides of the self-join read it, and without the checkpoint each
+    side re-executes the full cell-assignment + norm lineage — doubling
+    the corpus scan cost per call (dedup.py multi-branch doctrine).
+    eager=False: it materializes at the first action, like the other lazy
+    checkpoints in this repo."""
+    v = (
+        with_norm(vectors.join(cells, id_col), vec_col)
         .select(id_col, key, vec_col, "_norm")
         .localCheckpoint(eager=False)
+    )
+    return v, _cos_pairs(v, v, pred, id_col, vec_col, key)
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k per qid by (cos desc, nid asc) — NULL cosines rank last —
+    as (vec_id, neighbor_id, cos_sim, rank)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias("vec_id"),
+            F.col("nid").alias("neighbor_id"),
+            F.col("cos").alias("cos_sim"),
+            "rank",
+        )
     )
 
 
@@ -122,39 +179,12 @@ def cosine_topk(
     ``probes`` defaults to the full set (all-pairs); pass a small probe
     DataFrame for query-style search — it is broadcast, making the join
     map-side."""
-    from .partitioning import ensure_min_parallelism
-
     vectors = ensure_min_parallelism(vectors)
-    base = with_norm(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_vb"),
-        F.col("_norm").alias("_nb"),
-    )
-    qry = with_norm(probes if probes is not None else vectors, vec_col).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("_va"), F.col("_norm").alias("_na")
-    )
+    qry = with_norm(probes if probes is not None else vectors, vec_col)
     if probes is not None:
         qry = F.broadcast(qry)
-    pairs = (
-        qry.crossJoin(base)
-        .where(F.col("qid") != F.col("neighbor_id"))
-        .withColumn(
-            "cos_sim",
-            F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("vec_id"), "neighbor_id", "cos_sim", "rank"
-        )
-    )
+    base = with_norm(vectors, vec_col)
+    return _topk(_cos_pairs(qry, base, "qid != nid", id_col, vec_col), k)
 
 
 def hyperplane_sign_expr(vec_col: str, plane: int, dim: int) -> str:
@@ -205,30 +235,10 @@ def ann_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to same-bucket pairs
     (equi-join on bucket), then exact cosine + windowed rank within bucket."""
-    from .partitioning import ensure_min_parallelism
-
     vectors = ensure_min_parallelism(vectors)
     b = rp_lsh_buckets(vectors, n_planes, dim, id_col, vec_col)
-    v = _bucketed_norm_frame(vectors, b, "bucket", id_col, vec_col)
-    left = v.select(
-        F.col(id_col).alias("qid"), "bucket", F.col(vec_col).alias("_va"), F.col("_norm").alias("_na")
-    )
-    right = v.select(
-        F.col(id_col).alias("neighbor_id"), "bucket", F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb")
-    )
-    pairs = (
-        left.join(right, "bucket")
-        .where(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("qid").alias("vec_id"), "neighbor_id", "cos_sim", "rank")
-    )
+    _, pairs = _bucket_pairs(vectors, b, "bucket", "qid != nid", id_col, vec_col)
+    return _topk(pairs, k)
 
 
 def embedding_near_dup_pairs(
@@ -242,14 +252,14 @@ def embedding_near_dup_pairs(
     Returns (id_a, id_b, cos_sim), a < b. Exact form for oracle checking;
     at scale feed rp_lsh_buckets candidates instead of the cross join."""
     n = with_norm(vectors, vec_col)
-    a = n.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), F.col("_norm").alias("_na"))
-    b = n.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb"))
     return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")))
-        .where(F.col("cos_sim") >= F.lit(threshold))
-        .select("id_a", "id_b", "cos_sim")
+        _cos_pairs(n, n, "qid < nid", id_col, vec_col)
+        .where(F.col("cos") >= F.lit(threshold))
+        .select(
+            F.col("qid").alias("id_a"),
+            F.col("nid").alias("id_b"),
+            F.col("cos").alias("cos_sim"),
+        )
     )
 
 
@@ -261,12 +271,8 @@ def duplicate_ratio(
     """Per-vector max cosine vs the rest of the corpus — the reference's
     get_duplicate_ratio (clustering.py:169-185). (vec_id, dup_ratio)."""
     n = with_norm(vectors, vec_col)
-    a = n.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("_va"), F.col("_norm").alias("_na"))
-    b = n.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb"))
     return (
-        a.crossJoin(b)
-        .where(F.col("qid") != F.col("nid"))
-        .withColumn("cos", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")))
+        _cos_pairs(n, n, "qid != nid", id_col, vec_col)
         .groupBy(F.col("qid").alias("vec_id"))
         .agg(F.max("cos").alias("dup_ratio"))
     )
@@ -286,24 +292,13 @@ def duplicate_ratio_ann(
     (clustering.py:169-185): candidate space shrinks ~2^n_planes vs the
     all-pairs ``duplicate_ratio`` (kept as the oracle-checkable exact spec).
     Returns (vec_id, dup_ratio) for EVERY input vector."""
-    from .partitioning import ensure_min_parallelism
-
     vectors = ensure_min_parallelism(vectors)
     b = rp_lsh_buckets(vectors, n_planes, dim, id_col, vec_col)
-    v = _bucketed_norm_frame(vectors, b, "bucket", id_col, vec_col)
-    left = v.select(
-        F.col(id_col).alias("qid"), "bucket", F.col(vec_col).alias("_va"), F.col("_norm").alias("_na")
+    _, pairs = _bucket_pairs(vectors, b, "bucket", "qid != nid", id_col, vec_col)
+    max_cos = pairs.groupBy(F.col("qid").alias(id_col)).agg(
+        F.max("cos").alias("_max_cos")
     )
-    right = v.select(
-        F.col(id_col).alias("nid"), "bucket", F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb")
-    )
-    max_cos = (
-        left.join(right, "bucket")
-        .where(F.col("qid") != F.col("nid"))
-        .withColumn("cos", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")))
-        .groupBy(F.col("qid").alias(id_col))
-        .agg(F.max("cos").alias("_max_cos"))
-    )
+    # the output spine is the GUARDED input (every id, one row each)
     return (
         vectors.select(id_col)
         .join(max_cos, id_col, "left")
@@ -452,30 +447,20 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: exact cosine top-k restricted to same-cell candidates."""
-    from pyspark.sql.window import Window
-
-    from .partitioning import ensure_min_parallelism
-
     vectors = ensure_min_parallelism(vectors)
     cells = ivf_assign(vectors, n_cells, id_col, vec_col)
-    v = _bucketed_norm_frame(vectors, cells, "cell", id_col, vec_col)
-    left = v.select(
-        F.col(id_col).alias("qid"), "cell", F.col(vec_col).alias("_va"), F.col("_norm").alias("_na")
-    )
-    right = v.select(
-        F.col(id_col).alias("neighbor_id"), "cell", F.col(vec_col).alias("_vb"), F.col("_norm").alias("_nb")
-    )
-    pairs = (
-        left.join(right, "cell")
-        .where(F.col("qid") != F.col("neighbor_id"))
-        .withColumn("cos_sim", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("qid").alias("vec_id"), "neighbor_id", "cos_sim", "rank")
-    )
+    _, pairs = _bucket_pairs(vectors, cells, "cell", "qid != nid", id_col, vec_col)
+    return _topk(pairs, k)
+
+
+# Size-adaptive cutover of kmeans_fit (connected_components doctrine): at
+# or below this many vectors the whole Lloyd loop runs as ONE Arrow collect
+# + numpy on the driver instead of 2 jobs per iteration of distributed
+# assignment/means — measured ~2 s per bench semdedup stage at 2000
+# vectors, where the distributed loop is pure stage latency. At 100k rows
+# x 64 dims the collect is ~50 MB, comfortably inside the driver budget
+# (_cc_driver's 2M-edge doctrine); larger inputs take the distributed loop.
+_KMEANS_DRIVER_MAX_N = 100_000
 
 
 def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
@@ -540,7 +525,6 @@ def kmeans_fit(
     iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Distributed Lloyd k-means over an embedding column; returns the
     trained ``(cid, c)`` centroid table (k rows, ready for
@@ -558,9 +542,12 @@ def kmeans_fit(
     partial-mean rows (posexplode + groupBy(cell, dim) with map-side
     combine); the k*dim means come to the driver (tiny) and go back out as
     the next broadcast literal. Nothing vector-sized ever keys a shuffle.
-    """
-    from .partitioning import checkpoint_observed, ensure_min_parallelism
 
+    Inputs of at most ``_KMEANS_DRIVER_MAX_N`` vectors (the count rides
+    the checkpoint job) run the same Lloyd loop on the driver instead
+    (``_kmeans_driver``); irregular vectors fall through to the
+    distributed loop.
+    """
     vectors = ensure_min_parallelism(vectors)
     src, observed = checkpoint_observed(
         vectors.select(
@@ -574,16 +561,7 @@ def kmeans_fit(
     cid_type = vectors.schema[id_col].dataType.simpleString()
     cent_schema = f"cid {cid_type}, c array<double>"
     spark = vectors.sparkSession
-    # Size-adaptive cutover (connected_components doctrine; the row count
-    # rides the checkpoint job via observe() — zero extra jobs): below the
-    # threshold the whole Lloyd loop runs as ONE Arrow collect + numpy on
-    # the driver instead of 2 jobs per iteration of distributed
-    # assignment/means — measured ~2 s per bench semdedup stage at 2000
-    # vectors, where the distributed loop is pure stage latency. At 100k
-    # rows x 64 dims the collect is ~50 MB — comfortably inside the driver
-    # budget (_cc_driver's 2M-edge doctrine); larger inputs take the
-    # distributed loop below, unchanged.
-    if observed["n"] <= driver_threshold:
+    if observed["n"] <= _KMEANS_DRIVER_MAX_N:
         out = _kmeans_driver(spark, src, k, iters, cent_schema)
         if out is not None:
             return out
@@ -658,35 +636,15 @@ def semdedup(
     then n*cell_size work on slim (id, vector) rows, hot cells split by
     AQE skew handling, and the max-per-id aggregate is partial (map-side
     combine) so no cell's pair list ever materializes in one task."""
-    from .partitioning import ensure_min_parallelism
-
     vectors = ensure_min_parallelism(vectors)
     cells = (
         ivf_assign(vectors, n_cells, id_col, vec_col)
         if centroids is None
         else assign_cells(vectors, centroids, id_col, vec_col)
     )
-    v = _bucketed_norm_frame(vectors, cells, "cell", id_col, vec_col)
-    left = v.select(
-        F.col(id_col).alias("__qid"),
-        "cell",
-        F.col(vec_col).alias("_va"),
-        F.col("_norm").alias("_na"),
-    )
-    right = v.select(
-        F.col(id_col).alias("__pid"),
-        "cell",
-        F.col(vec_col).alias("_vb"),
-        F.col("_norm").alias("_nb"),
-    )
-    prior = (
-        left.join(right, "cell")
-        .where(F.col("__pid") < F.col("__qid"))
-        .withColumn(
-            "__cos", F.expr(_dot("_va", "_vb")) / (F.col("_na") * F.col("_nb"))
-        )
-        .groupBy("__qid")
-        .agg(F.max("__cos").alias("max_prior_cos"))
+    v, pairs = _bucket_pairs(vectors, cells, "cell", "nid < qid", id_col, vec_col)
+    prior = pairs.groupBy(F.col("qid").alias("__qid")).agg(
+        F.max("cos").alias("max_prior_cos")
     )
     # the (id, cell) side reads the SAME checkpointed frame — not `cells`,
     # whose lineage would re-run the whole assignment a second time

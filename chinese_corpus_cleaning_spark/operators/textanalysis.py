@@ -117,6 +117,15 @@ def _decon_gram_sql(text_col: str, n: int) -> str:
     )
 
 
+def _bench_gram_hashes(benchmark: DataFrame, n: int, text_col: str) -> DataFrame:
+    """(g): the benchmark's distinct token n-gram hashes — the small side
+    every decontamination operator builds from (broadcast-joined by
+    ``decontaminate_overlap``, collected through Arrow by the bloom and
+    removal forms)."""
+    gram = _decon_gram_sql(text_col, n)
+    return benchmark.select(F.explode(F.expr(gram)).alias("g")).distinct()
+
+
 def decontaminate_overlap(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -134,9 +143,7 @@ def decontaminate_overlap(
     explode + broadcast semi-join + per-doc count. No corpus shuffle beyond
     the final per-doc aggregation on id."""
     gram = _decon_gram_sql(text_col, n)
-    bench_grams = (
-        benchmark.select(F.explode(F.expr(gram)).alias("g")).distinct()
-    )
+    bench_grams = _bench_gram_hashes(benchmark, n, text_col)
     doc_grams = docs.select(
         F.col(id_col).alias("id"),
         F.explode(F.expr(f"array_distinct({gram})")).alias("g"),
@@ -223,11 +230,8 @@ def decontaminate_bloom(
     spark = docs.sparkSession
 
     # ---- build: distinct benchmark gram hashes -> driver (Arrow) -> bitmap
-    gram = _decon_gram_sql(text_col, n)
-    bench_pdf = (
-        benchmark.select(F.explode(F.expr(gram)).alias("g")).distinct().toPandas()
-    )
-    n_items = len(bench_pdf)
+    bench_g = _bench_gram_hashes(benchmark, n, text_col).toArrow()["g"]
+    n_items = len(bench_g)
     if n_items:
         m = int(np.ceil(-n_items * np.log(fpp) / (np.log(2) ** 2)))
         m = max(64, ((m + 63) // 64) * 64)  # whole uint64 words
@@ -236,7 +240,7 @@ def decontaminate_bloom(
         m, k = 64, 1  # empty benchmark: all-zero bitmap, nothing flags
     bitmap = np.zeros(m // 64, dtype=np.uint64)
     if n_items:
-        idx = _bloom_positions(bench_pdf["g"].to_numpy(), m, k).ravel()
+        idx = _bloom_positions(bench_g.to_numpy(), m, k).ravel()
         np.bitwise_or.at(bitmap, idx >> np.uint64(6),
                          np.uint64(1) << (idx & np.uint64(63)))
     bc = spark.sparkContext.broadcast((bitmap.tobytes(), m, k))
@@ -324,13 +328,8 @@ def decontaminate_remove(
     import numpy as np
 
     spark = docs.sparkSession
-    gram = _decon_gram_sql(text_col, n)
-    bench_pdf = (
-        benchmark.select(F.explode(F.expr(gram)).alias("g")).distinct().toPandas()
-    )
-    bc = spark.sparkContext.broadcast(
-        frozenset(int(g) for g in bench_pdf["g"].to_numpy())
-    )
+    bench_g = _bench_gram_hashes(benchmark, n, text_col).toArrow()["g"]
+    bc = spark.sparkContext.broadcast(frozenset(bench_g.to_pylist()))
 
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = (
@@ -699,80 +698,28 @@ def remove_boilerplate(
     min_docs: int | None = None,
     min_doc_frac: float | None = None,
     keep_cols: tuple[str, ...] = (),
-    probe: str = "pandas",
 ) -> DataFrame:
     """(id, clean_text, n_lines_removed): drop every line whose digest is in
     the boilerplate set, corpus-wide. Unique lines and empty lines survive
     verbatim (empty lines are excluded from frequency counting, so their
     digest can never enter the set). NULL text is treated as '' (clean_text
-    '', n_lines_removed 0) — split(NULL) would otherwise propagate NULL
-    sizes whose difference is ANSI-mode-dependent.
+    '', n_lines_removed 0). ``keep_cols`` pass through (e.g. strata for a
+    downstream sampler).
 
-    Both probe forms are map-side — document text NEVER crosses a shuffle:
-
-    ``probe='pandas'`` (production default, chosen on measurement): the
-    digest set is collected to the driver (bounded by corpus_lines/min_docs)
-    and broadcast as a Python frozenset; removal is ONE Arrow-batched pandas
-    UDF with an O(1) hash probe per line. Costs a driver collect + an Arrow
-    round-trip of the text column — measured A/B at 200k docs/5M lines
-    (BENCH/BASELINE.md round 6, outputs asserted identical per cell):
-    never slower (1.07x at |set|=16) and unboundedly faster as the set
-    grows (8.5x at 1,024; 92x at 16,384), because the lambda scan below is
-    O(|set|) PER LINE.
-
-    ``probe='lambda'``: the digest set is collapsed to one array row and
-    broadcast-crossJoined; removal is split -> filter(x -> not
-    array_contains(__bl, md5(x))) -> array_join inside the plan (no driver
-    round-trip, fully JVM-side). Kept for zero-Python deployments and as the
-    A/B reference; only competitive for tiny nav/footer sets. (The
-    exploded-join alternative was rejected on shape: re-assembling per-doc
-    text after an explode would shuffle line text keyed by id.)"""
-    if probe == "pandas":
-        return _remove_boilerplate_pandas(
-            docs, id_col, text_col, min_docs, min_doc_frac, keep_cols
-        )
-    if probe != "lambda":
-        raise ValueError(f"unknown probe {probe!r}")
-    bl = boilerplate_lines(docs, text_col, min_docs, min_doc_frac).agg(
-        F.collect_set("line_md5").alias("__bl")
-    )
-    parts = f"split(coalesce({text_col}, ''), '\\n')"
-    kept = f"filter({parts}, x -> not array_contains(__bl, md5(x)))"
-    return (
-        docs.crossJoin(F.broadcast(bl))
-        .select(
-            F.col(id_col),
-            F.expr(f"array_join({kept}, '\\n')").alias("clean_text"),
-            F.expr(f"size({parts}) - size({kept})")
-            .cast("bigint")
-            .alias("n_lines_removed"),
-            # passthrough columns (e.g. strata for a downstream sampler) —
-            # still map-side, no re-join needed to recover them
-            *(F.col(c) for c in keep_cols),
-        )
-    )
-
-
-def _remove_boilerplate_pandas(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_docs: int | None,
-    min_doc_frac: float | None,
-    keep_cols: tuple[str, ...],
-) -> DataFrame:
-    """Frozenset-probe form of remove_boilerplate — same output bytes, O(1)
-    membership per line via a sparkContext-broadcast Python set inside one
-    Arrow-batched pandas UDF."""
+    Map-side — document text NEVER crosses a shuffle: the digest set
+    (bounded by corpus_lines/min_docs) comes to the driver through Arrow
+    and is broadcast as a Python frozenset; removal is ONE Arrow-batched
+    pandas UDF with an O(1) hash probe per line. An in-plan probe (a
+    broadcast digest array scanned by ``array_contains`` per line) is
+    O(|set|) per line: measured 1.07x slower at |set|=16 and 92x at
+    16,384 over 200k docs/5M lines (BENCH/BASELINE.md round 6)."""
     import hashlib
 
-    import pandas as pd
-
     digests = frozenset(
-        r["line_md5"]
-        for r in boilerplate_lines(
-            docs, text_col, min_docs, min_doc_frac
-        ).collect()
+        boilerplate_lines(docs, text_col, min_docs, min_doc_frac)
+        .select("line_md5")
+        .toArrow()["line_md5"]
+        .to_pylist()
     )
     bc = docs.sparkSession.sparkContext.broadcast(digests)
 

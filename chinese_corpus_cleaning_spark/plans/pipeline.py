@@ -294,10 +294,7 @@ def main() -> None:  # pragma: no cover - spark-submit entry
     from ..sources.shipping import ensure_pyfiles
 
     ensure_pyfiles(spark)
-    if args.input.startswith("iceberg:"):
-        docs = spark.read.format("iceberg").load(args.input[len("iceberg:") :])
-    else:
-        docs = spark.read.parquet(args.input)
+    docs = read_table(spark, args.input)
     if "url" not in docs.columns:
         # accept any table carrying (id-ish, text): synthesize the url key
         id_col = "doc_id" if "doc_id" in docs.columns else docs.columns[0]

@@ -247,16 +247,15 @@ def test_cc_driver_empty_edges_preserves_id_type(spark):
     assert out.count() == 0
 
 
-def test_cc_distributed_path_matches_driver_path(spark):
-    """Force the distributed min-label/pointer-jump loop (driver_threshold=0)
-    and check it against the driver union-find on a chain + ring + singleton
-    topology; also exercises the observe()-based convergence check."""
+def test_cc_distributed_path_matches_driver_path(spark, monkeypatch):
+    """Force the distributed min-label/pointer-jump loop (a zero driver
+    cutover) and check it against the driver union-find on a chain + ring +
+    singleton topology; also exercises the observe()-based convergence
+    check."""
     raw = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10), (20, 21)]
     edges = spark.createDataFrame(raw, ["id_a", "id_b"])
-    dist = {
-        r["id"]: r["comp"]
-        for r in dedup.connected_components(edges, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    dist = {r["id"]: r["comp"] for r in dedup.connected_components(edges).collect()}
     drv = {r["id"]: r["comp"] for r in dedup._cc_driver(edges).collect()}
     assert dist == drv
     assert dist[5] == 1 and dist[12] == 10 and dist[21] == 20

@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from chinese_corpus_cleaning_spark.operators import similarity
 from chinese_corpus_cleaning_spark.operators.similarity import (
     assign_cells,
     kmeans_fit,
@@ -158,15 +159,10 @@ def test_degenerate_vectors_do_not_abort(spark, emb):
     """Spark 4's default ANSI mode made one bad embedding job-fatal
     (review findings): a zero-norm vector hit DIVIDE_BY_ZERO in every
     cosine, and a ragged (short) vector hit INVALID_ARRAY_INDEX_IN_
-    ELEMENT_AT in the hyperplane expression. Both must degrade per-row:
-    NULL cosine (zero vector keeps: similarity is unjudgeable) and
-    bucket 0 (NULL-poisoned sign sum — the DuckDB twin's behavior)."""
-    from chinese_corpus_cleaning_spark.operators.similarity import (
-        cosine_topk,
-        duplicate_ratio_ann,
-        rp_lsh_buckets,
-    )
-
+    ELEMENT_AT in the hyperplane expression. Both must degrade per-row in
+    every pair operator: NULL cosine (zero vector keeps: similarity is
+    unjudgeable) and bucket 0 (NULL-poisoned sign sum — the DuckDB twin's
+    behavior)."""
     bad = spark.createDataFrame(
         [
             (9_000_001, [0.0] * 64),  # zero norm
@@ -175,18 +171,47 @@ def test_degenerate_vectors_do_not_abort(spark, emb):
         "vec_id bigint, embedding array<float>",
     )
     dfin = emb.select("vec_id", "embedding").unionByName(bad)
-    # no job abort anywhere, every input id still gets a dup_ratio row
-    ratios = duplicate_ratio_ann(dfin).cache()
-    assert ratios.count() == dfin.count()
-    assert ratios.where("vec_id >= 9000000").count() == 2
-    ratios.unpersist()
-    # zero vector: NULL cosine everywhere -> never someone's neighbor rank 1..k
-    top = cosine_topk(dfin, k=3)
-    assert top.where("neighbor_id = 9000001").where(
-        "cos_sim is not null"
+    n_in = dfin.count()
+    bad_ids = {9_000_001, 9_000_002}
+    # per-vector operators: no job abort, every input id keeps its row
+    for op in (similarity.duplicate_ratio_ann, similarity.duplicate_ratio):
+        ratios = op(dfin).cache()
+        assert ratios.count() == n_in, op.__name__
+        assert ratios.where("vec_id >= 9000000").count() == 2, op.__name__
+        # the zero vector's cosines are all NULL: no max to take
+        if op is similarity.duplicate_ratio:
+            z = ratios.where("vec_id = 9000001").collect()[0]
+            assert z["dup_ratio"] is None
+        ratios.unpersist()
+    # top-k operators: the zero vector is never a neighbor with a non-NULL
+    # cosine. Both bad vectors share bucket 0 (ann) and have same-cell
+    # candidates (ivf), so each keeps its own query rows, NULL-scored.
+    topk_ops = {
+        "cosine_topk": similarity.cosine_topk(dfin, k=3),
+        "ann_topk_lsh": similarity.ann_topk_lsh(dfin, k=3),
+        "ivf_topk": similarity.ivf_topk(dfin, k=3),
+    }
+    for name, top in topk_ops.items():
+        top = top.cache()
+        assert top.where("neighbor_id = 9000001").where(
+            "cos_sim is not null"
+        ).count() == 0, name
+        got = {r["vec_id"] for r in top.where("vec_id >= 9000000").collect()}
+        assert got == bad_ids, name
+        assert top.where("vec_id >= 9000000").where(
+            "cos_sim is not null"
+        ).count() == 0, name
+        top.unpersist()
+    # threshold pairs: a NULL cosine never passes, so neither bad id pairs
+    pairs = similarity.embedding_near_dup_pairs(dfin, threshold=0.3)
+    assert pairs.where(
+        "id_a >= 9000000 or id_b >= 9000000"
     ).count() == 0
     # ragged vector: sign sums NULL-poison -> deterministic bucket 0
-    b = {r["vec_id"]: r["bucket"] for r in rp_lsh_buckets(bad).collect()}
+    b = {
+        r["vec_id"]: r["bucket"]
+        for r in similarity.rp_lsh_buckets(bad).collect()
+    }
     assert b[9_000_002] == 0
     # semdedup keeps the zero vector (max_prior_cos NULL) and completes
     sd = semdedup(dfin, n_cells=4, tau=0.5)
@@ -211,7 +236,7 @@ def test_kmeans_fit_string_ids(spark):
     assert out.count() == 24
 
 
-def test_kmeans_arms_agree_on_nan_input(spark):
+def test_kmeans_arms_agree_on_nan_input(spark, monkeypatch):
     """Both arms of kmeans_fit's size cutover must give the same cells on
     a NaN coordinate: numpy's argmin stops at the first NaN distance while
     Spark orders NaN above every double, so NaN input takes the
@@ -223,8 +248,9 @@ def test_kmeans_arms_agree_on_nan_input(spark):
     rows[0] = (0, [float("nan"), 0.0, 0.0, 0.0])
     vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
 
-    def cells(driver_threshold):
-        cents = kmeans_fit(vecs, k=3, iters=3, driver_threshold=driver_threshold)
+    def cells(driver_max_n):
+        monkeypatch.setattr(similarity, "_KMEANS_DRIVER_MAX_N", driver_max_n)
+        cents = kmeans_fit(vecs, k=3, iters=3)
         return {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
 
     assert cells(100_000) == cells(0)
