@@ -36,7 +36,7 @@ import glob
 import json
 import os
 
-from .config import DEFAULT, PipelineConfig
+from .config import DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY, PipelineConfig
 from .functions.dfa import build_trie, scrub
 from .functions.feature import evaluate_features
 from .functions.textstats import check_reasons, evaluate_rules
@@ -50,17 +50,17 @@ def _write_json(path: str, obj: dict) -> None:
 
 
 GENERAL_DEFAULTS = {
-    "enable_rule_filter": True,
-    "enable_feature_words": True,
+    "enable_rule_filter": DEFAULT.enable_rule,
+    "enable_feature_words": DEFAULT.enable_feature,
     "enable_perplexity": False,
     "enable_clustering": False,
     "output_dir": None,
-    "quality_threshold": 0.8,
+    "quality_threshold": DEFAULT.quality_threshold,
     "component_weights": {
-        "rule_score": 0.3,
-        "feature_score": 0.5,
-        "perplexity_score": 0.1,
-        "clustering_score": 0.1,
+        "rule_score": DEFAULT.weight_rule,
+        "feature_score": DEFAULT.weight_feature,
+        "perplexity_score": WEIGHT_PERPLEXITY,
+        "clustering_score": WEIGHT_CLUSTERING,
     },
 }
 
@@ -147,7 +147,8 @@ class TextQualityFilter:
         so a component whose key is absent from a partial
         ``component_weights`` contributes to neither the weighted sum nor
         the weight mass — i.e. weight 0 here, keeping batch_process and
-        filter_text score-identical for partial dicts too."""
+        filter_text score-identical for partial dicts too. Like filter_text,
+        the batch path scores rule + feature only."""
         w = self.config.get("component_weights")
         if w is None:
             w = GENERAL_DEFAULTS["component_weights"]
@@ -155,12 +156,8 @@ class TextQualityFilter:
             quality_threshold=self.config["quality_threshold"],
             weight_rule=w.get("rule_score", 0.0),
             weight_feature=w.get("feature_score", 0.0),
-            weight_perplexity=w.get("perplexity_score", 0.0),
-            weight_clustering=w.get("clustering_score", 0.0),
             enable_rule=self.config["enable_rule_filter"],
             enable_feature=self.config["enable_feature_words"],
-            enable_perplexity=self.config["enable_perplexity"],
-            enable_clustering=self.config["enable_clustering"],
         )
 
     def filter_file(self, filepath: str) -> tuple[bool, dict]:

@@ -35,15 +35,6 @@ class FeatureConfig:
 
 
 @dataclass(frozen=True)
-class PerplexityConfig:
-    # recovered perplexity.pyc defaults (SURVEY.md §2.9) + config.py:29-37
-    order: int = 5
-    alpha: float = 0.1  # Lidstone smoothing
-    ppl_threshold: float = 500.0
-    max_ppl: float = 10000.0
-
-
-@dataclass(frozen=True)
 class DedupConfig:
     # clustering.py:25-27 thresholds re-expressed for MinHash-LSH.
     # Banding picked for the 0.85 threshold: 16 bands x 8 rows gives
@@ -58,23 +49,23 @@ class DedupConfig:
 
 @dataclass(frozen=True)
 class PipelineConfig:
+    """What operators/quality.with_quality reads (config.py:47-61)."""
+
     rule: RuleConfig = field(default_factory=RuleConfig)
     feature: FeatureConfig = field(default_factory=FeatureConfig)
-    perplexity: PerplexityConfig = field(default_factory=PerplexityConfig)
-    dedup: DedupConfig = field(default_factory=DedupConfig)
-    # config.py:47-61 (GENERAL_CONFIG)
     quality_threshold: float = 0.8
     weight_rule: float = 0.3
     weight_feature: float = 0.5
-    weight_perplexity: float = 0.1
-    weight_clustering: float = 0.1
     enable_rule: bool = True
     enable_feature: bool = True
-    enable_perplexity: bool = False
-    enable_clustering: bool = False
-    # language-ID keep gate (tool.py:16-28)
-    langid_threshold: float = 0.7
-    langid_min_chars: int = 10
 
 
 DEFAULT = PipelineConfig()
+
+# GENERAL_CONFIG's weights of the components disabled by default; only the
+# four-component composite (catalog q_quality_keep_full) weighs them in
+WEIGHT_PERPLEXITY = 0.1
+WEIGHT_CLUSTERING = 0.1
+# Okapi BM25 (operators/retrieval.py)
+BM25_K1 = 1.2
+BM25_B = 0.75

@@ -164,6 +164,10 @@ def extract_html_text(html_content: str | bytes | None) -> str:
 # --- long-repeat removal (clear_redundancy.py:53-170) ---
 
 
+MIN_REPEAT_LEN = 21  # clear_redundancy.py's repeat length
+WORK_BUDGET_FACTOR = 32  # exact-pass occurrence budget per document char
+
+
 def _chunk_dedup(s: str, window: int) -> str:
     """O(n) fallback for pathologically repetitive documents: split into
     fixed ``window``-char chunks, keep the first occurrence of each distinct
@@ -178,37 +182,33 @@ def _chunk_dedup(s: str, window: int) -> str:
     return "".join(out)
 
 
-def remove_long_repeated_substrings(
-    s: str, min_len: int = 21, work_budget_factor: int = 32
-) -> str:
+def remove_long_repeated_substrings(s: str) -> str:
     """See remove_long_repeated_substrings_ex; this wrapper drops the
     fell-back flag for callers that only want the text."""
-    return remove_long_repeated_substrings_ex(s, min_len, work_budget_factor)[0]
+    return remove_long_repeated_substrings_ex(s)[0]
 
 
-def remove_long_repeated_substrings_ex(
-    s: str, min_len: int = 21, work_budget_factor: int = 32
-) -> tuple[str, bool]:
+def remove_long_repeated_substrings_ex(s: str) -> tuple[str, bool]:
     """Delete the 2nd+ occurrences of every repeated substring of length
-    >= ``min_len``; keep the first occurrence; merge deletion intervals that
-    touch (gap <= 1 merges, clear_redundancy.py:150-159).
+    >= ``MIN_REPEAT_LEN``; keep the first occurrence; merge deletion
+    intervals that touch (gap <= 1 merges, clear_redundancy.py:150-159).
 
     Fresh implementation: suffix automaton built iteratively; for every state
-    with ``len >= min_len`` and >= 2 end positions, the *maximal* substring of
-    that state (exactly state.len chars) is recorded at each occurrence — the
-    same selection the reference makes (it computes but never uses the suffix
-    link length, clear_redundancy.py:116-133).
+    with ``len >= MIN_REPEAT_LEN`` and >= 2 end positions, the *maximal*
+    substring of that state (exactly state.len chars) is recorded at each
+    occurrence — the same selection the reference makes (it computes but
+    never uses the suffix link length, clear_redundancy.py:116-133).
 
     Scale guard: unlike the reference (which materializes a full endpos SET
     per state — O(n^2) time/memory on repetitive pages; a 12KB menu-spam page
     takes ~18s and 50KB doesn't finish), occurrence counts are first computed
     in O(n) via suffix-link counting; positions are materialized only if the
-    total occurrence volume fits ``work_budget_factor * n``. Within budget the
+    total occurrence volume fits ``WORK_BUDGET_FACTOR * n``. Within budget the
     result is byte-identical to the reference (differential-tested); beyond it
     — only pathologically repetitive documents — the deterministic fallback
     is fixed-window chunk dedup (keep the first occurrence of each distinct
-    ``min_len``-char window), which collapses boilerplate/menu spam the same
-    way the exact algorithm would, in O(n).
+    ``MIN_REPEAT_LEN``-char window), which collapses boilerplate/menu spam
+    the same way the exact algorithm would, in O(n).
 
     Returns ``(text, fell_back)``: ``fell_back`` is True iff the approximate
     chunk-dedup path ran instead of the exact suffix-automaton path, so
@@ -216,9 +216,9 @@ def remove_long_repeated_substrings_ex(
     the byte-identical-to-reference guarantee holds only when it is False.
     """
     n = len(s)
-    # a length->=min_len substring occurring twice (occurrences may overlap)
-    # needs at least min_len+1 chars
-    if n <= min_len:
+    # a length->=MIN_REPEAT_LEN substring occurring twice (occurrences may
+    # overlap) needs at least MIN_REPEAT_LEN+1 chars
+    if n <= MIN_REPEAT_LEN:
         return s, False
 
     # suffix automaton: arrays of (len, link, transitions dict)
@@ -267,20 +267,22 @@ def remove_long_repeated_substrings_ex(
             cnt[lk] += cnt[st]
 
     qualifying = [
-        st for st in range(len(sa_len)) if sa_len[st] >= min_len and cnt[st] >= 2
+        st
+        for st in range(len(sa_len))
+        if sa_len[st] >= MIN_REPEAT_LEN and cnt[st] >= 2
     ]
     if not qualifying:
         return s, False
     total_work = sum(cnt[st] for st in qualifying)
-    if total_work > work_budget_factor * n:
-        return _chunk_dedup(s, min_len), True
+    if total_work > WORK_BUDGET_FACTOR * n:
+        return _chunk_dedup(s, MIN_REPEAT_LEN), True
 
     # materialize end positions only for qualifying states: each original
     # (non-clone) state carries one end position, which belongs to every
     # suffix-link ancestor's endpos set
     qual = set(qualifying)
     positions: dict[int, list[int]] = {st: [] for st in qualifying}
-    walk_budget = work_budget_factor * n * 4  # link chains also bounded
+    walk_budget = WORK_BUDGET_FACTOR * n * 4  # link chains also bounded
     for st in range(1, len(sa_len)):
         p = own_pos[st]
         if p < 0:
@@ -289,7 +291,7 @@ def remove_long_repeated_substrings_ex(
         while node > 0:
             walk_budget -= 1
             if walk_budget < 0:
-                return _chunk_dedup(s, min_len), True
+                return _chunk_dedup(s, MIN_REPEAT_LEN), True
             if node in qual:
                 positions[node].append(p)
             node = sa_link[node]

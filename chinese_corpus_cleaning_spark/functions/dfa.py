@@ -45,9 +45,7 @@ def build_trie(keywords: Iterable[str]) -> dict:
     return root
 
 
-def scan_positions(
-    message: str, trie: dict, repl: str = "*"
-) -> tuple[str, list[tuple[int, str]]]:
+def scan_positions(message: str, trie: dict) -> tuple[str, list[tuple[int, str]]]:
     """Single walk returning ``(scrubbed_lowercased_text,
     [(start_pos, matched_word), ...])`` — one pass serves scrub, detect AND
     the per-line feature counting (functions/feature.py), where the reference
@@ -78,7 +76,7 @@ def scan_positions(
                 break
             node = nxt
         if matched >= 0:
-            out.append(repl * (matched - start))
+            out.append("*" * (matched - start))
             matches.append((start, message[start:matched]))
             start = matched
         else:
@@ -87,9 +85,9 @@ def scan_positions(
     return "".join(out), matches
 
 
-def scan(message: str, trie: dict, repl: str = "*") -> tuple[str, list[str]]:
+def scan(message: str, trie: dict) -> tuple[str, list[str]]:
     """``(scrubbed_lowercased_text, matched_words)`` — see scan_positions."""
-    scrubbed, matches = scan_positions(message, trie, repl)
+    scrubbed, matches = scan_positions(message, trie)
     return scrubbed, [w for _, w in matches]
 
 
@@ -98,6 +96,6 @@ def detect(message: str, trie: dict) -> list[str]:
     return scan(message, trie)[1]
 
 
-def scrub(message: str, trie: dict, repl: str = "*") -> str:
+def scrub(message: str, trie: dict) -> str:
     """Scrubbed text only (sensitive_filter.py:72-104)."""
-    return scan_positions(message, trie, repl)[0]
+    return scan_positions(message, trie)[0]

@@ -7,12 +7,12 @@ and documents shorter than 10 chars are rejected outright
 
 fastText (and its model file) is not available in this sandbox, so this module
 provides a deterministic, dependency-free classifier behind the same
-interface: character-class ratios + tiny stopword profiles. When the
-``fasttext`` package and a model file are present, ``FastTextLangId`` wraps
-them with identical call semantics; the pipeline picks whichever is available
-(operators/extract.py). The heuristic is intentionally simple and *stable* —
-correctness gates compare engine-vs-oracle determinism, not linguistic
-accuracy.
+interface: character-class ratios + tiny stopword profiles. The pipeline
+always uses ``identify`` (operators/extract.py ``extract_full``).
+``FastTextLangId`` is a standalone wrapper with identical call semantics for
+callers that have the ``fasttext`` package and a model file; no operator
+calls it. The heuristic is intentionally simple and *stable* — correctness
+gates compare engine-vs-oracle determinism, not linguistic accuracy.
 
 Both this Python form and the SQL form used for DuckDB oracle parity
 (__spark_entry__.py) implement exactly the same arithmetic: per-language score
@@ -38,15 +38,19 @@ STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 LANGS = tuple(sorted(STOPWORDS))  # alphabetical tie-break order
 
+# the keep gate (tool.py:16-28), shared with is_zh_relational and its oracle
+ZH_MIN_CHARS = 10
+ZH_THRESHOLD = 0.7
 
-def identify(text: str, *, min_chars: int = 10) -> tuple[str, float, bool]:
+
+def identify(text: str) -> tuple[str, float, bool]:
     """Return ``(lang, confidence, is_zh)``.
 
     Mirrors the reference's gate shape (tool.py:16-35): short/empty text ->
     ("", 0.0, False); otherwise classify the cleaned text. ``is_zh`` is True
-    iff lang == "zh" and confidence >= 0.7 (threshold from tool.py:16).
+    iff lang == "zh" and confidence >= ZH_THRESHOLD.
     """
-    if not text or len(text) < min_chars:
+    if not text or len(text) < ZH_MIN_CHARS:
         return "", 0.0, False
     cleaned = clean_text(text)
     if not cleaned:
@@ -72,21 +76,20 @@ def identify(text: str, *, min_chars: int = 10) -> tuple[str, float, bool]:
         lang, conf = best_lang, min(1.0, best_score * 4.0)
     else:
         lang, conf = "und", 0.0
-    return lang, conf, lang == "zh" and conf >= 0.7
+    return lang, conf, lang == "zh" and conf >= ZH_THRESHOLD
 
 
 class FastTextLangId:  # pragma: no cover - optional, model not in sandbox
     """fastText-backed variant with the reference's exact gate
     (tool.py:16-35). Requires the ``fasttext`` package and a model path."""
 
-    def __init__(self, model_path: str, threshold: float = 0.7) -> None:
+    def __init__(self, model_path: str) -> None:
         import fasttext  # type: ignore
 
         self.model = fasttext.load_model(model_path)
-        self.threshold = threshold
 
     def identify(self, text: str) -> tuple[str, float, bool]:
-        if not text or len(text) < 10:
+        if not text or len(text) < ZH_MIN_CHARS:
             return "", 0.0, False
         cleaned = clean_text(text)
         if not cleaned:
@@ -95,6 +98,6 @@ class FastTextLangId:  # pragma: no cover - optional, model not in sandbox
             labels, confs = self.model.predict(cleaned, k=1)
             lang = labels[0].replace("__label__", "")
             conf = float(confs[0])
-            return lang, conf, lang == "zh" and conf >= self.threshold
+            return lang, conf, lang == "zh" and conf >= ZH_THRESHOLD
         except Exception:
             return "", 0.0, False

@@ -8,8 +8,8 @@ documented in SURVEY.md §2.9):
   * pad tokens with (n-1) ``<s>`` and one ``</s>``; emit (context, word) pairs
   * P(w|ctx) = (count(ctx,w) + alpha) / (count(ctx) + alpha * |V|), alpha=0.1
   * perplexity = 2 ** (-mean(log2 P)), log floor -100 when P <= 0; empty -> inf
-  * score: 0.0 if ppl >= max_ppl; 1.0 if ppl <= threshold/2; else
-    max(0, 1 - (ppl - thr/2) / (max_ppl - thr/2))
+  * score: 0.0 if ppl >= PPL_MAX; 1.0 if ppl <= PPL_THRESHOLD/2; else
+    max(0, 1 - (ppl - thr/2) / (PPL_MAX - thr/2))
 
 jieba is unavailable in this sandbox; the tokenizer below is a deterministic
 fallback: runs of latin letters/digits are one token, every CJK char is its
@@ -33,6 +33,10 @@ from dataclasses import dataclass, field
 BOS = "<s>"
 EOS = "</s>"
 LOG_FLOOR = -100.0
+LIDSTONE_ALPHA = 0.1
+# banded score threshold and cap, shared with ppl_score_col and the oracles
+PPL_THRESHOLD = 500.0
+PPL_MAX = 10000.0
 
 _TOKEN = re.compile(r"[A-Za-z0-9]+|[一-鿿]")
 
@@ -60,7 +64,7 @@ def ngrams(tokens: list[str], n: int) -> list[tuple[tuple[str, ...], str]]:
 @dataclass
 class NgramModel:
     n: int = 5
-    alpha: float = 0.1
+    alpha: float = LIDSTONE_ALPHA
     counts: dict[tuple[str, ...], Counter] = field(default_factory=dict)
     vocab: Counter = field(default_factory=Counter)
 
@@ -108,12 +112,13 @@ class NgramModel:
         return ctx_tot, pairs, len(self.vocab)
 
 
-def perplexity_score(ppl: float, threshold: float = 500.0, max_ppl: float = 10000.0) -> float:
+def perplexity_score(ppl: float) -> float:
     """Banded score from the recovered PerplexityCalculator (SURVEY.md §2.9);
-    the ppl is first capped at max_ppl (calculate_perplexity = min(ppl, max))."""
-    ppl = min(ppl, max_ppl)
-    if ppl >= max_ppl:
+    the ppl is first capped at PPL_MAX (calculate_perplexity = min(ppl, max))."""
+    ppl = min(ppl, PPL_MAX)
+    if ppl >= PPL_MAX:
         return 0.0
-    if ppl <= threshold / 2:
+    half = PPL_THRESHOLD / 2
+    if ppl <= half:
         return 1.0
-    return max(0.0, 1.0 - (ppl - threshold / 2) / (max_ppl - threshold / 2))
+    return max(0.0, 1.0 - (ppl - half) / (PPL_MAX - half))

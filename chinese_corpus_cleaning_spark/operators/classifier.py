@@ -115,22 +115,21 @@ def nb_logodds_weights(
     labeled: DataFrame,
     n: int = 3,
     n_buckets: int = 1 << 18,
-    alpha: float = 1.0,
     id_col: str = "doc_id",
     text_col: str = "text",
     label_col: str = "label",
 ) -> DataFrame:
     """Closed-form Naive-Bayes log-odds weights over hashed char n-grams:
 
-        w_j = ln((c1_j + a) / (T1 + a*B)) - ln((c0_j + a) / (T0 + a*B))
+        w_j = ln((c1_j + 1) / (T1 + B)) - ln((c0_j + 1) / (T0 + B))
 
     with c/T the per-bucket / total gram counts of the positive (label
-    truthy) and negative classes and B = n_buckets (Lidstone smoothing,
-    same family as the n-gram LM's). One explode -> agg pass, no
-    iteration: the multinomial-NB decision rule IS a linear model over
-    counts (Wang & Manning 2012), so these weights plug directly into
-    :func:`classifier_score`. Buckets never seen in training are absent
-    (scored as 0 by the left join). Returns (bucket, w).
+    truthy) and negative classes and B = n_buckets (Laplace smoothing,
+    the alpha = 1 member of the n-gram LM's Lidstone family). One
+    explode -> agg pass, no iteration: the multinomial-NB decision rule IS
+    a linear model over counts (Wang & Manning 2012), so these weights
+    plug directly into :func:`classifier_score`. Buckets never seen in
+    training are absent (scored as 0 by the left join). Returns (bucket, w).
 
     Physical shape (round 8): the label rides the gram explode, so the
     whole training pass is ONE hash aggregation keyed on bucket — the
@@ -158,7 +157,7 @@ def nb_logodds_weights(
     tot = per.agg(
         F.sum("c1").alias("t1"), F.sum("c0").alias("t0")
     )
-    a, b = float(alpha), float(alpha) * n_buckets
+    a, b = 1.0, float(n_buckets)
     return per.crossJoin(F.broadcast(tot)).select(
         "bucket",
         (
@@ -193,13 +192,14 @@ class LogRegModel:
         )
 
 
+_LR, _L2 = 0.5, 1e-6  # train_logreg's AdaGrad step size and L2 penalty
+
+
 def train_logreg(
     labeled: DataFrame,
     n: int = 3,
     n_buckets: int = 1 << 18,
     iters: int = 30,
-    lr: float = 0.5,
-    l2: float = 1e-6,
     id_col: str = "doc_id",
     text_col: str = "text",
     label_col: str = "label",
@@ -220,8 +220,9 @@ def train_logreg(
     The driver-side update is AdaGrad (Duchi et al. 2011): feature
     gradients are O(1/doc_len) while the bias gradient is O(1), so a
     single global step size either stalls the features or blows up the
-    bias — per-coordinate scaling makes one ``lr`` work for both (the
-    divergence was measured: plain GD at lr=50 pushed loss 0.69 -> 8.6).
+    bias — per-coordinate scaling makes one step size (``_LR``) work for
+    both (the divergence was measured: plain GD at lr=50 pushed loss
+    0.69 -> 8.6). ``_L2`` is the ridge penalty on the feature weights.
 
     Gradient float sums are shuffle-order dependent, so retraining is
     deterministic only to ~1 ulp per agg — assert model QUALITY in tests,
@@ -286,12 +287,12 @@ def train_logreg(
         )
         g = np.zeros(n_buckets, dtype="float64")
         g[grad["bucket"].to_numpy()] = grad["g"].to_numpy()
-        g = g / n_docs + l2 * w
+        g = g / n_docs + _L2 * w
         gsq_w += g * g
-        w -= lr * g / np.sqrt(gsq_w + ada_eps)
+        w -= _LR * g / np.sqrt(gsq_w + ada_eps)
         g_b = float(err.sum()) / n_docs
         gsq_b += g_b * g_b
-        bias -= lr * g_b / math.sqrt(gsq_b + ada_eps)
+        bias -= _LR * g_b / math.sqrt(gsq_b + ada_eps)
     return LogRegModel(w, bias, n, n_buckets, losses)
 
 

@@ -774,18 +774,16 @@ def ngram_jaccard_on_candidates(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """PRODUCTION wiring of exact n-gram Jaccard: computed only on MinHash-
     LSH candidate pairs instead of the all-pairs shingle self-join
     (ngram_jaccard_pairs, kept as the oracle-checkable exact form documents
-    its own scale limit). Shape: candidate pairs (banded LSH equi-join) ->
-    shingle-set intersection via explode+join restricted to candidates ->
-    exact |A∩B| / |A∪B| filter. Returns (id_a, id_b, jaccard)."""
+    its own scale limit). Shape: candidate pairs (banded LSH equi-join,
+    uncapped buckets) -> shingle-set intersection via explode+join
+    restricted to candidates -> exact |A∩B| / |A∪B| filter. Returns
+    (id_a, id_b, jaccard)."""
     signed = with_minhash(docs, cfg, id_col, text_col).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(signed, id_col, max_band_bucket).localCheckpoint(
-        eager=True
-    )
+    cand = lsh_candidate_pairs(signed, id_col).localCheckpoint(eager=True)
     sh = shingle_explode(docs, k, id_col, text_col)
     # prune shingles to candidate ids (semi-join; AQE broadcasts the id set)
     ids = (
@@ -1095,14 +1093,14 @@ def dbscan_clusters(
     min_samples: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_band_bucket: int | None = None,
 ) -> DataFrame:
     """DBSCAN cluster inventory (reference utils/clustering.py:50-90:
     DBSCAN(eps=1-sim_threshold, min_samples=3, metric='precomputed') over a
     full cosine-similarity matrix) re-expressed for corpus scale: the
     neighborhood graph is the banded-LSH candidate graph at
-    ``cfg.similarity_threshold`` (minhash_similarity_pairs) instead of the
-    O(n^2) matrix, then DBSCAN's structure is pure relational algebra:
+    ``cfg.similarity_threshold`` (minhash_similarity_pairs, uncapped
+    buckets) instead of the O(n^2) matrix, then DBSCAN's structure is pure
+    relational algebra:
 
       * degree    — neighbor counts from the symmetric candidate edges;
       * core      — degree + 1 (the point itself, sklearn semantics)
@@ -1119,9 +1117,9 @@ def dbscan_clusters(
     No full-matrix shuffle anywhere: degrees and border assignment are
     hash aggregations on the edge list; an isolated core point keeps its
     own id as a singleton cluster label."""
-    pairs = minhash_similarity_pairs(
-        docs, cfg, id_col, text_col, max_band_bucket
-    ).select("id_a", "id_b")
+    pairs = minhash_similarity_pairs(docs, cfg, id_col, text_col).select(
+        "id_a", "id_b"
+    )
     nbr = pairs.select(
         F.col("id_a").alias("id"), F.col("id_b").alias("n")
     ).union(pairs.select(F.col("id_b").alias("id"), F.col("id_a").alias("n")))

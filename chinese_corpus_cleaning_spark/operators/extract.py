@@ -35,8 +35,6 @@ def is_zh_relational(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_chars: int = 10,
-    threshold: float = 0.7,
 ) -> DataFrame:
     """Relational twin of functions/langid.identify — the J1 offset-membership
     boolean (subsample_warc_warc.py:46-87 collapsed to a column) as pure SQL,
@@ -48,8 +46,8 @@ def is_zh_relational(
 
     Float determinism note (plans/oracles.py doctrine): both engines compute
     the same left-assoc double divisions/multiplications, so the >= / >
-    comparisons and the 0.7 threshold agree bit-for-bit."""
-    from ..functions.langid import LANGS, STOPWORDS
+    comparisons and the ZH_THRESHOLD gate agree bit-for-bit."""
+    from ..functions.langid import LANGS, STOPWORDS, ZH_MIN_CHARS, ZH_THRESHOLD
     from ..functions.spam import PY_WS_CLASS
 
     raw = F.col(text_col)
@@ -108,7 +106,7 @@ def is_zh_relational(
     )
     gated = (
         F.col("__raw__").isNull()
-        | (F.length("__raw__") < F.lit(min_chars))
+        | (F.length("__raw__") < F.lit(ZH_MIN_CHARS))
         | (F.length("__cleaned__") == 0)
     )
     return d.select(
@@ -118,7 +116,7 @@ def is_zh_relational(
         F.when(
             gated, F.lit(False)
         ).otherwise(
-            (lang_col == "zh") & (conf_col >= F.lit(threshold))
+            (lang_col == "zh") & (conf_col >= F.lit(ZH_THRESHOLD))
         ).alias("is_zh"),
     )
 

@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ngram_lm import BOS, EOS, LOG_FLOOR
+from ..functions.ngram_lm import BOS, EOS, LIDSTONE_ALPHA, LOG_FLOOR
+from ..functions.ngram_lm import PPL_MAX, PPL_THRESHOLD
 
 _SEP = "\x1f"  # context-token joiner inside the flat model table
 
@@ -106,15 +107,13 @@ def perplexity_relational(
     docs: DataFrame,
     model: DataFrame,
     n: int = 3,
-    alpha: float = 0.1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    v: int | None = None,
 ) -> DataFrame:
-    """(doc_id, ppl): explode doc n-grams, join model counts, smooth,
-    aggregate. ``v`` = vocab size; when None it stays IN the plan as a
-    broadcast one-row cross join (no driver round trip — the whole scorer
-    remains a single lazy composable plan).
+    """(doc_id, ppl): explode doc n-grams, join model counts, smooth
+    (Lidstone, ``LIDSTONE_ALPHA``), aggregate. The vocab size stays IN the
+    plan as a broadcast one-row cross join (no driver round trip — the
+    whole scorer remains a single lazy composable plan).
 
     The model joins are hinted broadcast: the model must fit executor
     memory (``ngram_counts(min_count=...)`` prunes it to fit), and the
@@ -137,19 +136,17 @@ def perplexity_relational(
         )
         .select(id_col, "g.context", "g.word")
     )
-    joined = grams.join(model, ["context", "word"], "left").join(
-        ctx_tot, ["context"], "left"
+    joined = (
+        grams.join(model, ["context", "word"], "left")
+        .join(ctx_tot, ["context"], "left")
+        .crossJoin(F.broadcast(vocab_size(docs, text_col)))
     )
-    if v is None:
-        joined = joined.crossJoin(F.broadcast(vocab_size(docs, text_col)))
-        v_col = F.col("v")
-    else:
-        v_col = F.lit(v)
+    alpha = F.lit(LIDSTONE_ALPHA)
     joined = joined.withColumn(
         "log2p",
         F.log2(
-            (F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(alpha))
-            / (F.coalesce(F.col("ctx_cnt"), F.lit(0)) + F.lit(alpha) * v_col)
+            (F.coalesce(F.col("cnt"), F.lit(0)) + alpha)
+            / (F.coalesce(F.col("ctx_cnt"), F.lit(0)) + alpha * F.col("v"))
         ),
     ).withColumn("log2p", F.greatest(F.col("log2p"), F.lit(LOG_FLOOR)))
     return joined.groupBy(id_col).agg(
@@ -162,7 +159,6 @@ def ppl_buckets(
     docs: DataFrame,
     model: DataFrame | None = None,
     n: int = 3,
-    alpha: float = 0.1,
     group_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -207,7 +203,7 @@ def ppl_buckets(
     if model is None:
         model = ngram_counts(docs, n, text_col)
     scored = perplexity_relational(
-        docs, model, n=n, alpha=alpha, id_col=id_col, text_col=text_col
+        docs, model, n=n, id_col=id_col, text_col=text_col
     ).withColumn("ppl", F.round("ppl", 2))
     scored = scored.join(docs.select(id_col, group_col), id_col)
     scored = scored.localCheckpoint(eager=True)
@@ -243,16 +239,18 @@ def ppl_buckets(
     )
 
 
-def ppl_score_col(ppl_col: str, threshold: float = 500.0, max_ppl: float = 10000.0):
-    """Native Column for the banded perplexity score (SURVEY.md §2.9)."""
-    capped = F.least(F.col(ppl_col), F.lit(max_ppl))
-    half = threshold / 2
+def ppl_score_col(ppl_col: str):
+    """Native Column for the banded perplexity score (SURVEY.md §2.9) —
+    functions/ngram_lm.perplexity_score over the same constants."""
+    capped = F.least(F.col(ppl_col), F.lit(PPL_MAX))
+    half = PPL_THRESHOLD / 2
     return (
-        F.when(capped >= max_ppl, F.lit(0.0))
+        F.when(capped >= PPL_MAX, F.lit(0.0))
         .when(capped <= half, F.lit(1.0))
         .otherwise(
             F.greatest(
-                F.lit(0.0), F.lit(1.0) - (capped - F.lit(half)) / F.lit(max_ppl - half)
+                F.lit(0.0),
+                F.lit(1.0) - (capped - F.lit(half)) / F.lit(PPL_MAX - half),
             )
         )
     )

@@ -187,6 +187,19 @@ def with_quality(
     )
 
 
+def keep_drop_counters() -> list[Column]:
+    """stats.json's counters (main.py:310-312) over with_quality's output,
+    shared by the batch run's observe() and the stream's windowed_metrics."""
+    return [
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col("keep").cast("long")).alias("high_quality"),
+        F.sum((~F.col("keep") & F.col("error").isNull()).cast("long")).alias(
+            "low_quality"
+        ),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("error"),
+    ]
+
+
 def scrub_udf(trie_broadcast):
     """Standalone scrub operator (reference DFAFilter.filter,
     sensitive_filter.py:72-104): text -> scrubbed (lowercased) text."""

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..config import BM25_B, BM25_K1
 from .tokenizer import WS_CLASS
 
 __all__ = ["bm25_topk", "bm25_topk_batch"]
@@ -81,12 +82,22 @@ def _prep_terms(query_terms) -> list[str]:
     return list(seen)
 
 
+def _quantized_contrib(idf, tf, dl_ratio):
+    """One term's contribution idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
+    rounded to 6 dp as decimal(18,6): the one op order both paths and the
+    DuckDB oracle spell."""
+    denom = tf + F.lit(BM25_K1) * (
+        F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * dl_ratio
+    )
+    return F.round(idf * (tf * F.lit(BM25_K1 + 1.0)) / denom, 6).cast(
+        "decimal(18,6)"
+    )
+
+
 def bm25_topk(
     docs: DataFrame,
     query_terms,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -133,16 +144,8 @@ def bm25_topk(
         tf = F.col(f"__tf{i}").cast("double")
         df = F.col(f"__df{i}").cast("double")
         idf = F.log((n - df + F.lit(0.5)) / (df + F.lit(0.5)) + F.lit(1.0))
-        denom = tf + F.lit(float(k1)) * (
-            F.lit(1.0)
-            - F.lit(float(b))
-            + F.lit(float(b)) * (F.col("__dl").cast("double") / avgdl)
-        )
-        contribs.append(
-            F.round(idf * (tf * F.lit(float(k1) + 1.0)) / denom, 6).cast(
-                "decimal(18,6)"
-            )
-        )
+        dl_ratio = F.col("__dl").cast("double") / avgdl
+        contribs.append(_quantized_contrib(idf, tf, dl_ratio))
     raw = contribs[0]
     for c in contribs[1:]:
         raw = raw + c
@@ -159,11 +162,8 @@ def bm25_topk_batch(
     docs: DataFrame,
     queries: dict,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    quantize: int = 6,
 ) -> DataFrame:
     """Top-k per query for a query SET: (query_id, id, score, rank).
 
@@ -204,7 +204,7 @@ def bm25_topk_batch(
             [
                 T.StructField("query_id", T.StringType()),
                 T.StructField(id_col, docs.schema[id_col].dataType),
-                T.StructField("score", T.DecimalType(18, quantize)),
+                T.StructField("score", T.DecimalType(18, 6)),
                 T.StructField("rank", T.LongType()),
             ]
         )
@@ -254,23 +254,20 @@ def bm25_topk_batch(
         ).alias("idf"),
     )
 
-    dec = f"decimal(18,{quantize})"
-    tfd = F.col("tf").cast("double")
-    denom = tfd + F.lit(float(k1)) * (
-        F.lit(1.0)
-        - F.lit(float(b))
-        + F.lit(float(b)) * (F.col("__dl").cast("double") / F.lit(avgdl))
+    contrib = _quantized_contrib(
+        F.col("idf"),
+        F.col("tf").cast("double"),
+        F.col("__dl").cast("double") / F.lit(avgdl),
     )
-    contrib = F.col("idf") * (tfd * F.lit(float(k1) + 1.0)) / denom
     scored = (
         tf.join(F.broadcast(qtab), "term")
         .select(
             "query_id",
             id_col,
-            F.round(contrib, quantize).cast(dec).alias("__c"),
+            contrib.alias("__c"),
         )
         .groupBy("query_id", id_col)
-        .agg(F.sum("__c").cast(dec).alias("score"))
+        .agg(F.sum("__c").cast("decimal(18,6)").alias("score"))
         .where(F.col("score") > 0)
     )
     w = Window.partitionBy("query_id").orderBy(

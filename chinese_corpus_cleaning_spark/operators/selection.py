@@ -56,12 +56,11 @@ def dsir_logratio_weights(
     target: DataFrame,
     n: int = 3,
     n_buckets: int = 1 << 18,
-    alpha: float = 1.0,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(bucket, w): the smoothed per-bucket log importance ratio
-    ln((t_b + a)/(T + aB)) - ln((r_b + a)/(R + aB)) over hashed char
+    """(bucket, w): the Laplace-smoothed per-bucket log importance ratio
+    ln((t_b + 1)/(T + B)) - ln((r_b + 1)/(R + B)) over hashed char
     n-grams — DSIR's hashed-n-gram importance estimator, computed as
     :func:`nb_logodds_weights` with target=positive / raw=negative.
     Ids are prefixed per side before the union so a doc present in both
@@ -82,7 +81,6 @@ def dsir_logratio_weights(
         lab,
         n=n,
         n_buckets=n_buckets,
-        alpha=alpha,
         id_col="__did",
         text_col="__t",
         label_col="__y",
@@ -95,7 +93,6 @@ def dsir_select(
     k: int = 1000,
     n: int = 3,
     n_buckets: int = 1 << 18,
-    alpha: float = 1.0,
     id_col: str = "doc_id",
     text_col: str = "text",
     salt: str = "dsir",
@@ -124,7 +121,7 @@ def dsir_select(
     co-shuffle document bodies)."""
     if weights is None:
         weights = dsir_logratio_weights(
-            raw, target, n, n_buckets, alpha, id_col, text_col
+            raw, target, n, n_buckets, id_col, text_col
         )
     scored = classifier_score(
         raw, weights, n=n, n_buckets=n_buckets, id_col=id_col, text_col=text_col

@@ -9,6 +9,7 @@ codegen, no Python in the hot path) and have exact DuckDB oracle equivalents.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,15 +58,23 @@ def langid_relational(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
+# k-gram widths and the mod-p selection shared with the DuckDB oracles
+WINNOW_K = 8
+SPAN_K = 16
+SPAN_MOD_P = 16
+# reducers per hot host in the two-phase (host, salt) rollups
+_SALT_BUCKETS = 16
+
+
 def fingerprint_winnow(
-    docs: DataFrame, k: int = 8, id_col: str = "doc_id", text_col: str = "text"
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Bottom-1 winnowing fingerprint: min h60 over all char k-grams —
-    a content-defined doc signature robust to small edits at the ends.
-    (doc_id, fingerprint)."""
+    """Bottom-1 winnowing fingerprint: min h60 over all char
+    ``WINNOW_K``-grams — a content-defined doc signature robust to small
+    edits at the ends. (doc_id, fingerprint)."""
     grams = (
-        f"transform(sequence(1, greatest(length({text_col}) - {k} + 1, 1)),"
-        f" i -> substring({text_col}, i, {k}))"
+        f"transform(sequence(1, greatest(length({text_col}) - {WINNOW_K} + 1, 1)),"
+        f" i -> substring({text_col}, i, {WINNOW_K}))"
     )
     return docs.select(
         F.col(id_col),
@@ -477,19 +486,19 @@ def feature_ac_matches(
     )
 
 
-def host_rollup(docs: DataFrame, url_col: str = "url", salt_buckets: int = 16) -> DataFrame:
+def host_rollup(docs: DataFrame, url_col: str = "url") -> DataFrame:
     """Per-host corpus stats with skew-salted two-phase aggregation
     (north_rule: salted handling of skewed hosts — one hot host holding ~30%
     of a crawl must not pin a single reducer).
 
     host = parse_url(url, 'HOST') (native); phase 1 aggregates on
-    (host, salt) so the hot host spreads across ``salt_buckets`` reducers;
+    (host, salt) so the hot host spreads across ``_SALT_BUCKETS`` reducers;
     phase 2 merges partials. Returns (host, n_docs, total_chars, avg_chars).
     """
     hosted = docs.select(
         F.parse_url(F.col(url_col), F.lit("HOST")).alias("host"),
         F.length("text").alias("n_chars"),
-        F.pmod(F.xxhash64(url_col), F.lit(salt_buckets)).alias("salt"),
+        F.pmod(F.xxhash64(url_col), F.lit(_SALT_BUCKETS)).alias("salt"),
     )
     partial = hosted.groupBy("host", "salt").agg(
         F.count(F.lit(1)).alias("pc"), F.sum("n_chars").alias("ps")
@@ -754,8 +763,6 @@ def cross_doc_span_dup(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 16,
-    mod_p: int = 16,
     min_docs: int = 2,
 ) -> DataFrame:
     """Cross-document duplicate-SPAN signal — the substring-level dedup
@@ -768,12 +775,13 @@ def cross_doc_span_dup(
     Returns (id, n_fingerprints, n_dup_fingerprints, dup_span_frac) for
     EVERY input doc. Fingerprints are Manber-style mod-p selections
     (Manber 1994, "Finding Similar Files"): the h60 hashes of all char
-    k-grams, keeping those with h % mod_p == 0 — content-defined, so a
-    shared substring is fingerprinted IDENTICALLY in every doc containing
+    k-grams (k = ``SPAN_K``), keeping those with h % p == 0 (p =
+    ``SPAN_MOD_P``) — content-defined, so a shared substring is
+    fingerprinted IDENTICALLY in every doc containing
     it regardless of its offset (a stride-aligned windowing would miss
     unaligned copies). A shared span of s chars is detected with
-    probability 1 - (1 - 1/p)^(s-k+1) (~99.7% for s=100 at the defaults);
-    expected fingerprint density is 1/mod_p per char, so the exploded
+    probability 1 - (1 - 1/p)^(s-k+1) (~99.7% for s=100);
+    expected fingerprint density is 1/p per char, so the exploded
     fingerprint table is ~len/16 slim (id, int64) rows — the only thing
     that ever shuffles. dup_span_frac is the fraction of a doc's DISTINCT
     fingerprints that appear in >= min_docs distinct documents. Docs
@@ -792,9 +800,9 @@ def cross_doc_span_dup(
     text once — declaratively it is recomputed per consumer."""
     fps_expr = (
         f"array_distinct(filter(transform("
-        f"sequence(1, greatest(length({text_col}) - {k} + 1, 1)),"
-        f" i -> cast(conv(substring(md5(substring({text_col}, i, {k})),"
-        f" 1, 15), 16, 10) as bigint)), h -> h % {mod_p} = 0))"
+        f"sequence(1, greatest(length({text_col}) - {SPAN_K} + 1, 1)),"
+        f" i -> cast(conv(substring(md5(substring({text_col}, i, {SPAN_K})),"
+        f" 1, 15), 16, 10) as bigint)), h -> h % {SPAN_MOD_P} = 0))"
     )
     base = docs.select(F.col(id_col).alias("id"), F.expr(fps_expr).alias("__fps"))
     ex = base.select("id", F.explode("__fps").alias("fp"))
@@ -861,7 +869,6 @@ def crawl_frontier_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
     url_col: str = "url",
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Per-host crawl-frontier rollup after canonical-URL dedup:
     (host, n_urls, n_unique, n_dup) — the one-pass shape a crawl frontier
@@ -880,7 +887,7 @@ def crawl_frontier_dedup(
     the (host, salt) two-phase shape is not load-bearing for these
     algebraic aggregates — it is the extension-point pattern for per-host
     state partials cannot collapse (collect_list URL samples, exact
-    distinct), costs only one extra exchange of ``salt_buckets`` x n_hosts
+    distinct), costs only one extra exchange of ``_SALT_BUCKETS`` x n_hosts
     partial rows, and uses a content-derived salt
     (pmod(xxhash64(canon_url))) that is deterministic under retries."""
     dd = url_dedup(docs, id_col, url_col)
@@ -889,7 +896,7 @@ def crawl_frontier_dedup(
             "canon_url", "^[a-z][a-z0-9+.-]*://([^/?]+)", 1
         ).alias("host"),
         F.col("is_duplicate_url"),
-        F.pmod(F.xxhash64("canon_url"), F.lit(salt_buckets)).alias("salt"),
+        F.pmod(F.xxhash64("canon_url"), F.lit(_SALT_BUCKETS)).alias("salt"),
     )
     partial = hosted.groupBy("host", "salt").agg(
         F.count(F.lit(1)).alias("pu"),
@@ -927,8 +934,11 @@ def url_blocklist_filter(
     side — lowercased, whitespace-trimmed, trailing dots dropped (real
     UT1/hand-maintained lists carry mixed case and FQDN dots; an
     unnormalized entry would silently never block). The iterable path
-    ships through pandas (Arrow) — a plain-tuple createDataFrame of a
-    multi-million-domain list is the CLAUDE.md driver-serialization cap.
+    builds the table from an Arrow table: a LocalRelation with exact
+    statistics, where a plain-tuple or pandas createDataFrame pickles rows
+    while ``spark.sql.execution.arrow.pyspark.enabled`` is off (its
+    default) and plans a statistics-less LogicalRDD — a serial driver-side
+    cost on a multi-million-domain list.
     NULL / malformed URLs yield a NULL host (``try_parse_url`` — a real
     crawl always contains broken URLs; the strict form would fail the
     job) and are never blocked: the suffix array of a NULL host is NULL,
@@ -942,7 +952,7 @@ def url_blocklist_filter(
     if not isinstance(blocklist, DataFrame):
         norm = list({d.strip().rstrip(".").lower() for d in blocklist})
         bl = docs.sparkSession.createDataFrame(
-            pd.DataFrame({"domain": pd.Series(norm, dtype="object")}),
+            pa.table({"domain": pa.array(norm, pa.string())}),
             schema="domain string",
         )
     else:
@@ -1133,7 +1143,6 @@ def domain_quality_filter(
 
 def paragraph_dedup(
     docs: DataFrame,
-    sep: str = "\n",
     id_col: str = "doc_id",
     text_col: str = "text",
     min_chars: int = 1,
@@ -1169,16 +1178,16 @@ def paragraph_dedup(
       * the rebuild is map-side: split the original text again and drop
         the flagged indices with a native filter lambda.
 
-    ``sep`` is used as a regex by split and a literal by the rejoin —
-    pass a regex-free literal (default newline). Paragraphs shorter than
-    ``min_chars`` never enter dedup (min_chars=1 keeps blank-line
-    structure intact). NULL text passes through as NULL with zero counts.
+    Paragraphs are newline-separated; those shorter than ``min_chars``
+    never enter dedup (min_chars=1 keeps blank-line structure intact).
+    NULL text passes through as NULL with zero counts.
 
     Returns the doc frame with ``text_col`` rewritten plus ``n_paras``
     (paragraphs before dedup) and ``n_dropped``.
     """
     from .dedup import _h60_sql
 
+    sep = "\n"
     arr = F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
     # localCheckpoint: TWO consumers scan this table (the winners
     # aggregate and the drops join) — without it each scan re-executes

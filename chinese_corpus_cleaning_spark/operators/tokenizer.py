@@ -88,7 +88,6 @@ def _check_pretokenize(pretokenize: str) -> None:
 def bpe_vocab(
     docs: DataFrame,
     text_col: str = "text",
-    min_freq: int = 1,
     pretokenize: str = "ws",
 ) -> DataFrame:
     """(token, freq, symbols): the pre-token vocabulary with each token
@@ -113,8 +112,6 @@ def bpe_vocab(
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    if min_freq > 1:
-        toks = toks.where(F.col("freq") >= min_freq)
     return toks.withColumn(
         "symbols",
         F.expr(
@@ -195,7 +192,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 50,
     text_col: str = "text",
-    min_freq: int = 1,
     min_pair_freq: int = 2,
     pretokenize: str = "ws",
 ) -> list[tuple[str, str, int]]:
@@ -210,7 +206,7 @@ def bpe_train(
 
     ``pretokenize``: see :func:`bpe_vocab` — pass ``'cjk'`` for
     unsegmented Chinese, and encode with the SAME mode."""
-    vocab = bpe_vocab(docs, text_col, min_freq, pretokenize).localCheckpoint(
+    vocab = bpe_vocab(docs, text_col, pretokenize).localCheckpoint(
         eager=True
     )
     merges: list[tuple[str, str, int]] = []

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT, DedupConfig
+from ..config import DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY, DedupConfig
 from ..functions.dfa import build_trie
 from ..operators import dedup, perplexity, similarity, textanalysis
 from ..operators.quality import scrub_udf, with_quality
@@ -405,8 +405,8 @@ def q_embedding_cluster_score(spark, sf_dir):
 W_FULL_TOTAL = (
     DEFAULT.weight_rule
     + DEFAULT.weight_feature
-    + DEFAULT.weight_perplexity
-    + DEFAULT.weight_clustering
+    + WEIGHT_PERPLEXITY
+    + WEIGHT_CLUSTERING
 )
 
 
@@ -434,8 +434,8 @@ def q_quality_keep_full(spark, sf_dir):
     score = (
         F.col("rule_score") * F.lit(DEFAULT.weight_rule)
         + F.col("feature_score") * F.lit(DEFAULT.weight_feature)
-        + F.col("ppl_score") * F.lit(DEFAULT.weight_perplexity)
-        + F.col("cluster_score") * F.lit(DEFAULT.weight_clustering)
+        + F.col("ppl_score") * F.lit(WEIGHT_PERPLEXITY)
+        + F.col("cluster_score") * F.lit(WEIGHT_CLUSTERING)
     ) / F.lit(W_FULL_TOTAL)
     return joined.select(
         F.col("doc_id").cast("bigint"),
@@ -617,8 +617,8 @@ def q_quality_keep_full_ann(spark, sf_dir):
     score = (
         F.col("rule_score") * F.lit(DEFAULT.weight_rule)
         + F.col("feature_score") * F.lit(DEFAULT.weight_feature)
-        + F.col("ppl_score") * F.lit(DEFAULT.weight_perplexity)
-        + F.col("cluster_score") * F.lit(DEFAULT.weight_clustering)
+        + F.col("ppl_score") * F.lit(WEIGHT_PERPLEXITY)
+        + F.col("cluster_score") * F.lit(WEIGHT_CLUSTERING)
     ) / F.lit(W_FULL_TOTAL)
     return joined.select(
         F.col("doc_id").cast("bigint"),
@@ -944,7 +944,7 @@ def q_extract_is_zh(spark, sf_dir):
     """J1 offset-membership boolean (subsample_warc_warc.py:46-87) as the
     relational langid twin (operators/extract.is_zh_relational). Decoration:
     doc_id%11 -> sub-min_chars short doc; doc_id%4 -> CJK-prefixed doc with a
-    ratio that crosses the 0.7 threshold as doc_id%9 grows."""
+    ratio that crosses ZH_THRESHOLD as doc_id%9 grows."""
     from ..operators.extract import is_zh_relational
 
     d = load(spark, sf_dir, "documents").withColumn(
@@ -1874,9 +1874,7 @@ def q_bm25_topk(spark, sf_dir):
     from ..operators import retrieval
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out = retrieval.bm25_topk(
-        d, ["spark", "customer", "vector"], k=25, k1=1.2, b=0.75
-    )
+    out = retrieval.bm25_topk(d, ["spark", "customer", "vector"], k=25)
     return out.select(
         F.col("doc_id").cast("bigint"),
         F.col("score").cast("decimal(18,6)").alias("score"),

@@ -98,7 +98,6 @@ def curation_run(
     domain_min_docs: int = 5,
     domain_max_bad_pct: int = 50,
     para_dedup: bool = False,
-    para_min_chars: int = 1,
     normalize: bool = False,
 ) -> tuple[DataFrame, dict[str, Observation]]:
     """Returns (curated, observations). ``curated`` has columns
@@ -126,7 +125,7 @@ def curation_run(
       shuffle); pages failing C4's page flags (poison markers /
       too-few-kept-lines) are dropped, and removed lines fold into
       ``n_lines_removed``.
-    * ``para_dedup`` (+ ``para_min_chars``) —
+    * ``para_dedup`` —
       stage 3.25, corpus-wide exact paragraph dedup on the cleaned text
       (operators/textanalysis.paragraph_dedup): the long tail of
       exactly-repeated paragraphs below the boilerplate frequency bar
@@ -288,12 +287,7 @@ def curation_run(
     # the join adds text shuffle #3 (the plan test asserts <= 3 with this
     # stage on). Dropped paragraphs fold into n_lines_removed.
     if para_dedup:
-        pdd = paragraph_dedup(
-            cleaned,
-            id_col=id_col,
-            text_col="clean_text",
-            min_chars=para_min_chars,
-        )
+        pdd = paragraph_dedup(cleaned, id_col=id_col, text_col="clean_text")
         cleaned = pdd.select(
             F.col(id_col),
             F.col("clean_text"),

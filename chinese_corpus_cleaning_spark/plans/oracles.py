@@ -17,9 +17,11 @@ Dialect mapping used throughout:
 
 from __future__ import annotations
 
-from ..config import DEFAULT
+from ..config import BM25_B, BM25_K1, DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY
 from ..functions.hashing import h60
 from ..functions.langid import STOPWORDS
+from ..functions.ngram_lm import LIDSTONE_ALPHA, PPL_MAX, PPL_THRESHOLD
+from ..operators.textanalysis import SPAN_K, SPAN_MOD_P, WINNOW_K
 from .catalog import (
     AC_LEXICON,
     EN_LEXICON,
@@ -389,8 +391,8 @@ from p where hamming <= 8"""
 
     o["fingerprint_winnow"] = f"""
 select doc_id::bigint as doc_id,
-  list_min(list_transform(generate_series(1, greatest(length(text) - 7, 1)),
-           i -> (('0x' || substr(md5(substr(text, i, 8)), 1, 15))::bigint))) as fingerprint
+  list_min(list_transform(generate_series(1, greatest(length(text) - {WINNOW_K - 1}, 1)),
+           i -> (('0x' || substr(md5(substr(text, i, {WINNOW_K})), 1, 15))::bigint))) as fingerprint
 from documents"""
 
     o["token_stats"] = """
@@ -454,7 +456,7 @@ ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
 v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
 scored as (
   select g.doc_id,
-    greatest(log2((coalesce(m.cnt, 0) + 0.1) / (coalesce(c.ctx_cnt, 0) + 0.1 * v.v)), -100.0) as log2p
+    greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0) as log2p
   from grams g
   left join model m on m.context = g.context and m.word = g.word
   left join ctx c on c.context = g.context
@@ -479,7 +481,7 @@ ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
 v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
 sc as (
   select g.doc_id,
-    greatest(log2((coalesce(m.cnt, 0) + 0.1) / (coalesce(c.ctx_cnt, 0) + 0.1 * v.v)), -100.0) as log2p
+    greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0) as log2p
   from grams g
   left join model m on m.context = g.context and m.word = g.word
   left join ctx c on c.context = g.context
@@ -681,7 +683,7 @@ def build_round3() -> dict[str, str]:
         EMOJI_PATTERN_PORTABLE,
         NON_WHITELIST_PORTABLE,
     )
-    from ..functions.langid import LANGS, STOPWORDS
+    from ..functions.langid import LANGS, STOPWORDS, ZH_MIN_CHARS, ZH_THRESHOLD
     from ..functions.spam import PY_WS_CLASS
     from ..sources.wordlists import SMALL_LEXICON
     from .catalog import WHITELIST_DECOR
@@ -772,12 +774,12 @@ lc as (
   from b),
 g as (
   select doc_id, lang0, conf0,
-    (raw is null or length(raw) < 10 or length(cleaned) = 0) as gated
+    (raw is null or length(raw) < {ZH_MIN_CHARS} or length(cleaned) = 0) as gated
   from lc)
 select doc_id::bigint as doc_id,
   case when gated then '' else lang0 end as lang,
   round(case when gated then 0.0 else conf0 end, 7) as conf,
-  case when gated then false else (lang0 = 'zh' and conf0 >= 0.7) end as is_zh
+  case when gated then false else (lang0 = 'zh' and conf0 >= {ZH_THRESHOLD}) end as is_zh
 from g"""
 
     o["dbscan_clusters"] = f"""
@@ -1037,7 +1039,7 @@ ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
 v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
 pplt as (
   select g.doc_id,
-    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + 0.1) / (coalesce(c.ctx_cnt, 0) + 0.1 * v.v)), -100.0))) as ppl
+    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0))) as ppl
   from grams g
   left join model m on m.context = g.context and m.word = g.word
   left join ctx c on c.context = g.context
@@ -1152,8 +1154,8 @@ d as (
 
     ngram_toks = "['<s>', '<s>'] || string_split(text, ' ') || ['</s>']"
     wr, wf = DEFAULT.weight_rule, DEFAULT.weight_feature
-    wp, wc = DEFAULT.weight_perplexity, DEFAULT.weight_clustering
-    half, maxp = 250.0, 10000.0
+    wp, wc = WEIGHT_PERPLEXITY, WEIGHT_CLUSTERING
+    half, maxp = PPL_THRESHOLD / 2, PPL_MAX
     o["quality_keep_full"] = f"""
 with s as ({_rule_stats_cte()}),
 feat as ({_feature_cte()}),
@@ -1168,7 +1170,7 @@ ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
 vv as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
 pplt as (
   select g.doc_id,
-    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + 0.1) / (coalesce(c.ctx_cnt, 0) + 0.1 * vv.v)), -100.0))) as ppl
+    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * vv.v)), -100.0))) as ppl
   from grams g
   left join model m on m.context = g.context and m.word = g.word
   left join ctx c on c.context = g.context
@@ -1402,9 +1404,9 @@ def build_round5(merged: dict[str, str]) -> dict[str, str]:
     o["cross_doc_span_dup"] = f"""
 with d as (select doc_id, {_SPAN_DECOR} as text from documents),
 f as (select doc_id, list_distinct(list_filter(
-    list_transform(generate_series(1, greatest(length(text) - 15, 1)),
-      i -> (('0x' || substr(md5(substr(text, i, 16)), 1, 15))::bigint)),
-    h -> h % 16 = 0)) as fps from d),
+    list_transform(generate_series(1, greatest(length(text) - {SPAN_K - 1}, 1)),
+      i -> (('0x' || substr(md5(substr(text, i, {SPAN_K})), 1, 15))::bigint)),
+    h -> h % {SPAN_MOD_P} = 0)) as fps from d),
 ex as (select doc_id, unnest(fps) as fp from f),
 fr as (select fp, count(*) as df from ex group by fp),
 mk as (select ex.doc_id, case when fr.df >= 2 then 1 else 0 end as dup
@@ -2170,9 +2172,9 @@ select "left", "right", cnt::bigint as cnt, rank::bigint as rank
 from r where rank <= 25"""
 
     # BM25 top-k: portable-whitespace lowercased tokens; N/avgdl/df over
-    # docs with >= 1 token; per-term contribution idf*(tf*2.2)/(tf + 1.2*
-    # (1 - 0.75 + 0.75*dl/avgdl)) with Spark's exact op order (2.2 and 1.2
-    # parse to the same doubles as the Python-side lit(k1+1.0)/lit(k1)),
+    # docs with >= 1 token; per-term contribution idf*(tf*(k1+1))/(tf + k1*
+    # (1 - b + b*dl/avgdl)) with Spark's exact op order (the printed k1+1.0
+    # and k1 parse to the same doubles as the Python-side lits),
     # each rounded@6 -> decimal(18,6) and summed exactly; rank on
     # (score desc, doc_id asc).
     _bm25_tf = {
@@ -2181,8 +2183,9 @@ from r where rank <= 25"""
     }
     _bm25_contrib = "\n     + ".join(
         f"round(ln((n::double - df_{t}::double + 0.5) / (df_{t}::double + 0.5)"
-        f" + 1.0) * (tf_{t}::double * 2.2) / (tf_{t}::double + 1.2 * (1.0 - "
-        f"0.75 + 0.75 * (dl::double / (total_dl::double / n::double)))), 6)"
+        f" + 1.0) * (tf_{t}::double * {BM25_K1 + 1.0}) / (tf_{t}::double + "
+        f"{BM25_K1} * (1.0 - {BM25_B} + {BM25_B} * (dl::double / "
+        f"(total_dl::double / n::double)))), 6)"
         f"::decimal(18,6)"
         for t in ("spark", "customer", "vector")
     )

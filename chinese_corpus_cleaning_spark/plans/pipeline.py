@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, PipelineConfig
-from ..operators.quality import with_quality
+from ..operators.quality import keep_drop_counters, with_quality
 from ..sources.wordlists import broadcast_trie
 
 LABEL_COLUMNS = (
@@ -207,15 +207,7 @@ def run(
     from pyspark.sql import Observation
 
     obs = Observation("metrics")
-    observed = labels.observe(
-        obs,
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.col("keep").cast("long")).alias("high_quality"),
-        F.sum((~F.col("keep") & F.col("error").isNull()).cast("long")).alias(
-            "low_quality"
-        ),
-        F.sum(F.col("error").isNotNull().cast("long")).alias("error"),
-    )
+    observed = labels.observe(obs, *keep_drop_counters())
     # Write modes (idempotency contract):
     #   fresh run  -> static overwrite / createOrReplace: the output is fully
     #                 replaced, so stale part_id partitions from an earlier

@@ -183,9 +183,9 @@ def make_doc(doc_id: int) -> dict:
     }
 
 
-def docs_pandas(n: int, start: int = 0) -> pd.DataFrame:
+def docs_pandas(n: int) -> pd.DataFrame:
     """Driver-side generation for tests (small n)."""
-    return pd.DataFrame([make_doc(i) for i in range(start, start + n)])
+    return pd.DataFrame([make_doc(i) for i in range(n)])
 
 
 DOCS_SCHEMA = (

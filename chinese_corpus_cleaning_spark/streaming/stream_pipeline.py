@@ -20,12 +20,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, PipelineConfig
-from ..operators.quality import with_quality
+from ..operators.quality import keep_drop_counters, with_quality
 
 DOCS_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, "
     "lang string, doc_class string"
 )
+# event-time window and lateness bound of the keep/drop metrics; how long
+# the dedup operators remember a seen key
+_METRICS_WINDOW = "10 minutes"
+_METRICS_WATERMARK = "30 minutes"
+_DEDUP_WATERMARK = "1 hour"
 
 
 def stream_from_directory(spark: SparkSession, path: str) -> DataFrame:
@@ -43,22 +48,13 @@ def labeled_stream(
     return with_quality(stream.select("url", "warc_ts", "text"), trie_bc, cfg)
 
 
-def windowed_metrics(
-    labeled: DataFrame, window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
+def windowed_metrics(labeled: DataFrame) -> DataFrame:
     """Event-time keep/drop counters per warc_ts window, late data bounded by
     the watermark (streaming stats.json)."""
     return (
-        labeled.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("keep").cast("long")).alias("high_quality"),
-            F.sum((~F.col("keep") & F.col("error").isNull()).cast("long")).alias(
-                "low_quality"
-            ),
-            F.sum(F.col("error").isNotNull().cast("long")).alias("error"),
-        )
+        labeled.withWatermark("warc_ts", _METRICS_WATERMARK)
+        .groupBy(F.window("warc_ts", _METRICS_WINDOW).alias("w"))
+        .agg(*keep_drop_counters())
         .select(F.col("w.start").alias("window_start"), "total", "high_quality", "low_quality", "error")
     )
 
@@ -88,7 +84,6 @@ def run_stream(
     output_dir: str,
     trie_bc,
     cfg: PipelineConfig = DEFAULT,
-    await_seconds: float | None = None,
 ):
     """Start the streaming job: labels to parquet via foreachBatch (idempotent
     per batch id), metrics to memory sink for inspection. Returns the two
@@ -117,9 +112,6 @@ def run_stream(
         .trigger(availableNow=True)
         .start()
     )
-    if await_seconds is not None:
-        labels_q.awaitTermination(await_seconds)
-        metrics_q.awaitTermination(await_seconds)
     return labels_q, metrics_q
 
 
@@ -170,7 +162,6 @@ def streaming_incremental_dedup(
     id_col: str = "url",
     text_col: str = "text",
     ts_col: str = "warc_ts",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """Stream-static near-dup probe — the streaming form of
     operators/dedup.dedup_incremental_pairs for a continuous crawl: each
@@ -217,13 +208,13 @@ def streaming_incremental_dedup(
         .join(corpus_sigs, "corpus_id")
         .where(cond)
         .withColumn("est_jaccard", est_col)
-        .withWatermark(ts_col, watermark)
+        .withWatermark(ts_col, _DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["new_id", "corpus_id"])
         .select("new_id", "corpus_id", "est_jaccard", ts_col)
     )
 
 
-def streaming_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def streaming_dedup(stream: DataFrame) -> DataFrame:
     """Stateful exact dedup across microbatches: the first arrival of each
     content hash passes, later copies are dropped. State is bounded by the
     event-time watermark (Spark evicts seen-keys older than it) — the
@@ -231,6 +222,6 @@ def streaming_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     crawled corpus where the same page recurs across fetches."""
     return (
         stream.withColumn("content_md5", F.md5(F.encode("text", "UTF-8")))
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", _DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["content_md5"])
     )

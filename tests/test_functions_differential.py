@@ -311,3 +311,18 @@ def test_is_zh_relational_matches_identify(spark):
         assert r["lang"] == lang, (repr(t), r)
         assert r["conf"] == pytest.approx(conf, abs=0, rel=0), (repr(t), r)
         assert r["is_zh"] == zh, repr(t)
+
+
+def test_ppl_score_col_matches_perplexity_score(spark):
+    """The Spark banded perplexity score equals functions/ngram_lm's at
+    both band edges (PPL_THRESHOLD / 2 = 250 and PPL_MAX = 10000) and on
+    each side of them — the two engines share one definition of the band."""
+    from chinese_corpus_cleaning_spark.functions.ngram_lm import perplexity_score
+    from chinese_corpus_cleaning_spark.operators.perplexity import ppl_score_col
+
+    ppls = [0.0, 249.99, 250.0, 250.01, 5125.0, 9999.99, 10000.0, 10000.01, 1e9]
+    df = spark.createDataFrame([(p,) for p in ppls], "ppl double")
+    got = [r["s"] for r in df.select(ppl_score_col("ppl").alias("s")).collect()]
+    assert got == [perplexity_score(p) for p in ppls]
+    assert got[:3] == [1.0, 1.0, 1.0] and got[-3:] == [0.0, 0.0, 0.0]
+    assert 0.0 < got[3] < 1.0 and got[4] == 0.5

@@ -66,3 +66,19 @@ def test_blocklist_entries_normalized(spark):
     }
     assert out[1]["is_blocked"] and out[1]["blocked_domain"] == "ads.example.com"
     assert not out[2]["is_blocked"]
+
+
+def test_list_blocklist_plans_as_local_relation(spark):
+    """The list-built domain table comes from an Arrow table: a
+    LocalRelation with exact statistics, not a row-pickled, statistics-less
+    LogicalRDD (the pandas/tuple createDataFrame path while
+    spark.sql.execution.arrow.pyspark.enabled is off)."""
+    d = spark.sql(
+        "select * from values (1L, 'https://ads.example.com/x'),"
+        " (2L, 'https://ok.example.net/y') as t(doc_id, url)"
+    )
+    out = url_blocklist_filter(d, ["ads.example.com", "Bad.Org."])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan
+    assert "LocalRelation [domain" in plan
+    assert {r["doc_id"] for r in out.collect() if r["is_blocked"]} == {1}
