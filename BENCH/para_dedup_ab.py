@@ -50,20 +50,20 @@ def _window_variant(docs, id_col="doc_id", text_col="text"):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from chinese_corpus_cleaning_spark.operators.dedup import _h60_sql
+    from chinese_corpus_cleaning_spark.functions.hashing import h60_sql
 
     sep = "\n"
     arr = F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
     slim = (
         docs.select(
             F.col(id_col).alias("__id"),
-            F.expr(_h60_sql(f"cast({id_col} as string)")).alias("__ord"),
+            F.expr(h60_sql(f"cast({id_col} as string)")).alias("__ord"),
             F.posexplode(
                 F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
             ).alias("__idx", "__p"),
         )
         .where(F.length("__p") >= 1)
-        .select("__id", "__ord", "__idx", F.expr(_h60_sql("__p")).alias("__ph"))
+        .select("__id", "__ord", "__idx", F.expr(h60_sql("__p")).alias("__ph"))
     )
     w = Window.partitionBy("__ph").orderBy("__ord", "__id", "__idx")
     drops = (

@@ -24,6 +24,11 @@ def h60(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
+def h60_sql(e: str) -> str:
+    """Spark SQL twin of :func:`h60` over the SQL expression ``e``."""
+    return f"cast(conv(substring(md5({e}), 1, 15), 16, 10) as bigint)"
+
+
 def char_shingles(text: str, k: int = 5) -> list[str]:
     """Distinct character k-shingles in first-occurrence order; texts shorter
     than k yield the text itself (so short docs still get a signature).

@@ -83,17 +83,21 @@ def has_spam_patterns(text: str) -> bool:
     return False
 
 
-def adjust_perplexity(ppl: float, spam: bool, threshold: float = 200.0) -> float:
+# lmppl_perplexity.py's threshold: Python and Spark twins below, DuckDB oracle
+SPAM_PPL_THRESHOLD = 200.0
+
+
+def adjust_perplexity(ppl: float, spam: bool) -> float:
     """lmppl_perplexity.py:83-85: inflate spam docs' perplexity."""
-    return max(ppl * 1.5, threshold * 1.2) if spam else ppl
+    return max(ppl * 1.5, SPAM_PPL_THRESHOLD * 1.2) if spam else ppl
 
 
-def check_perplexity(ppl: float, spam: bool, threshold: float = 200.0) -> bool:
-    """lmppl_perplexity.py:196-206: pass iff adjusted ppl <= threshold AND no
-    spam patterns (the hard fail is redundant given the inflation — both
-    arms kept faithfully)."""
-    adjusted = adjust_perplexity(ppl, spam, threshold)
-    is_good = adjusted <= threshold
+def check_perplexity(ppl: float, spam: bool) -> bool:
+    """lmppl_perplexity.py:196-206: pass iff adjusted ppl <=
+    ``SPAM_PPL_THRESHOLD`` AND no spam patterns (the hard fail is redundant
+    given the inflation — both arms kept faithfully)."""
+    adjusted = adjust_perplexity(ppl, spam)
+    is_good = adjusted <= SPAM_PPL_THRESHOLD
     if is_good and spam:
         is_good = False
     return is_good
@@ -123,12 +127,12 @@ def has_spam_col(text_col: str) -> Column:
     return out
 
 
-def adjusted_ppl_col(ppl_col: str, spam_col: str, threshold: float = 200.0) -> Column:
+def adjusted_ppl_col(ppl_col: str, spam_col: str) -> Column:
     return F.when(
         F.col(spam_col),
-        F.greatest(F.col(ppl_col) * F.lit(1.5), F.lit(threshold * 1.2)),
+        F.greatest(F.col(ppl_col) * F.lit(1.5), F.lit(SPAM_PPL_THRESHOLD * 1.2)),
     ).otherwise(F.col(ppl_col))
 
 
-def ppl_check_col(adj_ppl_col: str, spam_col: str, threshold: float = 200.0) -> Column:
-    return (F.col(adj_ppl_col) <= F.lit(threshold)) & ~F.col(spam_col)
+def ppl_check_col(adj_ppl_col: str, spam_col: str) -> Column:
+    return (F.col(adj_ppl_col) <= F.lit(SPAM_PPL_THRESHOLD)) & ~F.col(spam_col)

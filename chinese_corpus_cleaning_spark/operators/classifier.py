@@ -57,7 +57,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _h60_sql
+from ..functions.hashing import h60_sql
 
 __all__ = [
     "hash_ngram_features",
@@ -66,6 +66,11 @@ __all__ = [
     "classifier_score",
     "LogRegModel",
 ]
+
+# Gated parameters, one definition with the DuckDB oracles (DSIR composes
+# these kernels): the char-gram width and the NB Laplace smoothing alpha
+GRAM_N = 3
+NB_ALPHA = 1.0
 
 
 def _gram_expr(text_col: str, n: int) -> str:
@@ -84,12 +89,11 @@ def _gram_expr(text_col: str, n: int) -> str:
 
 def hash_ngram_features(
     docs: DataFrame,
-    n: int = 3,
     n_buckets: int = 1 << 18,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(id, bucket, cnt): char n-gram occurrence counts hashed into
+    """(id, bucket, cnt): char ``GRAM_N``-gram occurrence counts hashed into
     ``n_buckets`` via md5-h60 (cross-engine reproducible; DuckDB twin is
     ``('0x'||substr(md5(g),1,15))::bigint % n_buckets``). NULL text
     behaves as '' (one empty gram). The explode and the (id, bucket)
@@ -98,11 +102,11 @@ def hash_ngram_features(
     return (
         docs.select(
             F.col(id_col).alias("id"),
-            F.explode(F.expr(_gram_expr(text_col, n))).alias("gram"),
+            F.explode(F.expr(_gram_expr(text_col, GRAM_N))).alias("gram"),
         )
         .select(
             "id",
-            F.pmod(F.expr(_h60_sql("gram")), F.lit(n_buckets))
+            F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
             .cast("int")
             .alias("bucket"),
         )
@@ -113,7 +117,7 @@ def hash_ngram_features(
 
 def nb_logodds_weights(
     labeled: DataFrame,
-    n: int = 3,
+    n: int = GRAM_N,
     n_buckets: int = 1 << 18,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -121,11 +125,11 @@ def nb_logodds_weights(
 ) -> DataFrame:
     """Closed-form Naive-Bayes log-odds weights over hashed char n-grams:
 
-        w_j = ln((c1_j + 1) / (T1 + B)) - ln((c0_j + 1) / (T0 + B))
+        w_j = ln((c1_j + a) / (T1 + a*B)) - ln((c0_j + a) / (T0 + a*B))
 
     with c/T the per-bucket / total gram counts of the positive (label
-    truthy) and negative classes and B = n_buckets (Laplace smoothing,
-    the alpha = 1 member of the n-gram LM's Lidstone family). One
+    truthy) and negative classes, B = n_buckets and a = ``NB_ALPHA``
+    (Laplace smoothing). One
     explode -> agg pass, no iteration: the multinomial-NB decision rule IS
     a linear model over counts (Wang & Manning 2012), so these weights
     plug directly into :func:`classifier_score`. Buckets never seen in
@@ -146,7 +150,7 @@ def nb_logodds_weights(
         F.explode(F.expr(_gram_expr(text_col, n))).alias("gram"),
     ).select(
         "__y",
-        F.pmod(F.expr(_h60_sql("gram")), F.lit(n_buckets))
+        F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
         .cast("int")
         .alias("bucket"),
     )
@@ -157,7 +161,7 @@ def nb_logodds_weights(
     tot = per.agg(
         F.sum("c1").alias("t1"), F.sum("c0").alias("t0")
     )
-    a, b = 1.0, float(n_buckets)
+    a, b = NB_ALPHA, NB_ALPHA * n_buckets
     return per.crossJoin(F.broadcast(tot)).select(
         "bucket",
         (
@@ -197,7 +201,6 @@ _LR, _L2 = 0.5, 1e-6  # train_logreg's AdaGrad step size and L2 penalty
 
 def train_logreg(
     labeled: DataFrame,
-    n: int = 3,
     n_buckets: int = 1 << 18,
     iters: int = 30,
     id_col: str = "doc_id",
@@ -205,7 +208,7 @@ def train_logreg(
     label_col: str = "label",
 ) -> LogRegModel:
     """Distributed batch-gradient logistic regression over hashed char
-    n-gram features (the fastText supervised objective for one label,
+    ``GRAM_N``-gram features (the fastText supervised objective for one label,
     without the embedding layer).
 
     Shape: the normalized feature table (id, bucket, x = cnt/doc_total —
@@ -229,7 +232,7 @@ def train_logreg(
     not bit-identical weights (the repo's determinism doctrine applies to
     the gated scoring path, which is exact decimal)."""
     spark = labeled.sparkSession
-    feats = hash_ngram_features(labeled, n, n_buckets, id_col, text_col)
+    feats = hash_ngram_features(labeled, n_buckets, id_col, text_col)
     tot = feats.groupBy("id").agg(F.sum("cnt").alias("__t"))
     lab = labeled.select(
         F.col(id_col).alias("id"),
@@ -293,19 +296,18 @@ def train_logreg(
         g_b = float(err.sum()) / n_docs
         gsq_b += g_b * g_b
         bias -= _LR * g_b / math.sqrt(gsq_b + ada_eps)
-    return LogRegModel(w, bias, n, n_buckets, losses)
+    return LogRegModel(w, bias, GRAM_N, n_buckets, losses)
 
 
 def classifier_score(
     docs: DataFrame,
     weights: DataFrame,
-    n: int = 3,
+    n: int = GRAM_N,
     n_buckets: int = 1 << 18,
     bias: float = 0.0,
     quantize: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "relational",
 ) -> DataFrame:
     """Score every document with a linear model over hashed char n-grams:
     margin = sum(cnt_j * w_j) + bias, clf_score = sigmoid(margin),
@@ -322,27 +324,24 @@ def classifier_score(
     input doc appears in the output (NULL text is one '' gram, so the
     gram table covers all ids).
 
-    ``method`` picks the physical shape (measured, BENCH/BASELINE.md round
-    7, at 100k docs local[8], min-of-3: pandas 3.04 s vs relational-decimal
-    6.23 s — 2.05x, and the pandas path crosses ZERO shuffles):
+    The physical shape follows ``docs.isStreaming``:
 
-    * ``"relational"`` (default) — explode -> broadcast weight join ->
-      slim groupBy(id) (one shuffle; map-side partials collapse to one
-      row per doc per partition). Exact decimal margins, fully
-      SQL-expressible: the driver-gate/oracle form. Default because the
-      cross-engine-exact path must be what the gated catalog query runs.
-    * ``"pandas"`` — the 100 TB production path: weights collapse to one
-      dense numpy vector (8 * n_buckets bytes, 2 MiB at the default),
-      broadcast once, and each doc scores inside a single Arrow batch
-      pass (per-batch gram->bucket memo amortizes the md5s). No explode,
-      no shuffle, no join — a pure map over the scan. Margins are float
-      (batch-local add order), so use it where bit-exactness across
-      engines is not required; ``quantize`` is ignored. clf_keep can
-      differ from the decimal path only for |margin| within float noise
-      of 0 (tests pin agreement on a fixture). Stateless per row, so it
-      lifts to Structured Streaming unchanged — stream-static scoring
-      of an arriving crawl against frozen weights (batch==stream parity
-      pinned in tests/test_multimodal_streaming.py).
+    * batch — explode -> broadcast weight join -> slim groupBy(id) (one
+      shuffle; map-side partials collapse to one row per doc per
+      partition). Exact decimal margins, fully SQL-expressible: the
+      driver-gate/oracle form, so the cross-engine-exact path is what the
+      gated catalog query runs.
+    * stream — the map-side body (:func:`_classifier_score_mapside`), the
+      only arm that runs on a stream (a streaming aggregation would need
+      state and an output mode): weights collapse to one dense numpy
+      vector (8 * n_buckets bytes, 2 MiB at the default), broadcast once,
+      and each doc scores inside a single Arrow batch pass. No shuffle, no
+      join — stateless per row, so stream-static scoring of an arriving
+      crawl against frozen weights (batch==stream parity pinned in
+      tests/test_multimodal_streaming.py). Margins are float (batch-local
+      add order) and ``quantize`` is ignored; clf_keep can differ from
+      the decimal path only for |margin| within float noise of 0 (tests
+      pin agreement on a fixture).
 
     Returns a SLIM labels frame (id, margin, clf_score, clf_keep) — the
     dedup_representatives contract: text never enters the operator's
@@ -352,12 +351,10 @@ def classifier_score(
     bodies; filter with a broadcast/semi join on the keep ids instead,
     or join the slim frame against a slim projection.
     """
-    if method == "pandas":
+    if docs.isStreaming:
         return _classifier_score_mapside(
             docs, weights, n, n_buckets, bias, id_col, text_col
         )
-    if method != "relational":
-        raise ValueError(f"unknown method: {method!r}")
     # Round-8 physical shape: gram occurrences broadcast-join the weight
     # table directly and sum per id — ONE shuffle whose map-side partials
     # collapse to one row per doc per partition. The previous form first
@@ -374,7 +371,7 @@ def classifier_score(
         F.explode(F.expr(_gram_expr(text_col, n))).alias("gram"),
     ).select(
         "id",
-        F.pmod(F.expr(_h60_sql("gram")), F.lit(n_buckets))
+        F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
         .cast("int")
         .alias("bucket"),
     )
@@ -414,8 +411,10 @@ def _classifier_score_mapside(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """classifier_score's ``method="pandas"`` body: broadcast a dense
-    weight vector, score in one Arrow pass over the scan. The weight
+    """classifier_score's map-side body (the streaming arm): broadcast a
+    dense weight vector, score in one Arrow pass over the scan (measured,
+    BENCH/BASELINE.md round 7, at 100k docs local[8], min-of-3: 3.04 s vs
+    6.23 s for the relational-decimal arm, zero shuffles). The weight
     collect is <= n_buckets rows by the (bucket, w) contract (duplicate
     bucket rows would be last-write-wins here but join-duplicated in the
     relational path — both trainers groupBy(bucket), so neither emits

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ..config import DedupConfig
+from ..functions.hashing import h60_sql
 from .partitioning import checkpoint_observed, num_partitions
 
 # Broadcast budget for a signature table (the est-Jaccard re-attach in
@@ -59,6 +60,13 @@ _N_HUBS = 4  # hubs per oversized LSH bucket (lsh_candidate_pairs)
 # _CC_MAX_ITER min-label / pointer-jump rounds.
 _CC_DRIVER_MAX_EDGES = 2_000_000
 _CC_MAX_ITER = 20
+# Gated parameters, one definition with the DuckDB oracles; DBSCAN's is
+# the reference's min_samples (clustering.py:50-90)
+JACCARD_K = 5
+JACCARD_THRESHOLD = 0.5
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 8
+DBSCAN_MIN_SAMPLES = 3
 
 
 def _checkpoint_signatures(
@@ -106,10 +114,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # ------------------------------------------------------------- minhash + LSH
 
 
-def _h60_sql(e: str) -> str:
-    return f"cast(conv(substring(md5({e}), 1, 15), 16, 10) as bigint)"
-
-
 def _shingle_hash_expr(text_col: str, k: int) -> str:
     """array<bigint> of (h60(shingle) % P) over distinct char k-shingles."""
     from ..functions.hashing import MINHASH_P
@@ -119,7 +123,7 @@ def _shingle_hash_expr(text_col: str, k: int) -> str:
         f"else array_distinct(transform(sequence(1, length({text_col}) - {k} + 1),"
         f" i -> substring({text_col}, i, {k}))) end"
     )
-    return f"transform({shingles}, s -> pmod({_h60_sql('s')}, {MINHASH_P}))"
+    return f"transform({shingles}, s -> pmod({h60_sql('s')}, {MINHASH_P}))"
 
 
 def with_minhash(
@@ -176,7 +180,7 @@ def with_minhash(
 
     bands = "transform(sequence(0, {nb1}), b -> {h})".format(
         nb1=cfg.num_bands - 1,
-        h=_h60_sql(
+        h=h60_sql(
             "concat(cast(b as string), '|', "
             f"array_join(transform(slice(minhash, b * {rows} + 1, {rows}),"
             " v -> cast(v as string)), ','))"
@@ -697,17 +701,14 @@ def shingle_explode(docs: DataFrame, k: int, id_col: str = "doc_id", text_col: s
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    k: int = 5,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Exact n-gram Jaccard via shingle equi-join (no UDFs):
-    |A ∩ B| from the join, |A|,|B| from per-doc counts. Returns
-    (id_a, id_b, jaccard). For bounded fan-out at scale, run on LSH
-    candidates; this exact form is the oracle-checkable baseline."""
-    sh = shingle_explode(docs, k, id_col, text_col)
+    """Exact n-gram Jaccard via shingle equi-join (no UDFs) over char
+    ``JACCARD_K``-shingles: |A ∩ B| from the join, |A|,|B| from per-doc
+    counts. Returns (id_a, id_b, jaccard), jaccard >= ``JACCARD_THRESHOLD``.
+    For bounded fan-out at scale, run on LSH candidates; this exact form
+    is the oracle-checkable baseline."""
+    sh = shingle_explode(docs, JACCARD_K, id_col, text_col)
     inter = (
         sh.alias("a")
         .join(sh.alias("b"), "shingle")
@@ -715,20 +716,20 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _jaccard_filter(inter, sh, threshold)
+    return _jaccard_filter(inter, sh)
 
 
-def _jaccard_filter(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+def _jaccard_filter(inter: DataFrame, sh: DataFrame) -> DataFrame:
     """(id_a, id_b, jaccard) from the pair intersections ``inter`` (id_a,
     id_b, n_inter) and the (id, shingle) rows ``sh`` they came from:
     |A|, |B| are per-doc shingle counts, jaccard = |A∩B| / |A∪B|, kept at
-    or above ``threshold``."""
+    or above ``JACCARD_THRESHOLD``."""
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     return (
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_shingles", "n_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_shingles", "n_b"), "id_b")
         .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .where(F.col("jaccard") >= F.lit(threshold))
+        .where(F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -746,7 +747,7 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
     ).withColumn(
-        "h", F.expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)")
+        "h", F.expr(h60_sql("tok"))
     )
     bits = tokens.select(
         "id",
@@ -770,8 +771,6 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
 def ngram_jaccard_on_candidates(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
-    k: int = 5,
-    threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -780,11 +779,11 @@ def ngram_jaccard_on_candidates(
     (ngram_jaccard_pairs, kept as the oracle-checkable exact form documents
     its own scale limit). Shape: candidate pairs (banded LSH equi-join,
     uncapped buckets) -> shingle-set intersection via explode+join
-    restricted to candidates -> exact |A∩B| / |A∪B| filter. Returns
-    (id_a, id_b, jaccard)."""
+    restricted to candidates -> exact |A∩B| / |A∪B| filter, both as in
+    :func:`ngram_jaccard_pairs`. Returns (id_a, id_b, jaccard)."""
     signed = with_minhash(docs, cfg, id_col, text_col).localCheckpoint(eager=True)
     cand = lsh_candidate_pairs(signed, id_col).localCheckpoint(eager=True)
-    sh = shingle_explode(docs, k, id_col, text_col)
+    sh = shingle_explode(docs, JACCARD_K, id_col, text_col)
     # prune shingles to candidate ids (semi-join; AQE broadcasts the id set)
     ids = (
         cand.select(F.col("id_a").alias("id"))
@@ -802,28 +801,25 @@ def ngram_jaccard_on_candidates(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _jaccard_filter(inter, sh, threshold)
+    return _jaccard_filter(inter, sh)
 
 
 def simhash_near_dup_pairs(
-    simhashes: DataFrame,
-    max_hamming: int = 8,
-    n_bands: int = 4,
-    id_col: str = "id",
-    sim_col: str = "simhash",
+    simhashes: DataFrame, id_col: str = "id", sim_col: str = "simhash"
 ) -> DataFrame:
     """SimHash near-dup candidates the standard way at scale: split the
-    60-bit fingerprint into ``n_bands`` 15-bit bands; by pigeonhole, two
-    fingerprints within hamming distance < n_bands must agree on at least one
-    whole band, so an equi-join on (band_idx, band_value) finds all such
-    pairs — and MOST pairs at moderate distances — without an all-pairs scan.
-    Candidates are then exact-filtered on bit_count(xor) <= max_hamming.
+    60-bit fingerprint into ``SIMHASH_BANDS`` 15-bit bands; by pigeonhole,
+    two fingerprints within hamming distance < SIMHASH_BANDS must agree on
+    at least one whole band, so an equi-join on (band_idx, band_value)
+    finds all such pairs — and MOST pairs at moderate distances — without
+    an all-pairs scan. Candidates are then exact-filtered on
+    bit_count(xor) <= ``SIMHASH_MAX_HAMMING``.
     Returns (id_a, id_b, hamming), id_a < id_b, deduped across bands.
 
     Pure native exprs (shift/mask/xor/bit_count are all in whole-stage
     codegen, and identical in DuckDB for the oracle). The band join is the
     same shuffle shape as the MinHash LSH join — AQE-skew-splittable."""
-    width = 60 // n_bands
+    width = 60 // SIMHASH_BANDS
     mask = (1 << width) - 1
     bands = simhashes.select(
         F.col(id_col).alias("id"),
@@ -837,7 +833,7 @@ def simhash_near_dup_pairs(
                             "val"
                         ),
                     )
-                    for b in range(n_bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("bv"),
@@ -852,7 +848,7 @@ def simhash_near_dup_pairs(
             F.col("r.id").alias("id_b"),
             F.expr("bit_count(l.sh ^ r.sh)").alias("hamming"),
         )
-        .where(F.col("hamming") <= F.lit(max_hamming))
+        .where(F.col("hamming") <= F.lit(SIMHASH_MAX_HAMMING))
         .distinct()
     )
 
@@ -1090,7 +1086,6 @@ def dedup_representatives(
 def dbscan_clusters(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
-    min_samples: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -1104,7 +1099,7 @@ def dbscan_clusters(
 
       * degree    — neighbor counts from the symmetric candidate edges;
       * core      — degree + 1 (the point itself, sklearn semantics)
-                    >= min_samples;
+                    >= ``DBSCAN_MIN_SAMPLES``;
       * clusters  — connected components over CORE-CORE edges (min-id label,
                     the same size-adaptive CC as dedup_representatives);
       * border    — non-core points adjacent to >= 1 core point, assigned
@@ -1126,7 +1121,7 @@ def dbscan_clusters(
     core = (
         nbr.groupBy("id")
         .agg(F.count(F.lit(1)).alias("nn"))
-        .where(F.col("nn") + 1 >= F.lit(min_samples))
+        .where(F.col("nn") + 1 >= F.lit(DBSCAN_MIN_SAMPLES))
         .select("id")
     )
     core_edges = (

@@ -27,6 +27,8 @@ from ..functions.ngram_lm import BOS, EOS, LIDSTONE_ALPHA, LOG_FLOOR
 from ..functions.ngram_lm import PPL_MAX, PPL_THRESHOLD
 
 _SEP = "\x1f"  # context-token joiner inside the flat model table
+# the relational LM's n-gram order (trigrams), shared with the DuckDB oracles
+LM_ORDER = 3
 
 
 def _padded_tokens_expr(text_col: str, n: int) -> str:
@@ -71,7 +73,7 @@ def _ngram_expr(text_col: str, n: int) -> str:
 
 
 def ngram_counts(
-    docs: DataFrame, n: int = 3, text_col: str = "text", min_count: int = 1
+    docs: DataFrame, n: int = LM_ORDER, text_col: str = "text", min_count: int = 1
 ) -> DataFrame:
     """Model table: (context, word, cnt). Pure native explode + hash agg.
 
@@ -106,7 +108,7 @@ def vocab_size(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def perplexity_relational(
     docs: DataFrame,
     model: DataFrame,
-    n: int = 3,
+    n: int = LM_ORDER,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -158,7 +160,6 @@ def perplexity_relational(
 def ppl_buckets(
     docs: DataFrame,
     model: DataFrame | None = None,
-    n: int = 3,
     group_col: str = "lang",
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -168,7 +169,8 @@ def ppl_buckets(
     n-gram LM, split each language's corpus at the 1/3 and 2/3 perplexity
     cutoffs; "head" = most fluent third). The reference's banded ppl score
     (§2.9, lmppl_perplexity.py) keeps/drops per-doc; this adds the standard
-    corpus-level partitioning a training-data pipeline samples from.
+    corpus-level partitioning a training-data pipeline samples from. The
+    LM is ``LM_ORDER``-gram; ``model`` defaults to one trained on ``docs``.
 
     Cutoff arithmetic is deliberately INTEGER-EXACT, not quantile
     interpolation: perplexities are rounded to 2 dp (the repo's published
@@ -201,9 +203,9 @@ def ppl_buckets(
     from pyspark.sql import Window
 
     if model is None:
-        model = ngram_counts(docs, n, text_col)
+        model = ngram_counts(docs, text_col=text_col)
     scored = perplexity_relational(
-        docs, model, n=n, id_col=id_col, text_col=text_col
+        docs, model, id_col=id_col, text_col=text_col
     ).withColumn("ppl", F.round("ppl", 2))
     scored = scored.join(docs.select(id_col, group_col), id_col)
     scored = scored.localCheckpoint(eager=True)

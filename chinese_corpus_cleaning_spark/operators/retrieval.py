@@ -49,6 +49,7 @@ from N/avgdl and can never match (dl > 0 defines the corpus).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -236,14 +237,16 @@ def bm25_topk_batch(
     # SAME op order as bm25_topk's in-plan expression — the previous
     # driver-side math.log meant single==batch bit-equality rested on
     # CPython's libm agreeing with the JVM intrinsic at the 6-dp rounding
-    # knife edge (review finding)
-    qrows = [
-        (str(qid), t, float(df_rows.get(t, 0)))
-        for qid, ts in qterms.items()
-        for t in ts
-    ]
+    # knife edge (review finding). Built through Arrow: a LocalRelation
+    # with exact statistics, not pickled rows.
+    pairs = [(str(qid), t) for qid, ts in qterms.items() for t in ts]
+    cols = {
+        "query_id": [q for q, _ in pairs],
+        "term": [t for _, t in pairs],
+        "df": [float(df_rows.get(t, 0)) for _, t in pairs],
+    }
     qtab = spark.createDataFrame(
-        qrows, "query_id string, term string, df double"
+        pa.table(cols), "query_id string, term string, df double"
     ).select(
         "query_id",
         "term",

@@ -8,7 +8,7 @@ contract curation needs: an EXACT per-stratum quota, fully deterministic
 (same corpus -> same sample, independent of partitioning, retries, or
 cluster size), because the "random" order is a content hash (md5-derived
 h60 of the document id — the repo's proven cross-engine primitive,
-operators/dedup._h60_sql) rather than an RNG stream.
+functions/hashing.h60_sql) rather than an RNG stream.
 
 Scale shape (the reason this is not one `Window.partitionBy(stratum)`):
 a plain per-stratum window ships EVERY row of a stratum to one task — a
@@ -39,8 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60_sql
 from ..functions.spam import PY_WS_CLASS
-from .dedup import _h60_sql
 from .partitioning import num_partitions
 
 __all__ = [
@@ -153,7 +153,7 @@ def stratified_sample(
             f"review finding)"
         )
     strata = [F.col(c) for c in stratum_cols]
-    h = F.expr(_h60_sql(f"cast({id_col} as string)"))
+    h = F.expr(h60_sql(f"cast({id_col} as string)"))
     base = (
         docs.withColumn("__h", h)
         .withColumn(
@@ -246,7 +246,7 @@ def pack_sequences(
         docs.select(
             F.col(id_col),
             F.expr(n_expr).cast("long").alias("n_tokens"),
-            F.expr(_h60_sql(f"cast({id_col} as string)")).alias("__h"),
+            F.expr(h60_sql(f"cast({id_col} as string)")).alias("__h"),
         )
         .withColumn("__b", F.shiftright(F.col("__h"), shift))
         .localCheckpoint(eager=False)
@@ -419,7 +419,7 @@ def source_mix(
         )
         .select("__src", "__n", "__p", "__thr")
     )
-    h = _h60_sql(f"concat({_sql_str_lit(seed)}, '|', cast({id_col} as string))")
+    h = h60_sql(f"concat({_sql_str_lit(seed)}, '|', cast({id_col} as string))")
     return (
         docs.join(
             F.broadcast(rates),
@@ -487,7 +487,7 @@ def hash_split(
     total = sum(w for _, w in weights)
     if len(weights) == 1:
         return docs.withColumn("split", F.lit(labels[0]))
-    h = _h60_sql(f"concat({_sql_str_lit(salt)}, '|', cast({id_col} as string))")
+    h = h60_sql(f"concat({_sql_str_lit(salt)}, '|', cast({id_col} as string))")
     # the hash is computed ONCE into a bucket column, then dropped — the
     # CASE arms compare a bigint, not re-derive md5 per arm
     arms, cum = [], 0

@@ -38,8 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60_sql
 from .classifier import classifier_score, nb_logodds_weights
-from .dedup import _h60_sql
 from .sampling import _sql_str_lit
 
 __all__ = ["dsir_logratio_weights", "dsir_select"]
@@ -54,14 +54,14 @@ _U_MOD = 1 << 53
 def dsir_logratio_weights(
     raw: DataFrame,
     target: DataFrame,
-    n: int = 3,
     n_buckets: int = 1 << 18,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """(bucket, w): the Laplace-smoothed per-bucket log importance ratio
     ln((t_b + 1)/(T + B)) - ln((r_b + 1)/(R + B)) over hashed char
-    n-grams — DSIR's hashed-n-gram importance estimator, computed as
+    n-grams (classifier.GRAM_N, classifier.NB_ALPHA) — DSIR's
+    hashed-n-gram importance estimator, computed as
     :func:`nb_logodds_weights` with target=positive / raw=negative.
     Ids are prefixed per side before the union so a doc present in both
     corpora contributes its grams to both distributions (DSIR's raw pool
@@ -79,7 +79,6 @@ def dsir_logratio_weights(
     )
     return nb_logodds_weights(
         lab,
-        n=n,
         n_buckets=n_buckets,
         id_col="__did",
         text_col="__t",
@@ -91,7 +90,6 @@ def dsir_select(
     raw: DataFrame,
     target: DataFrame,
     k: int = 1000,
-    n: int = 3,
     n_buckets: int = 1 << 18,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -120,16 +118,14 @@ def dsir_select(
     materialize text (the slim-labels contract; joining text here would
     co-shuffle document bodies)."""
     if weights is None:
-        weights = dsir_logratio_weights(
-            raw, target, n, n_buckets, id_col, text_col
-        )
+        weights = dsir_logratio_weights(raw, target, n_buckets, id_col, text_col)
     scored = classifier_score(
-        raw, weights, n=n, n_buckets=n_buckets, id_col=id_col, text_col=text_col
+        raw, weights, n_buckets=n_buckets, id_col=id_col, text_col=text_col
     ).select(F.col("id").alias(id_col), F.col("margin").alias("logw"))
     u = (
         F.pmod(
             F.expr(
-                _h60_sql(
+                h60_sql(
                     f"concat({_sql_str_lit(salt + '|')}, "
                     f"cast({id_col} as string))"
                 )
@@ -145,7 +141,7 @@ def dsir_select(
             F.col("logw").cast("double") + (-F.log(-F.log(u)))
         ).alias("gumbel_key"),
         F.pmod(
-            F.expr(_h60_sql(f"concat('sb|', cast({id_col} as string))")),
+            F.expr(h60_sql(f"concat('sb|', cast({id_col} as string))")),
             F.lit(int(n_salt)),
         ).alias("__sb"),
     )

@@ -20,12 +20,13 @@ Re-expressed for Spark as relational pair operators over ONE kernel:
     the norm frame once, then the kernel as a within-cell self-join —
     ``ann_topk_lsh`` and ``duplicate_ratio_ann`` on ``rp_lsh_buckets``
     (deterministic ±1 hyperplanes from the md5-based h60, shrinking the
-    pair space ~2^n_planes), ``ivf_topk`` on nearest-centroid cells, and
+    pair space ~2^RP_PLANES), ``ivf_topk`` on nearest-centroid cells, and
     ``semdedup`` on seeded or ``kmeans_fit`` cells.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -39,6 +40,14 @@ from .partitioning import checkpoint_observed, ensure_min_parallelism
 # general higher-order fold for anything else, so the constant is a physical
 # optimization knob, not a semantic limit.
 _UNROLL_DIM = 64
+
+# Gated parameters, one definition with the DuckDB oracles; the threshold
+# is the reference's clustering similarity_threshold (clustering.py:25-27)
+RP_PLANES = 8
+RP_DIM = 64
+IVF_CELLS = 8
+IVF_K = 3
+CLUSTER_THRESHOLD = 0.85
 
 
 def _dot_hof(a: str, b: str) -> str:
@@ -187,38 +196,39 @@ def cosine_topk(
     return _topk(_cos_pairs(qry, base, "qid != nid", id_col, vec_col), k)
 
 
-def hyperplane_sign_expr(vec_col: str, plane: int, dim: int) -> str:
+def hyperplane_sign_expr(plane: int, elem) -> str:
     """SQL expression for sign(dot(vec, H_plane)) where H_plane[d] = +1 if
-    h60(f"{plane}|{d}") is odd else -1 — deterministic, dialect-portable.
+    h60(f"{plane}|{d}") is odd else -1, d < ``RP_DIM`` — deterministic;
+    ``elem(i)`` renders the i-th (1-based) element as a double in the
+    engine's dialect (the DuckDB oracle renders ``(embedding[i]::double)``).
 
-    try_element_at, not element_at: under Spark 4's default ANSI mode a
-    ragged/truncated embedding (fewer than ``dim`` elements) would abort
-    the whole job with INVALID_ARRAY_INDEX_IN_ELEMENT_AT (review
-    finding). try_element_at yields NULL, the NULL poisons the sum, and
+    rp_lsh_buckets renders try_element_at, not element_at: under Spark
+    4's default ANSI mode a ragged/truncated embedding (fewer than
+    ``RP_DIM`` elements) would abort the whole job with
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT (review finding). try_element_at
+    yields NULL, the NULL poisons the sum, and
     ``case when NULL > 0`` takes the else arm — sign bit 0, which is
-    byte-for-byte what the DuckDB twin (oracles.duck_sign: ``l[i]`` is
-    NULL out of range) already does, so ragged vectors land in bucket 0
-    on BOTH engines instead of failing on one."""
-    signs = [1 if h60(f"{plane}|{d}") & 1 else -1 for d in range(dim)]
+    byte-for-byte what the DuckDB twin (``l[i]`` is NULL out of range)
+    already does, so ragged vectors land in bucket 0 on BOTH engines
+    instead of failing on one."""
     terms = " + ".join(
-        f"({'' if s > 0 else '-'}"
-        f"cast(try_element_at({vec_col}, {d + 1}) as double))"
-        for d, s in enumerate(signs)
+        f"({'' if h60(f'{plane}|{d}') & 1 else '-'}{elem(d + 1)})"
+        for d in range(RP_DIM)
     )
     return f"(case when ({terms}) > 0 then 1 else 0 end)"
 
 
 def rp_lsh_buckets(
-    vectors: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """(vec_id, bucket): bucket = sum over planes of sign_bit << plane."""
+    """(vec_id, bucket): bucket = sum over the ``RP_PLANES`` planes of
+    sign_bit << plane."""
+    def elem(i):
+        return f"cast(try_element_at({vec_col}, {i}) as double)"
+
     bucket_expr = " + ".join(
-        f"cast({hyperplane_sign_expr(vec_col, p, dim)} as bigint) * {1 << p}"
-        for p in range(n_planes)
+        f"cast({hyperplane_sign_expr(p, elem)} as bigint) * {1 << p}"
+        for p in range(RP_PLANES)
     )
     return vectors.select(
         F.col(id_col), F.expr(bucket_expr).alias("bucket")
@@ -228,22 +238,20 @@ def rp_lsh_buckets(
 def ann_topk_lsh(
     vectors: DataFrame,
     k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to same-bucket pairs
     (equi-join on bucket), then exact cosine + windowed rank within bucket."""
     vectors = ensure_min_parallelism(vectors)
-    b = rp_lsh_buckets(vectors, n_planes, dim, id_col, vec_col)
+    b = rp_lsh_buckets(vectors, id_col, vec_col)
     _, pairs = _bucket_pairs(vectors, b, "bucket", "qid != nid", id_col, vec_col)
     return _topk(pairs, k)
 
 
 def embedding_near_dup_pairs(
     vectors: DataFrame,
-    threshold: float = 0.85,
+    threshold: float = CLUSTER_THRESHOLD,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -280,8 +288,6 @@ def duplicate_ratio(
 
 def duplicate_ratio_ann(
     vectors: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -289,11 +295,11 @@ def duplicate_ratio_ann(
     same-RP-LSH-bucket candidates (equi-join on bucket — shuffle hash join,
     AQE-splittable), vectors alone in their bucket get 0.0. This is the
     100 TB-safe wiring of the reference's get_duplicate_ratio
-    (clustering.py:169-185): candidate space shrinks ~2^n_planes vs the
+    (clustering.py:169-185): candidate space shrinks ~2^RP_PLANES vs the
     all-pairs ``duplicate_ratio`` (kept as the oracle-checkable exact spec).
     Returns (vec_id, dup_ratio) for EVERY input vector."""
     vectors = ensure_min_parallelism(vectors)
-    b = rp_lsh_buckets(vectors, n_planes, dim, id_col, vec_col)
+    b = rp_lsh_buckets(vectors, id_col, vec_col)
     _, pairs = _bucket_pairs(vectors, b, "bucket", "qid != nid", id_col, vec_col)
     max_cos = pairs.groupBy(F.col("qid").alias(id_col)).agg(
         F.max("cos").alias("_max_cos")
@@ -308,11 +314,13 @@ def duplicate_ratio_ann(
     )
 
 
-def cluster_score_col(dup_ratio_col: str, threshold: float = 0.85):
-    """J3 cluster score (clustering.py:187-207) as a native Column:
+def cluster_score_col(dup_ratio_col: str):
+    """J3 cluster score (clustering.py:187-207) as a native Column, with
+    thr = ``CLUSTER_THRESHOLD``:
       ratio >= thr: max(0, 0.2 * (1 - (ratio - thr)/(1 - thr)))
       else:        min(1, 0.8 + 0.2 * (1 - ratio/thr))
     """
+    threshold = CLUSTER_THRESHOLD
     r = F.col(dup_ratio_col)
     over = F.greatest(
         F.lit(0.0),
@@ -420,7 +428,7 @@ def assign_cells(
 
 def ivf_assign(
     vectors: DataFrame,
-    n_cells: int = 8,
+    n_cells: int = IVF_CELLS,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -440,17 +448,14 @@ def ivf_assign(
 
 
 def ivf_topk(
-    vectors: DataFrame,
-    k: int = 3,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """IVF ANN: exact cosine top-k restricted to same-cell candidates."""
+    """IVF ANN: exact cosine top-``IVF_K`` restricted to same-cell
+    candidates over ``IVF_CELLS`` cells."""
     vectors = ensure_min_parallelism(vectors)
-    cells = ivf_assign(vectors, n_cells, id_col, vec_col)
+    cells = ivf_assign(vectors, IVF_CELLS, id_col, vec_col)
     _, pairs = _bucket_pairs(vectors, cells, "cell", "qid != nid", id_col, vec_col)
-    return _topk(pairs, k)
+    return _topk(pairs, IVF_K)
 
 
 # Size-adaptive cutover of kmeans_fit (connected_components doctrine): at
@@ -480,7 +485,6 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     caller falls through to the Spark path. Arrow both ways, as in
     dedup._cc_driver."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     tbl = src.toArrow()
@@ -561,6 +565,11 @@ def kmeans_fit(
     cid_type = vectors.schema[id_col].dataType.simpleString()
     cent_schema = f"cid {cid_type}, c array<double>"
     spark = vectors.sparkSession
+
+    def table(cents):  # Arrow-built: a LocalRelation with statistics
+        cols = {"cid": [i for i, _ in cents], "c": [c for _, c in cents]}
+        return spark.createDataFrame(pa.table(cols), cent_schema)
+
     if observed["n"] <= _KMEANS_DRIVER_MAX_N:
         out = _kmeans_driver(spark, src, k, iters, cent_schema)
         if out is not None:
@@ -570,7 +579,7 @@ def kmeans_fit(
         for r in seed_centroids(src, k, "__kid", "__v").collect()
     ]
     for _ in range(max(0, int(iters))):
-        cdf = spark.createDataFrame(cents, cent_schema)
+        cdf = table(cents)
         # NOTE (round 8, measured): carrying the vector through the argmin
         # aggregate (a first(v) buffer) was tried and REJECTED —
         # an array-typed aggregation buffer drops the argmin out of the
@@ -603,12 +612,12 @@ def kmeans_fit(
             )
             for cid, c in cents
         ]
-    return spark.createDataFrame(cents, cent_schema)
+    return table(cents)
 
 
 def semdedup(
     vectors: DataFrame,
-    n_cells: int = 8,
+    n_cells: int = IVF_CELLS,
     tau: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",

@@ -13,6 +13,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import h60_sql
 from ..functions.langid import STOPWORDS
 
 
@@ -62,6 +63,8 @@ def langid_relational(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
 WINNOW_K = 8
 SPAN_K = 16
 SPAN_MOD_P = 16
+# doc_length_histogram's bucket width, shared with its DuckDB oracle
+HIST_BUCKET_WIDTH = 50
 # reducers per hot host in the two-phase (host, salt) rollups
 _SALT_BUCKETS = 16
 
@@ -78,10 +81,9 @@ def fingerprint_winnow(
     )
     return docs.select(
         F.col(id_col),
-        F.expr(
-            f"array_min(transform({grams},"
-            " g -> cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint)))"
-        ).alias("fingerprint"),
+        F.expr(f"array_min(transform({grams}, g -> {h60_sql('g')}))").alias(
+            "fingerprint"
+        ),
     )
 
 
@@ -117,11 +119,11 @@ def _decon_gram_sql(text_col: str, n: int) -> str:
     with < n tokens (e.g. unsegmented Chinese text = 1 whitespace token)
     simply has no n-grams on either engine.
     """
+    toks = f"split({text_col}, ' ')"
+    window = f"array_join(slice({toks}, i - {n - 1}, {n}), ' ')"
     return (
-        f"case when size(split({text_col}, ' ')) >= {n} then "
-        f"transform(sequence({n}, size(split({text_col}, ' '))), "
-        f"i -> cast(conv(substring(md5(array_join(slice(split({text_col}, ' '), "
-        f"i - {n - 1}, {n}), ' ')), 1, 15), 16, 10) as bigint)) "
+        f"case when size({toks}) >= {n} then "
+        f"transform(sequence({n}, size({toks})), i -> {h60_sql(window)}) "
         f"else cast(array() as array<bigint>) end"
     )
 
@@ -419,14 +421,12 @@ def vocab_topk(
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def doc_length_histogram(
-    docs: DataFrame, bucket_width: int = 50, text_col: str = "text"
-) -> DataFrame:
-    """Char-length histogram: (bucket_lo, n_docs, total_chars). The corpus
-    shape diagnostic behind length-based quality cuts; one hash agg."""
-    lo = (F.floor(F.length(text_col) / F.lit(bucket_width)) * bucket_width).cast(
-        "bigint"
-    )
+def doc_length_histogram(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Char-length histogram in ``HIST_BUCKET_WIDTH``-char buckets:
+    (bucket_lo, n_docs, total_chars). The corpus shape diagnostic behind
+    length-based quality cuts; one hash agg."""
+    w = HIST_BUCKET_WIDTH
+    lo = (F.floor(F.length(text_col) / F.lit(w)) * w).cast("bigint")
     return (
         docs.groupBy(lo.alias("bucket_lo"))
         .agg(
@@ -491,12 +491,14 @@ def host_rollup(docs: DataFrame, url_col: str = "url") -> DataFrame:
     (north_rule: salted handling of skewed hosts — one hot host holding ~30%
     of a crawl must not pin a single reducer).
 
-    host = parse_url(url, 'HOST') (native); phase 1 aggregates on
-    (host, salt) so the hot host spreads across ``_SALT_BUCKETS`` reducers;
-    phase 2 merges partials. Returns (host, n_docs, total_chars, avg_chars).
+    host = try_parse_url(url, 'HOST') (native; a malformed URL rolls up
+    under a NULL host instead of aborting the job under ANSI mode); phase 1
+    aggregates on (host, salt) so the hot host spreads across
+    ``_SALT_BUCKETS`` reducers; phase 2 merges partials. Returns (host,
+    n_docs, total_chars, avg_chars).
     """
     hosted = docs.select(
-        F.parse_url(F.col(url_col), F.lit("HOST")).alias("host"),
+        F.try_parse_url(F.col(url_col), F.lit("HOST")).alias("host"),
         F.length("text").alias("n_chars"),
         F.pmod(F.xxhash64(url_col), F.lit(_SALT_BUCKETS)).alias("salt"),
     )
@@ -801,8 +803,8 @@ def cross_doc_span_dup(
     fps_expr = (
         f"array_distinct(filter(transform("
         f"sequence(1, greatest(length({text_col}) - {SPAN_K} + 1, 1)),"
-        f" i -> cast(conv(substring(md5(substring({text_col}, i, {SPAN_K})),"
-        f" 1, 15), 16, 10) as bigint)), h -> h % {SPAN_MOD_P} = 0))"
+        f" i -> {h60_sql(f'substring({text_col}, i, {SPAN_K})')}),"
+        f" h -> h % {SPAN_MOD_P} = 0))"
     )
     base = docs.select(F.col(id_col).alias("id"), F.expr(fps_expr).alias("__fps"))
     ex = base.select("id", F.explode("__fps").alias("fp"))
@@ -1185,8 +1187,6 @@ def paragraph_dedup(
     Returns the doc frame with ``text_col`` rewritten plus ``n_paras``
     (paragraphs before dedup) and ``n_dropped``.
     """
-    from .dedup import _h60_sql
-
     sep = "\n"
     arr = F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
     # localCheckpoint: TWO consumers scan this table (the winners
@@ -1198,7 +1198,7 @@ def paragraph_dedup(
     slim = (
         docs.select(
             F.col(id_col).alias("__id"),
-            F.expr(_h60_sql(f"cast({id_col} as string)")).alias("__ord"),
+            F.expr(h60_sql(f"cast({id_col} as string)")).alias("__ord"),
             F.posexplode(
                 F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
             ).alias("__idx", "__p"),
@@ -1208,7 +1208,7 @@ def paragraph_dedup(
             "__id",
             "__ord",
             "__idx",
-            F.expr(_h60_sql("__p")).alias("__ph"),
+            F.expr(h60_sql("__p")).alias("__ph"),
         )
         .localCheckpoint(eager=False)
     )

@@ -188,17 +188,20 @@ def bpe_apply_merge(vocab: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
+# bpe_train stops once no pair occurs this often (hapax merges memorize noise)
+MIN_PAIR_FREQ = 2
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 50,
     text_col: str = "text",
-    min_pair_freq: int = 2,
     pretokenize: str = "ws",
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the ordered
     merge table [(left, right, count_at_merge_time), ...] — the artifact
     a tokenizer consumes. Stops early when no pair reaches
-    ``min_pair_freq`` (merging hapax pairs memorizes noise).
+    ``MIN_PAIR_FREQ``.
 
     Deterministic: tie-break (cnt desc, left asc, right asc); the
     vocabulary aggregate is partition-independent; each iteration's state
@@ -219,7 +222,7 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not top or top[0]["cnt"] < min_pair_freq:
+        if not top or top[0]["cnt"] < MIN_PAIR_FREQ:
             break
         a, b, cnt = top[0]["left"], top[0]["right"], int(top[0]["cnt"])
         merges.append((a, b, cnt))

@@ -223,9 +223,7 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_ngram_jaccard(spark, sf_dir):
-    return dedup.ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), k=5, threshold=0.5
-    ).select(
+    return dedup.ngram_jaccard_pairs(load(spark, sf_dir, "documents")).select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"),
         F.round("jaccard", 9).alias("jaccard"),
     )
@@ -291,15 +289,15 @@ def q_langid(spark, sf_dir):
 
 
 def q_ngram_train(spark, sf_dir):
-    return perplexity.ngram_counts(load(spark, sf_dir, "documents"), n=3).select(
+    return perplexity.ngram_counts(load(spark, sf_dir, "documents")).select(
         "context", "word", F.col("cnt").cast("bigint").alias("cnt")
     )
 
 
 def q_ngram_perplexity(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
-    model = perplexity.ngram_counts(docs, n=3)
-    return perplexity.perplexity_relational(docs, model, n=3).select(
+    model = perplexity.ngram_counts(docs)
+    return perplexity.perplexity_relational(docs, model).select(
         F.col("doc_id").cast("bigint"),
         F.round("ppl", 2).alias("ppl"),
         F.round("neg_avg_log2p", 7).alias("neg_avg_log2p"),
@@ -314,9 +312,9 @@ def q_cosine_topk(spark, sf_dir):
 
 
 def q_ann_buckets(spark, sf_dir):
-    return similarity.rp_lsh_buckets(
-        load(spark, sf_dir, "embeddings"), n_planes=8, dim=64
-    ).select(F.col("vec_id").cast("bigint"), F.col("bucket").cast("bigint"))
+    return similarity.rp_lsh_buckets(load(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id").cast("bigint"), F.col("bucket").cast("bigint")
+    )
 
 
 def q_quality_rollup(spark, sf_dir):
@@ -385,7 +383,7 @@ def q_events_sessionize(spark, sf_dir):
 
 
 def q_embedding_near_dup_pairs(spark, sf_dir):
-    p = _sim.embedding_near_dup_pairs(load(spark, sf_dir, "embeddings"), 0.85)
+    p = _sim.embedding_near_dup_pairs(load(spark, sf_dir, "embeddings"))
     return p.select(
         F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"),
         F.round("cos_sim", 6).alias("cos_sim"),
@@ -397,7 +395,7 @@ def q_embedding_cluster_score(spark, sf_dir):
     return d.select(
         F.col("vec_id").cast("bigint"),
         F.round("dup_ratio", 6).alias("dup_ratio"),
-        F.round(_sim.cluster_score_col("dup_ratio", 0.85), 6).alias("cluster_score"),
+        F.round(_sim.cluster_score_col("dup_ratio"), 6).alias("cluster_score"),
     )
 
 
@@ -422,13 +420,13 @@ def q_quality_keep_full(spark, sf_dir):
     base = with_quality(d, bc, DEFAULT).select(
         "doc_id", "rule_score", "feature_score"
     )
-    model = _ppl.ngram_counts(d, n=3)
-    ppl = _ppl.perplexity_relational(d, model, n=3).select(
+    model = _ppl.ngram_counts(d)
+    ppl = _ppl.perplexity_relational(d, model).select(
         "doc_id", _ppl.ppl_score_col("ppl").alias("ppl_score")
     )
     clus = _sim.duplicate_ratio(load(spark, sf_dir, "embeddings")).select(
         F.col("vec_id").alias("doc_id"),
-        _sim.cluster_score_col("dup_ratio", 0.85).alias("cluster_score"),
+        _sim.cluster_score_col("dup_ratio").alias("cluster_score"),
     )
     joined = base.join(ppl, "doc_id").join(clus, "doc_id")
     score = (
@@ -472,10 +470,13 @@ def q_dedup_tokens(spark, sf_dir):
 QUERIES["dedup_tokens"] = q_dedup_tokens
 
 
+_ANN_K = 3
+
+
 def q_ann_topk(spark, sf_dir):
-    """Approximate NN: exact cosine top-3 restricted to same-RP-LSH-bucket
-    candidates (the scale path for similarity search)."""
-    t = _sim.ann_topk_lsh(load(spark, sf_dir, "embeddings"), k=3, n_planes=8, dim=64)
+    """Approximate NN: exact cosine top-``_ANN_K`` restricted to
+    same-RP-LSH-bucket candidates (the scale path for similarity search)."""
+    t = _sim.ann_topk_lsh(load(spark, sf_dir, "embeddings"), k=_ANN_K)
     return t.select(
         F.col("vec_id").cast("bigint"),
         F.col("neighbor_id").cast("bigint"),
@@ -517,12 +518,12 @@ QUERIES["lineitem_pricing_summary"] = q_lineitem_pricing_summary
 
 
 def q_ivf_cells(spark, sf_dir):
-    c = _sim.ivf_assign(load(spark, sf_dir, "embeddings"), n_cells=8)
+    c = _sim.ivf_assign(load(spark, sf_dir, "embeddings"))
     return c.select(F.col("vec_id").cast("bigint"), F.col("cell").cast("bigint"))
 
 
 def q_ivf_topk(spark, sf_dir):
-    t = _sim.ivf_topk(load(spark, sf_dir, "embeddings"), k=3, n_cells=8)
+    t = _sim.ivf_topk(load(spark, sf_dir, "embeddings"))
     return t.select(
         F.col("vec_id").cast("bigint"), F.col("neighbor_id").cast("bigint"),
         F.round("cos_sim", 6).alias("cos_sim"), F.col("rank").cast("bigint"),
@@ -562,10 +563,10 @@ def q_ppl_spam_adjust(spark, sf_dir):
     from ..functions import spam as _spam
     from ..operators import perplexity as _ppl
 
-    thr = 200.0
+    thr = _spam.SPAM_PPL_THRESHOLD
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    model = _ppl.ngram_counts(docs, n=3)
-    ppl = _ppl.perplexity_relational(docs, model, n=3).select("doc_id", "ppl")
+    model = _ppl.ngram_counts(docs)
+    ppl = _ppl.perplexity_relational(docs, model).select("doc_id", "ppl")
     flagged = docs.select(
         "doc_id",
         F.concat(
@@ -576,7 +577,7 @@ def q_ppl_spam_adjust(spark, sf_dir):
         ).alias("text2"),
     ).withColumn("has_spam", _spam.has_spam_col("text2"))
     joined = ppl.join(flagged.select("doc_id", "has_spam"), "doc_id")
-    adj = _spam.adjusted_ppl_col("ppl", "has_spam", thr)
+    adj = _spam.adjusted_ppl_col("ppl", "has_spam")
     return joined.select(
         F.col("doc_id").cast("bigint"),
         F.col("has_spam"),
@@ -603,15 +604,13 @@ def q_quality_keep_full_ann(spark, sf_dir):
     base = with_quality(d, bc, DEFAULT).select(
         "doc_id", "rule_score", "feature_score"
     )
-    model = _ppl.ngram_counts(d, n=3)
-    ppl = _ppl.perplexity_relational(d, model, n=3).select(
+    model = _ppl.ngram_counts(d)
+    ppl = _ppl.perplexity_relational(d, model).select(
         "doc_id", _ppl.ppl_score_col("ppl").alias("ppl_score")
     )
-    clus = _sim.duplicate_ratio_ann(
-        load(spark, sf_dir, "embeddings"), n_planes=8, dim=64
-    ).select(
+    clus = _sim.duplicate_ratio_ann(load(spark, sf_dir, "embeddings")).select(
         F.col("vec_id").alias("doc_id"),
-        _sim.cluster_score_col("dup_ratio", 0.85).alias("cluster_score"),
+        _sim.cluster_score_col("dup_ratio").alias("cluster_score"),
     )
     joined = base.join(ppl, "doc_id").join(clus, "doc_id")
     score = (
@@ -704,7 +703,7 @@ def q_ngram_train_pruned(spark, sf_dir):
     """min_count-pruned n-gram model (the scale lever that keeps the model
     broadcastable: singleton n-grams dominate web-crawl trigram tables)."""
     return perplexity.ngram_counts(
-        load(spark, sf_dir, "documents"), n=3, min_count=2
+        load(spark, sf_dir, "documents"), min_count=2
     ).select("context", "word", F.col("cnt").cast("bigint").alias("cnt"))
 
 
@@ -716,7 +715,7 @@ def q_simhash_near_dup(spark, sf_dir):
     any pair within hamming < 4 must share a band) + exact bit_count(xor)
     filter. The scale-shape companion to MinHash LSH for token-level dups."""
     sims = dedup.simhash_df(load(spark, sf_dir, "documents"))
-    pairs = dedup.simhash_near_dup_pairs(sims, max_hamming=8, n_bands=4)
+    pairs = dedup.simhash_near_dup_pairs(sims)
     return pairs.select(
         F.col("id_a").cast("bigint"),
         F.col("id_b").cast("bigint"),
@@ -769,7 +768,7 @@ def q_ngram_jaccard_candidates(spark, sf_dir):
     """PRODUCTION n-gram Jaccard: exact Jaccard restricted to MinHash-LSH
     candidate pairs (all-pairs form stays as the oracle-checkable spec)."""
     p = dedup.ngram_jaccard_on_candidates(
-        load(spark, sf_dir, "documents"), _SMALL_MINHASH, k=5, threshold=0.5
+        load(spark, sf_dir, "documents"), _SMALL_MINHASH
     )
     return p.select(
         F.col("id_a").cast("bigint"),
@@ -786,7 +785,7 @@ def q_vocab_topk(spark, sf_dir):
 
 
 def q_doc_length_histogram(spark, sf_dir):
-    h = textanalysis.doc_length_histogram(load(spark, sf_dir, "documents"), 50)
+    h = textanalysis.doc_length_histogram(load(spark, sf_dir, "documents"))
     return h.select(
         F.col("bucket_lo").cast("bigint"),
         F.col("n_docs").cast("bigint"),
@@ -975,7 +974,7 @@ def q_dbscan_clusters(spark, sf_dir):
     (operators/dedup.dbscan_clusters). The oracle replays the identical
     LSH CTE chain and a recursive-CTE closure over core-core edges."""
     d = load(spark, sf_dir, "documents")
-    out = dedup.dbscan_clusters(d, _SMALL_MINHASH, min_samples=3)
+    out = dedup.dbscan_clusters(d, _SMALL_MINHASH)
     return out.select(
         F.col("id").cast("bigint").alias("doc_id"),
         F.col("cluster").cast("bigint"),
@@ -1069,6 +1068,7 @@ _BOILERPLATE_DECOR = (
     "case when doc_id % 2 = 0 then 'follow us on social media' "
     "else 'tail ' || cast(doc_id as string) end"
 )
+_BOILERPLATE_FRAC = 0.3
 
 
 def q_boilerplate_removal(spark, sf_dir):
@@ -1076,14 +1076,15 @@ def q_boilerplate_removal(spark, sf_dir):
     remove_boilerplate — the cross-document generalization of the
     reference's per-file commoncrawl_dedupe pipe, clear_redundancy.py:
     172-190). Decoration plants a footer line in EVERY doc and a social
-    line in half of them; at min_doc_frac=0.3 both are boilerplate while
-    each doc's unique lines (including the per-doc 'tail N') survive."""
+    line in half of them; at min_doc_frac=_BOILERPLATE_FRAC (0.3) both are
+    boilerplate while each doc's unique lines (including the per-doc
+    'tail N') survive."""
     from ..operators.textanalysis import remove_boilerplate
 
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_BOILERPLATE_DECOR).alias("text")
     )
-    out = remove_boilerplate(d, min_doc_frac=0.3)
+    out = remove_boilerplate(d, min_doc_frac=_BOILERPLATE_FRAC)
     return out.select(
         F.col("doc_id").cast("bigint"), "clean_text", "n_lines_removed"
     )
@@ -1365,7 +1366,6 @@ def q_curation_total(spark, sf_dir):
         dedup_cfg=_SMALL_MINHASH,
         strata=("source", "lang"),
         k_per_stratum=3,
-        boilerplate_min_doc_frac=0.3,
         max_band_bucket=None,
     )
     return curated.select(
@@ -1416,7 +1416,6 @@ def q_curation_v2(spark, sf_dir):
         dedup_cfg=_SMALL_MINHASH,
         strata=("source", "lang"),
         k_per_stratum=3,
-        boilerplate_min_doc_frac=0.3,
         max_band_bucket=None,
         blocklist=_BLOCKLIST,
         c4_lines=True,
@@ -1485,7 +1484,7 @@ def q_ppl_buckets(spark, sf_dir):
     trigram self-model and scorer chain, with (doc_id, ppl@2dp,
     neg_avg_log2p@7dp) a column subset of this output."""
     docs = load(spark, sf_dir, "documents")
-    out = perplexity.ppl_buckets(docs, n=3)
+    out = perplexity.ppl_buckets(docs)
     return out.select(
         F.col("doc_id").cast("bigint"),
         "lang",
@@ -1636,8 +1635,8 @@ def q_quality_classifier(spark, sf_dir):
         F.expr(_CLF_DECOR).alias("text"),
         (F.col("doc_id") % 2 == 1).alias("label"),
     )
-    w = nb_logodds_weights(d, n=3, n_buckets=_CLF_BUCKETS)
-    out = classifier_score(d, w, n=3, n_buckets=_CLF_BUCKETS)
+    w = nb_logodds_weights(d, n_buckets=_CLF_BUCKETS)
+    out = classifier_score(d, w, n_buckets=_CLF_BUCKETS)
     # classifier_score returns the slim labels frame (text never enters a
     # shuffle); the parity label re-derives from the id, no join needed
     return out.select(
@@ -1752,7 +1751,7 @@ def q_semdedup(spark, sf_dir):
     the NULL first-of-cell arm; near-1.0 duplicate planting is covered
     in tests/test_semdedup.py, the kmeans_fit production path there
     too."""
-    out = _sim.semdedup(load(spark, sf_dir, "embeddings"), n_cells=8, tau=0.3)
+    out = _sim.semdedup(load(spark, sf_dir, "embeddings"), tau=0.3)
     return out.select(
         F.col("vec_id").cast("bigint"),
         F.col("cell").cast("bigint"),
@@ -1800,13 +1799,17 @@ def q_paragraph_dedup(spark, sf_dir):
 QUERIES["paragraph_dedup"] = q_paragraph_dedup
 
 
+_DSIR_K = 100
+_DSIR_BUCKETS = 4096
+
+
 def q_dsir_select(spark, sf_dir):
     """DSIR importance resampling (operators/selection.dsir_select — Xie
     et al. 2023): raw corpus = documents, target = the doc_id % 17 == 0
     subset; hashed char-3-gram log-ratio weights (the gated NB log-odds
     arithmetic with target/raw as the classes), exact-decimal per-doc
     log-weights (the gated classifier margin), deterministic Gumbel
-    top-k=100 over (h60-derived uniform, fixed per-doc op order). The
+    top-``_DSIR_K`` over (h60-derived uniform, fixed per-doc op order). The
     oracle recomputes the full chain including the two-window-free rank
     (its single row_number equals the Spark two-phase form because min-k
     of a total order is associative)."""
@@ -1814,7 +1817,9 @@ def q_dsir_select(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     target = docs.where("doc_id % 17 = 0")
-    out = selection.dsir_select(docs, target, k=100, n=3, n_buckets=4096)
+    out = selection.dsir_select(
+        docs, target, k=_DSIR_K, n_buckets=_DSIR_BUCKETS
+    )
     return out.select(
         F.col("doc_id").cast("bigint"),
         F.col("logw").cast("decimal(38,6)").alias("logw"),

@@ -55,6 +55,9 @@ from ..operators.textanalysis import (
 
 __all__ = ["curation_run"]
 
+# stage 3: a line in at least this fraction of the documents is boilerplate
+BOILERPLATE_MIN_DOC_FRAC = 0.3
+
 
 def _shield_columns(df, reserved):
     """Temporarily rename user columns that collide with an operator's
@@ -84,7 +87,6 @@ def curation_run(
     dedup_cfg: DedupConfig | None = None,
     strata: tuple[str, ...] = ("source", "lang"),
     k_per_stratum: int = 100,
-    boilerplate_min_doc_frac: float = 0.3,
     max_band_bucket: int | None = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -272,7 +274,7 @@ def curation_run(
         uniq,
         id_col=id_col,
         text_col="pii_text",
-        min_doc_frac=boilerplate_min_doc_frac,
+        min_doc_frac=BOILERPLATE_MIN_DOC_FRAC,
         keep_cols=strata,
     )
 

@@ -18,10 +18,17 @@ Dialect mapping used throughout:
 from __future__ import annotations
 
 from ..config import BM25_B, BM25_K1, DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY
-from ..functions.hashing import h60
 from ..functions.langid import STOPWORDS
-from ..functions.ngram_lm import LIDSTONE_ALPHA, PPL_MAX, PPL_THRESHOLD
-from ..operators.textanalysis import SPAN_K, SPAN_MOD_P, WINNOW_K
+from ..functions.ngram_lm import BOS, EOS, LIDSTONE_ALPHA, LOG_FLOOR, PPL_MAX, PPL_THRESHOLD
+from ..functions.spam import SPAM_PPL_THRESHOLD
+from ..operators.classifier import GRAM_N, NB_ALPHA
+from ..operators.dedup import DBSCAN_MIN_SAMPLES, JACCARD_K, JACCARD_THRESHOLD
+from ..operators.dedup import SIMHASH_BANDS, SIMHASH_MAX_HAMMING
+from ..operators.perplexity import LM_ORDER
+from ..operators.similarity import CLUSTER_THRESHOLD, IVF_CELLS, IVF_K
+from ..operators.similarity import RP_PLANES, hyperplane_sign_expr
+from ..operators.textanalysis import HIST_BUCKET_WIDTH, SPAN_K, SPAN_MOD_P, WINNOW_K
+from .curation import BOILERPLATE_MIN_DOC_FRAC
 from .catalog import (
     AC_LEXICON,
     EN_LEXICON,
@@ -35,6 +42,18 @@ from .catalog import (
 R = DEFAULT.rule
 
 
+def _rp_bucket_sql() -> str:
+    """similarity.rp_lsh_buckets' bucket id in DuckDB."""
+
+    def elem(i):
+        return f"(embedding[{i}]::double)"
+
+    return " + ".join(
+        f"({hyperplane_sign_expr(p, elem)}::bigint * {1 << p})"
+        for p in range(RP_PLANES)
+    )
+
+
 def _h60(e: str) -> str:
     return f"(('0x' || substr(md5({e}), 1, 15))::bigint)"
 
@@ -45,12 +64,18 @@ def _rx_count(col: str, pattern: str) -> str:
 
 # --- shared CTE fragments -------------------------------------------------
 
-_SHINGLES5 = (
-    "select doc_id, unnest(case when length(text) < 5 then [text] else "
-    "list_distinct(list_transform(generate_series(1, length(text) - 4), "
-    "i -> substr(text, i, 5))) end) as shingle from documents"
-)
+def _shingles(k: int) -> str:
+    """Distinct char k-shingles per doc (dedup.shingle_explode)."""
+    return (
+        f"select doc_id, unnest(case when length(text) < {k} then [text] else "
+        f"list_distinct(list_transform(generate_series(1, length(text) - {k - 1}), "
+        f"i -> substr(text, i, {k}))) end) as shingle from documents"
+    )
 
+
+_SHINGLES_MH = _shingles(_SMALL_MINHASH.shingle_size)
+
+_SH_WIDTH = 60 // SIMHASH_BANDS  # simhash_near_dup_pairs' band width
 _NH = _SMALL_MINHASH.num_hashes
 _NB = _SMALL_MINHASH.num_bands
 _ROWS = _NH // _NB
@@ -73,6 +98,102 @@ _BANDS = (
     "from (select doc_id, list(minhash order by slot) as sig from sig group by doc_id) "
     f"cross join (select unnest(generate_series(0, {_NB - 1})) as b) bands"
 )
+
+
+# the LM_ORDER-gram (context, word) rows of operators/perplexity over the
+# padded token list ``t`` (ngram_lm.ngrams semantics)
+_LM_TOKS = (
+    "[" + ", ".join([f"'{BOS}'"] * (LM_ORDER - 1)) + "]"
+    f" || string_split(text, ' ') || ['{EOS}']"
+)
+_LM_GRAMS = (
+    f"unnest(list_transform(generate_series({LM_ORDER}, len(t)),\n"
+    f"    i -> {{'context': array_to_string(t[i-{LM_ORDER - 1} : i-1], chr(31)), 'word': t[i]}}),\n"
+    "    recursive := true)"
+)
+
+
+def _lm_ctes(v: str) -> str:
+    """The LM over documents (toks .. ctx) and its vocabulary size ``v``;
+    :func:`_lm_log2p` over :func:`_lm_from` is perplexity_relational's."""
+    return f"""toks as (select doc_id, ({_LM_TOKS}) as t from documents),
+grams as (
+  select doc_id, {_LM_GRAMS}
+  from toks),
+model as (select context, word, count(*) as cnt from grams group by 1, 2),
+ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
+{v} as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents))"""
+
+
+def _lm_log2p(v: str) -> str:
+    a = LIDSTONE_ALPHA
+    return (
+        f"greatest(log2((coalesce(m.cnt, 0) + {a}) / "
+        f"(coalesce(c.ctx_cnt, 0) + {a} * {v}.v)), {LOG_FLOOR})"
+    )
+
+
+def _lm_from(v: str) -> str:
+    return f"""  from grams g
+  left join model m on m.context = g.context and m.word = g.word
+  left join ctx c on c.context = g.context
+  cross join {v}"""
+
+
+# classifier._gram_expr's GRAM_N-gram bag over ``t`` (multiplicity kept,
+# the whole text as one gram when shorter than GRAM_N)
+_CLF_GRAMS = (
+    f"unnest(case when length(t) < {GRAM_N} then [t]\n"
+    f"    else list_transform(generate_series(1, length(t) - {GRAM_N - 1}),\n"
+    f"                        i -> substr(t, i, {GRAM_N})) end)"
+)
+
+
+def _nb_weight_sql(n_buckets: int) -> str:
+    """classifier.nb_logodds_weights' Laplace-smoothed log-odds ``w`` over
+    the per-bucket class counts ``per`` (c1, c0), quantized like
+    classifier_score."""
+    a, b = NB_ALPHA, NB_ALPHA * n_buckets
+    return f"""tot as (select sum(c1) as t1, sum(c0) as t0 from per),
+w as (
+  select bucket,
+    round(ln((c1 + {a}) / (t1 + {b}))
+          - ln((c0 + {a}) / (t0 + {b})), 6)::decimal(18,6) as wq
+  from per cross join tot)"""
+
+
+# minhash_similarity_pairs over the shingles ``sh``: signatures, LSH band
+# keys, distinct candidate pairs, and each pair's agreeing slot count
+_LSH_CAND = f"""sig as ({_SIG}),
+bandt as ({_BANDS}),
+cand as (
+  select distinct a.doc_id as id_a, b.doc_id as id_b
+  from bandt a join bandt b using (band_key)
+  where a.doc_id < b.doc_id)"""
+_LSH_AGREE = """agree as (
+  select c.id_a, c.id_b,
+         sum(case when sa.minhash = sb.minhash then 1 else 0 end) as agr
+  from cand c
+  join sig sa on sa.doc_id = c.id_a
+  join sig sb on sb.doc_id = c.id_b and sb.slot = sa.slot
+  group by 1, 2)"""
+
+
+# dedup._jaccard_filter over pair intersections ``inter`` and counts ``sizes``
+_JACCARD_TAIL = f"""select id_a::bigint as id_a, id_b::bigint as id_b,
+       round(n_inter / (na.n + nb.n - n_inter), 9) as jaccard
+from inter
+join sizes na on na.id = id_a
+join sizes nb on nb.id = id_b
+where n_inter / (na.n + nb.n - n_inter) >= {JACCARD_THRESHOLD}"""
+
+
+def _topk_sql(k: int) -> str:
+    """similarity._topk over the cosine pairs ``p``."""
+    return f"""r as (select *, row_number() over (partition by vec_id order by cos_sim desc, neighbor_id) as rank from p)
+select vec_id::bigint as vec_id, neighbor_id::bigint as neighbor_id,
+       round(cos_sim, 6) as cos_sim, rank::bigint as rank
+from r where rank <= {k}"""
 
 
 def _lines() -> str:
@@ -314,46 +435,30 @@ select md5(text) as text_md5, min(doc_id)::bigint as keep_id,
 from documents group by md5(text)"""
 
     o["ngram_jaccard_pairs"] = f"""
-with sh as ({_SHINGLES5}),
+with sh as ({_shingles(JACCARD_K)}),
 sizes as (select doc_id as id, count(*) as n from sh group by doc_id),
 inter as (
   select a.doc_id as id_a, b.doc_id as id_b, count(*) as n_inter
   from sh a join sh b using (shingle)
   where a.doc_id < b.doc_id
   group by 1, 2)
-select id_a::bigint as id_a, id_b::bigint as id_b,
-       round(n_inter / (na.n + nb.n - n_inter), 9) as jaccard
-from inter
-join sizes na on na.id = id_a
-join sizes nb on nb.id = id_b
-where n_inter / (na.n + nb.n - n_inter) >= 0.5"""
+{_JACCARD_TAIL}"""
 
     o["minhash_signatures"] = f"""
-with sh as ({_SHINGLES5}),
+with sh as ({_SHINGLES_MH}),
 sig as ({_SIG})
 select doc_id::bigint as doc_id, slot::bigint as slot, minhash from sig"""
 
     o["lsh_band_keys"] = f"""
-with sh as ({_SHINGLES5}),
+with sh as ({_SHINGLES_MH}),
 sig as ({_SIG})
 select doc_id::bigint as doc_id, band::bigint as band, band_key
 from ({_BANDS})"""
 
     o["dedup_minhash_pairs"] = f"""
-with sh as ({_SHINGLES5}),
-sig as ({_SIG}),
-bandt as ({_BANDS}),
-cand as (
-  select distinct a.doc_id as id_a, b.doc_id as id_b
-  from bandt a join bandt b using (band_key)
-  where a.doc_id < b.doc_id),
-agree as (
-  select c.id_a, c.id_b,
-         sum(case when sa.minhash = sb.minhash then 1 else 0 end) as agr
-  from cand c
-  join sig sa on sa.doc_id = c.id_a
-  join sig sb on sb.doc_id = c.id_b and sb.slot = sa.slot
-  group by 1, 2)
+with sh as ({_SHINGLES_MH}),
+{_LSH_CAND},
+{_LSH_AGREE}
 select id_a::bigint as id_a, id_b::bigint as id_b,
        round(agr / {_NH}, 9) as est_jaccard
 from agree where agr / {_NH} >= {_SMALL_MINHASH.similarity_threshold}"""
@@ -381,13 +486,13 @@ sims as (
     sum(case when s > 0 then (1::bigint << bit) else 0::bigint end)::bigint as sh
   from bits group by id),
 bands as (
-  select id, sh, b as band, (sh >> (b * 15)) & 32767 as val
-  from sims cross join (select unnest(generate_series(0, 3)) as b) bb),
+  select id, sh, b as band, (sh >> (b * {_SH_WIDTH})) & {(1 << _SH_WIDTH) - 1} as val
+  from sims cross join (select unnest(generate_series(0, {SIMHASH_BANDS - 1})) as b) bb),
 p as (
   select a.id as id_a, x.id as id_b, bit_count(xor(a.sh, x.sh)) as hamming
   from bands a join bands x on a.band = x.band and a.val = x.val and a.id < x.id)
 select distinct id_a::bigint as id_a, id_b::bigint as id_b, hamming::bigint as hamming
-from p where hamming <= 8"""
+from p where hamming <= {SIMHASH_MAX_HAMMING}"""
 
     o["fingerprint_winnow"] = f"""
 select doc_id::bigint as doc_id,
@@ -424,43 +529,27 @@ select doc_id::bigint as doc_id,
   {best}::bigint as top_hits, n_tokens::bigint as n_tokens
 from h"""
 
-    ngram_toks = "['<s>', '<s>'] || string_split(text, ' ') || ['</s>']"
     o["ngram_lm_train"] = f"""
-with toks as (select ({ngram_toks}) as t from documents),
+with toks as (select ({_LM_TOKS}) as t from documents),
 grams as (
-  select unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
+  select {_LM_GRAMS}
   from toks)
 select context, word, count(*)::bigint as cnt from grams group by 1, 2"""
 
     o["ngram_lm_train_pruned"] = f"""
-with toks as (select ({ngram_toks}) as t from documents),
+with toks as (select ({_LM_TOKS}) as t from documents),
 grams as (
-  select unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
+  select {_LM_GRAMS}
   from toks)
 select context, word, count(*)::bigint as cnt from grams
 group by 1, 2 having count(*) >= 2"""
 
     o["ngram_perplexity"] = f"""
-with toks as (select doc_id, ({ngram_toks}) as t from documents),
-grams as (
-  select doc_id, unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
-  from toks),
-model as (select context, word, count(*) as cnt from grams group by 1, 2),
-ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
-v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
+with {_lm_ctes("v")},
 scored as (
   select g.doc_id,
-    greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0) as log2p
-  from grams g
-  left join model m on m.context = g.context and m.word = g.word
-  left join ctx c on c.context = g.context
-  cross join v)
+    {_lm_log2p("v")} as log2p
+{_lm_from("v")})
 select doc_id::bigint as doc_id, round(pow(2.0, -avg(log2p)), 2) as ppl,
        round(-avg(log2p), 7) as neg_avg_log2p
 from scored group by doc_id"""
@@ -470,22 +559,11 @@ from scored group by doc_id"""
     # see operators/perplexity.ppl_buckets). Bins are distinct per lang so
     # the explicit ROWS frame equals RANGE on both engines.
     o["ppl_buckets"] = f"""
-with toks as (select doc_id, ({ngram_toks}) as t from documents),
-grams as (
-  select doc_id, unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
-  from toks),
-model as (select context, word, count(*) as cnt from grams group by 1, 2),
-ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
-v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
+with {_lm_ctes("v")},
 sc as (
   select g.doc_id,
-    greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0) as log2p
-  from grams g
-  left join model m on m.context = g.context and m.word = g.word
-  left join ctx c on c.context = g.context
-  cross join v),
+    {_lm_log2p("v")} as log2p
+{_lm_from("v")}),
 ppl as (
   select doc_id, round(pow(2.0, -avg(log2p)), 2) as ppl,
          round(-avg(log2p), 7) as neg_avg_log2p
@@ -510,30 +588,17 @@ select pl.doc_id::bigint as doc_id, pl.lang, pl.ppl, pl.neg_avg_log2p,
   cut.t_head, cut.t_middle
 from pl join cut on pl.lang is not distinct from cut.lang"""
 
-    o["cosine_topk"] = """
+    o["cosine_topk"] = f"""
 with v as (select vec_id, list_transform(embedding, x -> x::double) as e from embeddings),
 n as (select vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) as nrm from v),
 p as (
   select a.vec_id as vec_id, b.vec_id as neighbor_id,
     list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) as cos_sim
   from n a, n b where a.vec_id <> b.vec_id),
-r as (select *, row_number() over (partition by vec_id order by cos_sim desc, neighbor_id) as rank from p)
-select vec_id::bigint as vec_id, neighbor_id::bigint as neighbor_id,
-       round(cos_sim, 6) as cos_sim, rank::bigint as rank
-from r where rank <= 5"""
+{_topk_sql(5)}"""
 
-    # ann buckets: identical ±1 hyperplane sign chains, DuckDB dialect
-    def duck_sign(plane: int, dim: int = 64) -> str:
-        signs = [1 if h60(f"{plane}|{d}") & 1 else -1 for d in range(dim)]
-        terms = " + ".join(
-            f"({'' if s > 0 else '-'}(embedding[{d + 1}]::double))"
-            for d, s in enumerate(signs)
-        )
-        return f"(case when ({terms}) > 0 then 1 else 0 end)"
-
-    bucket = " + ".join(f"({duck_sign(p)}::bigint * {1 << p})" for p in range(8))
     o["ann_lsh_buckets"] = f"""
-select vec_id::bigint as vec_id, ({bucket})::bigint as bucket from embeddings"""
+select vec_id::bigint as vec_id, ({_rp_bucket_sql()})::bigint as bucket from embeddings"""
 
     o["quality_stats_rollup"] = """
 select lang, source, count(*)::bigint as n_docs,
@@ -784,26 +849,15 @@ from g"""
 
     o["dbscan_clusters"] = f"""
 with recursive
-sh as ({_SHINGLES5}),
-sig as ({_SIG}),
-bandt as ({_BANDS}),
-cand as (
-  select distinct a.doc_id as id_a, b.doc_id as id_b
-  from bandt a join bandt b using (band_key)
-  where a.doc_id < b.doc_id),
-agree as (
-  select c.id_a, c.id_b,
-         sum(case when sa.minhash = sb.minhash then 1 else 0 end) as agr
-  from cand c
-  join sig sa on sa.doc_id = c.id_a
-  join sig sb on sb.doc_id = c.id_b and sb.slot = sa.slot
-  group by 1, 2),
+sh as ({_SHINGLES_MH}),
+{_LSH_CAND},
+{_LSH_AGREE},
 near as (select id_a, id_b from agree
          where agr / {_NH} >= {_SMALL_MINHASH.similarity_threshold}),
 nbr as (select id_a as id, id_b as n from near
         union select id_b, id_a from near),
 core as (select id from (select id, count(*) as nn from nbr group by id)
-         where nn + 1 >= 3),
+         where nn + 1 >= {DBSCAN_MIN_SAMPLES}),
 ce as (
   select p.id_a as s, p.id_b as t from near p
   where p.id_a in (select id from core) and p.id_b in (select id from core)),
@@ -839,7 +893,7 @@ def _dedup_cte_chain(src: str = "documents") -> str:
     at the quality-kept subset. Must be spliced into a `with recursive`
     clause; yields `comp(id, comp)` — join ``{src}`` against it for the
     per-doc component / is_duplicate columns."""
-    sh_reps = _SHINGLES5.replace("from documents", "from reps")
+    sh_reps = _SHINGLES_MH.replace("from documents", "from reps")
     thr = _SMALL_MINHASH.similarity_threshold
     return f"""groups as (select text, min(doc_id) as rep from {src} group by text),
 exact_edges as (
@@ -848,19 +902,8 @@ exact_edges as (
   where d.doc_id <> g.rep),
 reps as (select rep as doc_id, text from groups),
 sh as ({sh_reps}),
-sig as ({_SIG}),
-bandt as ({_BANDS}),
-cand as (
-  select distinct a.doc_id as id_a, b.doc_id as id_b
-  from bandt a join bandt b using (band_key)
-  where a.doc_id < b.doc_id),
-agree as (
-  select c.id_a, c.id_b,
-         sum(case when sa.minhash = sb.minhash then 1 else 0 end) as agr
-  from cand c
-  join sig sa on sa.doc_id = c.id_a
-  join sig sb on sb.doc_id = c.id_b and sb.slot = sa.slot
-  group by 1, 2),
+{_LSH_CAND},
+{_LSH_AGREE},
 near_edges as (select id_a, id_b from agree where agr / {_NH} >= {thr}),
 edges as (select id_a, id_b from near_edges union select id_a, id_b from exact_edges),
 sym as (select id_a as s, id_b as t from edges union select id_b as s, id_a as t from edges),
@@ -898,8 +941,9 @@ r as (select token, cnt,
       from agg)
 select token, cnt::bigint as cnt, rank::bigint as rank from r where rank <= 25"""
 
-    o["doc_length_histogram"] = """
-select (length(text) // 50 * 50)::bigint as bucket_lo,
+    w = HIST_BUCKET_WIDTH
+    o["doc_length_histogram"] = f"""
+select (length(text) // {w} * {w})::bigint as bucket_lo,
   count(*)::bigint as n_docs,
   sum(length(text))::bigint as total_chars
 from documents group by 1"""
@@ -976,15 +1020,11 @@ select host, count(*)::bigint as n_docs, sum(n_chars)::bigint as total_chars,
   round(sum(n_chars)::double / count(*), 9) as avg_chars
 from h group by host"""
 
-    thr = _SMALL_MINHASH.similarity_threshold
+    # one shingle CTE feeds the MinHash candidates and the exact Jaccard
+    assert JACCARD_K == _SMALL_MINHASH.shingle_size
     o["ngram_jaccard_candidates"] = f"""
-with sh as ({_SHINGLES5}),
-sig as ({_SIG}),
-bandt as ({_BANDS}),
-cand as (
-  select distinct a.doc_id as id_a, b.doc_id as id_b
-  from bandt a join bandt b using (band_key)
-  where a.doc_id < b.doc_id),
+with sh as ({_SHINGLES_MH}),
+{_LSH_CAND},
 sizes as (select doc_id as id, count(*) as n from sh group by doc_id),
 inter as (
   select c.id_a, c.id_b, count(*) as n_inter
@@ -992,12 +1032,7 @@ inter as (
   join sh a on a.doc_id = c.id_a
   join sh b on b.doc_id = c.id_b and b.shingle = a.shingle
   group by 1, 2)
-select id_a::bigint as id_a, id_b::bigint as id_b,
-       round(n_inter / (na.n + nb.n - n_inter), 9) as jaccard
-from inter
-join sizes na on na.id = id_a
-join sizes nb on nb.id = id_b
-where n_inter / (na.n + nb.n - n_inter) >= {thr}"""
+{_JACCARD_TAIL}"""
     return {k: v.strip() for k, v in o.items()}
 
 
@@ -1010,7 +1045,6 @@ def build_spam() -> dict[str, str]:
     unicode semantics (full-width digits, U+3000) for \\d and \\s."""
     from ..functions.spam import PUNCTUATION, SPAM_PATTERNS_PORTABLE
 
-    ngram_toks = "['<s>', '<s>'] || string_split(text, ' ') || ['</s>']"
     rx = " or ".join(
         f"regexp_matches(text2, '{p}')" for p in SPAM_PATTERNS_PORTABLE
     )
@@ -1028,30 +1062,19 @@ with t2 as (
     text || case when doc_id % 7 = 0 then ' 在线 播放' else '' end as text2
   from documents),
 spamf as (select doc_id, ({spam_expr}) as has_spam from t2),
-toks as (select doc_id, ({ngram_toks}) as t from documents),
-grams as (
-  select doc_id, unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
-  from toks),
-model as (select context, word, count(*) as cnt from grams group by 1, 2),
-ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
-v as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
+{_lm_ctes("v")},
 pplt as (
   select g.doc_id,
-    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * v.v)), -100.0))) as ppl
-  from grams g
-  left join model m on m.context = g.context and m.word = g.word
-  left join ctx c on c.context = g.context
-  cross join v
+    pow(2.0, -avg({_lm_log2p("v")})) as ppl
+{_lm_from("v")}
   group by g.doc_id),
 adj as (
   select p.doc_id, s.has_spam,
-    case when s.has_spam then greatest(p.ppl * 1.5, 240.0) else p.ppl end as adj_ppl_raw
+    case when s.has_spam then greatest(p.ppl * 1.5, {SPAM_PPL_THRESHOLD * 1.2}) else p.ppl end as adj_ppl_raw
   from pplt p join spamf s on p.doc_id = s.doc_id)
 select doc_id::bigint as doc_id, has_spam,
   round(adj_ppl_raw, 2) as adj_ppl,
-  (adj_ppl_raw <= 200.0 and not has_spam) as ppl_pass
+  (adj_ppl_raw <= {SPAM_PPL_THRESHOLD} and not has_spam) as ppl_pass
 from adj"""
     return {"ngram_ppl_spam_adjust": sql.strip()}
 
@@ -1107,9 +1130,9 @@ with {_vn}
 select a.vec_id::bigint as id_a, b.vec_id::bigint as id_b,
   round({_dot} / (a.nrm * b.nrm), 6) as cos_sim
 from n a, n b
-where a.vec_id < b.vec_id and {_dot} / (a.nrm * b.nrm) >= 0.85"""
+where a.vec_id < b.vec_id and {_dot} / (a.nrm * b.nrm) >= {CLUSTER_THRESHOLD}"""
 
-    thr = 0.85
+    thr = CLUSTER_THRESHOLD
     one_minus = repr(1.0 - thr)
     cluster_case = (
         f"case when dup_ratio >= {thr} then "
@@ -1130,19 +1153,10 @@ from d"""
     # ANN (RP-LSH-bucketed) dup-ratio CTE — mirrors
     # similarity.duplicate_ratio_ann term-for-term: same bucket bits, same
     # within-bucket max cosine, missing -> 0.0
-    def _duck_sign(plane: int, dim: int = 64) -> str:
-        signs = [1 if h60(f"{plane}|{d}") & 1 else -1 for d in range(dim)]
-        terms = " + ".join(
-            f"({'' if s > 0 else '-'}(embedding[{d + 1}]::double))"
-            for d, s in enumerate(signs)
-        )
-        return f"(case when ({terms}) > 0 then 1 else 0 end)"
-
-    _bucket = " + ".join(f"({_duck_sign(p)}::bigint * {1 << p})" for p in range(8))
     _dot_ax = "list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * x.e[i]))"
     ann_dup_cte = f"""
 with {_vn},
-bk as (select vec_id, ({_bucket})::bigint as bucket from embeddings),
+bk as (select vec_id, ({_rp_bucket_sql()})::bigint as bucket from embeddings),
 nb as (select n.vec_id, bk.bucket, n.e, n.nrm from n join bk on n.vec_id = bk.vec_id),
 mx as (
   select a.vec_id, max({_dot_ax} / (a.nrm * x.nrm)) as max_cos
@@ -1152,29 +1166,17 @@ d as (
   select n.vec_id, coalesce(mx.max_cos, 0.0) as dup_ratio
   from n left join mx on n.vec_id = mx.vec_id)"""
 
-    ngram_toks = "['<s>', '<s>'] || string_split(text, ' ') || ['</s>']"
     wr, wf = DEFAULT.weight_rule, DEFAULT.weight_feature
     wp, wc = WEIGHT_PERPLEXITY, WEIGHT_CLUSTERING
     half, maxp = PPL_THRESHOLD / 2, PPL_MAX
     o["quality_keep_full"] = f"""
 with s as ({_rule_stats_cte()}),
 feat as ({_feature_cte()}),
-toks as (select doc_id, ({ngram_toks}) as t from documents),
-grams as (
-  select doc_id, unnest(list_transform(generate_series(3, len(t)),
-    i -> {{'context': array_to_string(t[i-2 : i-1], chr(31)), 'word': t[i]}}),
-    recursive := true)
-  from toks),
-model as (select context, word, count(*) as cnt from grams group by 1, 2),
-ctx as (select context, sum(cnt) as ctx_cnt from model group by 1),
-vv as (select count(distinct tok) as v from (select unnest(string_split(text, ' ')) as tok from documents)),
+{_lm_ctes("vv")},
 pplt as (
   select g.doc_id,
-    pow(2.0, -avg(greatest(log2((coalesce(m.cnt, 0) + {LIDSTONE_ALPHA}) / (coalesce(c.ctx_cnt, 0) + {LIDSTONE_ALPHA} * vv.v)), -100.0))) as ppl
-  from grams g
-  left join model m on m.context = g.context and m.word = g.word
-  left join ctx c on c.context = g.context
-  cross join vv
+    pow(2.0, -avg({_lm_log2p("vv")})) as ppl
+{_lm_from("vv")}
   group by g.doc_id),
 ppls as (
   select doc_id,
@@ -1306,19 +1308,10 @@ from firsts group by doc_id"""
 
 
 def build_ann() -> dict[str, str]:
-    from ..functions.hashing import h60
+    from .catalog import _ANN_K
 
-    def duck_sign(plane: int, dim: int = 64) -> str:
-        signs = [1 if h60(f"{plane}|{d}") & 1 else -1 for d in range(dim)]
-        terms = " + ".join(
-            f"({'' if s > 0 else '-'}(embedding[{d + 1}]::double))"
-            for d, s in enumerate(signs)
-        )
-        return f"(case when ({terms}) > 0 then 1 else 0 end)"
-
-    bucket = " + ".join(f"({duck_sign(p)}::bigint * {1 << p})" for p in range(8))
     sql = f"""
-with b as (select vec_id, ({bucket})::bigint as bucket from embeddings),
+with b as (select vec_id, ({_rp_bucket_sql()})::bigint as bucket from embeddings),
 v as (select vec_id, list_transform(embedding, x -> x::double) as e from embeddings),
 n as (select v.vec_id, bucket, e, sqrt(list_sum(list_transform(e, x -> x * x))) as nrm
       from v join b on v.vec_id = b.vec_id),
@@ -1326,10 +1319,7 @@ p as (
   select a.vec_id as vec_id, x.vec_id as neighbor_id,
     list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * x.e[i])) / (a.nrm * x.nrm) as cos_sim
   from n a join n x using (bucket) where a.vec_id <> x.vec_id),
-r as (select *, row_number() over (partition by vec_id order by cos_sim desc, neighbor_id) as rank from p)
-select vec_id::bigint as vec_id, neighbor_id::bigint as neighbor_id,
-       round(cos_sim, 6) as cos_sim, rank::bigint as rank
-from r where rank <= 3"""
+{_topk_sql(_ANN_K)}"""
     return {"ann_topk_lsh": sql.strip()}
 
 
@@ -1349,9 +1339,9 @@ group by l_returnflag, l_linestatus""".strip()
 
 # shared by build_ivf and build_round7_late (semdedup reuses the
 # deterministic lowest-id-seed cell assignment verbatim)
-_IVF_CELLS_CTE = """
+_IVF_CELLS_CTE = f"""
 v as (select vec_id, list_transform(embedding, x -> x::double) as e from embeddings),
-cents as (select vec_id as cid, e as c from v order by vec_id limit 8),
+cents as (select vec_id as cid, e as c from v order by vec_id limit {IVF_CELLS}),
 dists as (
   select v.vec_id, cents.cid,
     list_sum(list_transform(generate_series(1, 64), i -> (v.e[i] - cents.c[i]) * (v.e[i] - cents.c[i]))) as d2
@@ -1376,10 +1366,7 @@ p as (
   select a.vec_id as vec_id, b.vec_id as neighbor_id,
     list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) as cos_sim
   from n a join n b using (cell) where a.vec_id <> b.vec_id),
-r as (select *, row_number() over (partition by vec_id order by cos_sim desc, neighbor_id) as rank from p)
-select vec_id::bigint as vec_id, neighbor_id::bigint as neighbor_id,
-       round(cos_sim, 6) as cos_sim, rank::bigint as rank
-from r where rank <= 3"""
+{_topk_sql(IVF_K)}"""
     return {k: v.strip() for k, v in o.items()}
 
 
@@ -1388,7 +1375,7 @@ def build_round5(merged: dict[str, str]) -> dict[str, str]:
     reuse earlier SQL verbatim: the gopher composite embeds the full
     quality_keep_full query and an UNDECORATED repetition_signals CTE; the
     frontier rollup embeds the url_dedup canonicalization chain."""
-    from .catalog import _BOILERPLATE_DECOR, _SPAN_DECOR
+    from .catalog import _BOILERPLATE_DECOR, _BOILERPLATE_FRAC, _SPAN_DECOR
     from ..operators.textanalysis import (
         GOPHER_MAX_DUP_LINE_FRAC,
         GOPHER_MAX_DUP_TRIGRAM_FRAC,
@@ -1435,7 +1422,7 @@ tot as (select count(*) as n from d),
 bl as (
   select coalesce(list(line), []) as bls
   from freq cross join tot
-  where df >= ceil(0.3::double * n))
+  where df >= ceil({_BOILERPLATE_FRAC}::double * n))
 select doc_id::bigint as doc_id,
   array_to_string(list_filter(string_split(t, chr(10)),
     x -> not list_contains(bls, x)), chr(10)) as clean_text,
@@ -1561,7 +1548,7 @@ from documents"""
     thr = _SMALL_MINHASH.similarity_threshold
     o["incremental_dedup"] = f"""
 with recursive
-sh as ({_SHINGLES5}),
+sh as ({_SHINGLES_MH}),
 sig as ({_SIG}),
 bandt as ({_BANDS}),
 cand as (
@@ -1755,9 +1742,7 @@ with d as (
   select doc_id, {_CLF_DECOR} as t, (doc_id % 2 = 1) as label
   from documents),
 g as (
-  select doc_id, label, unnest(case when length(t) < 3 then [t]
-    else list_transform(generate_series(1, length(t) - 2),
-                        i -> substr(t, i, 3)) end) as gram
+  select doc_id, label, {_CLF_GRAMS} as gram
   from d),
 f as (
   select doc_id, label,
@@ -1769,12 +1754,7 @@ per as (
     sum(case when label then cnt else 0 end) as c1,
     sum(case when not label then cnt else 0 end) as c0
   from f group by bucket),
-tot as (select sum(c1) as t1, sum(c0) as t0 from per),
-w as (
-  select bucket,
-    round(ln((c1 + 1.0) / (t1 + {_B}.0))
-          - ln((c0 + 1.0) / (t0 + {_B}.0)), 6)::decimal(18,6) as wq
-  from per cross join tot),
+{_nb_weight_sql(_B)},
 m as (
   select f.doc_id, sum(f.cnt * w.wq) as margin
   from f join w using (bucket) group by 1)
@@ -1906,7 +1886,7 @@ bl_tot as (select count(*) as n from pii),
 bl as (
   select coalesce(list(line), []) as bls
   from bl_freq cross join bl_tot
-  where df >= ceil(0.3::double * n)),
+  where df >= ceil({BOILERPLATE_MIN_DOC_FRAC}::double * n)),
 cleaned as (
   select doc_id, source, lang,
     array_to_string(list_filter(string_split(pii_text, chr(10)),
@@ -2094,6 +2074,9 @@ select d.doc_id::bigint as doc_id,
   reb.n_dropped::bigint as n_dropped
 from d join reb on reb.doc_id = d.doc_id"""
 
+    from ..operators.selection import _U_MOD
+    from .catalog import _DSIR_BUCKETS, _DSIR_K
+
     # DSIR importance resampling: the labeled-union / gram / bucket /
     # log-ratio / decimal-margin CTEs are the quality_classifier oracle's
     # chain with target(y=1) + raw(y=0) corpora as the classes (alpha=1,
@@ -2103,7 +2086,7 @@ from d join reb on reb.doc_id = d.doc_id"""
     # fixed op order on identical bits. One row_number over all 500 rows
     # equals Spark's two-phase salt-bucket top-k (min-k of a total order
     # is associative; ties impossible — (key, id) is total).
-    o["dsir_select"] = """
+    o["dsir_select"] = f"""
 with d0 as (select doc_id, coalesce(text, '') as t from documents),
 d as (
   select 'r|' || cast(doc_id as varchar) as did, t, 0 as y from d0
@@ -2111,13 +2094,11 @@ d as (
   select 't|' || cast(doc_id as varchar) as did, t, 1 as y from d0
   where doc_id % 17 = 0),
 g as (
-  select did, y, unnest(case when length(t) < 3 then [t]
-    else list_transform(generate_series(1, length(t) - 2),
-                        i -> substr(t, i, 3)) end) as gram
+  select did, y, {_CLF_GRAMS} as gram
   from d),
 f as (
   select did, y,
-    (('0x' || substr(md5(gram), 1, 15))::bigint % 4096)::int as bucket,
+    (('0x' || substr(md5(gram), 1, 15))::bigint % {_DSIR_BUCKETS})::int as bucket,
     count(*) as cnt
   from g group by 1, 2, 3),
 per as (
@@ -2125,12 +2106,7 @@ per as (
     sum(case when y = 1 then cnt else 0 end) as c1,
     sum(case when y = 0 then cnt else 0 end) as c0
   from f group by bucket),
-tot as (select sum(c1) as t1, sum(c0) as t0 from per),
-w as (
-  select bucket,
-    round(ln((c1 + 1.0) / (t1 + 4096.0))
-          - ln((c0 + 1.0) / (t0 + 4096.0)), 6)::decimal(18,6) as wq
-  from per cross join tot),
+{_nb_weight_sql(_DSIR_BUCKETS)},
 m as (
   select f.did, sum(f.cnt * w.wq) as logw
   from f join w using (bucket) where f.y = 0 group by 1),
@@ -2141,7 +2117,7 @@ kx as (
   select doc_id, logw,
     logw::double + (-ln(-ln(
       ((('0x' || substr(md5('dsir|' || cast(doc_id as varchar)), 1, 15))::bigint
-        % 9007199254740992)::double + 0.5) / 9007199254740992.0
+        % {_U_MOD})::double + 0.5) / {float(_U_MOD)}
     ))) as gumbel_key
   from s),
 r as (
@@ -2149,7 +2125,7 @@ r as (
   from kx)
 select doc_id::bigint as doc_id, logw,
        round(gumbel_key, 6) as gumbel_key, sel_rank::bigint as sel_rank
-from r where sel_rank <= 100"""
+from r where sel_rank <= {_DSIR_K}"""
 
     # BPE pair-count kernel: whitespace tokens (explicit ASCII class —
     # Java/RE2 \s edge disagreement), single-codepoint symbols via substr

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chinese_corpus_cleaning_spark.operators.tokenizer import (
+    MIN_PAIR_FREQ,
     bpe_apply_merge,
     bpe_pair_counts,
     bpe_train,
@@ -19,7 +20,7 @@ from chinese_corpus_cleaning_spark.operators.tokenizer import (
 )
 
 
-def _ref_bpe(texts, n_merges, min_pair_freq=2, pretokenize="ws"):
+def _ref_bpe(texts, n_merges, min_pair_freq=MIN_PAIR_FREQ, pretokenize="ws"):
     from chinese_corpus_cleaning_spark.operators.tokenizer import CJK_WORD_RE
 
     vocab = Counter()
@@ -78,8 +79,8 @@ def docs(spark):
 
 
 def test_bpe_train_matches_reference(spark, docs):
-    got = bpe_train(docs, n_merges=12, min_pair_freq=2)
-    want, _ = _ref_bpe(TEXTS, 12, min_pair_freq=2)
+    got = bpe_train(docs, n_merges=12)
+    want, _ = _ref_bpe(TEXTS, 12)
     assert got == want
     # the CJK corpus contributes hanzi merges (codepoint symbols, no
     # segmenter needed)
@@ -87,8 +88,8 @@ def test_bpe_train_matches_reference(spark, docs):
 
 
 def test_final_vocab_symbols_match_reference(spark, docs):
-    merges = bpe_train(docs, n_merges=8, min_pair_freq=2)
-    _, ref_symbols = _ref_bpe(TEXTS, 8, min_pair_freq=2)
+    merges = bpe_train(docs, n_merges=8)
+    _, ref_symbols = _ref_bpe(TEXTS, 8)
     v = bpe_vocab(docs)
     for a, b, _ in merges:
         v = bpe_apply_merge(v, a, b)
@@ -115,7 +116,7 @@ def test_symbols_with_metacharacters_are_safe(spark):
     df = spark.createDataFrame(
         [(1, ".* .* .* '); ');")], "doc_id bigint, text string"
     )
-    merges = bpe_train(df, n_merges=3, min_pair_freq=2)
+    merges = bpe_train(df, n_merges=3)
     assert (".", "*", 3) == merges[0]
 
 
@@ -127,7 +128,7 @@ def test_partitioning_invariance(spark, docs):
 
 def test_early_stop_on_rare_pairs(spark):
     df = spark.createDataFrame([(1, "ab cd ef")], "doc_id bigint, text string")
-    assert bpe_train(df, n_merges=10, min_pair_freq=2) == []
+    assert bpe_train(df, n_merges=10) == []
 
 
 def test_empty_and_null_text(spark):
@@ -290,8 +291,8 @@ def test_cjk_pretokenize_bounds_vocab_and_matches_reference(spark):
     toks = {r["token"] for r in cjk_v.collect()}
     assert "mixed" in toks and "no" in toks  # transition splits
     # trainer differential with the shared regex
-    want, _ = _ref_bpe(UNSEG_TEXTS, 10, min_pair_freq=2, pretokenize="cjk")
-    got = bpe_train(rows, n_merges=10, min_pair_freq=2, pretokenize="cjk")
+    want, _ = _ref_bpe(UNSEG_TEXTS, 10, pretokenize="cjk")
+    got = bpe_train(rows, n_merges=10, pretokenize="cjk")
     assert got == want
     # merges are learned INSIDE CJK runs (impossible under ws mode's
     # sentence-tokens-only vocab at this min_pair_freq)

@@ -41,7 +41,7 @@ def test_hash_ngram_features_semantics(spark):
         [(1, "abcd"), (2, "ab"), (3, None), (4, "aaaa")],
         "doc_id long, text string",
     )
-    rows = C.hash_ngram_features(d, n=3, n_buckets=B).collect()
+    rows = C.hash_ngram_features(d, n_buckets=B).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r["id"], []).append(r)
@@ -65,7 +65,7 @@ def test_nb_logodds_separates_fixture(spark, splits):
 
 def test_logreg_converges_and_separates(spark, splits):
     train, test = splits
-    m = C.train_logreg(train, n=3, n_buckets=B, iters=25)
+    m = C.train_logreg(train, n_buckets=B, iters=25)
     # loss strictly improves by a wide margin (AdaGrad; plain GD diverged)
     assert m.losses[0] == pytest.approx(0.6931, abs=1e-3)
     assert m.losses[-1] < 0.3, m.losses
@@ -92,7 +92,7 @@ def test_classifier_score_exact_decimal_and_total_rows(spark):
         [(1, "aaaa"), (2, "zzzz"), (3, None)], "doc_id long, text string"
     )
     feats = {
-        r["id"]: r for r in C.hash_ngram_features(d, n=3, n_buckets=B).collect()
+        r["id"]: r for r in C.hash_ngram_features(d, n_buckets=B).collect()
     }
     w = spark.createDataFrame(
         [(int(feats[1]["bucket"]), 0.123456)], "bucket int, w double"
@@ -133,7 +133,7 @@ def test_classifier_score_plan_shape(spark, splits):
 
 
 def test_mapside_method_agrees_with_relational(spark, splits):
-    """method='pandas' (the measured 100 TB production path — zero
+    """The map-side body (classifier_score's streaming arm — zero
     shuffles, broadcast dense weights) must reproduce the exact decimal
     path: margins equal to float tolerance, clf_keep identical on the
     fixture (no fixture margin sits within float noise of 0), every doc
@@ -159,8 +159,8 @@ def test_mapside_method_agrees_with_relational(spark, splits):
     }
     pan = {
         r["id"]: r
-        for r in C.classifier_score(
-            docs, w, n=3, n_buckets=B, method="pandas"
+        for r in C._classifier_score_mapside(
+            docs, w, 3, B, 0.0, "doc_id", "text"
         ).collect()
     }
     assert set(dec) == set(pan) == set(raw) and len(dec) == docs.count()
@@ -177,8 +177,8 @@ def test_mapside_method_agrees_with_relational(spark, splits):
 
 
 def test_mapside_method_plan_is_shuffle_free(spark, splits):
-    """The pandas path is a pure map over the scan: no Exchange at all
-    in the scored plan (the whole point of the method)."""
+    """The map-side body is a pure map over the scan: no Exchange at all
+    in the scored plan (what lets it run on a stream)."""
     import io
     import contextlib
 
@@ -186,17 +186,10 @@ def test_mapside_method_plan_is_shuffle_free(spark, splits):
     w = C.nb_logodds_weights(train, n=3, n_buckets=B).localCheckpoint(
         eager=True
     )
-    scored = C.classifier_score(train, w, n=3, n_buckets=B, method="pandas")
+    scored = C._classifier_score_mapside(train, w, 3, B, 0.0, "doc_id", "text")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         scored.explain("formatted")
     plan = buf.getvalue()
     assert "Exchange" not in plan, plan
     assert "ArrowEvalPython" in plan, plan
-
-
-def test_classifier_score_rejects_unknown_method(spark):
-    d = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    w = spark.createDataFrame([(0, 1.0)], "bucket int, w double")
-    with pytest.raises(ValueError, match="unknown method"):
-        C.classifier_score(d, w, method="rdd")

@@ -52,7 +52,7 @@ def ours(spark):
         return [
             r["s"]
             for r in df.select(
-                cluster_score_col("dup_ratio", 0.85).alias("s")
+                cluster_score_col("dup_ratio").alias("s")
             ).collect()
         ]
 

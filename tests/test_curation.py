@@ -78,7 +78,6 @@ def curated_run(spark, corpus):
         bc,
         strata=("source",),
         k_per_stratum=5,
-        boilerplate_min_doc_frac=0.3,
     )
     rows = curated.collect()  # the ONE action the contract asks for
     return rows, {k: o.get for k, o in obs.items()}

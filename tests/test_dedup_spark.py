@@ -98,7 +98,7 @@ def test_dbscan_clusters_match_python_reference(spark):
         similarity_threshold=0.5, shingle_size=5, num_hashes=16, num_bands=4
     )
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    min_samples = 3
+    min_samples = dedup.DBSCAN_MIN_SAMPLES
 
     pairs = [
         (r["id_a"], r["id_b"])
@@ -140,7 +140,7 @@ def test_dbscan_clusters_match_python_reference(spark):
 
     got = {
         r["id"]: (r["cluster"], r["role"])
-        for r in dedup.dbscan_clusters(docs, cfg, min_samples).collect()
+        for r in dedup.dbscan_clusters(docs, cfg).collect()
     }
     assert got == expected
     # the fixture's near-dup families must actually produce all three roles

@@ -37,7 +37,7 @@ def _corpus(spark):
 
 def test_selection_is_biased_toward_target(spark):
     raw, tgt = _corpus(spark)
-    sel = dsir_select(raw, tgt, k=60, n=3, n_buckets=4096)
+    sel = dsir_select(raw, tgt, k=60, n_buckets=4096)
     ids = [r["doc_id"] for r in sel.collect()]
     assert len(ids) == 60
     n_books = sum(1 for i in ids if i < 100)
@@ -47,7 +47,7 @@ def test_selection_is_biased_toward_target(spark):
     # and logw separates the styles: every books doc outweighs every spam doc
     w = {
         r["doc_id"]: float(r["logw"])
-        for r in dsir_select(raw, tgt, k=200, n=3, n_buckets=4096).collect()
+        for r in dsir_select(raw, tgt, k=200, n_buckets=4096).collect()
     }
     assert min(w[i] for i in range(100)) > max(w[i] for i in range(100, 200))
 
@@ -85,7 +85,7 @@ def test_two_phase_topk_equals_global_window(spark):
 
 def test_precomputed_weights_passthrough(spark):
     raw, tgt = _corpus(spark)
-    w = dsir_logratio_weights(raw, tgt, n=3, n_buckets=4096).localCheckpoint(
+    w = dsir_logratio_weights(raw, tgt, n_buckets=4096).localCheckpoint(
         eager=True
     )
     a = {

@@ -331,11 +331,11 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
 
 
 def test_streaming_classifier_scores_match_batch(spark, tmp_path):
-    """Stream-static classifier scoring: the map-side pandas path scores
-    each row independently (weights broadcast once, zero stream-side
-    state), so it lifts to readStream unchanged — the streamed scores
-    must equal the batch scores exactly (per-doc float add order is
-    identical; no cross-row arithmetic exists to reorder)."""
+    """Stream-static classifier scoring: on a stream classifier_score takes
+    its map-side body, which scores each row independently (weights
+    broadcast once, zero stream-side state) — the streamed scores must
+    equal the same body's batch scores exactly (per-doc float add order
+    is identical; no cross-row arithmetic exists to reorder)."""
     from chinese_corpus_cleaning_spark.operators import classifier as C
 
     in_dir = str(tmp_path / "clf_in")
@@ -348,8 +348,8 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
     )
     expected = {
         (r["id"], round(r["margin"], 9), r["clf_keep"])
-        for r in C.classifier_score(
-            lab, w, n=3, n_buckets=1 << 12, method="pandas"
+        for r in C._classifier_score_mapside(
+            lab, w, 3, 1 << 12, 0.0, "doc_id", "text"
         ).collect()
     }
     assert expected and any(k for _, _, k in expected)
@@ -362,9 +362,7 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .parquet(in_dir)
     )
-    scored = C.classifier_score(
-        stream, w, n=3, n_buckets=1 << 12, method="pandas"
-    )
+    scored = C.classifier_score(stream, w, n=3, n_buckets=1 << 12)
     q = (
         scored.writeStream.format("memory")
         .queryName("ccc_clf_stream")

@@ -112,6 +112,25 @@ def test_url_canonical_query_string_is_opaque(spark):
     assert out[3] == "https://a.example.com/p?next=1" == out[4]
 
 
+def test_host_rollup_malformed_and_null_urls(spark):
+    """One malformed URL must not abort the rollup (strict parse_url raises
+    INVALID_URL under ANSI mode): it rolls up, with NULL urls, under a NULL
+    host, and the well-formed hosts keep their exact totals."""
+    d = spark.createDataFrame(
+        [
+            ("http://a b/c", "xyz"),
+            (None, "q"),
+            ("https://h.example.com/x", "abc"),
+            ("https://h.example.com/y", "de"),
+        ],
+        "url string, text string",
+    )
+    out = {r["host"]: r for r in textanalysis.host_rollup(d).collect()}
+    assert set(out) == {None, "h.example.com"}
+    assert (out[None]["n_docs"], out[None]["total_chars"]) == (2, 4)
+    assert (out["h.example.com"]["n_docs"], out["h.example.com"]["total_chars"]) == (2, 5)
+
+
 def test_decontaminate_short_docs(spark, nullish):
     """Docs with fewer than n tokens (the norm for unsegmented Chinese text,
     which whitespace-splits to ONE token) must yield zero n-grams, not a
@@ -192,7 +211,7 @@ def test_ppl_buckets_survive_nulls(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    out = {r["doc_id"]: r for r in perplexity.ppl_buckets(d, n=3).collect()}
+    out = {r["doc_id"]: r for r in perplexity.ppl_buckets(d).collect()}
     assert set(out) == {2, 3, 4, 5}  # null-text doc absent, not crashed
     assert all(r["ppl_bucket"] in ("head", "middle", "tail") for r in out.values())
     # a single-doc group is its own head (cutoff = its own ppl)
@@ -211,7 +230,7 @@ def test_ppl_buckets_null_group_is_its_own_group(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    out = {r["doc_id"]: r for r in perplexity.ppl_buckets(d, n=3).collect()}
+    out = {r["doc_id"]: r for r in perplexity.ppl_buckets(d).collect()}
     assert set(out) == {1, 2, 3}
     assert out[1]["lang"] is None and out[1]["ppl_bucket"] in ("head", "middle", "tail")
 
@@ -229,7 +248,7 @@ def test_empty_table_through_round6_ops(spark):
     )
     assert pack_sequences(empty.select("doc_id", "text"), budget=64).count() == 0
     assert perplexity.ppl_buckets(
-        empty.select("doc_id", "text", "lang"), n=3
+        empty.select("doc_id", "text", "lang")
     ).count() == 0
     assert url_blocklist_filter(
         empty.select("doc_id", "url"), ["x.example.com"]
@@ -249,7 +268,7 @@ def test_classifier_survives_nulls_and_empty(spark, nullish):
     assert all(r["margin"] is not None for r in scored.values())
 
     empty = spark.createDataFrame([], "doc_id long, text string, label int")
-    assert C.hash_ngram_features(empty, n=3, n_buckets=64).count() == 0
+    assert C.hash_ngram_features(empty, n_buckets=64).count() == 0
     assert C.nb_logodds_weights(empty, n=3, n_buckets=64).count() == 0
     assert C.classifier_score(
         empty, spark.createDataFrame([], "bucket int, w double"), n=3, n_buckets=64

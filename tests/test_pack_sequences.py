@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from chinese_corpus_cleaning_spark.operators.dedup import _h60_sql
+from chinese_corpus_cleaning_spark.functions.hashing import h60_sql
 from chinese_corpus_cleaning_spark.operators.sampling import (
     pack_sequences,
     token_count_sql,
@@ -31,7 +31,7 @@ def test_pack_matches_naive_window_and_invariants(spark):
     slim = d.select(
         "doc_id",
         F.expr(token_count_sql("text")).cast("long").alias("n"),
-        F.expr(_h60_sql("cast(doc_id as string)")).alias("h"),
+        F.expr(h60_sql("cast(doc_id as string)")).alias("h"),
     )
     w = Window.orderBy("h", "doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -42,7 +42,7 @@ def test_ppl_buckets_ccnet_tertiles(spark, docs):
     d = gen.docs_df(spark, 300, partitions=4).select(
         F.col("url").alias("doc_id"), "text", "lang"
     )
-    out = perplexity.ppl_buckets(d, n=3).toPandas()
+    out = perplexity.ppl_buckets(d).toPandas()
     assert len(out) == 300  # no doc lost by the slim group join
     for lang, g in out.groupby("lang"):
         n = len(g)

@@ -328,7 +328,7 @@ def test_ppl_buckets_no_global_sort_or_cartesian(spark):
     d = gen.docs_df(spark, 120, partitions=4).select(
         F.col("url").alias("doc_id"), "text", "lang"
     )
-    plan = _explained(perplexity.ppl_buckets(d, n=3))
+    plan = _explained(perplexity.ppl_buckets(d))
     assert "rangepartitioning" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan

@@ -167,3 +167,13 @@ def test_single_plan_no_wide_shuffle(spark, docs):
     assert "SortMergeJoin" not in plan
     assert "rangepartitioning" not in plan.lower()
     assert "CartesianProduct" not in plan
+
+
+def test_batch_query_table_is_arrow_built(spark, docs):
+    """The (query_id, term, df) table is built through Arrow: a
+    LocalRelation with exact statistics, not a statistics-less LogicalRDD
+    of pickled rows."""
+    out = bm25_topk_batch(docs, {"q_a": ["spark", "table"], "q_b": ["join"]}, k=3)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert re.search(r"LocalRelation \[query_id#\d+, term#\d+, df#\d+\]", plan), plan
+    assert not re.search(r"LogicalRDD \[query_id#", plan), plan

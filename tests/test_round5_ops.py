@@ -249,7 +249,7 @@ def test_stratified_sample_two_phase_matches_naive_and_salt_invariant(
     naive single-window form (min-k associativity), for any salt_buckets."""
     from pyspark.sql import Window
 
-    from chinese_corpus_cleaning_spark.operators.dedup import _h60_sql
+    from chinese_corpus_cleaning_spark.functions.hashing import h60_sql
     from chinese_corpus_cleaning_spark.operators.sampling import (
         stratified_sample,
     )
@@ -257,7 +257,7 @@ def test_stratified_sample_two_phase_matches_naive_and_salt_invariant(
     w = Window.partitionBy("source").orderBy(F.col("__h"), F.col("doc_id"))
     naive = (
         strat_docs.withColumn(
-            "__h", F.expr(_h60_sql("cast(doc_id as string)"))
+            "__h", F.expr(h60_sql("cast(doc_id as string)"))
         )
         .withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= 3)

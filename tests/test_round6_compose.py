@@ -68,7 +68,7 @@ def test_round6_chain(spark):
     # stage 3: perplexity buckets over the cleaned text, per lang; every
     # present language has a head bucket (the cutoff rule guarantees it)
     buckets = ppl_buckets(
-        kept.select("doc_id", F.col("clean_text").alias("text"), "lang"), n=3
+        kept.select("doc_id", F.col("clean_text").alias("text"), "lang")
     )
     assert buckets.count() == n_keep
     heads = {

@@ -189,7 +189,7 @@ def test_degenerate_vectors_do_not_abort(spark, emb):
     topk_ops = {
         "cosine_topk": similarity.cosine_topk(dfin, k=3),
         "ann_topk_lsh": similarity.ann_topk_lsh(dfin, k=3),
-        "ivf_topk": similarity.ivf_topk(dfin, k=3),
+        "ivf_topk": similarity.ivf_topk(dfin),
     }
     for name, top in topk_ops.items():
         top = top.cache()

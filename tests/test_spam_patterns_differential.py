@@ -84,18 +84,18 @@ def test_pattern_list_matches_reference_source():
 
 def test_adjustment_arithmetic():
     """calculate_perplexity:83-85 — ppl' = max(ppl*1.5, 1.2*thr) on spam."""
-    assert adjust_perplexity(100.0, False, 200.0) == 100.0
-    assert adjust_perplexity(100.0, True, 200.0) == 240.0  # 1.2*thr wins
-    assert adjust_perplexity(300.0, True, 200.0) == 450.0  # ppl*1.5 wins
+    assert adjust_perplexity(100.0, False) == 100.0
+    assert adjust_perplexity(100.0, True) == 240.0  # 1.2*thr wins
+    assert adjust_perplexity(300.0, True) == 450.0  # ppl*1.5 wins
     # the inflation guarantees spam never passes the threshold
-    assert adjust_perplexity(1.0, True, 200.0) > 200.0
+    assert adjust_perplexity(1.0, True) > 200.0
 
 
 def test_check_perplexity_hard_fail():
     """check_perplexity:204-206 — spam fails even when ppl is low."""
-    assert check_perplexity(50.0, False, 200.0) is True
-    assert check_perplexity(50.0, True, 200.0) is False
-    assert check_perplexity(500.0, False, 200.0) is False
+    assert check_perplexity(50.0, False) is True
+    assert check_perplexity(50.0, True) is False
+    assert check_perplexity(500.0, False) is False
 
 
 def test_spark_columns_match_python(spark):
@@ -125,14 +125,14 @@ def test_spark_columns_match_python(spark):
     df = (
         spark.createDataFrame(rows, ["doc_id", "text", "ppl"])
         .withColumn("spam", has_spam_col("text"))
-        .withColumn("adj_ppl", adjusted_ppl_col("ppl", "spam", 200.0))
-        .withColumn("ppl_pass", ppl_check_col("adj_ppl", "spam", 200.0))
+        .withColumn("adj_ppl", adjusted_ppl_col("ppl", "spam"))
+        .withColumn("ppl_pass", ppl_check_col("adj_ppl", "spam"))
     )
     for r in df.collect():
         spam = has_spam_patterns(r["text"])
         assert r["spam"] == spam
-        assert r["adj_ppl"] == adjust_perplexity(r["ppl"], spam, 200.0)
-        assert r["ppl_pass"] == check_perplexity(r["ppl"], spam, 200.0)
+        assert r["adj_ppl"] == adjust_perplexity(r["ppl"], spam)
+        assert r["ppl_pass"] == check_perplexity(r["ppl"], spam)
 
 
 @pytest.fixture(scope="module")
