@@ -337,11 +337,10 @@ def classifier_score(
       vector (8 * n_buckets bytes, 2 MiB at the default), broadcast once,
       and each doc scores inside a single Arrow batch pass. No shuffle, no
       join — stateless per row, so stream-static scoring of an arriving
-      crawl against frozen weights (batch==stream parity pinned in
-      tests/test_multimodal_streaming.py). Margins are float (batch-local
-      add order) and ``quantize`` is ignored; clf_keep can differ from
-      the decimal path only for |margin| within float noise of 0 (tests
-      pin agreement on a fixture).
+      crawl against frozen weights. The quantized weights ship as
+      integer units and sum exactly, so a stream returns the batch arm's
+      schema and values (parity pinned in
+      tests/test_multimodal_streaming.py).
 
     Returns a SLIM labels frame (id, margin, clf_score, clf_keep) — the
     dedup_representatives contract: text never enters the operator's
@@ -353,7 +352,7 @@ def classifier_score(
     """
     if docs.isStreaming:
         return _classifier_score_mapside(
-            docs, weights, n, n_buckets, bias, id_col, text_col
+            docs, weights, n, n_buckets, bias, id_col, text_col, quantize
         )
     # Round-8 physical shape: gram occurrences broadcast-join the weight
     # table directly and sum per id — ONE shuffle whose map-side partials
@@ -375,22 +374,32 @@ def classifier_score(
         .cast("int")
         .alias("bucket"),
     )
-    if quantize is not None:
-        wcol = F.round(F.col("w"), quantize).cast(f"decimal(18,{quantize})")
-        zero = F.lit(0).cast(f"decimal(18,{quantize})")
-        bias_term = F.lit(
-            str(round(bias, quantize))
-        ).cast(f"decimal(18,{quantize})")
-    else:
-        wcol = F.col("w")
-        zero = F.lit(0.0)
-        bias_term = F.lit(float(bias))
-    wq = weights.select("bucket", wcol.alias("__wq"))
+    wq, zero, bias_term = _weight_terms(weights, bias, quantize)
     margins = (
         grams.join(F.broadcast(wq), "bucket", "left")
         .groupBy("id")
         .agg(F.sum(F.coalesce(F.col("__wq"), zero)).alias("__m"))
     )
+    return _scored(margins, zero, bias_term)
+
+
+def _weight_terms(weights: DataFrame, bias: float, quantize: int | None):
+    """(bucket, __wq) weight table, the zero and the bias term, all
+    decimal(18, quantize) — or double when ``quantize`` is None."""
+    if quantize is not None:
+        dec = f"decimal(18,{quantize})"
+        wcol = F.round(F.col("w"), quantize).cast(dec)
+        zero = F.lit(0).cast(dec)
+        bias_term = F.lit(str(round(bias, quantize))).cast(dec)
+    else:
+        wcol = F.col("w")
+        zero = F.lit(0.0)
+        bias_term = F.lit(float(bias))
+    return weights.select("bucket", wcol.alias("__wq")), zero, bias_term
+
+
+def _scored(margins: DataFrame, zero, bias_term) -> DataFrame:
+    """(id, __m = summed gram weights) -> the slim labels frame."""
     margin = F.coalesce(F.col("__m"), zero) + bias_term
     return margins.select(
         "id",
@@ -410,6 +419,7 @@ def _classifier_score_mapside(
     bias: float,
     id_col: str,
     text_col: str,
+    quantize: int | None = None,
 ) -> DataFrame:
     """classifier_score's map-side body (the streaming arm): broadcast a
     dense weight vector, score in one Arrow pass over the scan (measured,
@@ -421,51 +431,58 @@ def _classifier_score_mapside(
     them). Gram bag semantics match :func:`_gram_expr` exactly: NULL
     text scores as '', texts shorter than n contribute the whole text as
     one gram; the hash is the repo h60 (functions/hashing.py) mod
-    n_buckets, memoized per Arrow batch (web text repeats grams heavily
-    both within and across docs)."""
+    n_buckets, and the gram's weight is memoized per Arrow batch (web
+    text repeats grams heavily both within and across docs).
+
+    With ``quantize`` the weights ship as integer units of 10^-quantize
+    (the relational arm's decimal(18, quantize) weights, exactly) and
+    each doc's sum is exact integer arithmetic, returned as the decimal
+    Spark's sum gives that arm: the same schema and values as the batch
+    arm. Without it, margins are float in per-doc add order."""
     from collections import Counter
+    from decimal import Decimal
 
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.hashing import h60
 
     spark = docs.sparkSession
-    wp = weights.select("bucket", "w").toArrow()
-    w_np = np.zeros(n_buckets, dtype="float64")
-    w_np[wp["bucket"].to_numpy().astype("int64")] = wp["w"].to_numpy().astype(
-        "float64"
-    )
+    wq, zero, bias_term = _weight_terms(weights, bias, quantize)
+    if quantize is None:
+        units, dtype, sum_type = F.col("__wq"), "float64", "double"
+    else:
+        units = (F.col("__wq") * F.lit(10**quantize)).cast("bigint")
+        # Spark types sum(decimal(p, s)) as decimal(p + 10, s)
+        dtype, sum_type = "int64", f"decimal(28,{quantize})"
+    wp = wq.select("bucket", units.alias("u")).toArrow()
+    w_np = np.zeros(n_buckets, dtype=dtype)
+    w_np[wp["bucket"].to_numpy().astype("int64")] = wp["u"].to_numpy()
     w_bc = spark.sparkContext.broadcast(w_np)
-    bias_f = float(bias)
 
-    @pandas_udf("double")
-    def _margin(texts: pd.Series) -> pd.Series:
+    @pandas_udf(sum_type)
+    def _weight_sum(texts: pd.Series) -> pd.Series:
         w = w_bc.value
-        memo: dict[str, int] = {}
-        out = np.empty(len(texts), dtype="float64")
-        for i, t in enumerate(texts):
+        memo: dict[str, int | float] = {}  # gram -> its weight
+        out = []
+        for t in texts:
             t = t or ""
             grams = (
                 (t,)
                 if len(t) < n
                 else (t[j : j + n] for j in range(len(t) - n + 1))
             )
-            m = bias_f
+            m = 0
             for g, c in Counter(grams).items():
-                b = memo.get(g)
-                if b is None:
-                    b = h60(g) % n_buckets  # THE repo gram hash, one def
-                    memo[g] = b
-                m += w[b] * c
-            out[i] = m
-        return pd.Series(out)
+                wg = memo.get(g)
+                if wg is None:
+                    # THE repo gram hash, one def; .item(): a python
+                    # float, or an exact python int
+                    wg = memo[g] = w[h60(g) % n_buckets].item()
+                m += wg * c
+            out.append(m if quantize is None else Decimal(m).scaleb(-quantize))
+        return pd.Series(out, dtype="float64" if quantize is None else object)
 
-    margin = F.col("__margin")
-    return docs.select(
-        F.col(id_col).alias("id"), _margin(F.col(text_col)).alias("__margin")
-    ).select(
-        "id",
-        margin.alias("margin"),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("clf_score"),
-        (margin > F.lit(0.0)).alias("clf_keep"),
+    margins = docs.select(
+        F.col(id_col).alias("id"), _weight_sum(F.col(text_col)).alias("__m")
     )
+    return _scored(margins, zero, bias_term)

@@ -39,8 +39,9 @@ from ..functions.dfa import scan_positions as dfa_scan_positions
 from ..functions.textstats import CHECK_NAMES, check_flags, compute_stats, rule_score
 
 def _resolve(v):
-    """Accept either a raw trie dict or a lazily-building TrieBox
-    (sources/wordlists.py) as the broadcast payload."""
+    """Accept either a raw trie dict or a TrieBox (sources/wordlists.py) as
+    the broadcast payload; a TrieBox's trie is built once per worker
+    process and word list, however often its broadcast is unpickled."""
     return getattr(v, "trie", v)
 
 

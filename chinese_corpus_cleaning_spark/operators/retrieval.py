@@ -73,13 +73,13 @@ def _eq_term(term: str):
 
 
 def _prep_terms(query_terms) -> list[str]:
+    """Lowercased non-empty terms, deduplicated preserving order (may be
+    empty: a batch query without a usable term matches no document)."""
     seen: dict[str, None] = {}
     for t in query_terms:
         lt = str(t).lower()
         if lt:
             seen.setdefault(lt, None)
-    if not seen:
-        raise ValueError("bm25: query_terms must contain a non-empty term")
     return list(seen)
 
 
@@ -112,6 +112,8 @@ def bm25_topk(
     docs (score > 0) are ranked.
     """
     terms = _prep_terms(query_terms)
+    if not terms:
+        raise ValueError("bm25: query_terms must contain a non-empty term")
     slim = (
         docs.where(F.col(text_col).isNotNull())
         .select(F.col(id_col), _tok_array(text_col).alias("__toks"))
@@ -168,7 +170,8 @@ def bm25_topk_batch(
 ) -> DataFrame:
     """Top-k per query for a query SET: (query_id, id, score, rank).
 
-    ``queries`` maps query_id -> iterable of terms.  Corpus statistics
+    ``queries`` maps query_id -> iterable of terms; a query with no
+    usable (non-empty) term returns no rows.  Corpus statistics
     (N, avgdl, df per distinct union term) are computed once via slim
     exploded (id, term) rows restricted to the union vocabulary; the
     exact-integer df table collects driver-side (≤ |union terms| rows)
@@ -181,6 +184,25 @@ def bm25_topk_batch(
     qterms = {qid: _prep_terms(ts) for qid, ts in queries.items()}
     union_terms = sorted({t for ts in qterms.values() for t in ts})
     spark = docs.sparkSession
+
+    def no_rows() -> DataFrame:
+        # Preserve the INPUT id type (review finding: hardcoding bigint
+        # made the empty-corpus branch union/join-incompatible with the
+        # non-empty path for string-id corpora).
+        from pyspark.sql import types as T
+
+        schema = T.StructType(
+            [
+                T.StructField("query_id", T.StringType()),
+                T.StructField(id_col, docs.schema[id_col].dataType),
+                T.StructField("score", T.DecimalType(18, 6)),
+                T.StructField("rank", T.LongType()),
+            ]
+        )
+        return spark.createDataFrame([], schema)
+
+    if not union_terms:
+        return no_rows()  # a query without a usable term matches nothing
 
     base = (
         docs.where(F.col(text_col).isNotNull())
@@ -196,20 +218,7 @@ def bm25_topk_batch(
     ).collect()[0]
     n_docs, total_dl = stats_row["n"], stats_row["total_dl"]
     if not n_docs:
-        # Preserve the INPUT id type (review finding: hardcoding bigint
-        # made the empty-corpus branch union/join-incompatible with the
-        # non-empty path for string-id corpora).
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("query_id", T.StringType()),
-                T.StructField(id_col, docs.schema[id_col].dataType),
-                T.StructField("score", T.DecimalType(18, 6)),
-                T.StructField("rank", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], schema)
+        return no_rows()
     avgdl = float(total_dl) / float(n_docs)
 
     tf = (

@@ -304,8 +304,13 @@ def q_ngram_perplexity(spark, sf_dir):
     )
 
 
+_COSINE_K = 5
+
+
 def q_cosine_topk(spark, sf_dir):
-    return similarity.cosine_topk(load(spark, sf_dir, "embeddings"), k=5).select(
+    return similarity.cosine_topk(
+        load(spark, sf_dir, "embeddings"), k=_COSINE_K
+    ).select(
         F.col("vec_id").cast("bigint"), F.col("neighbor_id").cast("bigint"),
         F.round("cos_sim", 6).alias("cos_sim"), F.col("rank").cast("bigint"),
     )
@@ -699,11 +704,14 @@ QUERIES["ppl_preprocess"] = q_ppl_preprocess
 QUERIES["dedup_lines"] = q_dedup_lines
 
 
+_NGRAM_MIN_COUNT = 2
+
+
 def q_ngram_train_pruned(spark, sf_dir):
     """min_count-pruned n-gram model (the scale lever that keeps the model
     broadcastable: singleton n-grams dominate web-crawl trigram tables)."""
     return perplexity.ngram_counts(
-        load(spark, sf_dir, "documents"), min_count=2
+        load(spark, sf_dir, "documents"), min_count=_NGRAM_MIN_COUNT
     ).select("context", "word", F.col("cnt").cast("bigint").alias("cnt"))
 
 
@@ -777,8 +785,11 @@ def q_ngram_jaccard_candidates(spark, sf_dir):
     )
 
 
+_VOCAB_K = 25
+
+
 def q_vocab_topk(spark, sf_dir):
-    t = textanalysis.vocab_topk(load(spark, sf_dir, "documents"), k=25)
+    t = textanalysis.vocab_topk(load(spark, sf_dir, "documents"), k=_VOCAB_K)
     return t.select(
         "token", F.col("cnt").cast("bigint"), F.col("rank").cast("bigint")
     )
@@ -862,6 +873,9 @@ QUERIES["embedding_quantize_int8"] = q_embedding_quantize
 QUERIES["quality_percentiles"] = q_quality_percentiles
 
 
+_DECON_N = 8
+
+
 def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: docs with doc_id % 97 == 0 act as the
     "eval set"; every corpus doc sharing any token 8-gram with it is
@@ -878,7 +892,7 @@ def q_decontaminate(spark, sf_dir):
         ).otherwise(F.col("text")),
     )
     bench = d.where(F.col("doc_id") % 97 == 0)
-    out = textanalysis.decontaminate_overlap(d, bench, n=8)
+    out = textanalysis.decontaminate_overlap(d, bench, n=_DECON_N)
     return out.select(
         F.col("doc_id").cast("bigint"),
         F.col("n_overlap").cast("bigint"),
@@ -1178,6 +1192,9 @@ def q_cross_doc_span_dup(spark, sf_dir):
 QUERIES["cross_doc_span_dup"] = q_cross_doc_span_dup
 
 
+_STRATUM_K = 3
+
+
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-stratum quota sample (operators/sampling.
     stratified_sample): exactly min(3, |stratum|) docs per (source, lang)
@@ -1190,7 +1207,7 @@ def q_stratified_sample(spark, sf_dir):
     from ..operators.sampling import stratified_sample
 
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "lang")
-    return stratified_sample(d, ("source", "lang"), k=3).select(
+    return stratified_sample(d, ("source", "lang"), k=_STRATUM_K).select(
         "source",
         "lang",
         F.col("doc_id").cast("bigint"),
@@ -1365,7 +1382,7 @@ def q_curation_total(spark, sf_dir):
         bc,
         dedup_cfg=_SMALL_MINHASH,
         strata=("source", "lang"),
-        k_per_stratum=3,
+        k_per_stratum=_STRATUM_K,
         max_band_bucket=None,
     )
     return curated.select(
@@ -1415,7 +1432,7 @@ def q_curation_v2(spark, sf_dir):
         bc,
         dedup_cfg=_SMALL_MINHASH,
         strata=("source", "lang"),
-        k_per_stratum=3,
+        k_per_stratum=_STRATUM_K,
         max_band_bucket=None,
         blocklist=_BLOCKLIST,
         c4_lines=True,
@@ -1741,6 +1758,9 @@ def q_domain_quality(spark, sf_dir):
 QUERIES["domain_quality"] = q_domain_quality
 
 
+_SEMDEDUP_TAU = 0.3
+
+
 def q_semdedup(spark, sf_dir):
     """SemDeDup semantic pruning (operators/similarity.semdedup — Abbas
     et al. 2023): cluster by embedding, drop items whose cosine to an
@@ -1751,7 +1771,7 @@ def q_semdedup(spark, sf_dir):
     the NULL first-of-cell arm; near-1.0 duplicate planting is covered
     in tests/test_semdedup.py, the kmeans_fit production path there
     too."""
-    out = _sim.semdedup(load(spark, sf_dir, "embeddings"), tau=0.3)
+    out = _sim.semdedup(load(spark, sf_dir, "embeddings"), tau=_SEMDEDUP_TAU)
     return out.select(
         F.col("vec_id").cast("bigint"),
         F.col("cell").cast("bigint"),
@@ -1831,6 +1851,9 @@ def q_dsir_select(spark, sf_dir):
 QUERIES["dsir_select"] = q_dsir_select
 
 
+_BPE_TOP = 25
+
+
 def q_bpe_pair_counts(spark, sf_dir):
     """One BPE merge iteration's statistics (operators/tokenizer.py —
     Sennrich et al. 2016): whitespace-token vocabulary (explicit ASCII
@@ -1847,7 +1870,7 @@ def q_bpe_pair_counts(spark, sf_dir):
     top = (
         tokenizer.bpe_pair_counts(v)
         .orderBy(F.col("cnt").desc(), F.col("left").asc(), F.col("right").asc())
-        .limit(25)
+        .limit(_BPE_TOP)
     )
     from pyspark.sql.window import Window
 
@@ -1865,6 +1888,9 @@ def q_bpe_pair_counts(spark, sf_dir):
 QUERIES["bpe_pair_counts"] = q_bpe_pair_counts
 
 
+_BM25_K = 25
+
+
 def q_bm25_topk(spark, sf_dir):
     """BM25 ranked retrieval (operators/retrieval.py, Robertson & Zaragoza
     2009; Lucene's positive-idf form): top-25 docs for a three-term query
@@ -1879,7 +1905,7 @@ def q_bm25_topk(spark, sf_dir):
     from ..operators import retrieval
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    out = retrieval.bm25_topk(d, ["spark", "customer", "vector"], k=25)
+    out = retrieval.bm25_topk(d, ["spark", "customer", "vector"], k=_BM25_K)
     return out.select(
         F.col("doc_id").cast("bigint"),
         F.col("score").cast("decimal(18,6)").alias("score"),
@@ -1979,7 +2005,7 @@ def q_decontaminate_remove(spark, sf_dir):
         .alias("text"),
     )
     bench = d.where(F.col("doc_id") % 97 == 0)
-    out = decontaminate_remove(d, bench, n=8, pad=2)
+    out = decontaminate_remove(d, bench, n=_DECON_N, pad=2)
     return out.select(
         F.col("doc_id").cast("bigint"),
         "cleaned_text",

@@ -36,7 +36,15 @@ from .catalog import (
     RX_EMOJI,
     RX_SYMBOL,
     RX_URL,
+    _BM25_K,
+    _BPE_TOP,
+    _COSINE_K,
+    _DECON_N,
+    _NGRAM_MIN_COUNT,
+    _SEMDEDUP_TAU,
     _SMALL_MINHASH,
+    _STRATUM_K,
+    _VOCAB_K,
 )
 
 R = DEFAULT.rule
@@ -542,7 +550,7 @@ grams as (
   select {_LM_GRAMS}
   from toks)
 select context, word, count(*)::bigint as cnt from grams
-group by 1, 2 having count(*) >= 2"""
+group by 1, 2 having count(*) >= {_NGRAM_MIN_COUNT}"""
 
     o["ngram_perplexity"] = f"""
 with {_lm_ctes("v")},
@@ -595,7 +603,7 @@ p as (
   select a.vec_id as vec_id, b.vec_id as neighbor_id,
     list_sum(list_transform(generate_series(1, 64), i -> a.e[i] * b.e[i])) / (a.nrm * b.nrm) as cos_sim
   from n a, n b where a.vec_id <> b.vec_id),
-{_topk_sql(5)}"""
+{_topk_sql(_COSINE_K)}"""
 
     o["ann_lsh_buckets"] = f"""
 select vec_id::bigint as vec_id, ({_rp_bucket_sql()})::bigint as bucket from embeddings"""
@@ -933,13 +941,13 @@ from documents d left join comp c on d.doc_id = c.id"""
 
 def build_textanalysis_extra() -> dict[str, str]:
     o: dict[str, str] = {}
-    o["vocab_topk"] = """
+    o["vocab_topk"] = f"""
 with c as (select unnest(string_split(text, ' ')) as token from documents),
 agg as (select token, count(*) as cnt from c group by token),
 r as (select token, cnt,
         row_number() over (order by cnt desc, token asc) as rank
       from agg)
-select token, cnt::bigint as cnt, rank::bigint as rank from r where rank <= 25"""
+select token, cnt::bigint as cnt, rank::bigint as rank from r where rank <= {_VOCAB_K}"""
 
     w = HIST_BUCKET_WIDTH
     o["doc_length_histogram"] = f"""
@@ -948,7 +956,7 @@ select (length(text) // {w} * {w})::bigint as bucket_lo,
   sum(length(text))::bigint as total_chars
 from documents group by 1"""
 
-    o["decontaminate_overlap"] = """
+    o["decontaminate_overlap"] = f"""
 with docs2 as (
   select doc_id,
     case when doc_id % 13 = 0
@@ -958,8 +966,8 @@ with docs2 as (
 toks as (select doc_id, string_split(text, ' ') as t from docs2),
 grams as (
   select doc_id,
-    unnest(list_distinct(list_transform(generate_series(8, len(t)),
-      i -> ('0x' || substr(md5(array_to_string(t[i-7 : i], ' ')), 1, 15))::bigint)))
+    unnest(list_distinct(list_transform(generate_series({_DECON_N}, len(t)),
+      i -> ('0x' || substr(md5(array_to_string(t[i-{_DECON_N - 1} : i], ' ')), 1, 15))::bigint)))
       as g
   from toks),
 bench as (
@@ -1459,7 +1467,7 @@ from base join rep on rep.doc_id = base.doc_id"""
     # total order is associative; also test-asserted). h60 order key =
     # md5-of-stringified-id via the standard hex-cast pairing; (hh, doc_id)
     # ordering is tie-free because doc_id is unique.
-    o["stratified_sample"] = """
+    o["stratified_sample"] = f"""
 with h as (
   select source, lang, doc_id,
     ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint as hh
@@ -1471,7 +1479,7 @@ r as (
   from h)
 select source, lang, doc_id::bigint as doc_id,
   sample_rank::bigint as sample_rank
-from r where sample_rank <= 3"""
+from r where sample_rank <= {_STRATUM_K}"""
 
     # crawl frontier: url_dedup's canonicalization chain (same decoration)
     # rolled up per host; n_unique derived with the same subtraction order
@@ -1903,7 +1911,7 @@ sampled as (
   from cleaned)
 select doc_id::bigint as doc_id, clean_text, n_lines_removed,
   source, lang, sample_rank::bigint as sample_rank
-from sampled where sample_rank <= 3"""
+from sampled where sample_rank <= {_STRATUM_K}"""
 
     # curation_v2 = the v1 chain with (a) `d` replaced by the blocklist-
     # filtered v2-decorated prefix and (b) the C4 stage spliced between
@@ -2035,7 +2043,7 @@ pr as (
 j as (select cells.vec_id, cells.cell, pr.mpc from cells left join pr using (vec_id))
 select vec_id::bigint as vec_id, cell::bigint as cell,
        round(mpc, 6) as max_prior_cos,
-       (mpc is null or mpc < 0.3) as semdedup_keep
+       (mpc is null or mpc < {_SEMDEDUP_TAU}) as semdedup_keep
 from j"""
 
     # corpus-wide exact paragraph dedup: first occurrence in
@@ -2131,7 +2139,7 @@ from r where sel_rank <= {_DSIR_K}"""
     # Java/RE2 \s edge disagreement), single-codepoint symbols via substr
     # (codepoint-indexed in both engines), freq-weighted adjacent pairs,
     # top-25 with the trainer's tie-break.
-    o["bpe_pair_counts"] = """
+    o["bpe_pair_counts"] = f"""
 with toks as (
   select unnest(string_split_regex(coalesce(text, ''), '[ \t\n\r]+')) as token
   from documents),
@@ -2145,7 +2153,7 @@ p as (
   group by 1, 2),
 r as (select *, row_number() over (order by cnt desc, "left" asc, "right" asc) as rank from p)
 select "left", "right", cnt::bigint as cnt, rank::bigint as rank
-from r where rank <= 25"""
+from r where rank <= {_BPE_TOP}"""
 
     # BM25 top-k: portable-whitespace lowercased tokens; N/avgdl/df over
     # docs with >= 1 token; per-term contribution idf*(tf*(k1+1))/(tf + k1*
@@ -2192,7 +2200,7 @@ r as (select doc_id, score,
              row_number() over (order by score desc, doc_id asc) as rank
       from m)
 select doc_id::bigint as doc_id, score, rank::bigint as rank
-from r where rank <= 25"""
+from r where rank <= {_BM25_K}"""
 
     # Unicode canonicalization: width fold == one translate over the
     # FF01-FF5E block + U+3000 (constants imported from the Spark side so
@@ -2245,16 +2253,16 @@ with dec as (
 lst as (select doc_id, string_split(text, ' ') as l from dec),
 bg as (
   select distinct
-    ('0x' || substr(md5(array_to_string(l[i : i + 7], ' ')), 1, 15))::bigint as g
-  from lst, unnest(case when len(l) >= 8
-                        then generate_series(1, len(l) - 7)
+    ('0x' || substr(md5(array_to_string(l[i : i + {_DECON_N - 1}], ' ')), 1, 15))::bigint as g
+  from lst, unnest(case when len(l) >= {_DECON_N}
+                        then generate_series(1, len(l) - {_DECON_N - 1})
                         else [] end) as u(i)
   where doc_id % 97 = 0),
 dg as (
   select doc_id, i,
-    ('0x' || substr(md5(array_to_string(l[i : i + 7], ' ')), 1, 15))::bigint as g
-  from lst, unnest(case when len(l) >= 8
-                        then generate_series(1, len(l) - 7)
+    ('0x' || substr(md5(array_to_string(l[i : i + {_DECON_N - 1}], ' ')), 1, 15))::bigint as g
+  from lst, unnest(case when len(l) >= {_DECON_N}
+                        then generate_series(1, len(l) - {_DECON_N - 1})
                         else [] end) as u(i)),
 bad as (select dg.doc_id, dg.i from dg join bg using (g)),
 toks as (
@@ -2264,7 +2272,7 @@ mask as (
   select t.doc_id, t.j, t.tok,
     exists(select 1 from bad b
            where b.doc_id = t.doc_id
-             and t.j between b.i - 2 and b.i + 7 + 2) as m
+             and t.j between b.i - 2 and b.i + {_DECON_N - 1} + 2) as m
   from toks t),
 runs as (
   select doc_id, j, tok, m,

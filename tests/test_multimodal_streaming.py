@@ -333,9 +333,9 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
 def test_streaming_classifier_scores_match_batch(spark, tmp_path):
     """Stream-static classifier scoring: on a stream classifier_score takes
     its map-side body, which scores each row independently (weights
-    broadcast once, zero stream-side state) — the streamed scores must
-    equal the same body's batch scores exactly (per-doc float add order
-    is identical; no cross-row arithmetic exists to reorder)."""
+    broadcast once, zero stream-side state) — the streamed output must
+    equal the batch arm's (the relational exact-decimal path): the same
+    schema, and every row to the last decimal digit."""
     from chinese_corpus_cleaning_spark.operators import classifier as C
 
     in_dir = str(tmp_path / "clf_in")
@@ -346,13 +346,9 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
     w = C.nb_logodds_weights(lab, n=3, n_buckets=1 << 12).localCheckpoint(
         eager=True
     )
-    expected = {
-        (r["id"], round(r["margin"], 9), r["clf_keep"])
-        for r in C._classifier_score_mapside(
-            lab, w, 3, 1 << 12, 0.0, "doc_id", "text"
-        ).collect()
-    }
-    assert expected and any(k for _, _, k in expected)
+    batch = C.classifier_score(lab, w, n=3, n_buckets=1 << 12)
+    expected = sorted(map(tuple, batch.collect()))
+    assert expected and any(r[-1] for r in expected)
 
     lab.write.parquet(in_dir)
     stream = (
@@ -363,6 +359,7 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
         .parquet(in_dir)
     )
     scored = C.classifier_score(stream, w, n=3, n_buckets=1 << 12)
+    assert scored.dtypes == batch.dtypes
     q = (
         scored.writeStream.format("memory")
         .queryName("ccc_clf_stream")
@@ -371,8 +368,6 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    got = {
-        (r["id"], round(r["margin"], 9), r["clf_keep"])
-        for r in spark.sql("select * from ccc_clf_stream").collect()
-    }
-    assert got == expected
+    got = spark.sql("select * from ccc_clf_stream")
+    assert got.dtypes == batch.dtypes
+    assert sorted(map(tuple, got.collect())) == expected

@@ -127,6 +127,20 @@ def test_empty_terms_raise(spark, docs):
         bm25_topk(docs, [""])
 
 
+def test_batch_query_without_terms_returns_no_rows(spark):
+    """One query with no usable term must not fail the whole batch: it
+    returns no rows and the other queries score as on their own."""
+    from __spark_entry__ import SF0001
+
+    d = spark.read.parquet(f"{SF0001}/documents.parquet")
+    got = bm25_topk_batch(d, {"q1": ["the", "data"], "q3": []}, k=5)
+    rows = got.collect()
+    assert rows and {r["query_id"] for r in rows} == {"q1"}
+    alone = bm25_topk_batch(d, {"q1": ["the", "data"]}, k=5).collect()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, alone))
+    assert bm25_topk_batch(d, {"q3": [""]}, k=5).count() == 0
+
+
 def test_batch_matches_single(spark, docs):
     queries = {
         "q_a": ["spark", "table"],
