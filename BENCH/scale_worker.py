@@ -80,15 +80,15 @@ def main(cpus: int, n_docs: int) -> None:
         .collect(),
     )
 
-    # round-7 supervised axis: NB log-odds train (one relational pass over
-    # hashed char 3-grams) + broadcast exact-decimal scoring, both over the
-    # full corpus — the explode/agg + broadcast-join shapes under scaling
+    # round-7 supervised axis: NB log-odds train (per-batch hashed char
+    # 3-gram class counts -> one agg) + map-only exact-decimal scoring
+    # against broadcast weights, both over the full corpus
     def _clf():
         from chinese_corpus_cleaning_spark.operators import classifier
 
         lab = gen.label_docs(docs)
-        w = classifier.nb_logodds_weights(lab, n=3, n_buckets=1 << 16)
-        classifier.classifier_score(lab, w, n=3, n_buckets=1 << 16).agg(
+        w = classifier.nb_logodds_weights(lab, n_buckets=1 << 16)
+        classifier.classifier_score(lab, w, n_buckets=1 << 16).agg(
             F.count(F.lit(1)), F.sum(F.col("clf_keep").cast("long"))
         ).collect()
 

@@ -19,10 +19,11 @@ Stages:
                    n-gram ppl + RP-LSH-bucketed cluster score) — the
                    CartesianProduct-free plan that runs at 100 TB
   quality_classifier  the supervised quality axis (operators/classifier.py):
-                   NB log-odds weights trained relationally on the labeled
-                   generated corpus (explode -> agg over hashed char
-                   3-grams), then the broadcast exact-decimal scorer over
-                   the same corpus — train + score, both distributed
+                   NB log-odds weights trained on the labeled generated
+                   corpus (per-Arrow-batch hashed char 3-gram class counts
+                   -> one agg), then the map-only exact-decimal scorer
+                   against broadcast weights over the same corpus — train
+                   + score, both distributed
   paragraph_dedup  corpus-wide exact paragraph dedup over the generated
                    corpus (slim-hash winner agg + map-side rebuild)
   semdedup         SemDeDup production path: kmeans_fit (k=16, 2 Lloyd
@@ -185,8 +186,8 @@ def run_bench(spark, sf_dir: str) -> dict[str, float]:
         from chinese_corpus_cleaning_spark.sources.gen import label_docs
 
         lab = label_docs(gen_docs)
-        w = classifier.nb_logodds_weights(lab, n=3, n_buckets=1 << 14)
-        classifier.classifier_score(lab, w, n=3, n_buckets=1 << 14).agg(
+        w = classifier.nb_logodds_weights(lab, n_buckets=1 << 14)
+        classifier.classifier_score(lab, w, n_buckets=1 << 14).agg(
             F.count(F.lit(1)), F.sum(F.col("clf_keep").cast("long"))
         ).collect()
 

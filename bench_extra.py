@@ -91,8 +91,8 @@ def stage_dfs(spark, sf_dir: str):
         from chinese_corpus_cleaning_spark.sources.gen import label_docs
 
         lab = label_docs(gen_docs)
-        w = classifier.nb_logodds_weights(lab, n=3, n_buckets=1 << 14)
-        return classifier.classifier_score(lab, w, n=3, n_buckets=1 << 14)
+        w = classifier.nb_logodds_weights(lab, n_buckets=1 << 14)
+        return classifier.classifier_score(lab, w, n_buckets=1 << 14)
 
     def _curation_total():
         from chinese_corpus_cleaning_spark.plans.curation import curation_run

@@ -37,10 +37,10 @@ import json
 import os
 
 from .config import DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY, PipelineConfig
-from .functions.dfa import build_trie, scrub
+from .functions.dfa import scrub
 from .functions.feature import evaluate_features
 from .functions.textstats import check_reasons, evaluate_rules
-from .sources.wordlists import ALL_SENSITIVE_WORDS, load_words
+from .sources.wordlists import full_trie
 
 
 def _write_json(path: str, obj: dict) -> None:
@@ -74,7 +74,7 @@ class TextQualityFilter:
         if config:
             self.config.update(config)
         self._spark = spark
-        self._trie = build_trie(load_words(ALL_SENSITIVE_WORDS))
+        self._trie = full_trie()
 
     # ------------------------------------------------------------- single-doc
 

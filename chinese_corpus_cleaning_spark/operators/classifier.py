@@ -10,35 +10,32 @@ curated corpus" pages. Pure numpy/Arrow + native Spark exprs — no model
 library needed, and character n-grams need no segmenter (the right
 feature unit for Chinese).
 
-Three pieces, each independently usable:
+Every piece reads its text through ONE gram kernel, :func:`_gram_bags`:
+a text's char ``GRAM_N``-gram bag hashed with the repo's cross-engine
+md5-h60 primitive (functions/hashing.py), so a DuckDB oracle can
+recompute every bucket id bit-for-bit. It runs inside one Arrow pass per
+batch (CIDR'22, "Accelerating Python UDFs in Vectorized Query
+Execution"): no gram row is ever exploded into the plan.
 
-* :func:`hash_ngram_features` — (id, bucket, cnt) char-n-gram counts,
-  hashed with the repo's cross-engine md5-h60 primitive (so a DuckDB
-  oracle can recompute every bucket id bit-for-bit).
+* :func:`hash_ngram_features` — (id, bucket, cnt) char-n-gram counts.
 * :func:`nb_logodds_weights` — closed-form Naive-Bayes log-odds weights
   (the NB-SVM / fastText-init feature weighting, Wang & Manning 2012):
-  ONE relational pass, no iteration — fully SQL-expressible, which is
+  per-batch class counts, one bucket-keyed aggregation, no iteration —
   what the driver-gate query verifies end-to-end (train AND score).
 * :func:`train_logreg` — logistic regression by batch gradient descent:
-  the feature table is built once (explode -> agg, localCheckpointed),
-  each iteration broadcasts the weight vector, computes margins with one
-  agg, and reduces gradients back to <= n_buckets rows. The LABELED set
-  is the small side by construction (CCNet trains on a Wikipedia-scale
-  sample, ~10^5-10^6 docs); the 100 TB path is :func:`classifier_score`,
+  the feature table is built once (localCheckpointed), each iteration
+  broadcasts the weight vector, computes margins with one agg, and
+  reduces gradients back to <= n_buckets rows. The LABELED set is the
+  small side by construction (CCNet trains on a Wikipedia-scale sample,
+  ~10^5-10^6 docs); the corpus-scale path is :func:`classifier_score`,
   which is iteration-free.
-* :func:`classifier_score` — margin/probability/keep per document:
-  hashed counts joined against the BROADCAST weight table, one slim
-  groupBy(id); weights are quantized to decimal(18,6) so the margin sum
-  is EXACT decimal arithmetic (the repo's cross-engine determinism
-  doctrine — no float-order sensitivity anywhere in the scoring path).
-
-Scale shape (100 TB): scoring explodes grams map-side, partially
-aggregates (id, bucket) within the scan partition (rows for one doc never
-span partitions before the shuffle, so the map-side combine collapses to
-~distinct-gram counts), broadcasts the <= n_buckets weight rows, and
-ships only (id, partial-margin) into the final slim agg. No text crosses
-a shuffle; no per-row Python; the whole path is native exprs inside
-whole-stage codegen.
+* :func:`classifier_score` — margin/probability/keep per document: a
+  map-only pass against a broadcast dense weight vector; weights are
+  quantized to decimal(18, ``WEIGHT_DP``) so the margin sum is EXACT
+  decimal arithmetic (the repo's cross-engine determinism doctrine — no
+  float-order sensitivity anywhere in the scoring path). A batch frame
+  and a stream take the same body (one semantics for both — "One SQL to
+  Rule Them All", SIGMOD'19).
 
 The reference has no learned classifier (its quality gate is rules +
 perplexity); this operator is part of the beyond-reference LLM-pipeline
@@ -49,7 +46,11 @@ hashing-trick formulation (Weinberger et al. 2009).
 from __future__ import annotations
 
 import math
+from collections import Counter
 from dataclasses import dataclass, field
+from decimal import Decimal
+from itertools import repeat
+from operator import mul
 
 import numpy as np
 import pandas as pd
@@ -57,7 +58,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import h60_sql
+from ..functions.hashing import h60
 
 __all__ = [
     "hash_ngram_features",
@@ -68,23 +69,38 @@ __all__ = [
 ]
 
 # Gated parameters, one definition with the DuckDB oracles (DSIR composes
-# these kernels): the char-gram width and the NB Laplace smoothing alpha
+# these kernels): the char-gram width, the NB Laplace smoothing alpha and
+# the decimal places the scoring weights are quantized to
 GRAM_N = 3
 NB_ALPHA = 1.0
+WEIGHT_DP = 6
 
 
-def _gram_expr(text_col: str, n: int) -> str:
-    """All char n-grams WITH multiplicity (bag, not set — counts carry
-    signal the dedup shingle sets deliberately drop). Texts shorter than n
-    contribute the whole text as one gram (shingle_explode convention);
-    the case arm guards the CLAUDE.md sequence(n, size) descent landmine.
-    """
-    t = f"coalesce({text_col}, '')"
-    return (
-        f"case when length({t}) < {n} then array({t}) "
-        f"else transform(sequence(1, length({t}) - {n} + 1), "
-        f"i -> substring({t}, i, {n})) end"
-    )
+def _gram_bags(texts, n_buckets: int):
+    """THE gram kernel: for each text, its char ``GRAM_N``-gram bag as
+    (buckets, counts) lists, one entry per distinct gram (two grams that
+    collide share a bucket id twice; every consumer sums). Multiplicity is
+    kept (a bag, not the dedup shingle set); NULL reads as ''; a text
+    shorter than ``GRAM_N`` is one whole-text gram. bucket =
+    ``h60(gram) % n_buckets`` — the DuckDB twin is
+    ``('0x'||substr(md5(g),1,15))::bigint % n_buckets`` — memoized over
+    the call, i.e. one Arrow batch (web text repeats grams heavily both
+    within and across docs)."""
+    memo: dict[str, int] = {}
+    for t in texts:
+        t = t or ""
+        grams = Counter(
+            (t,)
+            if len(t) < GRAM_N
+            else [t[j : j + GRAM_N] for j in range(len(t) - GRAM_N + 1)]
+        )
+        buckets = []
+        for g in grams:
+            b = memo.get(g)
+            if b is None:
+                b = memo[g] = h60(g) % n_buckets
+            buckets.append(b)
+        yield buckets, list(grams.values())
 
 
 def hash_ngram_features(
@@ -94,69 +110,97 @@ def hash_ngram_features(
     text_col: str = "text",
 ) -> DataFrame:
     """(id, bucket, cnt): char ``GRAM_N``-gram occurrence counts hashed into
-    ``n_buckets`` via md5-h60 (cross-engine reproducible; DuckDB twin is
-    ``('0x'||substr(md5(g),1,15))::bigint % n_buckets``). NULL text
-    behaves as '' (one empty gram). The explode and the (id, bucket)
-    partial aggregation both run inside the scan partition — the shuffle
-    carries only the collapsed count rows."""
+    ``n_buckets`` by :func:`_gram_bags`, one Arrow pass over the scan; the
+    (id, bucket) sum then merges colliding grams and duplicate ids. Text
+    never crosses a shuffle — only the count rows do."""
+    ids = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+
+    def features(batches):
+        for batch in batches:
+            rows, buckets, counts = [], [], []
+            bags = _gram_bags(batch.column(1).to_pylist(), n_buckets)
+            for i, (bs, cs) in enumerate(bags):
+                rows.extend(repeat(i, len(bs)))
+                buckets += bs
+                counts += cs
+            yield pa.record_batch(
+                [
+                    batch.column(0).take(pa.array(rows, pa.int64())),
+                    pa.array(buckets, pa.int32()),
+                    pa.array(counts, pa.int64()),
+                ],
+                names=["id", "bucket", "cnt"],
+            )
+
     return (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.expr(_gram_expr(text_col, GRAM_N))).alias("gram"),
-        )
-        .select(
-            "id",
-            F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
+        ids.mapInArrow(
+            features, ids.schema[:1].add("bucket", "integer").add("cnt", "long")
         )
         .groupBy("id", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
 def nb_logodds_weights(
     labeled: DataFrame,
-    n: int = GRAM_N,
     n_buckets: int = 1 << 18,
-    id_col: str = "doc_id",
     text_col: str = "text",
     label_col: str = "label",
 ) -> DataFrame:
-    """Closed-form Naive-Bayes log-odds weights over hashed char n-grams:
+    """Closed-form Naive-Bayes log-odds weights over hashed char
+    ``GRAM_N``-grams:
 
         w_j = ln((c1_j + a) / (T1 + a*B)) - ln((c0_j + a) / (T0 + a*B))
 
     with c/T the per-bucket / total gram counts of the positive (label
     truthy) and negative classes, B = n_buckets and a = ``NB_ALPHA``
-    (Laplace smoothing). One
-    explode -> agg pass, no iteration: the multinomial-NB decision rule IS
-    a linear model over counts (Wang & Manning 2012), so these weights
-    plug directly into :func:`classifier_score`. Buckets never seen in
-    training are absent (scored as 0 by the left join). Returns (bucket, w).
+    (Laplace smoothing); a NULL label counts in neither class. No
+    iteration: the multinomial-NB decision rule IS a linear model over
+    counts (Wang & Manning 2012), so these weights plug directly into
+    :func:`classifier_score`. Returns (bucket, w) for every bucket some
+    training gram hit; buckets never seen are absent (they score 0).
 
-    Physical shape (round 8): the label rides the gram explode, so the
-    whole training pass is ONE hash aggregation keyed on bucket — the
-    previous form materialized the per-doc (id, bucket, cnt) table
-    (an extra corpus-sized shuffle) and joined the labels back on id (an
-    extra join) just to re-derive the same per-class occurrence totals.
-    c1/c0 are integer occurrence counts either way, so the weights are
-    bit-identical (oracle-parity-pinned)."""
+    Physical shape: each Arrow batch folds its :func:`_gram_bags` into
+    per-class ``np.bincount``s and emits only the buckets it hit as
+    (bucket, c1, c0); ONE bucket-keyed aggregation sums them. c1/c0 are
+    integer occurrence counts, so the ``ln`` inputs — and the weights —
+    do not depend on how the batches fall (oracle-parity-pinned)."""
     from .partitioning import ensure_min_parallelism
 
-    y = F.col(label_col).cast("boolean")
-    grams = ensure_min_parallelism(labeled).select(
-        y.alias("__y"),
-        F.explode(F.expr(_gram_expr(text_col, n))).alias("gram"),
-    ).select(
-        "__y",
-        F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
-        .cast("int")
-        .alias("bucket"),
-    )
-    per = grams.groupBy("bucket").agg(
-        F.sum(F.when(F.col("__y"), F.lit(1)).otherwise(0).cast("bigint")).alias("c1"),
-        F.sum(F.when(~F.col("__y"), F.lit(1)).otherwise(0).cast("bigint")).alias("c0"),
+    def class_counts(batches):
+        for batch in batches:
+            by_y = {True: ([], []), False: ([], []), None: ([], [])}
+            bags = _gram_bags(batch.column(1).to_pylist(), n_buckets)
+            for y, (bs, cs) in zip(batch.column(0).to_pylist(), bags):
+                b, c = by_y[y]
+                b += bs
+                c += cs
+            # float bincount sums of integer counts: exact below 2^53. A
+            # NULL-label doc counts in neither class, but its grams still
+            # make their buckets present (with c1 = c0 = 0)
+            c1, c0, c_null = (
+                np.bincount(
+                    np.array(b, dtype=np.int64), np.array(c, dtype=np.int64),
+                    n_buckets,
+                ).astype(np.int64)
+                for b, c in by_y.values()
+            )
+            hit = np.flatnonzero(c1 + c0 + c_null)
+            yield pa.record_batch(
+                [pa.array(hit.astype(np.int32)), pa.array(c1[hit]),
+                 pa.array(c0[hit])],
+                names=["bucket", "c1", "c0"],
+            )
+
+    per = (
+        ensure_min_parallelism(labeled)
+        .select(
+            F.col(label_col).cast("boolean").alias("y"),
+            F.col(text_col).alias("text"),
+        )
+        .mapInArrow(class_counts, "bucket int, c1 bigint, c0 bigint")
+        .groupBy("bucket")
+        .agg(F.sum("c1").alias("c1"), F.sum("c0").alias("c0"))
     )
     tot = per.agg(
         F.sum("c1").alias("t1"), F.sum("c0").alias("t0")
@@ -302,187 +346,80 @@ def train_logreg(
 def classifier_score(
     docs: DataFrame,
     weights: DataFrame,
-    n: int = GRAM_N,
     n_buckets: int = 1 << 18,
     bias: float = 0.0,
-    quantize: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Score every document with a linear model over hashed char n-grams:
-    margin = sum(cnt_j * w_j) + bias, clf_score = sigmoid(margin),
-    clf_keep = margin > 0.
+    """Score every document with a linear model over hashed char
+    ``GRAM_N``-grams: margin = sum(cnt_j * w_j) + bias, clf_score =
+    sigmoid(margin), clf_keep = margin > 0.
 
     ``weights`` is any (bucket, w) table (:func:`nb_logodds_weights`
-    output or ``LogRegModel.to_df``); it is broadcast (<= n_buckets rows
-    by construction). Weights are quantized to decimal(18, ``quantize``)
-    BEFORE the per-doc sum, so the margin is exact decimal arithmetic —
-    bit-identical across engines and partitionings regardless of
-    float-add order (CLAUDE.md decimal-sums doctrine; quantize=None
-    keeps raw double weights when exactness is not needed). Grams that
-    miss the weight table contribute 0 (left join + coalesce); every
-    input doc appears in the output (NULL text is one '' gram, so the
-    gram table covers all ids).
+    output or ``LogRegModel.to_df``), <= n_buckets rows by construction
+    (both trainers group by bucket, so no bucket repeats). It is quantized
+    to decimal(18, ``WEIGHT_DP``) in Spark, collected, and broadcast once
+    as a dense vector of integer units of 10^-WEIGHT_DP (8 * n_buckets
+    bytes, 2 MiB at the default). Each doc's margin is then the exact
+    integer sum over its :func:`_gram_bags`, returned as the decimal
+    Spark's sum of decimal(18, WEIGHT_DP) values would give:
+    bit-identical across engines, partitionings and float-add orders
+    (CLAUDE.md decimal-sums doctrine). Grams whose bucket has no weight
+    contribute 0; every input doc appears in the output (NULL text is one
+    '' gram).
 
-    The physical shape follows ``docs.isStreaming``:
-
-    * batch — explode -> broadcast weight join -> slim groupBy(id) (one
-      shuffle; map-side partials collapse to one row per doc per
-      partition). Exact decimal margins, fully SQL-expressible: the
-      driver-gate/oracle form, so the cross-engine-exact path is what the
-      gated catalog query runs.
-    * stream — the map-side body (:func:`_classifier_score_mapside`), the
-      only arm that runs on a stream (a streaming aggregation would need
-      state and an output mode): weights collapse to one dense numpy
-      vector (8 * n_buckets bytes, 2 MiB at the default), broadcast once,
-      and each doc scores inside a single Arrow batch pass. No shuffle, no
-      join — stateless per row, so stream-static scoring of an arriving
-      crawl against frozen weights. The quantized weights ship as
-      integer units and sum exactly, so a stream returns the batch arm's
-      schema and values (parity pinned in
-      tests/test_multimodal_streaming.py).
+    One body for a batch frame and a stream: a map over the scan with no
+    shuffle, no join and no state, so stream-static scoring of an
+    arriving crawl against frozen weights returns what the batch does
+    (parity pinned in tests/test_multimodal_streaming.py).
+    ``ensure_min_parallelism`` spreads a one-partition batch input over
+    the cores; a stream passes through it.
 
     Returns a SLIM labels frame (id, margin, clf_score, clf_keep) — the
-    dedup_representatives contract: text never enters the operator's
-    shuffles (grams explode and partially aggregate inside the scan
-    partition; only (id, bucket, cnt) and (id, margin) rows move).
-    Joining scores back onto full documents would co-shuffle the text
-    bodies; filter with a broadcast/semi join on the keep ids instead,
-    or join the slim frame against a slim projection.
+    dedup_representatives contract. Joining scores back onto full
+    documents would co-shuffle the text bodies; filter with a
+    broadcast/semi join on the keep ids instead, or join the slim frame
+    against a slim projection.
     """
-    if docs.isStreaming:
-        return _classifier_score_mapside(
-            docs, weights, n, n_buckets, bias, id_col, text_col, quantize
-        )
-    # Round-8 physical shape: gram occurrences broadcast-join the weight
-    # table directly and sum per id — ONE shuffle whose map-side partials
-    # collapse to one row per doc per partition. The previous form first
-    # aggregated the (id, bucket, cnt) feature table (an extra corpus-wide
-    # shuffle keyed on (id, bucket)) and then summed cnt * w; decimal
-    # addition is exact and order-free, so sum-over-occurrences of w equals
-    # sum-over-buckets of cnt * w to the last digit (oracle-parity-pinned;
-    # for quantize=None the float margin was already shuffle-order-
-    # dependent, unchanged by this).
-    from .partitioning import ensure_min_parallelism
-
-    grams = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.expr(_gram_expr(text_col, n))).alias("gram"),
-    ).select(
-        "id",
-        F.pmod(F.expr(h60_sql("gram")), F.lit(n_buckets))
-        .cast("int")
-        .alias("bucket"),
-    )
-    wq, zero, bias_term = _weight_terms(weights, bias, quantize)
-    margins = (
-        grams.join(F.broadcast(wq), "bucket", "left")
-        .groupBy("id")
-        .agg(F.sum(F.coalesce(F.col("__wq"), zero)).alias("__m"))
-    )
-    return _scored(margins, zero, bias_term)
-
-
-def _weight_terms(weights: DataFrame, bias: float, quantize: int | None):
-    """(bucket, __wq) weight table, the zero and the bias term, all
-    decimal(18, quantize) — or double when ``quantize`` is None."""
-    if quantize is not None:
-        dec = f"decimal(18,{quantize})"
-        wcol = F.round(F.col("w"), quantize).cast(dec)
-        zero = F.lit(0).cast(dec)
-        bias_term = F.lit(str(round(bias, quantize))).cast(dec)
-    else:
-        wcol = F.col("w")
-        zero = F.lit(0.0)
-        bias_term = F.lit(float(bias))
-    return weights.select("bucket", wcol.alias("__wq")), zero, bias_term
-
-
-def _scored(margins: DataFrame, zero, bias_term) -> DataFrame:
-    """(id, __m = summed gram weights) -> the slim labels frame."""
-    margin = F.coalesce(F.col("__m"), zero) + bias_term
-    return margins.select(
-        "id",
-        margin.alias("margin"),
-        (
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-(margin.cast("double"))))
-        ).alias("clf_score"),
-        (margin > zero).alias("clf_keep"),
-    )
-
-
-def _classifier_score_mapside(
-    docs: DataFrame,
-    weights: DataFrame,
-    n: int,
-    n_buckets: int,
-    bias: float,
-    id_col: str,
-    text_col: str,
-    quantize: int | None = None,
-) -> DataFrame:
-    """classifier_score's map-side body (the streaming arm): broadcast a
-    dense weight vector, score in one Arrow pass over the scan (measured,
-    BENCH/BASELINE.md round 7, at 100k docs local[8], min-of-3: 3.04 s vs
-    6.23 s for the relational-decimal arm, zero shuffles). The weight
-    collect is <= n_buckets rows by the (bucket, w) contract (duplicate
-    bucket rows would be last-write-wins here but join-duplicated in the
-    relational path — both trainers groupBy(bucket), so neither emits
-    them). Gram bag semantics match :func:`_gram_expr` exactly: NULL
-    text scores as '', texts shorter than n contribute the whole text as
-    one gram; the hash is the repo h60 (functions/hashing.py) mod
-    n_buckets, and the gram's weight is memoized per Arrow batch (web
-    text repeats grams heavily both within and across docs).
-
-    With ``quantize`` the weights ship as integer units of 10^-quantize
-    (the relational arm's decimal(18, quantize) weights, exactly) and
-    each doc's sum is exact integer arithmetic, returned as the decimal
-    Spark's sum gives that arm: the same schema and values as the batch
-    arm. Without it, margins are float in per-doc add order."""
-    from collections import Counter
-    from decimal import Decimal
-
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.hashing import h60
+    from .partitioning import ensure_min_parallelism
 
-    spark = docs.sparkSession
-    wq, zero, bias_term = _weight_terms(weights, bias, quantize)
-    if quantize is None:
-        units, dtype, sum_type = F.col("__wq"), "float64", "double"
-    else:
-        units = (F.col("__wq") * F.lit(10**quantize)).cast("bigint")
-        # Spark types sum(decimal(p, s)) as decimal(p + 10, s)
-        dtype, sum_type = "int64", f"decimal(28,{quantize})"
-    wp = wq.select("bucket", units.alias("u")).toArrow()
-    w_np = np.zeros(n_buckets, dtype=dtype)
+    dec = f"decimal(18,{WEIGHT_DP})"
+    units = (
+        F.round(F.col("w"), WEIGHT_DP).cast(dec) * F.lit(10**WEIGHT_DP)
+    ).cast("bigint")
+    wp = weights.select("bucket", units.alias("u")).toArrow()
+    w_np = np.zeros(n_buckets, dtype="int64")
     w_np[wp["bucket"].to_numpy().astype("int64")] = wp["u"].to_numpy()
-    w_bc = spark.sparkContext.broadcast(w_np)
+    w_bc = docs.sparkSession.sparkContext.broadcast(w_np)
 
-    @pandas_udf(sum_type)
-    def _weight_sum(texts: pd.Series) -> pd.Series:
-        w = w_bc.value
-        memo: dict[str, int | float] = {}  # gram -> its weight
-        out = []
-        for t in texts:
-            t = t or ""
-            grams = (
-                (t,)
-                if len(t) < n
-                else (t[j : j + n] for j in range(len(t) - n + 1))
-            )
-            m = 0
-            for g, c in Counter(grams).items():
-                wg = memo.get(g)
-                if wg is None:
-                    # THE repo gram hash, one def; .item(): a python
-                    # float, or an exact python int
-                    wg = memo[g] = w[h60(g) % n_buckets].item()
-                m += wg * c
-            out.append(m if quantize is None else Decimal(m).scaleb(-quantize))
-        return pd.Series(out, dtype="float64" if quantize is None else object)
+    # Spark types sum(decimal(18, s)) as decimal(28, s)
+    @pandas_udf(f"decimal(28,{WEIGHT_DP})")
+    def weight_sum(texts: pd.Series) -> pd.Series:
+        w = w_bc.value.tolist()  # exact python ints: no int64 wrap-around
+        return pd.Series(
+            [
+                Decimal(sum(map(mul, map(w.__getitem__, bs), cs))).scaleb(
+                    -WEIGHT_DP
+                )
+                for bs, cs in _gram_bags(texts, n_buckets)
+            ],
+            dtype=object,
+        )
 
-    margins = docs.select(
-        F.col(id_col).alias("id"), _weight_sum(F.col(text_col)).alias("__m")
+    margin = F.col("__m") + F.lit(str(round(bias, WEIGHT_DP))).cast(dec)
+    return (
+        ensure_min_parallelism(docs)
+        .select(
+            F.col(id_col).alias("id"), weight_sum(F.col(text_col)).alias("__m")
+        )
+        .select(
+            "id",
+            margin.alias("margin"),
+            (
+                F.lit(1.0) / (F.lit(1.0) + F.exp(-(margin.cast("double"))))
+            ).alias("clf_score"),
+            (margin > 0).alias("clf_keep"),
+        )
     )
-    return _scored(margins, zero, bias_term)

@@ -114,15 +114,21 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # ------------------------------------------------------------- minhash + LSH
 
 
-def _shingle_hash_expr(text_col: str, k: int) -> str:
-    """array<bigint> of (h60(shingle) % P) over distinct char k-shingles."""
-    from ..functions.hashing import MINHASH_P
-
-    shingles = (
+def _shingles_expr(text_col: str, k: int) -> str:
+    """array<string> of the distinct char k-shingles of ``text_col``; a
+    text shorter than k is one whole-text shingle."""
+    return (
         f"case when length({text_col}) < {k} then array({text_col}) "
         f"else array_distinct(transform(sequence(1, length({text_col}) - {k} + 1),"
         f" i -> substring({text_col}, i, {k}))) end"
     )
+
+
+def _shingle_hash_expr(text_col: str, k: int) -> str:
+    """array<bigint> of (h60(shingle) % P) over distinct char k-shingles."""
+    from ..functions.hashing import MINHASH_P
+
+    shingles = _shingles_expr(text_col, k)
     return f"transform({shingles}, s -> pmod({h60_sql('s')}, {MINHASH_P}))"
 
 
@@ -685,18 +691,7 @@ def shingle_explode(docs: DataFrame, k: int, id_col: str = "doc_id", text_col: s
     (id, shingle). Short texts contribute the whole text as one shingle."""
     return docs.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.when(
-                F.length(text_col) < k, F.array(F.col(text_col))
-            ).otherwise(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, length({text_col}) - {k} + 1),"
-                        f" i -> substring({text_col}, i, {k}))"
-                    )
-                )
-            )
-        ).alias("shingle"),
+        F.explode(F.expr(_shingles_expr(text_col, k))).alias("shingle"),
     )
 
 

@@ -27,8 +27,8 @@ stratified sampler established (min-k of a total order is associative).
 
 Scale shape (100 TB raw, small target): the target corpus is the small
 side by construction; the log-ratio table is <= n_buckets rows and
-broadcasts; raw-doc scoring explodes grams map-side and ships only
-(id, bucket, cnt) partials; selection moves (id, key) pairs — per salt
+broadcasts; raw-doc scoring is a map-only Arrow pass that ships only
+(id, margin) rows; selection moves (id, key) pairs — per salt
 bucket top-k first (window over n_salt bounded partitions), then a final
 window over <= n_salt * k survivor rows. Text never keys a shuffle.
 """
@@ -55,34 +55,22 @@ def dsir_logratio_weights(
     raw: DataFrame,
     target: DataFrame,
     n_buckets: int = 1 << 18,
-    id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """(bucket, w): the Laplace-smoothed per-bucket log importance ratio
     ln((t_b + 1)/(T + B)) - ln((r_b + 1)/(R + B)) over hashed char
     n-grams (classifier.GRAM_N, classifier.NB_ALPHA) — DSIR's
     hashed-n-gram importance estimator, computed as
-    :func:`nb_logodds_weights` with target=positive / raw=negative.
-    Ids are prefixed per side before the union so a doc present in both
-    corpora contributes its grams to both distributions (DSIR's raw pool
-    legitimately contains target-like docs)."""
-    lab = target.select(
-        F.concat(F.lit("t|"), F.col(id_col).cast("string")).alias("__did"),
-        F.col(text_col).alias("__t"),
-        F.lit(1).alias("__y"),
-    ).unionByName(
-        raw.select(
-            F.concat(F.lit("r|"), F.col(id_col).cast("string")).alias("__did"),
-            F.col(text_col).alias("__t"),
-            F.lit(0).alias("__y"),
-        )
+    :func:`nb_logodds_weights` with target=positive / raw=negative. Each
+    side enters the union as its own rows with its own label, so a doc
+    present in both corpora contributes its grams to both distributions
+    (DSIR's raw pool legitimately contains target-like docs)."""
+    t = F.col(text_col).alias("__t")
+    lab = target.select(t, F.lit(1).alias("__y")).unionByName(
+        raw.select(t, F.lit(0).alias("__y"))
     )
     return nb_logodds_weights(
-        lab,
-        n_buckets=n_buckets,
-        id_col="__did",
-        text_col="__t",
-        label_col="__y",
+        lab, n_buckets=n_buckets, text_col="__t", label_col="__y"
     )
 
 
@@ -118,7 +106,7 @@ def dsir_select(
     materialize text (the slim-labels contract; joining text here would
     co-shuffle document bodies)."""
     if weights is None:
-        weights = dsir_logratio_weights(raw, target, n_buckets, id_col, text_col)
+        weights = dsir_logratio_weights(raw, target, n_buckets, text_col)
     scored = classifier_score(
         raw, weights, n_buckets=n_buckets, id_col=id_col, text_col=text_col
     ).select(F.col("id").alias(id_col), F.col("margin").alias("logw"))

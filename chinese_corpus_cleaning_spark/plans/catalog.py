@@ -47,9 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEXITY, DedupConfig
-from ..functions.dfa import build_trie
 from ..operators import dedup, perplexity, similarity, textanalysis
 from ..operators.quality import scrub_udf, with_quality
+from ..sources.wordlists import shared_trie_broadcast
 
 _SMALL_MINHASH = DedupConfig(
     similarity_threshold=0.5, shingle_size=5, num_hashes=16, num_bands=4
@@ -180,7 +180,7 @@ def q_scrub_text(spark, sf_dir):
     """DFA scrub (sensitive_filter.py:72-104) through the REAL pandas UDF
     with the overlap-free English lexicon; oracle = chained replace."""
     d = load(spark, sf_dir, "documents")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     return d.select("doc_id", scrub_udf(bc)(F.col("text")).alias("scrubbed_text"))
 
 
@@ -188,7 +188,7 @@ def q_feature_eval(spark, sf_dir):
     """Feature density + banded score (feature_words.py:170-314) through the
     REAL quality UDF with the English lexicon."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     out = with_quality(d, bc, DEFAULT)
     return out.select(
         "doc_id",
@@ -203,7 +203,7 @@ def q_quality_keep(spark, sf_dir):
     """FLAGSHIP: full keep/drop decision (main.py:135-251) through the real
     pipeline UDF; the oracle recomputes every partial score in SQL."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     out = with_quality(d, bc, DEFAULT)
     return out.select(
         "doc_id",
@@ -421,7 +421,7 @@ def q_quality_keep_full(spark, sf_dir):
     from ..operators import perplexity as _ppl
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     base = with_quality(d, bc, DEFAULT).select(
         "doc_id", "rule_score", "feature_score"
     )
@@ -605,7 +605,7 @@ def q_quality_keep_full_ann(spark, sf_dir):
     from ..operators import perplexity as _ppl
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     base = with_quality(d, bc, DEFAULT).select(
         "doc_id", "rule_score", "feature_score"
     )
@@ -857,7 +857,7 @@ def q_quality_percentiles(spark, sf_dir):
     Spark percentile() vs DuckDB quantile_cont — both R-7 interpolation over
     bit-identical scores."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     scored = with_quality(d, bc, DEFAULT).select("quality_score")
     return scored.agg(
         *[
@@ -1284,7 +1284,7 @@ def q_pii_scrub(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_PII_DECOR).alias("text")
     )
-    bc = spark.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(spark, EN_LEXICON)
     scrubbed = d.select(
         "doc_id", scrub_udf(bc)(F.col("text")).alias("scrubbed_text")
     )
@@ -1376,7 +1376,7 @@ def q_curation_total(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_CURATION_DECOR).alias("text"), "source", "lang"
     )
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     curated, _obs = curation_run(
         d,
         bc,
@@ -1426,7 +1426,7 @@ def q_curation_v2(spark, sf_dir):
         "source",
         "lang",
     )
-    bc = d.sparkSession.sparkContext.broadcast(build_trie(EN_LEXICON))
+    bc = shared_trie_broadcast(d.sparkSession, EN_LEXICON)
     curated, _obs = curation_run(
         d,
         bc,
@@ -1642,8 +1642,8 @@ def q_quality_classifier(spark, sf_dir):
     log-odds weights over hashed char 3-grams (md5-h60 pmod 4096) trained
     IN-QUERY on the parity-labeled decoration, then the exact-decimal
     margin scorer. Verifies the full supervised path end-to-end: feature
-    hashing, closed-form training, broadcast-join scoring. The iterative
-    logistic trainer shares every relational kernel with this path and is
+    hashing, closed-form training, broadcast-weight scoring. The iterative
+    logistic trainer shares the gram kernel with this path and is
     pytest-verified on held-out accuracy (tests/test_classifier.py)."""
     from ..operators.classifier import classifier_score, nb_logodds_weights
 

@@ -21,7 +21,7 @@ from ..config import BM25_B, BM25_K1, DEFAULT, WEIGHT_CLUSTERING, WEIGHT_PERPLEX
 from ..functions.langid import STOPWORDS
 from ..functions.ngram_lm import BOS, EOS, LIDSTONE_ALPHA, LOG_FLOOR, PPL_MAX, PPL_THRESHOLD
 from ..functions.spam import SPAM_PPL_THRESHOLD
-from ..operators.classifier import GRAM_N, NB_ALPHA
+from ..operators.classifier import GRAM_N, NB_ALPHA, WEIGHT_DP
 from ..operators.dedup import DBSCAN_MIN_SAMPLES, JACCARD_K, JACCARD_THRESHOLD
 from ..operators.dedup import SIMHASH_BANDS, SIMHASH_MAX_HAMMING
 from ..operators.perplexity import LM_ORDER
@@ -148,7 +148,7 @@ def _lm_from(v: str) -> str:
   cross join {v}"""
 
 
-# classifier._gram_expr's GRAM_N-gram bag over ``t`` (multiplicity kept,
+# classifier._gram_bags' GRAM_N-gram bag over ``t`` (multiplicity kept,
 # the whole text as one gram when shorter than GRAM_N)
 _CLF_GRAMS = (
     f"unnest(case when length(t) < {GRAM_N} then [t]\n"
@@ -166,7 +166,7 @@ def _nb_weight_sql(n_buckets: int) -> str:
 w as (
   select bucket,
     round(ln((c1 + {a}) / (t1 + {b}))
-          - ln((c0 + {a}) / (t0 + {b})), 6)::decimal(18,6) as wq
+          - ln((c0 + {a}) / (t0 + {b})), {WEIGHT_DP})::decimal(18,{WEIGHT_DP}) as wq
   from per cross join tot)"""
 
 
@@ -1740,8 +1740,8 @@ from c"""
     # like classifier_score, and sum the margin in EXACT decimal — the one
     # float step (round(ln ratio, 6)) has the same cross-engine-libm
     # precedent as the gated log2 perplexity queries. Gram extraction
-    # mirrors _gram_expr (multiplicity kept, whole-text gram when
-    # length < 3).
+    # mirrors classifier._gram_bags (multiplicity kept, whole-text gram
+    # when length < 3).
     from .catalog import _CLF_BUCKETS, _CLF_DECOR
 
     _B = _CLF_BUCKETS

@@ -8,7 +8,8 @@ builds the trie from it (SURVEY.md §4 item 3). Two caches make that a
 once-per-process cost:
 
 * ``broadcast_trie(spark)`` returns ONE broadcast of the full list per live
-  SparkContext, shared by every pipeline run, API call and query on it.
+  SparkContext, shared by every pipeline run, API call and query on it;
+  ``shared_trie_broadcast`` does the same for a fixed small lexicon.
 * A PySpark worker drops every broadcast that its current task does not
   reference (pyspark/worker_util.py ``setup_broadcasts``), so a worker
   that alternates extraction and quality tasks unpickles the list again on
@@ -61,7 +62,7 @@ def load_words(path: str) -> list[str]:
 # full list plus, in tests and demo queries, a small one)
 _TRIE_CACHE_SIZE = 4
 _tries: dict[str, dict] = {}
-_lock = threading.Lock()  # guards _tries and _full_broadcasts
+_lock = threading.Lock()  # guards _tries and _shared_broadcasts
 
 
 def _trie_for(digest: str, words: tuple) -> dict:
@@ -116,9 +117,20 @@ def full_trie() -> dict:
     return _full_box().trie
 
 
-# SparkContext -> its broadcast of the full list; keyed on the context
-# object itself (a new context is a new object; an id() can be reused)
-_full_broadcasts = weakref.WeakKeyDictionary()
+# SparkContext -> {word-list key: its shared broadcast}; keyed on the
+# context object itself (a new context is a new object; an id() can be reused)
+_shared_broadcasts = weakref.WeakKeyDictionary()
+
+
+def _shared_broadcast(sc, key, box):
+    """The one broadcast of ``box()`` under ``key`` on ``sc``, made on
+    first use and shared by every later caller (do not destroy it)."""
+    with _lock:
+        per_sc = _shared_broadcasts.setdefault(sc, {})
+        bc = per_sc.get(key)
+        if bc is None:
+            bc = per_sc[key] = sc.broadcast(box())
+        return bc
 
 
 def broadcast_trie(spark, words: list[str] | None = None):
@@ -131,11 +143,14 @@ def broadcast_trie(spark, words: list[str] | None = None):
     sc = spark.sparkContext
     if words is not None:
         return sc.broadcast(TrieBox(words))
-    with _lock:
-        bc = _full_broadcasts.get(sc)
-        if bc is None:
-            bc = _full_broadcasts[sc] = sc.broadcast(_full_box())
-        return bc
+    return _shared_broadcast(sc, None, _full_box)
+
+
+def shared_trie_broadcast(spark, words: tuple[str, ...]):
+    """One broadcast of ``TrieBox(words)`` per live SparkContext and word
+    tuple, shared by every caller (do not destroy it) — for a fixed
+    lexicon that many plans on one context use."""
+    return _shared_broadcast(spark.sparkContext, words, lambda: TrieBox(words))
 
 
 def merge_wordlist_dfs(dfs: list):

@@ -1,7 +1,7 @@
 """Learned quality classifier (operators/classifier.py): feature hashing
 semantics, NB log-odds + logistic-regression training quality on the
-deterministic labeled fixture, exact-decimal scoring, and the broadcast
-plan shape."""
+deterministic labeled fixture, exact-decimal scoring against a
+driver-side Decimal reference, and the map-only scoring plan shape."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
+from chinese_corpus_cleaning_spark.functions.hashing import h60
 from chinese_corpus_cleaning_spark.operators import classifier as C
 from chinese_corpus_cleaning_spark.sources.gen import labeled_docs_df
 
@@ -58,8 +59,8 @@ def test_hash_ngram_features_semantics(spark):
 
 def test_nb_logodds_separates_fixture(spark, splits):
     train, test = splits
-    w = C.nb_logodds_weights(train, n=3, n_buckets=B)
-    acc = _accuracy(C.classifier_score(test, w, n=3, n_buckets=B), test)
+    w = C.nb_logodds_weights(train, n_buckets=B)
+    acc = _accuracy(C.classifier_score(test, w, n_buckets=B), test)
     assert acc >= 0.85, acc
 
 
@@ -70,7 +71,7 @@ def test_logreg_converges_and_separates(spark, splits):
     assert m.losses[0] == pytest.approx(0.6931, abs=1e-3)
     assert m.losses[-1] < 0.3, m.losses
     acc = _accuracy(
-        C.classifier_score(test, m.to_df(spark), n=3, n_buckets=B, bias=m.bias),
+        C.classifier_score(test, m.to_df(spark), n_buckets=B, bias=m.bias),
         test,
     )
     assert acc >= 0.9, acc
@@ -91,15 +92,12 @@ def test_classifier_score_exact_decimal_and_total_rows(spark):
     d = spark.createDataFrame(
         [(1, "aaaa"), (2, "zzzz"), (3, None)], "doc_id long, text string"
     )
-    feats = {
-        r["id"]: r for r in C.hash_ngram_features(d, n_buckets=B).collect()
-    }
     w = spark.createDataFrame(
-        [(int(feats[1]["bucket"]), 0.123456)], "bucket int, w double"
+        [(h60("aaa") % B, 0.123456)], "bucket int, w double"
     )
     out = {
         r["id"]: r
-        for r in C.classifier_score(d, w, n=3, n_buckets=B).collect()
+        for r in C.classifier_score(d, w, n_buckets=B).collect()
     }
     assert len(out) == 3
     assert out[1]["margin"] == Decimal("0.246912")  # 2 * 0.123456, exact
@@ -108,88 +106,65 @@ def test_classifier_score_exact_decimal_and_total_rows(spark):
     assert out[1]["clf_keep"] and 0.5 < out[1]["clf_score"] < 0.6
 
 
-def test_classifier_score_plan_shape(spark, splits):
-    """The 100 TB scoring path: the weight table must broadcast, no
-    cartesian products, and TEXT never keys a shuffle (the slim-labels
-    contract — only (id, bucket, cnt) / (id, margin) rows move)."""
+def test_classifier_score_plan_is_map_only(spark, splits):
+    """Scoring is a map over the scan, batch and stream alike: no join,
+    no hash-partitioned Exchange (text never crosses a shuffle), and one
+    Arrow UDF node. A round-robin Exchange from ensure_min_parallelism
+    is allowed — it spreads a small-partition input over the cores."""
     import io
     import contextlib
     import re
 
     train, _ = splits
-    w = C.nb_logodds_weights(train, n=3, n_buckets=B).localCheckpoint(
-        eager=True
-    )
-    scored = C.classifier_score(train, w, n=3, n_buckets=B)
+    w = C.nb_logodds_weights(train, n_buckets=B).localCheckpoint(eager=True)
+    scored = C.classifier_score(train.coalesce(1), w, n_buckets=B)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         scored.explain("formatted")
     plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    for keys in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
-        for key in keys.split(", "):
-            assert not re.match(r"text#", key), (key, plan)
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert "hashpartitioning" not in plan, plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
 
 
-def test_mapside_method_agrees_with_relational(spark, splits):
-    """The map-side body (classifier_score's streaming arm — zero
-    shuffles, broadcast dense weights) must reproduce the exact decimal
-    path: margins equal to float tolerance, clf_keep identical on the
-    fixture (no fixture margin sits within float noise of 0), every doc
-    present — including NULL/short-text edge docs."""
+def _reference_margin(text, weights) -> Decimal:
+    """Driver-side reference, written independently of the kernel: every
+    char 3-gram occurrence (NULL as '', a shorter text as one gram) adds
+    its bucket's weight rounded half-up to 6 dp, in exact Decimal."""
+    t = text or ""
+    grams = [t] if len(t) < 3 else [t[i : i + 3] for i in range(len(t) - 2)]
+    return sum(
+        (
+            Decimal(repr(weights.get(h60(g) % B, 0.0))).quantize(
+                Decimal("0.000001"), rounding="ROUND_HALF_UP"
+            )
+            for g in grams
+        ),
+        Decimal(0),
+    )
+
+
+def test_classifier_score_matches_decimal_reference(spark, splits):
+    """Every margin equals the driver-side Decimal sum of its grams'
+    quantized weights, to the last digit — on the held-out fixture plus
+    NULL, empty, short and repeated-gram edge docs — and clf_keep is
+    margin > 0."""
     train, test = splits
-    w = C.nb_logodds_weights(train, n=3, n_buckets=B).localCheckpoint(
-        eager=True
-    )
+    w = C.nb_logodds_weights(train, n_buckets=B).localCheckpoint(eager=True)
+    weights = {r["bucket"]: r["w"] for r in w.collect()}
     edge = test.sparkSession.createDataFrame(
-        [(900001, None, 1), (900002, "ab", 0)],
-        "doc_id long, text string, label int",
+        [(900001, None), (900002, "ab"), (900003, ""), (900004, "aaaaaa")],
+        "doc_id long, text string",
     )
-    docs = test.select("doc_id", "text", "label").union(edge)
-    dec = {
-        r["id"]: r
-        for r in C.classifier_score(docs, w, n=3, n_buckets=B).collect()
+    docs = test.select("doc_id", "text").union(edge)
+    ref = {
+        r["doc_id"]: _reference_margin(r["text"], weights)
+        for r in docs.collect()
     }
-    raw = {
-        r["id"]: r
-        for r in C.classifier_score(
-            docs, w, n=3, n_buckets=B, quantize=None
-        ).collect()
+    got = {
+        r["id"]: r for r in C.classifier_score(docs, w, n_buckets=B).collect()
     }
-    pan = {
-        r["id"]: r
-        for r in C._classifier_score_mapside(
-            docs, w, 3, B, 0.0, "doc_id", "text"
-        ).collect()
-    }
-    assert set(dec) == set(pan) == set(raw) and len(dec) == docs.count()
-    for i, p in pan.items():
-        # raw-double relational path: same arithmetic, differs only by
-        # float-add order
-        assert float(p["margin"]) == pytest.approx(
-            float(raw[i]["margin"]), abs=1e-9, rel=1e-9
-        ), i
-        # decimal gated path: weights rounded to 1e-6 first, so margins
-        # differ by <= 0.5e-6 per gram occurrence — but the KEEP decision
-        # must agree on the fixture
-        assert p["clf_keep"] == dec[i]["clf_keep"], i
-
-
-def test_mapside_method_plan_is_shuffle_free(spark, splits):
-    """The map-side body is a pure map over the scan: no Exchange at all
-    in the scored plan (what lets it run on a stream)."""
-    import io
-    import contextlib
-
-    train, _ = splits
-    w = C.nb_logodds_weights(train, n=3, n_buckets=B).localCheckpoint(
-        eager=True
-    )
-    scored = C._classifier_score_mapside(train, w, 3, B, 0.0, "doc_id", "text")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scored.explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan, plan
+    assert set(got) == set(ref) and len(got) == docs.count()
+    for i, r in got.items():
+        assert r["margin"] == ref[i], (i, r["margin"], ref[i])
+        assert r["clf_keep"] == (ref[i] > 0), i

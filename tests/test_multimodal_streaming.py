@@ -331,11 +331,11 @@ def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
 
 
 def test_streaming_classifier_scores_match_batch(spark, tmp_path):
-    """Stream-static classifier scoring: on a stream classifier_score takes
-    its map-side body, which scores each row independently (weights
-    broadcast once, zero stream-side state) — the streamed output must
-    equal the batch arm's (the relational exact-decimal path): the same
-    schema, and every row to the last decimal digit."""
+    """Stream-static classifier scoring: classifier_score has one body for
+    a batch frame and a stream, which scores each row independently
+    (weights broadcast once, zero stream-side state) — the streamed output
+    must equal the batch output over the same docs: the same schema, and
+    every row to the last decimal digit."""
     from chinese_corpus_cleaning_spark.operators import classifier as C
 
     in_dir = str(tmp_path / "clf_in")
@@ -343,10 +343,10 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
     lab = gen.labeled_docs_df(spark, 300, partitions=4).localCheckpoint(
         eager=True
     )
-    w = C.nb_logodds_weights(lab, n=3, n_buckets=1 << 12).localCheckpoint(
+    w = C.nb_logodds_weights(lab, n_buckets=1 << 12).localCheckpoint(
         eager=True
     )
-    batch = C.classifier_score(lab, w, n=3, n_buckets=1 << 12)
+    batch = C.classifier_score(lab, w, n_buckets=1 << 12)
     expected = sorted(map(tuple, batch.collect()))
     assert expected and any(r[-1] for r in expected)
 
@@ -358,7 +358,7 @@ def test_streaming_classifier_scores_match_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 2)
         .parquet(in_dir)
     )
-    scored = C.classifier_score(stream, w, n=3, n_buckets=1 << 12)
+    scored = C.classifier_score(stream, w, n_buckets=1 << 12)
     assert scored.dtypes == batch.dtypes
     q = (
         scored.writeStream.format("memory")

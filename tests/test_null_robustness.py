@@ -262,16 +262,16 @@ def test_classifier_survives_nulls_and_empty(spark, nullish):
     from chinese_corpus_cleaning_spark.operators import classifier as C
 
     lab = nullish.withColumn("label", (F.col("doc_id") % 2 == 0).cast("int"))
-    w = C.nb_logodds_weights(lab, n=3, n_buckets=64)
-    scored = {r["id"]: r for r in C.classifier_score(lab, w, n=3, n_buckets=64).collect()}
+    w = C.nb_logodds_weights(lab, n_buckets=64)
+    scored = {r["id"]: r for r in C.classifier_score(lab, w, n_buckets=64).collect()}
     assert set(scored) == {1, 2, 3, 4}  # null text scores, never vanishes
     assert all(r["margin"] is not None for r in scored.values())
 
     empty = spark.createDataFrame([], "doc_id long, text string, label int")
     assert C.hash_ngram_features(empty, n_buckets=64).count() == 0
-    assert C.nb_logodds_weights(empty, n=3, n_buckets=64).count() == 0
+    assert C.nb_logodds_weights(empty, n_buckets=64).count() == 0
     assert C.classifier_score(
-        empty, spark.createDataFrame([], "bucket int, w double"), n=3, n_buckets=64
+        empty, spark.createDataFrame([], "bucket int, w double"), n_buckets=64
     ).count() == 0
 
 

@@ -30,8 +30,6 @@ ALLOWED = {
     ),
     ("ngram_counts", "n"): "bench.py and bench_extra.py pass it by keyword",
     ("perplexity_relational", "n"): "bench.py and bench_extra.py pass it by keyword",
-    ("nb_logodds_weights", "n"): "bench.py and bench_extra.py pass it by keyword",
-    ("classifier_score", "n"): "bench.py and bench_extra.py pass it by keyword",
     ("gopher_pass_col", "dup_line"): "a column name",
     ("gopher_pass_col", "top_bigram"): "a column name",
     ("gopher_pass_col", "dup_trigram"): "a column name",

@@ -1,6 +1,7 @@
 """Python-worker set-up is paid once per worker process, not per task or per
-pass: one full-list trie broadcast per SparkContext, one trie build per
-process and word list, and no whole-archive zip re-read on every task."""
+pass: one trie broadcast per SparkContext and word list, one trie build
+per process and word list, and no whole-archive zip re-read on every
+task."""
 
 from __future__ import annotations
 
@@ -51,6 +52,42 @@ def test_pipeline_runs_share_the_trie_broadcast(spark, tmp_path, monkeypatch):
     second = run(spark, docs, str(tmp_path / "b"), partitions=2)
     assert first == second and first["total"] == 40
     assert len(calls) <= 1, calls
+
+
+def test_catalog_lexicon_broadcast_is_one_per_context(
+    spark, tmp_path, monkeypatch
+):
+    """Catalog queries over the fixed demo lexicon share one broadcast per
+    SparkContext, however often and by however many queries they run."""
+    from pyspark import SparkContext
+
+    from chinese_corpus_cleaning_spark.plans import catalog
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "a spark stream"), (2, "no lexicon word")],
+        "doc_id long, text string",
+    ).write.parquet(f"{sf}/documents.parquet")
+    calls = []
+    real = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(type(value).__name__)
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    for _ in range(2):
+        catalog.q_scrub_text(spark, sf)
+        catalog.q_feature_eval(spark, sf)
+    assert len(calls) <= 1, calls
+
+
+def test_text_quality_filters_share_one_trie():
+    """The single-document facade reuses the process's full-list trie
+    instead of building the 43k-word trie per construction."""
+    from chinese_corpus_cleaning_spark.api import TextQualityFilter
+
+    assert TextQualityFilter()._trie is TextQualityFilter()._trie
 
 
 def test_task_start_rereads_no_zip_directory(spark):
