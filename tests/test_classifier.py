@@ -106,25 +106,46 @@ def test_classifier_score_exact_decimal_and_total_rows(spark):
     assert out[1]["clf_keep"] and 0.5 < out[1]["clf_score"] < 0.6
 
 
-def test_classifier_score_plan_is_map_only(spark, splits):
-    """Scoring is a map over the scan, batch and stream alike: no join,
-    no hash-partitioned Exchange (text never crosses a shuffle), and one
-    Arrow UDF node. A round-robin Exchange from ensure_min_parallelism
-    is allowed — it spreads a small-partition input over the cores."""
+def _formatted_plan(df) -> str:
     import io
     import contextlib
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_classifier_score_plan_shape(spark, splits):
+    """Scoring is a map over the scan, batch and stream alike: no join,
+    no cartesian product, no hash-partitioned Exchange (text never keys
+    a shuffle), and one Arrow UDF node. A round-robin Exchange from
+    ensure_min_parallelism is allowed: it spreads a small-partition
+    input over the cores."""
     import re
 
     train, _ = splits
     w = C.nb_logodds_weights(train, n_buckets=B).localCheckpoint(eager=True)
-    scored = C.classifier_score(train.coalesce(1), w, n_buckets=B)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scored.explain("formatted")
-    plan = buf.getvalue()
+    plan = _formatted_plan(
+        C.classifier_score(train.coalesce(1), w, n_buckets=B)
+    )
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
     assert "hashpartitioning" not in plan, plan
     assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+
+
+def test_mapside_method_plan_is_shuffle_free(spark, splits):
+    """On an input already spread over the cores the scored plan has no
+    Exchange at all: scoring is a pure map over the scan (what lets the
+    same body run on a stream)."""
+    train, _ = splits
+    w = C.nb_logodds_weights(train, n_buckets=B).localCheckpoint(eager=True)
+    spread = train.repartition(
+        spark.sparkContext.defaultParallelism
+    ).localCheckpoint(eager=True)
+    plan = _formatted_plan(C.classifier_score(spread, w, n_buckets=B))
+    assert "Exchange" not in plan, plan
+    assert "ArrowEvalPython" in plan, plan
 
 
 def _reference_margin(text, weights) -> Decimal:
