@@ -16,13 +16,10 @@ Architecture (Spark-first, NOT a port):
 
 __version__ = "0.1.0"
 
-import sys as _sys
+from .sources import shipping as _shipping
 
-# inside a Spark Python worker (a task context is set), pay the per-task
-# zip-directory re-read once per process instead (sources/shipping.py)
-_tc = _sys.modules.get("pyspark.taskcontext")
-if _tc is not None and _tc.TaskContext.get() is not None:
-    from .sources.shipping import lazy_zip_invalidation
-
-    lazy_zip_invalidation()
-del _sys, _tc
+# inside a Spark Python worker, pay the per-task zip-directory re-read once
+# per process instead (sources/shipping.py)
+if _shipping.in_spark_worker():
+    _shipping.lazy_zip_invalidation()
+del _shipping

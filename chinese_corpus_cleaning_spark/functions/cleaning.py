@@ -214,12 +214,28 @@ def remove_long_repeated_substrings_ex(s: str) -> tuple[str, bool]:
     chunk-dedup path ran instead of the exact suffix-automaton path, so
     parity audits can exclude (and pipelines can count) over-budget docs —
     the byte-identical-to-reference guarantee holds only when it is False.
+
+    Early exit: a substring of length >= ``MIN_REPEAT_LEN`` occurs twice iff
+    some ``MIN_REPEAT_LEN``-char window does, so a page whose windows are
+    all distinct returns ``(s, False)`` before the automaton is built —
+    exactly the automaton's own no-qualifying-state exit, decided by one
+    set of slices at C speed (most pages take it).
     """
     n = len(s)
     # a length->=MIN_REPEAT_LEN substring occurring twice (occurrences may
     # overlap) needs at least MIN_REPEAT_LEN+1 chars
     if n <= MIN_REPEAT_LEN:
         return s, False
+    windows = n - MIN_REPEAT_LEN + 1
+    if len({s[i : i + MIN_REPEAT_LEN] for i in range(windows)}) == windows:
+        return s, False
+    return _repeats_automaton(s)
+
+
+def _repeats_automaton(s: str) -> tuple[str, bool]:
+    """The suffix-automaton body of remove_long_repeated_substrings_ex,
+    without its early exits (the differential tests' baseline)."""
+    n = len(s)
 
     # suffix automaton: arrays of (len, link, transitions dict)
     sa_len = [0]

@@ -474,7 +474,8 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     connected_components doctrine: pick the physical strategy by runtime
     statistics). Rules are identical to the distributed path (lowest-id
     seeds, L2 argmin with centroid-id tie-break, empty cell keeps its
-    previous centroid), so the result matches to float-summation order —
+    previous centroid) and the distances use the same float arithmetic as
+    ``assign_cells``, so only the means differ, in float-summation order —
     exactly the operator's stated determinism contract, and byte-for-byte
     the reference the differential test compares against.
 
@@ -503,16 +504,16 @@ def _kmeans_driver(spark, src, k: int, iters: int, cent_schema: str):
     cids = ids[: int(k)]
     cents = vecs[: int(k)].copy()
     for _ in range(max(0, int(iters))):
-        # |v - c|^2 via the expansion form: n x k memory instead of the
-        # naive n x k x dim broadcast intermediate (5 GB at the 100k-row
-        # threshold). Differs from the per-element form only in float
-        # rounding ~1e-12 relative — inside the operator's determinism
-        # contract (and the test tolerance).
-        d2 = (
-            (vecs * vecs).sum(axis=1)[:, None]
-            + (cents * cents).sum(axis=1)[None, :]
-            - 2.0 * (vecs @ cents.T)
-        )
+        # |v - c|^2 as assign_cells computes it: the left fold
+        # 0.0 + (x1-y1)^2 + (x2-y2)^2 + ... in dimension order, one n x k
+        # array per step (not the n x k x dim broadcast, 5 GB at the
+        # 100k-row threshold). The expansion form |v|^2+|c|^2-2v.c cancels
+        # on large-magnitude vectors and could flip a near-tie argmin
+        # against the distributed arm.
+        d2 = np.zeros((len(vecs), len(cids)))
+        for j in range(vecs.shape[1]):
+            diff = vecs[:, j, None] - cents[None, :, j]
+            d2 = d2 + diff * diff
         assign = d2.argmin(axis=1)  # first occurrence == lowest cid
         for j in range(len(cids)):
             m = assign == j

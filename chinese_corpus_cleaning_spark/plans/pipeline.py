@@ -80,12 +80,15 @@ def quality_filter_plan(
     return labeled.select(*LABEL_COLUMNS)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
+def read_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """URI-dispatched table read: ``iceberg:<catalog.db.table>`` loads via
-    the Iceberg source; anything else is a parquet directory."""
+    the Iceberg source; anything else is a parquet directory, read with
+    ``schema`` when one is given (no footer-reading inference job; an
+    Iceberg table carries its own schema)."""
     if path.startswith("iceberg:"):
         return spark.read.format("iceberg").load(path[len("iceberg:") :])
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def build_labels_writer(observed: DataFrame, labels_path: str, resume: bool):
@@ -223,9 +226,10 @@ def run(
 
     # Per-partition lineage: the ONE read-back of the labels table (it must
     # re-scan, not re-derive — lineage certifies what was actually committed,
-    # over ALL partitions including those kept from earlier runs).
+    # over ALL partitions including those kept from earlier runs). The
+    # schema is the one just written, so the read starts no inference job.
     lineage = (
-        read_table(spark, labels_path)
+        read_table(spark, labels_path, labels.schema)
         .groupBy("part_id")
         .agg(
             F.count(F.lit(1)).alias("rows_in"),

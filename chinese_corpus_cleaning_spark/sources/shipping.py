@@ -5,10 +5,12 @@ pandas-UDF closures reference this package by module path, so worker
 processes must be able to import it regardless of the driver's cwd. The zip
 is rebuilt whenever any source file's mtime changes.
 
-It also owns one piece of Python-worker set-up: :func:`lazy_zip_invalidation`,
-a backport of CPython 3.13's lazy ``zipimporter.invalidate_caches`` that the
-package ``__init__`` installs once per Spark Python worker process. Delete
-it when the workers run CPython >= 3.13.
+It also owns Python-worker set-up: :func:`in_spark_worker`, the one test
+for "this process is a Spark Python worker", and
+:func:`lazy_zip_invalidation`, a backport of CPython 3.13's lazy
+``zipimporter.invalidate_caches`` that the package ``__init__`` installs
+once per Spark Python worker process. Delete the backport when the workers
+run CPython >= 3.13.
 """
 
 from __future__ import annotations
@@ -47,6 +49,14 @@ def ensure_pyfiles(spark) -> str:
                 zf.write(full, os.path.relpath(full, _PARENT))
     spark.sparkContext.addPyFile(zip_path)
     return zip_path
+
+
+def in_spark_worker() -> bool:
+    """True inside a Spark Python worker: a task context is set. Checked
+    without importing pyspark, so a plain import of the package stays
+    Spark-free."""
+    tc = sys.modules.get("pyspark.taskcontext")
+    return tc is not None and tc.TaskContext.get() is not None
 
 
 def lazy_zip_invalidation() -> None:

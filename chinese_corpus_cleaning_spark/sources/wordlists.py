@@ -16,6 +16,15 @@ once-per-process cost:
   each quality task. The built trie survives that: :class:`TrieBox` looks
   its words' content digest up in a per-process cache
   (``_TRIE_CACHE_SIZE`` word lists) before it builds.
+* A reused PySpark worker runs a full ``gc.collect()`` after every task
+  (pyspark/daemon.py:244, PySpark 4.1.2). The full-list trie is ~295k
+  dicts, ~254k of them GC-tracked, so that collection (and every automatic
+  gen-2 pass) walked it again on each task, extraction tasks included. A
+  trie built in a Spark Python worker is therefore followed by
+  ``gc.collect(); gc.freeze()``: the trie and the worker's imports move to
+  the permanent generation, which no collection scans. The driver heap is
+  never frozen. Tries are acyclic dicts, so one evicted from the cache is
+  still freed by refcounting.
 
 The full vendored lists live at data/wordlists/ (public data files from the
 reference repo, vendored verbatim as the survey's build plan prescribes).
@@ -24,6 +33,7 @@ reference repo, vendored verbatim as the survey's build plan prescribes).
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import threading
@@ -31,6 +41,7 @@ import weakref
 from functools import lru_cache
 
 from ..functions.dfa import build_trie
+from .shipping import in_spark_worker
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 WORDLIST_DIR = os.path.join(_REPO_ROOT, "data", "wordlists")
@@ -67,7 +78,9 @@ _lock = threading.Lock()  # guards _tries and _shared_broadcasts
 
 def _trie_for(digest: str, words: tuple) -> dict:
     """The trie of ``words`` (content digest ``digest``), built at most once
-    per process while it stays among the last ``_TRIE_CACHE_SIZE`` lists."""
+    per process while it stays among the last ``_TRIE_CACHE_SIZE`` lists.
+    In a Spark Python worker the new trie is frozen out of the collector
+    (module docstring)."""
     with _lock:
         trie = _tries.get(digest)
         if trie is None:
@@ -75,6 +88,9 @@ def _trie_for(digest: str, words: tuple) -> dict:
             if len(_tries) >= _TRIE_CACHE_SIZE:
                 del _tries[next(iter(_tries))]  # oldest first
             _tries[digest] = trie
+            if in_spark_worker():
+                gc.collect()  # freeze live objects only, not garbage
+                gc.freeze()
         return trie
 
 

@@ -9,8 +9,11 @@ import math
 from chinese_corpus_cleaning_spark.config import RuleConfig
 from chinese_corpus_cleaning_spark.functions import dfa, hashing
 from chinese_corpus_cleaning_spark.functions.cleaning import (
+    MIN_REPEAT_LEN,
+    _repeats_automaton,
     extract_html_text,
     remove_long_repeated_substrings,
+    remove_long_repeated_substrings_ex,
 )
 from chinese_corpus_cleaning_spark.functions.langid import identify
 from chinese_corpus_cleaning_spark.functions.ngram_lm import (
@@ -141,6 +144,33 @@ def test_repeat_removal_keeps_first_occurrence():
     assert out.startswith(chunk)
     # no repeats -> unchanged
     assert remove_long_repeated_substrings("abc") == "abc"
+
+
+def test_repeat_early_exit_matches_automaton():
+    """The distinct-window early exit returns exactly what the suffix
+    automaton alone returns, (text, fell_back) alike."""
+    from chinese_corpus_cleaning_spark.sources import gen
+
+    def distinct(n):
+        return "".join(chr(0x4E00 + i) for i in range(n))
+
+    base = distinct(30)
+    cases = [extract_html_text(h) for h in gen.docs_pandas(300)["html"]]
+    n_pages = len(cases)
+    for n in (MIN_REPEAT_LEN, MIN_REPEAT_LEN + 1, MIN_REPEAT_LEN + 2):
+        cases += [distinct(n), "a" * n, distinct(n - 1) + distinct(1)]
+    cases += [
+        "a" * 22,
+        "abcdefghij" * 5,  # overlapping occurrences
+        base + "间隔" + base[:MIN_REPEAT_LEN],  # repeat ends at the last char
+        base + base[1:] + "尾",
+        "ab" * 2000,  # over the work budget: falls back
+    ]
+    got = [remove_long_repeated_substrings_ex(s) for s in cases]
+    assert got == [_repeats_automaton(s) for s in cases]
+    changed = sum(out != s for (out, _), s in zip(got[:n_pages], cases))
+    assert 0 < changed < n_pages  # both branches ran on the generated pages
+    assert got[-1][1] and not any(fb for _, fb in got[:-1])
 
 
 def test_preprocess_for_ppl():

@@ -214,6 +214,40 @@ def test_run_reads_output_at_most_once(spark, docs, tmp_path, monkeypatch):
     assert len(lineage_reads) == 0, reads
 
 
+def test_lineage_read_back_starts_no_inference_job(spark, docs, tmp_path):
+    """The lineage re-scans the committed labels with the schema that was
+    just written, so Parquet's one-task schema-inference job is gone: a
+    fresh run is 4 jobs (the labels write, then the lineage aggregate and
+    write), one fewer than with an inferred-schema read, and the lineage
+    rows equal those re-derived from such a read."""
+    from pyspark.sql import functions as F
+
+    docs.count()  # the cached input is built outside the counted group
+    sc = spark.sparkContext
+    out = str(tmp_path / "out")
+    group = "test_lineage_read_back_starts_no_inference_job"
+    sc.setJobGroup(group, "pipeline.run")
+    try:
+        run(spark, docs, out, partitions=4)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 4, sorted(jobs)
+
+    cols = ("part_id", "rows_in", "rows_kept", "rows_error")
+    lineage = spark.read.parquet(f"{out}/lineage").select(*cols)
+    derived = (
+        spark.read.parquet(f"{out}/labels")
+        .groupBy("part_id")
+        .agg(
+            F.count(F.lit(1)).alias("rows_in"),
+            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
+            F.sum(F.col("error").isNotNull().cast("long")).alias("rows_error"),
+        )
+    )
+    assert sorted(lineage.collect()) == sorted(derived.select(*cols).collect())
+
+
 def test_labels_writer_iceberg_dispatch(spark, docs):
     """SURVEY.md §1.2 maps the K1/K4 sinks to Iceberg tables: an
     ``iceberg:``-prefixed output must dispatch to the DataFrameWriterV2

@@ -254,3 +254,23 @@ def test_kmeans_arms_agree_on_nan_input(spark, monkeypatch):
         return {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
 
     assert cells(100_000) == cells(0)
+
+
+def test_kmeans_arms_agree_on_large_magnitude_near_tie(spark, monkeypatch):
+    """Both arms compute d2 with the same float arithmetic. At 1e9 the
+    expansion form |v|^2+|c|^2-2v.c cancels to 0.0 for every pair, so the
+    driver arm sent all three vectors to the first seed while the
+    per-element fold (assign_cells) splits them; the centroids then
+    differed and so did every cell. Coordinates are integers and each
+    cell's mean is exact, so the two arms must agree exactly."""
+    big = 1e9
+    rows = [(i, [big + x, big + x]) for i, x in enumerate((0.0, 1.0, 4.0))]
+    vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+
+    def cells(driver_max_n):
+        monkeypatch.setattr(similarity, "_KMEANS_DRIVER_MAX_N", driver_max_n)
+        cents = kmeans_fit(vecs, k=2, iters=1)
+        return {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
+
+    assert cells(0) == {0: 0, 1: 0, 2: 1}
+    assert cells(100_000) == cells(0)

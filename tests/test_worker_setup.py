@@ -1,13 +1,14 @@
 """Python-worker set-up is paid once per worker process, not per task or per
 pass: one trie broadcast per SparkContext and word list, one trie build
-per process and word list, and no whole-archive zip re-read on every
-task."""
+per process and word list, a worker-built trie frozen out of the per-task
+garbage collection, and no whole-archive zip re-read on every task."""
 
 from __future__ import annotations
 
+import gc
 import pickle
 
-from chinese_corpus_cleaning_spark.sources import gen
+from chinese_corpus_cleaning_spark.sources import gen, wordlists
 from chinese_corpus_cleaning_spark.sources.wordlists import (
     SMALL_LEXICON,
     TrieBox,
@@ -88,6 +89,58 @@ def test_text_quality_filters_share_one_trie():
     from chinese_corpus_cleaning_spark.api import TextQualityFilter
 
     assert TextQualityFilter()._trie is TextQualityFilter()._trie
+
+
+def test_worker_trie_is_frozen_out_of_the_collector(spark):
+    """A reused worker runs gc.collect() after every task; a trie a task
+    touches must sit in the permanent generation, which it does not scan."""
+
+    def probe(_):
+        import gc
+
+        from chinese_corpus_cleaning_spark.sources.wordlists import (
+            SMALL_LEXICON,
+            TrieBox,
+        )
+
+        assert TrieBox(SMALL_LEXICON).trie
+        return gc.get_freeze_count()
+
+    assert spark.sparkContext.parallelize([0], 1).map(probe).collect()[0] > 0
+
+
+def test_driver_trie_build_freezes_nothing(monkeypatch):
+    """The driver heap is never frozen: building the full-list trie
+    outside a Spark task leaves the freeze count as it was."""
+    monkeypatch.setattr(wordlists, "_tries", {})
+    before = gc.get_freeze_count()
+    assert wordlists.full_trie()
+    assert gc.get_freeze_count() == before
+
+
+def test_evicted_frozen_trie_is_freed(spark):
+    """Freezing does not pin a trie: tries are acyclic dicts, so one
+    evicted from the per-process cache is freed by refcounting and leaves
+    the permanent generation."""
+
+    def probe(_):
+        import gc
+        import uuid
+
+        from chinese_corpus_cleaning_spark.sources import wordlists
+
+        def box(n):  # words no earlier task has built
+            return wordlists.TrieBox([uuid.uuid4().hex for _ in range(n)])
+
+        assert box(2000).trie
+        frozen = gc.get_freeze_count()
+        for _ in range(wordlists._TRIE_CACHE_SIZE):  # evicts the big trie
+            assert box(1).trie
+        return frozen, gc.get_freeze_count()
+
+    frozen, after = spark.sparkContext.parallelize([0], 1).map(probe).collect()[0]
+    # 2000 random 32-char words hold ~62k GC-tracked inner dicts
+    assert after < frozen - 50_000, (frozen, after)
 
 
 def test_task_start_rereads_no_zip_directory(spark):
