@@ -7,9 +7,11 @@ Reference semantics reproduced:
   remove_html_tags                -> /root/reference/tool.py:38-63 (BeautifulSoup
                                      html.parser, drop script/style/meta/noscript/
                                      header/footer/nav, get_text(separator=' '))
-  remove_long_repeated_substrings -> clear_redundancy.py:53-170 (suffix automaton;
-                                     delete 2nd+ occurrences of every repeated
-                                     substring of length >= 21, merge intervals)
+  remove_long_repeated_substrings -> clear_redundancy.py:53-170 (delete 2nd+
+                                     occurrences of every repeated substring of
+                                     length >= 21, merge intervals; one linear
+                                     pass over 21-char windows in place of the
+                                     reference's suffix automaton)
 
 bs4 is not available in this environment; ``extract_html_text`` is a fresh
 stdlib ``html.parser`` implementation of the same contract (drop the same tag
@@ -165,189 +167,52 @@ def extract_html_text(html_content: str | bytes | None) -> str:
 
 
 MIN_REPEAT_LEN = 21  # clear_redundancy.py's repeat length
-WORK_BUDGET_FACTOR = 32  # exact-pass occurrence budget per document char
-
-
-def _chunk_dedup(s: str, window: int) -> str:
-    """O(n) fallback for pathologically repetitive documents: split into
-    fixed ``window``-char chunks, keep the first occurrence of each distinct
-    chunk (deterministic; collapses repeated boilerplate blocks)."""
-    seen: set[str] = set()
-    out: list[str] = []
-    for i in range(0, len(s), window):
-        chunk = s[i : i + window]
-        if chunk not in seen:
-            seen.add(chunk)
-            out.append(chunk)
-    return "".join(out)
 
 
 def remove_long_repeated_substrings(s: str) -> str:
-    """See remove_long_repeated_substrings_ex; this wrapper drops the
-    fell-back flag for callers that only want the text."""
-    return remove_long_repeated_substrings_ex(s)[0]
-
-
-def remove_long_repeated_substrings_ex(s: str) -> tuple[str, bool]:
     """Delete the 2nd+ occurrences of every repeated substring of length
     >= ``MIN_REPEAT_LEN``; keep the first occurrence; merge deletion
     intervals that touch (gap <= 1 merges, clear_redundancy.py:150-159).
 
-    Fresh implementation: suffix automaton built iteratively; for every state
-    with ``len >= MIN_REPEAT_LEN`` and >= 2 end positions, the *maximal*
-    substring of that state (exactly state.len chars) is recorded at each
-    occurrence — the same selection the reference makes (it computes but
-    never uses the suffix link length, clear_redundancy.py:116-133).
+    The reference finds the repeats with a suffix automaton and an endpos
+    SET per state (O(n^2) on repetitive pages: a 12KB menu-spam page takes
+    ~18s, 50KB does not finish). The deleted chars are exactly those
+    covered by a non-first occurrence of some ``MIN_REPEAT_LEN``-char
+    window: every window inside a non-first occurrence of a repeated
+    substring is itself a non-first window occurrence, and every non-first
+    window occurrence lies inside a non-first occurrence of its automaton
+    state's longest string (the substring the reference records). Merging
+    touching intervals changes no kept char. So one pass over the windows,
+    with the set of windows seen so far and a running cover end, gives the
+    reference's output in linear time on every page (tests/
+    test_functions_unit.py keeps the automaton as the oracle).
 
-    Scale guard: unlike the reference (which materializes a full endpos SET
-    per state — O(n^2) time/memory on repetitive pages; a 12KB menu-spam page
-    takes ~18s and 50KB doesn't finish), occurrence counts are first computed
-    in O(n) via suffix-link counting; positions are materialized only if the
-    total occurrence volume fits ``WORK_BUDGET_FACTOR * n``. Within budget the
-    result is byte-identical to the reference (differential-tested); beyond it
-    — only pathologically repetitive documents — the deterministic fallback
-    is fixed-window chunk dedup (keep the first occurrence of each distinct
-    ``MIN_REPEAT_LEN``-char window), which collapses boilerplate/menu spam
-    the same way the exact algorithm would, in O(n).
-
-    Returns ``(text, fell_back)``: ``fell_back`` is True iff the approximate
-    chunk-dedup path ran instead of the exact suffix-automaton path, so
-    parity audits can exclude (and pipelines can count) over-budget docs —
-    the byte-identical-to-reference guarantee holds only when it is False.
-
-    Early exit: a substring of length >= ``MIN_REPEAT_LEN`` occurs twice iff
-    some ``MIN_REPEAT_LEN``-char window does, so a page whose windows are
-    all distinct returns ``(s, False)`` before the automaton is built —
-    exactly the automaton's own no-qualifying-state exit, decided by one
-    set of slices at C speed (most pages take it).
-    """
+    A page whose windows are all distinct is returned as is after one set
+    of slices at C speed (most pages take it)."""
     n = len(s)
-    # a length->=MIN_REPEAT_LEN substring occurring twice (occurrences may
-    # overlap) needs at least MIN_REPEAT_LEN+1 chars
-    if n <= MIN_REPEAT_LEN:
-        return s, False
     windows = n - MIN_REPEAT_LEN + 1
-    if len({s[i : i + MIN_REPEAT_LEN] for i in range(windows)}) == windows:
-        return s, False
-    return _repeats_automaton(s)
-
-
-def _repeats_automaton(s: str) -> tuple[str, bool]:
-    """The suffix-automaton body of remove_long_repeated_substrings_ex,
-    without its early exits (the differential tests' baseline)."""
-    n = len(s)
-
-    # suffix automaton: arrays of (len, link, transitions dict)
-    sa_len = [0]
-    sa_link = [-1]
-    sa_next: list[dict[str, int]] = [{}]
-    own_pos = [-1]  # the end position created with this state (-1 for clones)
-    cnt = [0]
-    last = 0
-    for pos, ch in enumerate(s):
-        cur = len(sa_len)
-        sa_len.append(sa_len[last] + 1)
-        sa_link.append(-1)
-        sa_next.append({})
-        own_pos.append(pos)
-        cnt.append(1)
-        p = last
-        while p != -1 and ch not in sa_next[p]:
-            sa_next[p][ch] = cur
-            p = sa_link[p]
-        if p == -1:
-            sa_link[cur] = 0
-        else:
-            q = sa_next[p][ch]
-            if sa_len[p] + 1 == sa_len[q]:
-                sa_link[cur] = q
-            else:
-                clone = len(sa_len)
-                sa_len.append(sa_len[p] + 1)
-                sa_link.append(sa_link[q])
-                sa_next.append(dict(sa_next[q]))
-                own_pos.append(-1)
-                cnt.append(0)
-                while p != -1 and sa_next[p].get(ch) == q:
-                    sa_next[p][ch] = clone
-                    p = sa_link[p]
-                sa_link[q] = clone
-                sa_link[cur] = clone
-        last = cur
-
-    # occurrence counts (== |endpos|) via suffix-link propagation, O(n)
-    order = sorted(range(len(sa_len)), key=lambda x: -sa_len[x])
-    for st in order:
-        lk = sa_link[st]
-        if lk != -1:
-            cnt[lk] += cnt[st]
-
-    qualifying = [
-        st
-        for st in range(len(sa_len))
-        if sa_len[st] >= MIN_REPEAT_LEN and cnt[st] >= 2
-    ]
-    if not qualifying:
-        return s, False
-    total_work = sum(cnt[st] for st in qualifying)
-    if total_work > WORK_BUDGET_FACTOR * n:
-        return _chunk_dedup(s, MIN_REPEAT_LEN), True
-
-    # materialize end positions only for qualifying states: each original
-    # (non-clone) state carries one end position, which belongs to every
-    # suffix-link ancestor's endpos set
-    qual = set(qualifying)
-    positions: dict[int, list[int]] = {st: [] for st in qualifying}
-    walk_budget = WORK_BUDGET_FACTOR * n * 4  # link chains also bounded
-    for st in range(1, len(sa_len)):
-        p = own_pos[st]
-        if p < 0:
-            continue
-        node = st
-        while node > 0:
-            walk_budget -= 1
-            if walk_budget < 0:
-                return _chunk_dedup(s, MIN_REPEAT_LEN), True
-            if node in qual:
-                positions[node].append(p)
-            node = sa_link[node]
-
-    # collect occurrence intervals of repeated maximal substrings
-    occurrences: dict[str, list[tuple[int, int]]] = {}
-    for st in qualifying:
-        length = sa_len[st]
-        for end in positions[st]:
-            start = end - length + 1
-            if start < 0:
-                continue
-            occurrences.setdefault(s[start : end + 1], []).append((start, end))
-
-    to_remove: list[tuple[int, int]] = []
-    for intervals in occurrences.values():
-        if len(intervals) < 2:
-            continue
-        intervals.sort(key=lambda x: x[0])
-        to_remove.extend(intervals[1:])
-    if not to_remove:
-        return s, False
-
-    to_remove.sort()
-    merged: list[list[int]] = [list(to_remove[0])]
-    for a, b in to_remove[1:]:
-        if a <= merged[-1][1] + 1:
-            merged[-1][1] = max(merged[-1][1], b)
-        else:
-            merged.append([a, b])
-
+    # a repeat needs two windows
+    if windows < 2 or len({s[i : i + MIN_REPEAT_LEN] for i in range(windows)}) == windows:
+        return s
+    seen: set[str] = set()
     pieces: list[str] = []
-    idx = 0
-    for a, b in merged:
-        if idx < a:
-            pieces.append(s[idx:a])
-        idx = b + 1
-    if idx < n:
-        pieces.append(s[idx:])
-    return "".join(pieces), False
+    kept_from = 0  # first char after the last deleted run
+    for i in range(windows):
+        w = s[i : i + MIN_REPEAT_LEN]
+        if w in seen:
+            if i > kept_from:
+                pieces.append(s[kept_from:i])
+            kept_from = i + MIN_REPEAT_LEN
+        else:
+            seen.add(w)
+    pieces.append(s[kept_from:])
+    return "".join(pieces)
+
+
+def remove_long_repeated_substrings_ex(s: str) -> tuple[str, bool]:
+    """``(remove_long_repeated_substrings(s), False)``: the exact removal
+    has no fallback left, and the flag stays for callers that unpack it."""
+    return remove_long_repeated_substrings(s), False
 
 
 # --- perplexity-stage preprocessing (P7) -----------------------------------

@@ -26,10 +26,14 @@ Scale notes (10^12 docs):
     propagation plus pointer jumping as DataFrame joins, with a
     per-iteration localCheckpoint to truncate lineage; converges in
     O(log diameter) iterations.
-  * Every size-adaptive arm (signature / increment broadcast, one-partition
-    LSH chain, candidate-id prune, CC driver/distributed) is
-    picked from a size the operator observed anyway — never from a caller
-    option.
+  * Every size-adaptive arm (driver-side LSH pairs + est-Jaccard,
+    signature / increment broadcast, candidate-id prune, CC
+    driver/distributed) is picked from a size the operator observed
+    anyway — never from a caller option. A signature table within the
+    broadcast budget, whose candidate volume bound is within the CC
+    driver cutover, is paired on the driver from one Arrow collect: at
+    that size the distributed self-join chain costs more in planning and
+    job scheduling than in work.
 """
 
 from __future__ import annotations
@@ -37,14 +41,15 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import IntegralType, StringType
 
 from ..config import DedupConfig
 from ..functions.hashing import h60_sql
-from .partitioning import checkpoint_observed, num_partitions
+from .partitioning import checkpoint_observed
 
-# Broadcast budget for a signature table (the est-Jaccard re-attach in
-# minhash_similarity_pairs, the increment side of dedup_incremental_pairs):
+# Budget for a signature table (the driver arm and the est-Jaccard
+# re-attach broadcast in minhash_similarity_pairs, the increment side of
+# dedup_incremental_pairs):
 # a row is num_hashes * 8 B plus its id, so 64 MB admits ~65k long-id rows
 # at the production 128-hash config — far below the guide's
 # few-hundred-MB broadcast comfort zone, and corpus-scale signature tables
@@ -53,11 +58,15 @@ from .partitioning import checkpoint_observed, num_partitions
 # plan shape.
 _SIG_BCAST_BUDGET_BYTES = 64 << 20
 _N_HUBS = 4  # hubs per oversized LSH bucket (lsh_candidate_pairs)
+# _pairs_driver's est-Jaccard chunk: two (chunk, num_hashes) int64 gathers,
+# 32 MB at the production 128 hashes
+_EST_CHUNK_PAIRS = 1 << 14
 # connected_components cutover: the edges collect as two Arrow id columns
 # (16 B per long-id edge) and the union-find keeps a few int64 arrays per
 # node, so 2M edges stay far inside the default 4 GB driver. Raise it only
 # with a bigger driver. Larger graphs take the distributed loop, capped at
-# _CC_MAX_ITER min-label / pointer-jump rounds.
+# _CC_MAX_ITER min-label / pointer-jump rounds. _pairs_driver takes the
+# same limit on the candidate pairs that become those edges.
 _CC_DRIVER_MAX_EDGES = 2_000_000
 _CC_MAX_ITER = 20
 # Gated parameters, one definition with the DuckDB oracles; DBSCAN's is
@@ -309,16 +318,22 @@ def minhash_similarity_pairs(
     text_col: str = "text",
     max_band_bucket: int | None = None,
     precomputed: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Candidate pairs with estimated Jaccard (fraction of agreeing minhash
     slots) >= cfg.similarity_threshold. Returns (id_a, id_b, est_jaccard).
 
-    ``materialize=False`` (single-consumer callers whose next step is its
-    own checkpoint, e.g. dedup_edges feeding connected_components) skips
-    the small-signature fast path's output checkpoint — one Spark job
-    fewer; multi-consumer callers (dbscan scans the result three times)
-    keep the default so the LSH machinery never re-executes.
+    Two arms, picked from sizes the operator observes anyway; both give
+    the same set:
+
+      * driver (``_pairs_driver``): the signature table fits the broadcast
+        budget, its ids are integral or strings, and the candidate volume
+        bound read off its band keys is at most ``_CC_DRIVER_MAX_EDGES``.
+        The pairs come back as a LocalRelation (exact statistics), so a
+        caller that scans them several times (dbscan) never re-runs
+        anything;
+      * corpus scale: ``lsh_candidate_pairs`` checkpointed, then the
+        est-Jaccard re-attach joins (signatures broadcast when they, or
+        their candidate-id prune, fit the budget).
 
     ``precomputed``: an existing (id_col, minhash, band_keys) signature
     frame COMPUTED WITH THE SAME cfg (e.g. fold_into_index's checkpointed
@@ -326,8 +341,8 @@ def minhash_similarity_pairs(
     instead of re-running the shingle+perm-min signature stage, the
     dominant map-side cost at corpus scale (review finding: fold's
     internal pass used to re-sign every remaining doc)."""
-    # three downstream branches scan the signatures; without the checkpoint
-    # the first job recomputes the signature stage once per branch
+    # both arms scan the signatures more than once; without the checkpoint
+    # each scan recomputes the signature stage
     sig_stage = (
         precomputed.join(docs.select(id_col), id_col, "left_semi")
         if precomputed is not None
@@ -336,58 +351,44 @@ def minhash_similarity_pairs(
     signed, n_sigs, row_bytes = _checkpoint_signatures(
         sig_stage, id_col, cfg, "minhash_n_sigs"
     )
-    # SMALL-SIGNATURE fast path (size-adaptive join strategy, guide §3.1,
-    # decided from the free observed count): the whole signature table fits
-    # the broadcast budget, so both re-attach joins become map-side hash
-    # probes and the candidate-id prune below is moot. With exactly one
-    # consumer chain left, the pair table needs NO checkpoint of its own —
-    # the est output (threshold survivors, orders of magnitude smaller than
-    # the candidate set) is checkpointed instead, so multi-consumer callers
-    # (dbscan's three scans) never re-run the LSH machinery and the stage
-    # costs one job fewer than the round-7 shape.
-    fast = broadcast = _sig_fits_broadcast(n_sigs, row_bytes)
-    # ONE-PARTITION chain: over a small checkpoint already at one partition
-    # (AQE coalesced the distinct-text aggregate), coalesce(1) moves no data
-    # but lets the planner drop the hash exchanges, each one a job, of the
-    # candidate chain (3221 pairs: 8 -> 4 jobs; a join's go only while the
-    # plan's size estimate is under spark.sql.maxSinglePartitionBytes).
-    lsh_src = signed.coalesce(1) if fast and num_partitions(signed) == 1 else signed
-    pairs = lsh_candidate_pairs(lsh_src, id_col, max_band_bucket)
-    sig_src = signed
-    if not fast:
-        # CORPUS-SCALE path: materialize the candidate pairs once (the
-        # est_jaccard join consumes them, and their id set may prune the
-        # signature re-attach below).
-        pairs, observed = checkpoint_observed(pairs, "lsh_n_pairs")
-        n_pairs = observed["n"]
-        # ADAPTIVE signature-re-attach prune (same runtime-statistics
-        # doctrine as the connected_components cutover): the two joins below
-        # shuffle the 128-slot signature table (~1 KB/doc), measured as the
-        # dominant cost of the stage (DEDUP_BREAKDOWN.md). When few ids
-        # appear in candidate pairs (the web-scale case: post-exact-dedup,
-        # capped buckets), a semi-join against the candidate-id set prunes
-        # most of that shuffle; when most ids are candidates (high-collision
-        # corpora), the prune is pure overhead — one extra full shuffle — so
-        # it is skipped. The decision is FREE: both row counts ride the two
-        # checkpoint jobs, and distinct candidate ids <= 2 * n_pairs bounds
-        # coverage from above (a conservative sufficient condition — prune
-        # only when certainly sparse).
-        sig_rows = n_sigs
-        if n_sigs > 0 and 2 * n_pairs < 0.5 * n_sigs:
-            cand_ids = (
-                pairs.select(F.col("id_a").alias(id_col))
-                .union(pairs.select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            sig_src = signed.join(cand_ids, id_col, "leftsemi")
-            sig_rows = min(n_sigs, 2 * n_pairs)
-        # The post-prune table can still fit the broadcast budget in sparse
-        # corpora (sig_rows <= 2 * n_pairs) — broadcast it then;
-        # corpus-scale tables blow the bound and keep the shuffled joins.
-        broadcast = _sig_fits_broadcast(sig_rows, row_bytes)
+    if _sig_fits_broadcast(n_sigs, row_bytes):
+        est = _pairs_driver(signed, cfg, id_col, max_band_bucket)
+        if est is not None:
+            return est
+    # CORPUS-SCALE path: materialize the candidate pairs once (the
+    # est_jaccard join consumes them, and their id set may prune the
+    # signature re-attach below).
+    pairs, observed = checkpoint_observed(
+        lsh_candidate_pairs(signed, id_col, max_band_bucket), "lsh_n_pairs"
+    )
+    n_pairs = observed["n"]
+    # ADAPTIVE signature-re-attach prune (same runtime-statistics
+    # doctrine as the connected_components cutover): the two joins below
+    # shuffle the 128-slot signature table (~1 KB/doc), measured as the
+    # dominant cost of the stage (DEDUP_BREAKDOWN.md). When few ids
+    # appear in candidate pairs (the web-scale case: post-exact-dedup,
+    # capped buckets), a semi-join against the candidate-id set prunes
+    # most of that shuffle; when most ids are candidates (high-collision
+    # corpora), the prune is pure overhead — one extra full shuffle — so
+    # it is skipped. The decision is FREE: both row counts ride the two
+    # checkpoint jobs, and distinct candidate ids <= 2 * n_pairs bounds
+    # coverage from above (a conservative sufficient condition — prune
+    # only when certainly sparse).
+    sig_src, sig_rows = signed, n_sigs
+    if n_sigs > 0 and 2 * n_pairs < 0.5 * n_sigs:
+        cand_ids = (
+            pairs.select(F.col("id_a").alias(id_col))
+            .union(pairs.select(F.col("id_b").alias(id_col)))
+            .distinct()
+        )
+        sig_src = signed.join(cand_ids, id_col, "leftsemi")
+        sig_rows = min(n_sigs, 2 * n_pairs)
     sig_a = sig_src.select(F.col(id_col).alias("id_a"), F.col("minhash").alias("minhash_a"))
     sig_b = sig_src.select(F.col(id_col).alias("id_b"), F.col("minhash").alias("minhash_b"))
-    if broadcast:
+    # The post-prune table can still fit the broadcast budget in sparse
+    # corpora (sig_rows <= 2 * n_pairs) — broadcast it then;
+    # corpus-scale tables blow the bound and keep the shuffled joins.
+    if _sig_fits_broadcast(sig_rows, row_bytes):
         sig_a = F.broadcast(sig_a)
         sig_b = F.broadcast(sig_b)
     # EXACT prefix prune: a pair needs >= k_min of num_hashes agreeing slots
@@ -405,14 +406,121 @@ def minhash_similarity_pairs(
     # transfer of both full signatures for every pair, and (1.6M phase
     # table, BENCH/BASELINE.md) the JVM form already scales at eff 1.00.
     cond, est_col = _est_jaccard_exprs(cfg)
-    est = (
+    return (
         pairs.join(sig_a, "id_a")
         .join(sig_b, "id_b")
         .where(cond)
         .withColumn("est_jaccard", est_col)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return est.localCheckpoint(eager=True) if fast and materialize else est
+
+
+def _pairs_driver(
+    signed: DataFrame,
+    cfg: DedupConfig,
+    id_col: str,
+    max_band_bucket: int | None,
+) -> DataFrame | None:
+    """``minhash_similarity_pairs`` over a signature table small enough to
+    collect: one Arrow collect, the banded-LSH candidates of
+    ``lsh_candidate_pairs`` grouped with numpy, the est-Jaccard filter, and
+    the survivors back as a LocalRelation. None when the ids are neither
+    integral nor strings, an id repeats or the candidate volume bound
+    exceeds ``_CC_DRIVER_MAX_EDGES``; the caller then takes the
+    corpus-scale joins.
+
+    Same set as the joins, NULL ids included: Spark's ``<``, ``min`` and
+    ``!=`` drop a NULL id, so it counts in its buckets' sizes (the cap
+    test) but is never in a pair or a hub. Ids compare in Spark's order
+    (numeric, or UTF-8 bytes, which is code-point order), and est is the
+    same double division, so each value is bit-identical."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    id_type = signed.schema[id_col].dataType
+    if not isinstance(id_type, (IntegralType, StringType)):
+        return None
+    tbl = signed.select(
+        F.col(id_col).alias("id"),
+        "minhash",
+        "band_keys",
+        # the hub classes of lsh_candidate_pairs, computed by Spark
+        F.pmod(F.xxhash64(id_col), F.lit(_N_HUBS)).alias("hub_class"),
+    ).toArrow().combine_chunks()
+    ids = tbl.column("id")
+    valid = np.asarray(ids.is_valid())
+    uniq, ranks = np.unique(
+        ids.filter(valid).to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    if len(uniq) < len(ranks):
+        return None
+    # rank in id order per row, -1 for a NULL id
+    rank = np.full(tbl.num_rows, -1, dtype=np.int64)
+    rank[valid] = ranks
+    bands = tbl.column("band_keys")
+    keys = pc.list_flatten(bands)
+    key_ok = keys.is_valid()
+    keys = keys.filter(key_ok).to_numpy()
+    rows = pc.list_parent_indices(bands).filter(key_ok).to_numpy()
+    # one entry per (band key, row), grouped by key and rank-ordered inside
+    # each bucket, NULL ids first
+    order = np.lexsort((rank[rows], keys))
+    keys, rows = keys[order], rows[order]
+    r = rank[rows]
+    start = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    size = np.diff(np.r_[start, len(keys)])
+    # (uncapped: no bucket is oversized)
+    big = size > (len(keys) if max_band_bucket is None else max_band_bucket)
+    volume = int((size[~big] * (size[~big] - 1) // 2).sum()) + _N_HUBS * int(
+        size[big].sum()
+    )
+    if volume > _CC_DRIVER_MAX_EDGES:
+        return None
+    bucket = np.repeat(np.arange(len(start)), size)
+    member = r >= 0
+    # capped buckets: every a < b pair; the entries after p in its bucket
+    # hold ranks >= r[p] (equal only for the same row twice)
+    p = np.flatnonzero(member & ~big[bucket])
+    cnt = (start + size)[bucket[p]] - p - 1
+    a = np.repeat(p, cnt)
+    b = a + 1 + np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    ra, rb = r[a], r[b]
+    # oversized buckets: the K-hub star, each hub the min rank per (bucket,
+    # hub class) -- the first entry of that group in rank order
+    e = np.flatnonzero(member & big[bucket])
+    cls = tbl.column("hub_class").to_numpy()[rows[e]]
+    group, first = np.unique(bucket[e] * _N_HUBS + cls, return_index=True)
+    hubs = np.full(len(start) * _N_HUBS, -1, dtype=np.int64)
+    hubs[group] = r[e[first]]
+    m = np.repeat(r[e], _N_HUBS)
+    h = hubs.reshape(-1, _N_HUBS)[bucket[e]].ravel()
+    star = (h >= 0) & (h != m)
+    m, h = m[star], h[star]
+    ra = np.concatenate([ra, np.minimum(m, h)])
+    rb = np.concatenate([rb, np.maximum(m, h)])
+    codes = np.unique((ra * len(uniq) + rb)[ra != rb])
+    ra, rb = codes // len(uniq), codes % len(uniq)
+    # est-Jaccard in chunks: two gathered (chunk, num_hashes) blocks at once
+    row_of = np.empty(len(uniq), dtype=np.int64)
+    row_of[ranks] = np.flatnonzero(valid)
+    sig = pc.list_flatten(tbl.column("minhash")).to_numpy()
+    sig = sig.reshape(tbl.num_rows, cfg.num_hashes)
+    agree = np.empty(len(codes), dtype=np.int64)
+    for lo in range(0, len(codes), _EST_CHUNK_PAIRS):
+        hi = lo + _EST_CHUNK_PAIRS
+        agree[lo:hi] = (sig[row_of[ra[lo:hi]]] == sig[row_of[rb[lo:hi]]]).sum(axis=1)
+    est = agree / cfg.num_hashes
+    keep = est >= cfg.similarity_threshold
+    out = pa.table({
+        "id_a": pa.array(uniq[ra[keep]], type=ids.type),
+        "id_b": pa.array(uniq[rb[keep]], type=ids.type),
+        "est_jaccard": est[keep],
+    })
+    id_ddl = id_type.simpleString()
+    return signed.sparkSession.createDataFrame(
+        out, f"id_a {id_ddl}, id_b {id_ddl}, est_jaccard double"
+    )
 
 
 def _est_jaccard_exprs(cfg: DedupConfig):
@@ -1026,8 +1134,7 @@ def dedup_edges(
         else precomputed
     )
     near_edges = minhash_similarity_pairs(
-        reps, cfg, "id", "text", max_band_bucket, precomputed=signed_pre,
-        materialize=False,
+        reps, cfg, "id", "text", max_band_bucket, precomputed=signed_pre
     ).select("id_a", "id_b")
     return near_edges.union(exact_edges)
 

@@ -18,7 +18,7 @@ from pyspark.sql.types import (
 
 from ..functions.cleaning import (
     extract_html_text,
-    remove_long_repeated_substrings_ex,
+    remove_long_repeated_substrings,
 )
 from ..functions import langid as _langid
 
@@ -124,7 +124,6 @@ def is_zh_relational(
 EXTRACT_FULL_SCHEMA = StructType(
     [
         StructField("text", StringType()),
-        StructField("fell_back", BooleanType()),
         StructField("lang_pred", StringType()),
         StructField("lang_conf", DoubleType()),
         StructField("is_zh", BooleanType()),
@@ -134,48 +133,32 @@ EXTRACT_FULL_SCHEMA = StructType(
 
 @F.pandas_udf(EXTRACT_FULL_SCHEMA)
 def extract_full(html: pd.Series) -> pd.DataFrame:
-    """Fused extraction kernel: html -> (text, fell_back, lang columns) in
-    ONE JVM<->Python Arrow round trip. Composes the three stage functions
-    (extract_html_text -> remove_long_repeated_substrings_ex ->
+    """Fused extraction kernel: html -> (text, lang columns) in ONE
+    JVM<->Python Arrow round trip. Composes the three stage functions
+    (extract_html_text -> remove_long_repeated_substrings ->
     langid.identify; NULL html -> NULL text, NULL text -> ('', 0.0, False))
     so the document crosses the Python boundary once instead of twice
     (guide §4.1: each chained pandas UDF is its own ArrowEvalPython round
     trip; the intermediate extracted_text never travels JVM->Python a
-    second time). ``fell_back`` is True iff the doc blew the exact
-    suffix-automaton's work budget (clear_redundancy.py:104-170) and took
-    the approximate chunk-dedup path — the byte-identical-to-reference
-    guarantee holds only when False."""
+    second time)."""
     rows = []
     for h in html:
         t = extract_html_text(h)
-        if t is None:
-            txt, fb = None, False
-        else:
-            txt, fb = remove_long_repeated_substrings_ex(t)
+        txt = None if t is None else remove_long_repeated_substrings(t)
         if txt is None:
             lp, lc, zh = "", 0.0, False
         else:
             lp, lc, zh = _langid.identify(txt)
         rows.append(
-            {
-                "text": txt,
-                "fell_back": fb,
-                "lang_pred": lp,
-                "lang_conf": lc,
-                "is_zh": zh,
-            }
+            {"text": txt, "lang_pred": lp, "lang_conf": lc, "is_zh": zh}
         )
-    return pd.DataFrame(
-        rows, columns=["text", "fell_back", "lang_pred", "lang_conf", "is_zh"]
-    )
+    return pd.DataFrame(rows, columns=["text", "lang_pred", "lang_conf", "is_zh"])
 
 
 def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
     """E3 rebuild: derive extracted/cleaned text + language columns from raw
     html; the WARC two-pass offset membership (subsample_warc_warc.py:46-87)
     collapses into the single boolean ``is_zh`` column (SURVEY.md J1).
-    ``repeat_removal_fell_back`` surfaces P4's over-budget approximate path
-    per doc (expected ~0 on real corpora; auditable at scale).
 
     Round 8: the three per-doc Python stages run as ONE fused pandas UDF
     (``extract_full``) — one ArrowEvalPython node instead of two chained
@@ -192,13 +175,7 @@ def with_extraction(df: DataFrame, html_col: str = "html") -> DataFrame:
     # select('*', ...) DUPLICATES same-named input columns (ambiguous
     # references downstream, review finding) — raise instead; the guard
     # covers EVERY emitted column (ADVICE r7).
-    out_names = (
-        "extracted_text",
-        "repeat_removal_fell_back",
-        "lang_pred",
-        "lang_conf",
-        "is_zh",
-    )
+    out_names = ("extracted_text", "lang_pred", "lang_conf", "is_zh")
     clash = set(out_names) & set(df.columns)
     if clash:
         raise ValueError(

@@ -18,9 +18,9 @@ untouched — and Spark's sort-before-repartition keeps the row-to-partition
 assignment deterministic under task retry (SPARK-23207).
 
 The guard is for CPU-bound per-row work. A latency-bound exchange chain
-over kilobytes takes the opposite rule: dedup plans its candidate chain
-over ``coalesce(1)`` when the signatures are already one partition, so
-no exchange (each one a Spark job) is inserted.
+over kilobytes takes the opposite rule: dedup pairs a signature table
+that fits its broadcast budget on the driver, with no exchange (each one
+a Spark job) at all.
 
 The module also owns every size-adaptive decision an operator takes from
 an observed count (``checkpoint_observed``): the operator materializes a

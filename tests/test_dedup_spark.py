@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from chinese_corpus_cleaning_spark.config import DedupConfig
 from chinese_corpus_cleaning_spark.operators import dedup
-from chinese_corpus_cleaning_spark.operators.partitioning import num_partitions
 from chinese_corpus_cleaning_spark.sources import gen
 
 
@@ -378,6 +377,20 @@ def _sparse_docs(spark):
     )
 
 
+def _bad_id_docs(spark):
+    """String ids plus NULL ids: eight one-character edits of one text and
+    two more edits under a NULL id (so a shared bucket holds 10 rows, over
+    a cap of 8, and only 8 of them can pair), next to 40 unrelated texts."""
+    import random
+
+    rnd = random.Random(9)
+    base = _cjk_text(rnd, 200)
+    rows = [(f"f{i}", base[:i] + "x" + base[i + 1:]) for i in range(8)]
+    rows += [(None, base[:i] + "y" + base[i + 1:]) for i in range(2)]
+    rows += [(f"u{i:02d}", _cjk_text(rnd, 120)) for i in range(40)]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
 def _plan(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -385,76 +398,100 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-@pytest.mark.parametrize("fixture,pruned", [("family", False), ("sparse", True)])
-def test_similarity_pairs_same_on_every_arm(spark, tmp_path, fixture, pruned):
+def _took_driver_arm(est) -> bool:
+    """Whether minhash_similarity_pairs returned its driver arm: a local
+    table, where the corpus-scale arm re-attaches signatures by joins."""
+    return "Join" not in _plan(est)
+
+
+_FIXTURES = {"family": _family_docs, "sparse": _sparse_docs, "bad_ids": _bad_id_docs}
+
+
+@pytest.mark.parametrize(
+    "fixture,pruned", [("family", False), ("sparse", True), ("bad_ids", False)]
+)
+def test_similarity_pairs_same_on_every_arm(spark, fixture, pruned):
     """minhash_similarity_pairs gives the same (id_a, id_b, est_jaccard)
-    set on each arm its observed sizes can pick: the broadcast fast path
-    (huge budget), the fully shuffled path (zero budget) and, on the sparse
-    input, the pruned signature table broadcast (a budget one row short of
-    the whole table) — on one input each side of the candidate-id prune's
-    cutover. Each arm runs on a signature checkpoint of one partition (a
-    one-file parquet scan: the fast path then plans its candidate chain
-    single-partition, without exchanges) and of four, uncapped and with a
-    bucket cap small enough to take the star path."""
+    set on each arm its observed sizes can pick: the driver arm (huge
+    budget), the corpus-scale joins when the candidate volume bound is over
+    the driver cutover (the whole table broadcast), when the table is one
+    row over the budget (on the sparse input, the pruned table broadcast)
+    and at a zero budget (fully shuffled) — on one input each side of the
+    candidate-id prune's cutover and one with string and NULL ids,
+    uncapped and with a bucket cap small enough to take the star path."""
     cfg = _SMALL_CFG
-    path = str(tmp_path / "docs")
-    docs = (_family_docs if fixture == "family" else _sparse_docs)(spark)
-    docs.coalesce(1).write.parquet(path)
-    inputs = {1: spark.read.parquet(path)}
-    inputs[4] = inputs[1].repartition(4).localCheckpoint(eager=True)
-    n_sigs = inputs[1].count()
-    n_pairs = dedup.lsh_candidate_pairs(dedup.with_minhash(inputs[1], cfg)).count()
+    df = _FIXTURES[fixture](spark).repartition(4).localCheckpoint(eager=True)
+    _, n_sigs, row_bytes = dedup._checkpoint_signatures(
+        dedup.with_minhash(df, cfg), "doc_id", cfg, "test_n_sigs"
+    )
+    n_pairs = dedup.lsh_candidate_pairs(dedup.with_minhash(df, cfg)).count()
     assert (2 * n_pairs < 0.5 * n_sigs) == pruned, (n_pairs, n_sigs)
-    row_bytes = 8 * cfg.num_hashes + 8  # long ids
+    arms = {  # arm -> (signature budget, driver volume cutover)
+        "driver": (1 << 40, dedup._CC_DRIVER_MAX_EDGES),
+        "volume": (1 << 40, 0),
+        "over budget": (int(row_bytes * (n_sigs - 1)), dedup._CC_DRIVER_MAX_EDGES),
+        "shuffled": (0, dedup._CC_DRIVER_MAX_EDGES),
+    }
     for cap in (None, 8):
         results = {}
-        for parts, df in inputs.items():
-            assert num_partitions(df) == parts
-            for budget in (1 << 40, row_bytes * (n_sigs - 1), 0):
-                with pytest.MonkeyPatch.context() as mp:
-                    mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
-                    results[parts, budget] = {
-                        (r["id_a"], r["id_b"], r["est_jaccard"])
-                        for r in dedup.minhash_similarity_pairs(
-                            df, cfg, max_band_bucket=cap
-                        ).collect()
-                    }
-        fast, *others = results.values()
-        assert fast
-        assert all(o == fast for o in others), cap
+        for arm, (budget, max_edges) in arms.items():
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", budget)
+                mp.setattr(dedup, "_CC_DRIVER_MAX_EDGES", max_edges)
+                est = dedup.minhash_similarity_pairs(df, cfg, max_band_bucket=cap)
+                assert _took_driver_arm(est) == (arm == "driver"), arm
+                results[arm] = {
+                    (r["id_a"], r["id_b"], r["est_jaccard"]) for r in est.collect()
+                }
+        driver, *others = results.values()
+        assert driver
+        assert all(o == driver for o in others), cap
+        assert not any(None in pair for pair in driver)
+
+
+def test_repeated_ids_take_the_joins(spark, monkeypatch):
+    """A repeated id pairs every signature row of it with every row of its
+    partner in the est re-attach joins, which one id rank per row cannot
+    express: the driver arm hands such a table to the joins, whose set the
+    shuffled arm reproduces."""
+    cfg = _SMALL_CFG
+    docs = _family_docs(spark, 12)
+    docs = docs.union(docs.withColumn("text", F.concat("text", F.lit("尾"))))
+    est = dedup.minhash_similarity_pairs(docs, cfg)
+    assert not _took_driver_arm(est)
+    got = set(est.collect())
+    monkeypatch.setattr(dedup, "_SIG_BCAST_BUDGET_BYTES", 0)
+    assert got and got == set(dedup.minhash_similarity_pairs(docs, cfg).collect())
 
 
 def test_signature_budget_counts_string_id_bytes(spark, monkeypatch):
     """Under a budget twice the bare signature bytes (8 B per hash slot),
-    bigint ids keep the signature broadcast, while ~400-byte string ids
-    must turn it off: that table's real bytes are ~2x the budget. A
-    row-only estimate broadcasts both."""
+    bigint ids keep the signature table on the driver arm, while ~400-byte
+    string ids must send it to the corpus-scale joins: that table's real
+    bytes are ~2x the budget. A row-only estimate takes the driver arm for
+    both."""
     cfg = _SMALL_CFG
     n = 60
     monkeypatch.setattr(
         dedup, "_SIG_BCAST_BUDGET_BYTES", 2 * n * 8 * cfg.num_hashes
     )
 
-    def broadcasts(df):
-        est = dedup.minhash_similarity_pairs(df, cfg, materialize=False)
-        return "BroadcastHashJoin" in _plan(est)
+    def driver_arm(df):
+        return _took_driver_arm(dedup.minhash_similarity_pairs(df, cfg))
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert broadcasts(_family_docs(spark, n))
-        assert not broadcasts(
-            _family_docs(spark, n, "string", "https://example.com/" + "p" * 380)
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert driver_arm(_family_docs(spark, n))
+    assert not driver_arm(
+        _family_docs(spark, n, "string", "https://example.com/" + "p" * 380)
+    )
 
 
 def test_dedup_representatives_job_count(spark):
     """Guard on Spark jobs per dedup call: every size decision rides a
-    checkpoint job the operator needs anyway (checkpoint_observed), so a
-    300-doc call plus one count runs 11 jobs; one more means a decision
-    grew a Spark job of its own."""
+    checkpoint job the operator needs anyway (checkpoint_observed), and the
+    near-dup pairs of a signature table that fits the broadcast budget come
+    from one Arrow collect (the driver arm), so a 300-doc call plus one
+    count runs 9 jobs; one more means a decision grew a Spark job of its
+    own."""
     sc = spark.sparkContext
     df = (
         gen.docs_df(spark, 300, partitions=4)
@@ -469,7 +506,7 @@ def test_dedup_representatives_job_count(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert n_dup == 30
-    assert len(jobs) == 11, sorted(jobs)
+    assert len(jobs) == 9, sorted(jobs)
 
 
 def test_fold_into_index_sequential_equals_concatenated(spark):

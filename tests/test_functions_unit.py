@@ -10,7 +10,6 @@ from chinese_corpus_cleaning_spark.config import RuleConfig
 from chinese_corpus_cleaning_spark.functions import dfa, hashing
 from chinese_corpus_cleaning_spark.functions.cleaning import (
     MIN_REPEAT_LEN,
-    _repeats_automaton,
     extract_html_text,
     remove_long_repeated_substrings,
     remove_long_repeated_substrings_ex,
@@ -146,9 +145,88 @@ def test_repeat_removal_keeps_first_occurrence():
     assert remove_long_repeated_substrings("abc") == "abc"
 
 
+def _repeats_automaton(s: str) -> str:
+    """Suffix-automaton form of long-repeat removal (clear_redundancy.py:
+    53-170), the oracle for the window pass: for every state with ``len >=
+    MIN_REPEAT_LEN`` and >= 2 end positions, delete the 2nd+ occurrences
+    of its longest string, merging intervals that touch. Positions are
+    materialized per state, so it is quadratic on periodic text."""
+    n = len(s)
+    sa_len, sa_link, sa_next = [0], [-1], [{}]
+    own_pos = [-1]  # the end position created with this state (-1 for clones)
+    cnt = [0]
+    last = 0
+    for pos, ch in enumerate(s):
+        cur = len(sa_len)
+        sa_len.append(sa_len[last] + 1)
+        sa_link.append(-1)
+        sa_next.append({})
+        own_pos.append(pos)
+        cnt.append(1)
+        p = last
+        while p != -1 and ch not in sa_next[p]:
+            sa_next[p][ch] = cur
+            p = sa_link[p]
+        if p == -1:
+            sa_link[cur] = 0
+        else:
+            q = sa_next[p][ch]
+            if sa_len[p] + 1 == sa_len[q]:
+                sa_link[cur] = q
+            else:
+                clone = len(sa_len)
+                sa_len.append(sa_len[p] + 1)
+                sa_link.append(sa_link[q])
+                sa_next.append(dict(sa_next[q]))
+                own_pos.append(-1)
+                cnt.append(0)
+                while p != -1 and sa_next[p].get(ch) == q:
+                    sa_next[p][ch] = clone
+                    p = sa_link[p]
+                sa_link[q] = clone
+                sa_link[cur] = clone
+        last = cur
+    # occurrence counts (== |endpos|) via suffix-link propagation
+    for st in sorted(range(len(sa_len)), key=lambda x: -sa_len[x]):
+        if sa_link[st] != -1:
+            cnt[sa_link[st]] += cnt[st]
+    qual = {
+        st for st in range(len(sa_len))
+        if sa_len[st] >= MIN_REPEAT_LEN and cnt[st] >= 2
+    }
+    # each original state's end position belongs to every suffix-link
+    # ancestor's endpos set
+    positions: dict[int, list[int]] = {st: [] for st in qual}
+    for st in range(1, len(sa_len)):
+        node = st
+        while own_pos[st] >= 0 and node > 0:
+            if node in qual:
+                positions[node].append(own_pos[st])
+            node = sa_link[node]
+    to_remove = []
+    for st in qual:
+        starts = sorted(end - sa_len[st] + 1 for end in positions[st])
+        to_remove += [(a, a + sa_len[st] - 1) for a in starts[1:]]
+    to_remove.sort()
+    merged: list[list[int]] = []
+    for a, b in to_remove:
+        if merged and a <= merged[-1][1] + 1:
+            merged[-1][1] = max(merged[-1][1], b)
+        else:
+            merged.append([a, b])
+    pieces, idx = [], 0
+    for a, b in merged:
+        pieces.append(s[idx:a])
+        idx = b + 1
+    return "".join(pieces) + s[idx:]
+
+
 def test_repeat_early_exit_matches_automaton():
-    """The distinct-window early exit returns exactly what the suffix
-    automaton alone returns, (text, fell_back) alike."""
+    """The window pass deletes exactly what the suffix automaton deletes,
+    on generated pages, edge lengths and seeded random / periodic strings,
+    and never falls back."""
+    import random
+
     from chinese_corpus_cleaning_spark.sources import gen
 
     def distinct(n):
@@ -164,13 +242,20 @@ def test_repeat_early_exit_matches_automaton():
         "abcdefghij" * 5,  # overlapping occurrences
         base + "间隔" + base[:MIN_REPEAT_LEN],  # repeat ends at the last char
         base + base[1:] + "尾",
-        "ab" * 2000,  # over the work budget: falls back
     ]
+    rnd = random.Random(11)
+    for _ in range(200):
+        alphabet = "ab" if rnd.random() < 0.5 else "abcd"
+        unit = "".join(rnd.choice(alphabet) for _ in range(rnd.randrange(1, 30)))
+        noise = "".join(rnd.choice(alphabet) for _ in range(rnd.randrange(80)))
+        cut = rnd.randrange(len(noise) + 1)
+        cases.append(noise[:cut] + unit * rnd.randrange(1, 8) + noise[cut:])
     got = [remove_long_repeated_substrings_ex(s) for s in cases]
-    assert got == [_repeats_automaton(s) for s in cases]
+    assert got == [(_repeats_automaton(s), False) for s in cases]
     changed = sum(out != s for (out, _), s in zip(got[:n_pages], cases))
     assert 0 < changed < n_pages  # both branches ran on the generated pages
-    assert got[-1][1] and not any(fb for _, fb in got[:-1])
+    # periodic text the automaton form takes quadratic time on
+    assert remove_long_repeated_substrings_ex("ab" * 2000) == ("ab", False)
 
 
 def test_preprocess_for_ppl():

@@ -100,13 +100,11 @@ def test_dedup_representatives_plan_is_cartesian_free(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_one_partition_pair_chain_has_no_hash_exchange(spark, tmp_path):
-    """A small signature table checkpointed at one partition (a one-file
-    parquet scan: its plan carries a size estimate) takes
-    minhash_similarity_pairs' fast arm with the candidate chain declared
-    single-partition, so the executed plan — band-size aggregate,
-    self-join, hub aggregate, pair distinct, broadcast re-attach — holds
-    no hash Exchange (each one costs a Spark job)."""
+def test_one_partition_pair_chain_has_no_hash_exchange(spark):
+    """A signature table that fits the broadcast budget takes
+    minhash_similarity_pairs' driver arm: candidate pairs and est-Jaccard
+    are computed from one Arrow collect, so the returned plan holds no
+    Exchange and no join at all, star path included."""
     import random
 
     from chinese_corpus_cleaning_spark.config import DedupConfig
@@ -118,16 +116,12 @@ def test_one_partition_pair_chain_has_no_hash_exchange(spark, tmp_path):
     rnd = random.Random(5)
     base = "".join(chr(0x4E00 + rnd.randrange(2000)) for _ in range(200))
     rows = [(i, base[:i] + "x" + base[i + 1:]) for i in range(60)]
-    path = str(tmp_path / "docs")
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     # cap 8 < 60 family members: the oversized buckets take the hub path
-    est = dedup.minhash_similarity_pairs(
-        spark.read.parquet(path), cfg, max_band_bucket=8, materialize=False
-    )
+    est = dedup.minhash_similarity_pairs(docs, cfg, max_band_bucket=8)
     assert est.collect()
     plan = _explained(est)
-    assert "isFinalPlan=true" in plan, plan
-    assert "hashpartitioning" not in plan, plan
+    assert "Exchange" not in plan and "Join" not in plan, plan
 
 
 def test_dedup_edges_never_shuffle_on_text(spark):
