@@ -359,8 +359,8 @@ def classifier_score(
     output or ``LogRegModel.to_df``), <= n_buckets rows by construction
     (both trainers group by bucket, so no bucket repeats). It is quantized
     to decimal(18, ``WEIGHT_DP``) in Spark, collected, and broadcast once
-    as a dense vector of integer units of 10^-WEIGHT_DP (8 * n_buckets
-    bytes, 2 MiB at the default). Each doc's margin is then the exact
+    as a dense list of n_buckets integer units of 10^-WEIGHT_DP, which
+    each worker unpickles once. Each doc's margin is then the exact
     integer sum over its :func:`_gram_bags`, returned as the decimal
     Spark's sum of decimal(18, WEIGHT_DP) values would give:
     bit-identical across engines, partitionings and float-add orders
@@ -392,12 +392,14 @@ def classifier_score(
     wp = weights.select("bucket", units.alias("u")).toArrow()
     w_np = np.zeros(n_buckets, dtype="int64")
     w_np[wp["bucket"].to_numpy().astype("int64")] = wp["u"].to_numpy()
-    w_bc = docs.sparkSession.sparkContext.broadcast(w_np)
+    # a list of exact python ints (no int64 wrap-around in the sums),
+    # unpickled once per worker rather than re-listed per Arrow batch
+    w_bc = docs.sparkSession.sparkContext.broadcast(w_np.tolist())
 
     # Spark types sum(decimal(18, s)) as decimal(28, s)
     @pandas_udf(f"decimal(28,{WEIGHT_DP})")
     def weight_sum(texts: pd.Series) -> pd.Series:
-        w = w_bc.value.tolist()  # exact python ints: no int64 wrap-around
+        w = w_bc.value
         return pd.Series(
             [
                 Decimal(sum(map(mul, map(w.__getitem__, bs), cs))).scaleb(

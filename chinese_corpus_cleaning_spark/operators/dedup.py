@@ -16,8 +16,9 @@ DuckDB oracle can verify signatures, band keys, candidate pairs and SimHash
 values exactly.
 
 Scale notes (10^12 docs):
-  * Signature computation is map-side only: one md5 per distinct shingle
-    + the integer affine permutations in an Arrow-batched numpy UDF.
+  * Signature computation is map-side only: one Arrow-batched pandas UDF
+    per text builds the shingle set, one md5 per distinct shingle, the
+    integer affine permutations (numpy) and the band-key md5s.
   * The LSH self-join shuffles on band_key; hot keys (boilerplate-identical
     pages from one host) are exactly the skew the north_rule calls out —
     handled by (a) AQE skew-join splitting and (b) an optional salting
@@ -133,14 +134,6 @@ def _shingles_expr(text_col: str, k: int) -> str:
     )
 
 
-def _shingle_hash_expr(text_col: str, k: int) -> str:
-    """array<bigint> of (h60(shingle) % P) over distinct char k-shingles."""
-    from ..functions.hashing import MINHASH_P
-
-    shingles = _shingles_expr(text_col, k)
-    return f"transform({shingles}, s -> pmod({h60_sql('s')}, {MINHASH_P}))"
-
-
 def with_minhash(
     docs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
@@ -153,64 +146,36 @@ def with_minhash(
     streaming probe, which must survive this projection to carry the
     watermark).
 
-    Hybrid plan chosen by measurement (2000-doc corpus, local[8]):
-      * shingle extraction + one md5 per distinct shingle: native exprs in
-        INTERPRETED ``transform`` lambdas (not codegen'd), still cheap
-        JVM-side (169k shingles hashed in ~0.7 s in one warm task, 4 vCPU);
-      * the num_hashes affine permutations + min fold: Arrow-batched numpy
-        matrix op ((A*h + B) % P).min(axis=1) — 0.5s, vs 14s for the
-        equivalent higher-order-function expression (Spark lambdas are
-        interpreted, not codegen'd) and 5.9s for a 128-way min-aggregate
-        (codegen falls back past spark.sql.codegen.maxFields);
-      * band keys: h60 over the joined signature slice (32 tiny ops/doc).
-    Semantics identical to functions/hashing.minhash_signature, and
+    One Arrow-batched pandas UDF runs functions/hashing.minhash_bands per
+    text (shingle set, one md5 per distinct shingle, the num_hashes affine
+    permutations as one numpy array op, the band-key md5s) and returns
+    both columns as one struct. Measured against the earlier plan of
+    interpreted SQL ``transform`` lambdas for the shingles, their h60 and
+    the band keys around a perm-min UDF (the perfbench seed-3 signature
+    stage, 712 distinct texts in one warm task, in-process noop sink):
+    see CHANGES.md for the A/B. Semantics identical to
+    functions/hashing.minhash_signature + lsh_band_keys, and
     oracle-verified against DuckDB SQL (plans/oracles.py)."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType
+    from pyspark.sql.functions import pandas_udf
 
-    from ..functions.hashing import MINHASH_P, minhash_params
+    from ..functions.hashing import minhash_bands
 
-    params = minhash_params(cfg.num_hashes)
     if cfg.num_hashes % cfg.num_bands:
         raise ValueError(
             f"num_hashes ({cfg.num_hashes}) must be divisible by "
             f"num_bands ({cfg.num_bands}) — a remainder silently drops "
             f"the trailing minhash slots from the band keys"
         )
-    rows = cfg.num_hashes // cfg.num_bands
-    A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    sentinel = np.full(cfg.num_hashes, MINHASH_P, dtype=np.int64)
+    k, nh, nb = cfg.shingle_size, cfg.num_hashes, cfg.num_bands
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def perm_min(hs: pd.Series) -> pd.Series:
-        out = []
-        for arr in hs:
-            if arr is None or len(arr) == 0:
-                out.append(sentinel)
-                continue
-            h = np.asarray(arr, dtype=np.int64)[None, :]
-            out.append(((A * h + B) % MINHASH_P).min(axis=1))
-        return pd.Series(out)
+    @pandas_udf("struct<minhash: array<bigint>, band_keys: array<bigint>>")
+    def sign(texts: pd.Series) -> pd.DataFrame:
+        sigs, keys = minhash_bands(texts, k, nh, nb)
+        return pd.DataFrame({"minhash": sigs, "band_keys": keys})
 
-    bands = "transform(sequence(0, {nb1}), b -> {h})".format(
-        nb1=cfg.num_bands - 1,
-        h=h60_sql(
-            "concat(cast(b as string), '|', "
-            f"array_join(transform(slice(minhash, b * {rows} + 1, {rows}),"
-            " v -> cast(v as string)), ','))"
-        ),
-    )
-    return (
-        docs.select(
-            F.col(id_col),
-            F.expr(_shingle_hash_expr(text_col, cfg.shingle_size)).alias("hs"),
-            *(F.col(c) for c in keep_cols),
-        )
-        .withColumn("minhash", perm_min(F.col("hs")))
-        .withColumn("band_keys", F.expr(bands))
-        .drop("hs")
-    )
+    return docs.select(
+        F.col(id_col), *(F.col(c) for c in keep_cols), sign(text_col).alias("__sig")
+    ).select(id_col, *keep_cols, "__sig.minhash", "__sig.band_keys")
 
 
 def _band_self_join(rows: DataFrame) -> DataFrame:

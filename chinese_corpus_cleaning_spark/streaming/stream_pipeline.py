@@ -166,8 +166,8 @@ def streaming_incremental_dedup(
     """Stream-static near-dup probe — the streaming form of
     operators/dedup.dedup_incremental_pairs for a continuous crawl: each
     arriving microbatch is MinHashed in place (with_minhash is a stateless
-    map transform — the same Arrow perm-min UDF and band exprs lift to
-    streaming unchanged) and probed against a STATIC corpus signature index
+    map transform — the same Arrow signature UDF lifts to streaming
+    unchanged) and probed against a STATIC corpus signature index
     (a ``with_minhash`` table persisted by a prior batch run).
 
     Join shape per microbatch, all stream-static (the static side is never

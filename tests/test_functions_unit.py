@@ -77,6 +77,39 @@ def test_lsh_bands_collide_for_near_dups():
     assert set(ka) & set(kb)
 
 
+def test_minhash_bands_kernel_matches_oracle():
+    """The vectorized signature kernel equals minhash_signature over
+    char_shingles plus lsh_band_keys, at the production 128/16 config and
+    the catalog's 16/4 one: NULL (the all-P sentinel), empty, k-1 and k
+    chars, a periodic text and astral-plane characters (code-point
+    shingles, four UTF-8 bytes each)."""
+    from chinese_corpus_cleaning_spark.config import DedupConfig
+    from chinese_corpus_cleaning_spark.plans.catalog import _SMALL_MINHASH
+
+    k = 5
+    texts = [
+        None,
+        "",
+        "abcd",
+        "abcde",
+        "ab" * 40,
+        "\U0001F600\U00020000天地玄黄" * 3,
+        "宇宙洪荒，日月盈昃。辰宿列张，寒来暑往。",
+    ]
+    for cfg in (DedupConfig(), _SMALL_MINHASH):
+        nh, nb = cfg.num_hashes, cfg.num_bands
+        assert cfg.shingle_size == k
+        sigs, keys = hashing.minhash_bands(texts, k, nh, nb)
+        for t, sig, key in zip(texts, sigs, keys):
+            want = (
+                [hashing.MINHASH_P] * nh
+                if t is None
+                else hashing.minhash_signature(hashing.char_shingles(t, k), nh)
+            )
+            assert sig.tolist() == want, t
+            assert key.tolist() == hashing.lsh_band_keys(want, nb), t
+
+
 def test_simhash_close_for_similar_token_sets():
     t1 = tokenize("机器学习是人工智能的重要分支 machine learning")
     t2 = tokenize("机器学习是人工智能的重要分支 deep learning")

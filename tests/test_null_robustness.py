@@ -23,7 +23,7 @@ def test_minhash_handles_null_and_empty(spark, nullish):
     cfg = DedupConfig(num_hashes=16, num_bands=4)
     rows = {r["doc_id"]: r for r in dedup.with_minhash(nullish, cfg).collect()}
     assert len(rows) == 4
-    # null text -> null shingle array -> sentinel signature (perm_min branch)
+    # null text -> sentinel signature (functions/hashing.minhash_bands)
     from chinese_corpus_cleaning_spark.functions.hashing import MINHASH_P
 
     assert list(rows[1]["minhash"]) == [MINHASH_P] * 16

@@ -193,6 +193,26 @@ def test_extraction_single_arrow_eval(spark):
         assert n_arrow == 1, plan
 
 
+def test_minhash_signature_single_arrow_eval(spark):
+    """with_minhash computes shingles, their h60, the perm-min and the band
+    keys in ONE pandas UDF: exactly one ArrowEvalPython node and no
+    interpreted higher-order-function lambda left in the plan, while a
+    ``keep_cols`` column (the streaming probe's watermark) passes through."""
+    from chinese_corpus_cleaning_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "天地玄黄宇宙洪荒", "2025-03-15"), (2, None, "2025-03-16")],
+        "doc_id long, text string, ts string",
+    )
+    signed = dedup.with_minhash(docs, keep_cols=("ts",))
+    # the executed plan names each node once (formatted mode prints twice)
+    plan = signed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "lambdafunction" not in plan.lower(), plan
+    assert signed.columns == ["doc_id", "ts", "minhash", "band_keys"]
+    assert sorted(r["ts"] for r in signed.collect()) == ["2025-03-15", "2025-03-16"]
+
+
 def test_plan_construction_runs_no_job(spark, tmp_path):
     """Building the labels plan over a repartition(n, xxhash64(url)) frame
     runs no Spark job: the parallelism guard in with_quality reads the

@@ -120,7 +120,7 @@ def test_pii_mask_three_engines(spark, texts):
 @_SLOW
 @given(texts=_TEXTS)
 def test_minhash_band_keys_python_vs_spark(spark, texts):
-    """with_minhash (native shingle hash + Arrow perm-min + band h60)
+    """with_minhash (one Arrow UDF: shingles, h60, perm-min, band keys)
     reproduces functions/hashing.minhash_signature + lsh_band_keys
     exactly on arbitrary unicode — the signature is THE dedup decision
     surface, so a single codepoint-length divergence would silently
