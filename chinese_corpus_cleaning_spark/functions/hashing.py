@@ -17,7 +17,6 @@ model-free MinHash route mandated by BASELINE.json's north_rule.
 
 from __future__ import annotations
 
-import functools
 import hashlib
 
 try:  # CPython's own MD5: a third of OpenSSL's per-call cost on a shingle
@@ -96,20 +95,8 @@ def lsh_band_keys(sig: list[int], num_bands: int) -> list[int]:
     ]
 
 
-@functools.lru_cache(maxsize=None)
-def _perm_columns(num_hashes: int):
-    """(A, B) int64 column vectors of :func:`minhash_params`, built once
-    per process."""
-    import numpy as np
-
-    a, b = zip(*minhash_params(num_hashes))
-    return np.array(a, dtype=np.int64)[:, None], np.array(b, dtype=np.int64)[:, None]
-
-
 def _h60_array(strs):
-    """int64 array of :func:`h60` over ``strs``: the first 15 hex digits
-    are the top 60 bits of each digest's big-endian first 8 bytes (shifted
-    while unsigned; an int64 cast first would sign-extend)."""
+    """int64 :func:`h60` of each of ``strs`` (shifted unsigned: no sign extension)."""
     import numpy as np
 
     blob = b"".join([_md5(s.encode("utf-8")).digest() for s in strs])
@@ -117,40 +104,29 @@ def _h60_array(strs):
 
 
 def minhash_bands(texts, k: int, num_hashes: int, num_bands: int):
-    """Vectorized ``minhash_signature(char_shingles(t, k), num_hashes)``
-    plus ``lsh_band_keys(sig, num_bands)`` per text, bit-identical to
-    them; returns ``(signatures, band_keys)``, two lists of int64 arrays.
-    A None text gets the all-P sentinel signature (and the band keys of
-    that sentinel). Shingles are code-point slices, as Spark's
-    ``substring``/``length`` count; one md5 per distinct shingle, then the
-    affine permutations in place over one (num_hashes, n_shingles) array.
-    The band keys hash the same ``"b|v1,v2,..."`` strings the SQL and
-    DuckDB twins build."""
+    """``minhash_signature(char_shingles(t, k), num_hashes)`` and its
+    ``lsh_band_keys`` per text, bit-identical, as two lists of int64 arrays
+    (a None text: the all-P sentinel). Shingles are code-point slices, as
+    Spark's ``substring``; one (num_hashes, n_shingles) array per text."""
     import numpy as np
 
-    A, B = _perm_columns(num_hashes)
+    A, B = (np.array(c, dtype=np.int64)[:, None] for c in zip(*minhash_params(num_hashes)))
     rows = num_hashes // num_bands
-    sentinel = np.full(num_hashes, MINHASH_P, dtype=np.int64)
     sigs, keys = [], []
     for t in texts:
         if t is None:
-            sig = sentinel
+            sig = np.full(num_hashes, MINHASH_P, dtype=np.int64)
         else:
             sh = {t} if len(t) < k else {t[i : i + k] for i in range(len(t) - k + 1)}
             x = A * (_h60_array(sh) % MINHASH_P)
             x += B
-            q = x // MINHASH_P  # x >= 0: floor division is the exact quotient
-            q *= MINHASH_P
-            x -= q
+            x -= x // MINHASH_P * MINHASH_P  # x >= 0; cheaper than np.remainder
             sig = x.min(axis=1)
         v = sig.tolist()
         sigs.append(sig)
-        keys.append(
-            _h60_array(
-                f"{b}|" + ",".join(map(str, v[b * rows : (b + 1) * rows]))
-                for b in range(num_bands)
-            )
-        )
+        keys.append(_h60_array(
+            f"{b}|" + ",".join(map(str, v[b * rows : (b + 1) * rows])) for b in range(num_bands)
+        ))
     return sigs, keys
 
 

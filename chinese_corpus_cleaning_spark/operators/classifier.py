@@ -392,14 +392,12 @@ def classifier_score(
     wp = weights.select("bucket", units.alias("u")).toArrow()
     w_np = np.zeros(n_buckets, dtype="int64")
     w_np[wp["bucket"].to_numpy().astype("int64")] = wp["u"].to_numpy()
-    # a list of exact python ints (no int64 wrap-around in the sums),
-    # unpickled once per worker rather than re-listed per Arrow batch
     w_bc = docs.sparkSession.sparkContext.broadcast(w_np.tolist())
 
     # Spark types sum(decimal(18, s)) as decimal(28, s)
     @pandas_udf(f"decimal(28,{WEIGHT_DP})")
     def weight_sum(texts: pd.Series) -> pd.Series:
-        w = w_bc.value
+        w = w_bc.value  # exact python ints: no int64 wrap-around
         return pd.Series(
             [
                 Decimal(sum(map(mul, map(w.__getitem__, bs), cs))).scaleb(
