@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
-try:  # CPython's own MD5: a third of OpenSSL's per-call cost on a shingle
+try:  # CPython's own MD5: half OpenSSL's per-call cost on a short shingle
     from _md5 import md5 as _md5
 except ImportError:  # a build without it
     _md5 = hashlib.md5
